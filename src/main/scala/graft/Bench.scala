@@ -20,20 +20,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.storage.memoryMapThreshold", "2g")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession(graft = true)
     // ERROR, not WARN: the driver's log capture keeps only the LAST ~2000
     // chars of combined output, and ambient WARN lines on stderr (flushed
     // unbuffered, after the piped stdout JSON) evicted the measurement from

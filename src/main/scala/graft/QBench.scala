@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual queries repeatedly.
   * Usage: runMain graft.QBench <sfDir> <reps> <queryName>[,<queryName>...]
@@ -8,18 +7,7 @@ object QBench {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, repsS, names) = args
     val reps = repsS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.catalog.graft", "graft.sql.GraftCatalog")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.storage.memoryMapThreshold", "2g")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession(graft = true)
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.contains("QBENCH_STAGES")) {
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -1,5 +1,6 @@
 package graft.creatorops
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point for the medallion pipeline — the analogue of the
@@ -18,16 +19,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("creatorops-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.storage.memoryMapThreshold", "2g")
-      .getOrCreate()
+    val spark = GraftSession(graft = false)
     spark.sparkContext.setLogLevel("WARN")
     try args.toList match {
       case "generate" :: out :: rest =>

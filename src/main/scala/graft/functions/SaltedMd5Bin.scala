@@ -33,6 +33,9 @@ case class SaltedMd5Bin(child: Expression, salt: String)
 
   override def dataType: DataType = BinaryType
 
+  // the salt bytes are a per-expression constant: encoded once, not per row
+  @transient private lazy val saltBytes = salt.getBytes("UTF-8")
+
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -40,14 +43,12 @@ case class SaltedMd5Bin(child: Expression, salt: String)
   }
 
   override def nullSafeEval(input: Any): Any =
-    SaltedMd5Bin.digest(input.asInstanceOf[UTF8String],
-      salt.getBytes("UTF-8"))
+    SaltedMd5Bin.digest(input.asInstanceOf[UTF8String], saltBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the salt bytes are a per-plan constant: hoist them into a field so the
-    // per-row code is two digest updates and one final
-    val saltRef = ctx.addReferenceObj("salt", salt.getBytes("UTF-8"),
-      "byte[]")
+    // hoist the salt bytes into a field so the per-row code is two digest
+    // updates and one final
+    val saltRef = ctx.addReferenceObj("salt", saltBytes, "byte[]")
     defineCodeGen(ctx, ev, c =>
       s"graft.functions.SaltedMd5Bin.digest($c, $saltRef)")
   }

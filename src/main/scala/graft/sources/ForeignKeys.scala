@@ -112,9 +112,7 @@ object ForeignKeys {
     if (!roster.exists(samePath(_, factPath)))
       VersionedTable.setProperties(spark, dimPath,
         Map(ReferencedByKey -> (roster :+ factPath).mkString(",")))
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    VersionedTable.recomputeOnConflict {
       val factV = VersionedTable.latestVersion(spark, factPath).getOrElse(
         throw new IllegalArgumentException(
           s"$factPath has no committed versions"))
@@ -126,37 +124,32 @@ object ForeignKeys {
           samePath(d.dimPath, dimPath))
       // still armed: nothing moved since the pin — re-declaring is a no-op
       // (a version bump would itself disarm every OTHER pin on the table)
-      prior.foreach { d =>
-        if (d.factPin == factV && d.dimPin == dimV) return factV
-      }
-      // the incremental path needs READABLE change feeds since the prior
-      // pins — vacuumed history falls back to the full validation; a
-      // genuine integrity violation THROWS from either path, never falls
-      // through
-      prior match {
-        case Some(d) if d.factPin <= factV && d.dimPin <= dimV &&
-            canDiff(spark, factPath, d.factPin, factV) &&
-            canDiff(spark, dimPath, d.dimPin, dimV) =>
-          incrementalValidations.incrementAndGet()
-          validateIncremental(spark, factPath, factV, fkCols, dimPath,
-            dimV, pkCols, d)
-        case _ =>
-          fullValidations.incrementAndGet()
-          validate(spark, factPath, factV, fkCols, dimPath, dimV, pkCols)
-      }
-      // the props commit this pin rides is FILE-IDENTICAL to the validated
-      // base, so integrity at factV+1 is integrity at factV — and the
-      // expectedBase precondition makes that identity a checked fact, not
-      // an assumption
-      val decl = Decl(fkCols, dimPath, pkCols, factV + 1L, dimV)
-      try {
-        return VersionedTable.setPropertiesExpecting(spark, factPath,
+      if (prior.exists(d => d.factPin == factV && d.dimPin == dimV)) factV
+      else {
+        // the incremental path needs READABLE change feeds since the prior
+        // pins — vacuumed history falls back to the full validation; a
+        // genuine integrity violation THROWS from either path, never falls
+        // through
+        prior match {
+          case Some(d) if d.factPin <= factV && d.dimPin <= dimV &&
+              canDiff(spark, factPath, d.factPin, factV) &&
+              canDiff(spark, dimPath, d.dimPin, dimV) =>
+            incrementalValidations.incrementAndGet()
+            validateIncremental(spark, factPath, factV, fkCols, dimPath,
+              dimV, pkCols, d)
+          case _ =>
+            fullValidations.incrementAndGet()
+            validate(spark, factPath, factV, fkCols, dimPath, dimV, pkCols)
+        }
+        // the props commit this pin rides is FILE-IDENTICAL to the validated
+        // base, so integrity at factV+1 is integrity at factV — and the
+        // expectedBase precondition makes that identity a checked fact, not
+        // an assumption
+        val decl = Decl(fkCols, dimPath, pkCols, factV + 1L, dimV)
+        VersionedTable.setPropertiesExpecting(spark, factPath,
           Map(keyFor(fkCols) -> serialize(decl)), expectedBase = factV)
-      } catch {
-        case _: VersionedTable.ConcurrentTxnException if attempts < 5 => ()
       }
     }
-    -1L // unreachable
   }
 
   private def samePath(a: String, b: String): Boolean =
@@ -288,9 +281,7 @@ object ForeignKeys {
   def declareUnique(spark: SparkSession, path: String,
       cols: Seq[String]): Long = {
     require(cols.nonEmpty, s"$path: UNIQUE needs at least one column")
-    var attempts = 0
-    while (true) {
-      attempts += 1
+    VersionedTable.recomputeOnConflict {
       val v = VersionedTable.latestVersion(spark, path).getOrElse(
         throw new IllegalArgumentException(
           s"$path has no committed versions"))
@@ -302,34 +293,31 @@ object ForeignKeys {
         .find(_.cols == cols)
       // still armed: re-declaring is a no-op (and a version bump would
       // itself disarm every other pin on the table)
-      prior.foreach(u => if (u.pin == v) return v)
-      val keyed = prior match {
-        case Some(u) if u.pin < v && canDiff(spark, path, u.pin, v) =>
-          incrementalValidations.incrementAndGet()
-          val insKeys = VersionedTable.changes(spark, path, u.pin, v)
-            .filter(col("_change_type") === "insert")
-            .select(cols.map(col): _*).distinct()
-          // delete-only motion: nothing new to collide — no table scan
-          if (insKeys.isEmpty) None
-          else Some(df.join(broadcast(insKeys), cols, "left_semi"))
-        case _ =>
-          fullValidations.incrementAndGet()
-          Some(df)
-      }
-      val dupes = keyed.map(_.groupBy(cols.map(col): _*)
-        .count().filter(col("count") > 1L).limit(1).count()).getOrElse(0L)
-      require(dupes == 0L,
-        s"$path: (${cols.mkString(",")}) is not unique at version $v — " +
-          "declaration refused")
-      try {
-        return VersionedTable.setPropertiesExpecting(spark, path,
+      if (prior.exists(_.pin == v)) v
+      else {
+        val keyed = prior match {
+          case Some(u) if u.pin < v && canDiff(spark, path, u.pin, v) =>
+            incrementalValidations.incrementAndGet()
+            val insKeys = VersionedTable.changes(spark, path, u.pin, v)
+              .filter(col("_change_type") === "insert")
+              .select(cols.map(col): _*).distinct()
+            // delete-only motion: nothing new to collide — no table scan
+            if (insKeys.isEmpty) None
+            else Some(df.join(broadcast(insKeys), cols, "left_semi"))
+          case _ =>
+            fullValidations.incrementAndGet()
+            Some(df)
+        }
+        val dupes = keyed.map(_.groupBy(cols.map(col): _*)
+          .count().filter(col("count") > 1L).limit(1).count()).getOrElse(0L)
+        require(dupes == 0L,
+          s"$path: (${cols.mkString(",")}) is not unique at version $v — " +
+            "declaration refused")
+        VersionedTable.setPropertiesExpecting(spark, path,
           Map(uniqueKeyFor(cols) ->
             serializeUnique(UniqueDecl(cols, v + 1L))), expectedBase = v)
-      } catch {
-        case _: VersionedTable.ConcurrentTxnException if attempts < 5 => ()
       }
     }
-    -1L // unreachable
   }
 
   def dropUnique(spark: SparkSession, path: String,

@@ -687,24 +687,12 @@ object MaterializedView {
     * recomputes from the NEW watermark and retries. */
   def refresh(spark: SparkSession, mvPath: String): Long = {
     val lock = refreshLocks.computeIfAbsent(mvPath, _ => new Object)
+    // an external process moved the watermark (or, for a join view, the
+    // dim PIN) between our read and our commit — the recompute picks up the
+    // new v0 / pin (often a versions-never-rewind no-op if it covered our
+    // window)
     lock.synchronized {
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        try return refreshOnce(spark, mvPath)
-        catch {
-          case _: VersionedTable.ConcurrentTxnException if attempts < 5 =>
-            // an external process moved the watermark between our read and
-            // our commit — the recompute picks up the new v0 (often a
-            // versions-never-rewind no-op if it covered our window)
-            ()
-          case _: VersionedTable.ConcurrentPropException if attempts < 5 =>
-            // same, for the dim PIN: a concurrent dim-delta refresh
-            // advanced it — recompute from the new pin (often a no-op)
-            ()
-        }
-      }
-      -1L // unreachable
+      VersionedTable.recomputeOnConflict(refreshOnce(spark, mvPath))
     }
   }
 

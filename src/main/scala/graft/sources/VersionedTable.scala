@@ -56,12 +56,17 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * atomically creating `_graft_log/N.json` — on the local filesystem via a
   * hard-link publish (POSIX `link(2)`: create-if-absent with no partial
   * visibility), on HDFS-like filesystems via rename-no-replace. Exactly one
-  * writer wins a version slot; losers re-resolve the latest version and
-  * retry — `write`/`append` just re-claim the next slot without rewriting
-  * data, `upsert`/`delete` recompute against the new base first (their
-  * content depends on what they read). Orphaned data dirs from writers
-  * that died before committing are unreferenced and harmless; `vacuum`
-  * sweeps them once they are older than every live version.
+  * writer wins a version slot. Every write verb reaches that claim through
+  * ONE loop, [[commitLoop]]: each attempt re-reads the head and either
+  * returns early (replay, no-op) or stages a commit; a lost claim deletes
+  * that attempt's stale checkpoint and staged dirs and runs the next
+  * attempt against the new head, up to [[MaxCommitRetries]] losses in a
+  * row. `write`/`append` keep their staged files and just re-claim the next
+  * slot; `upsert`/`delete` and the other rewriting verbs recompute against
+  * the new base (their content depends on what they read). Orphaned data
+  * dirs from writers that died before committing are unreferenced and
+  * harmless; `vacuum` sweeps them once they are older than every live
+  * version.
   *
   *  - time travel: `read(spark, path, asOf = Some(v))`
   *  - change feed: `changes(spark, path, fromV, toV)` — row-level
@@ -426,8 +431,7 @@ object VersionedTable {
   def protocolOf(spark: SparkSession, path: String): (Set[String], Set[String]) = {
     val root = new Path(path)
     val f = fs(spark, root)
-    val v = latestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"$path has no committed versions"))
+    val v = latestVersion(spark, path).getOrElse(noVersions(path))
     val node = parseManifest(f, root, v)
     (strArr(node, "rf").toSet, strArr(node, "wf").toSet)
   }
@@ -1293,28 +1297,92 @@ object VersionedTable {
     won
   }
 
+  /** One attempt's staged commit: the manifest `body` claiming version `v`,
+    * the checkpoint dir its encoding wrote, and the staged data dirs that
+    * go stale if the claim is lost (empty when the next attempt reuses
+    * them). */
+  private final case class Staged(v: Long, body: String, ckpt: Option[Path],
+      discard: Seq[Path] = Nil)
+
+  private def noVersions(path: String): Nothing =
+    throw new IllegalArgumentException(s"$path has no committed versions")
+
+  /** The optimistic-commit loop every write verb runs. Each attempt gets
+    * the freshly re-read head (version + manifest; None for a table with
+    * no commit yet) and either returns a version without committing
+    * (`Left`: a replay, a provable no-op, a racing creator) or stages a
+    * commit (`Right`). The loop claims the staged version through
+    * [[tryCommit]]; on a lost race it deletes that attempt's checkpoint and
+    * discarded dirs and runs the next attempt against the new head. */
+  private def commitLoop(spark: SparkSession, path: String, what: String)(
+      attempt: Option[(Long, Commit)] => Either[Long, Staged]): Long = {
+    val root = new Path(path)
+    val f = fs(spark, root)
+    retryLostRaces(path, what) {
+      val head = latestVersion(spark, path).map(b => b -> readManifest(spark, f, root, b))
+      attempt(head) match {
+        case Left(v) => Some(v)
+        case Right(s) =>
+          if (tryCommit(f, root, s.v, s.body)) Some(s.v)
+          else {
+            (s.ckpt.toSeq ++ s.discard).foreach(d => f.delete(d, true))
+            None
+          }
+      }
+    }
+  }
+
+  /** Re-run `attempt` while it reports a lost race (None); the
+    * [[MaxCommitRetries]]th loss in a row gives up. */
+  @annotation.tailrec
+  private def retryLostRaces[A](path: String, what: String, lost: Int = 0)(
+      attempt: => Option[A]): A = attempt match {
+    case Some(a) => a
+    case None =>
+      require(lost + 1 < MaxCommitRetries,
+        s"$path: lost ${lost + 1} $what commit races in a row; giving up")
+      retryLostRaces(path, what, lost + 1)(attempt)
+  }
+
+  /** Recomputes a caller may spend on a precondition (`txnExpected`,
+    * `propsExpected`, `expectedBase`) that concurrent commits keep moving. */
+  private[graft] val MaxRecomputes = 5
+
+  /** Re-run `attempt` — a recompute of work whose commit carries an
+    * optimistic precondition — while the precondition fails with
+    * [[ConcurrentTxnException]] or [[ConcurrentPropException]]; the
+    * [[MaxRecomputes]]th failure propagates. */
+  private[graft] def recomputeOnConflict[A](attempt: => A): A = {
+    var runs = 1
+    while (true) {
+      try return attempt
+      catch {
+        case _: ConcurrentTxnException | _: ConcurrentPropException
+            if runs < MaxRecomputes => runs += 1
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** Append a new version containing exactly `df` (full-snapshot semantics,
     * like the reference pipeline's overwrite-per-run tables). Returns the
     * committed version number. Concurrency-safe: on a lost race the data is
     * NOT rewritten — the writer just claims the next free version slot for
-    * the already-staged files. */
-  def write(df: DataFrame, path: String): Long = write(df, path, Nil)
-
-  /** As [[write]], additionally recording per-file min/max stats for
-    * `statsCols` in the commit manifest (parquet footer reads only — see
-    * [[DataSkipping.collectMeta]]), enabling file pruning in [[readWhere]]
-    * and copy-on-write file selection in [[upsert]]/[[delete]]. Choose the
-    * columns the table is z-ordered/clustered by: stats on a column the
-    * layout doesn't cluster are valid but rarely selective. */
-  def write(df: DataFrame, path: String, statsCols: Seq[String]): Long =
-    writeInternal(df, path, statsCols, txn = None)
-
-  /** As [[write]], laying the snapshot out hive-partitioned by
-    * `partitionBy` (dir-per-value under each commit's token dir): reads
-    * prune whole partition directories at plan time, appends inherit the
-    * layout. */
-  def write(df: DataFrame, path: String, statsCols: Seq[String],
-      partitionBy: Seq[String]): Long =
+    * the already-staged files.
+    *
+    * @param statsCols record per-file min/max stats for these columns in
+    *                  the commit manifest (parquet footer reads only — see
+    *                  [[DataSkipping.collectMeta]]), enabling file pruning
+    *                  in [[readWhere]] and copy-on-write file selection in
+    *                  [[upsert]]/[[delete]]. Choose the columns the table
+    *                  is z-ordered/clustered by: stats on a column the
+    *                  layout doesn't cluster are valid but rarely selective.
+    * @param partitionBy lay the snapshot out hive-partitioned by these
+    *                  columns (dir-per-value under each commit's token dir):
+    *                  reads prune whole partition directories at plan time,
+    *                  appends inherit the layout. */
+  def write(df: DataFrame, path: String, statsCols: Seq[String] = Nil,
+      partitionBy: Seq[String] = Nil): Long =
     writeInternal(df, path, statsCols, txn = None, partitionCols = partitionBy)
 
   /** CREATE a bucketed table (CLUSTERED BY (cols) INTO n BUCKETS): the
@@ -1448,11 +1516,9 @@ object VersionedTable {
       Map[String, Long], StructType, Map[String, String])] = None
     var idAdvance: Long => Map[String, String] = _ => Map.empty
     var idSrc: Option[DataFrame] = None
-    var attempt = 0
-    var committed = -1L
-    try while (committed < 0) {
-      val base = latestVersion(spark, path)
-      val parent = base.map(b => readManifest(spark, f, root, b))
+    try commitLoop(spark, path, "write") { head =>
+      val base = head.map(_._1)
+      val parent = head.map(_._2)
       parent.foreach(p => fenceMvWrite(p.props, path, "write"))
       // the committed version's props: an explicit set (CREATE TABLE) or
       // the parent's, carried — the same resolution encodeCommit applies
@@ -1463,90 +1529,78 @@ object VersionedTable {
         staged.foreach(s => f.delete(s._1, true))
         staged = None
       }
-      ifExists.foreach { errorOut =>
-        base.foreach { existing =>
-          staged.foreach(s => f.delete(s._1, true))
-          if (errorOut) throw new IllegalStateException(
-            s"$path: table already exists (SaveMode.ErrorIfExists); use " +
-              "mode(\"append\") or mode(\"overwrite\")")
-          return existing // SaveMode.Ignore: the racing creator won
+      val replayed = txn.exists { case (app, bid) =>
+        parent.exists(_.txn.get(app).exists(_ >= bid))
+      }
+      if (base.nonEmpty && (ifExists.nonEmpty || replayed)) {
+        // a racing creator won (SaveMode.ErrorIfExists / Ignore), or a
+        // replayed batch already committed — clean up and no-op
+        staged.foreach(s => f.delete(s._1, true))
+        if (ifExists.contains(true)) throw new IllegalStateException(
+          s"$path: table already exists (SaveMode.ErrorIfExists); use " +
+            "mode(\"append\") or mode(\"overwrite\")")
+        Left(base.get)
+      } else {
+        if (staged.isEmpty) {
+          // a snapshot onto an existing partitioned table keeps its layout
+          // unless the caller re-declares one (an overwrite may re-partition
+          // — old versions keep their own layout via their own manifests)
+          val effPart =
+            if (partitionCols.nonEmpty) partitionCols
+            else parent.flatMap(_.schema).map(partitionColsOf).getOrElse(Nil)
+          // identity allocation (skipped on the CREATE TABLE path, whose
+          // declared empty frame legitimately carries the column), then
+          // generation (a generated PARTITION column must exist before the
+          // layout reorder below), then shaping, then CHECKs
+          val (idDf, idAdv, idS) =
+            if (ifExists.contains(true))
+              (df, (_: Long) => Map.empty[String, String], None)
+            else applyIdentity(df, effProps, path)
+          idSrc.foreach(_.unpersist())
+          idSrc = idS
+          idAdvance = idAdv
+          val genDf = applyGenerated(idDf, effProps, path)
+          val tagged =
+            if (effPart.isEmpty) genDf.schema
+            else withPartitionMeta(genDf.schema, effPart)
+          val ordered =
+            if (effPart.isEmpty) genDf
+            else genDf.select(tagged.fieldNames.map(col).toSeq: _*)
+          val shaped = withChecks(
+            optimizeWriteShape(ordered, effProps, effPart), effProps, path)
+          val (dir, rel) =
+            try stage(shaped, root, f, partitionCols = effPart,
+              props = effProps)
+            catch { case e: Throwable => translateViolation(e, path) }
+          val (st, rw) = metaFor(spark, root, rel, statsCols)
+          staged = Some((dir, rel, st, rw, tagged, effProps))
         }
-      }
-      txn.foreach { case (app, bid) =>
-        if (parent.exists(_.txn.get(app).exists(_ >= bid))) {
-          // replayed batch: already committed — clean up and no-op
-          staged.foreach(s => f.delete(s._1, true))
-          return base.get
-        }
-      }
-      if (staged.isEmpty) {
-        // a snapshot onto an existing partitioned table keeps its layout
-        // unless the caller re-declares one (an overwrite may re-partition
-        // — old versions keep their own layout via their own manifests)
-        val effPart =
-          if (partitionCols.nonEmpty) partitionCols
-          else parent.flatMap(_.schema).map(partitionColsOf).getOrElse(Nil)
-        // identity allocation (skipped on the CREATE TABLE path, whose
-        // declared empty frame legitimately carries the column), then
-        // generation (a generated PARTITION column must exist before the
-        // layout reorder below), then shaping, then CHECKs
-        val (idDf, idAdv, idS) =
-          if (ifExists.contains(true))
-            (df, (_: Long) => Map.empty[String, String], None)
-          else applyIdentity(df, effProps, path)
-        idSrc.foreach(_.unpersist())
-        idSrc = idS
-        idAdvance = idAdv
-        val genDf = applyGenerated(idDf, effProps, path)
-        val tagged =
-          if (effPart.isEmpty) genDf.schema
-          else withPartitionMeta(genDf.schema, effPart)
-        val ordered =
-          if (effPart.isEmpty) genDf
-          else genDf.select(tagged.fieldNames.map(col).toSeq: _*)
-        val shaped = withChecks(
-          optimizeWriteShape(ordered, effProps, effPart), effProps, path)
-        val (dir, rel) =
-          try stage(shaped, root, f, partitionCols = effPart,
-            props = effProps)
-          catch { case e: Throwable => translateViolation(e, path) }
-        val (st, rw) = metaFor(spark, root, rel, statsCols)
-        staged = Some((dir, rel, st, rw, tagged, effProps))
-      }
-      val (_, rel, stats, rows, tagged, _) = staged.get
-      // carry the streaming-txn watermarks: a snapshot write between two
-      // micro-batches must not reopen the door to batch replay
-      val txnMap = parent.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
-      val v = base.getOrElse(0L) + 1L
-      // identity hwm advances with the snapshot's own rows (hwm never
-      // resets on overwrite — Delta keeps allocating monotonic)
-      val idProps = idAdvance(rows.values.sum)
-      val (body, ckptDir) = encodeCommit(spark, root, v, rel, tagged.json,
-        stats, rows, txnMap, parent = parent,
-        props = if (idProps.isEmpty) newProps else Some(effProps ++ idProps))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt commit races in a row; giving up")
+        val (_, rel, stats, rows, tagged, _) = staged.get
+        // carry the streaming-txn watermarks: a snapshot write between two
+        // micro-batches must not reopen the door to batch replay
+        val txnMap = parent.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
+        val v = base.getOrElse(0L) + 1L
+        // identity hwm advances with the snapshot's own rows (hwm never
+        // resets on overwrite — Delta keeps allocating monotonic)
+        val idProps = idAdvance(rows.values.sum)
+        val (body, ckptDir) = encodeCommit(spark, root, v, rel, tagged.json,
+          stats, rows, txnMap, parent = parent,
+          props = if (idProps.isEmpty) newProps else Some(effProps ++ idProps))
+        // staged files stay valid for the next slot (content is
+        // base-independent)
+        Right(Staged(v, body, ckptDir))
       }
     } finally idSrc.foreach(_.unpersist())
-    committed
   }
 
   /** Commit a new version = parent's files + `df`'s files (append
     * semantics; no existing byte is touched). When the caller passes no
     * `statsCols`, the parent's stats columns are collected for the new
-    * files so pruning keeps working on append-maintained tables. */
-  def append(df: DataFrame, path: String, statsCols: Seq[String] = Nil): Long =
-    appendInternal(df, path, statsCols, txn = None)
-
-  /** As [[append]] with an explicit partition layout — required to match
-    * the table's (first writer fixes it); mostly useful as the
-    * genesis-append form. */
-  def append(df: DataFrame, path: String, statsCols: Seq[String],
-      partitionBy: Seq[String]): Long =
+    * files so pruning keeps working on append-maintained tables.
+    * `partitionBy` must match the table's layout (the first writer fixes
+    * it); it is mostly useful as the genesis-append form. */
+  def append(df: DataFrame, path: String, statsCols: Seq[String] = Nil,
+      partitionBy: Seq[String] = Nil): Long =
     appendInternal(df, path, statsCols, txn = None, partitionCols = partitionBy)
 
   /** Exactly-once streaming commit (Delta's txnAppId/txnVersion idiom):
@@ -1729,8 +1783,7 @@ object VersionedTable {
       pattern: Option[String] = None): (Long, Int) = {
     val src = new Path(srcDir)
     val sf = fs(spark, src)
-    var attempt = 0
-    while (true) {
+    retryLostRaces(tablePath, "COPY INTO") {
       val head = latestVersion(spark, tablePath)
       val loaded: Map[String, Long] = head
         .map(b => readManifest(spark, fs(spark, new Path(tablePath)),
@@ -1757,21 +1810,19 @@ object VersionedTable {
           s"loaded (${mutated.mkString(", ")}); loaded source files are " +
           "immutable — write corrections as NEW files, or MERGE them")
       val fresh = candidates.filterNot { case (_, k, _) => loaded.contains(k) }
-      if (fresh.isEmpty) return (head.getOrElse(0L), 0)
-      val df = spark.read.parquet(fresh.map(_._1.toString): _*)
-      try {
-        val v = appendInternal(df, tablePath, Nil, txn = None,
-          txnMulti = fresh.map { case (_, k, m) => k -> m }.toMap)
-        return (v, fresh.size)
-      } catch {
-        case r: CopyReplayedException => return (r.head, 0)
-        case _: ConcurrentCopyException =>
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"$tablePath: lost $attempt concurrent COPY INTO races; giving up")
+      if (fresh.isEmpty) Some((head.getOrElse(0L), 0))
+      else {
+        val df = spark.read.parquet(fresh.map(_._1.toString): _*)
+        try {
+          val v = appendInternal(df, tablePath, Nil, txn = None,
+            txnMulti = fresh.map { case (_, k, m) => k -> m }.toMap)
+          Some((v, fresh.size))
+        } catch {
+          case r: CopyReplayedException => Some((r.head, 0))
+          case _: ConcurrentCopyException => None // re-diff the remainder
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def copyKey(p: Path): String = {
@@ -1793,122 +1844,111 @@ object VersionedTable {
     // (props the allocation read, filled frame, hwm-advance, persisted src)
     var idCache: Option[(Map[String, String], DataFrame,
       Long => Map[String, String], Option[DataFrame])] = None
-    var attempt = 0
-    var committed = -1L
-    try while (committed < 0) {
-      val base = latestVersion(spark, path)
-      val c = base.map(b => readManifest(spark, f, root, b))
+    val committed = try commitLoop(spark, path, "append") { head =>
+      val base = head.map(_._1)
+      val c = head.map(_._2)
       c.foreach(cc => fenceMvWrite(cc.props, path, "append"))
-      txn.foreach { case (app, bid) =>
-        if (c.exists(_.txn.get(app).exists(_ >= bid))) {
-          // replayed batch: already committed — clean up and no-op
-          staged.foreach(s => f.delete(s._1, true))
-          return base.get
-        }
+      val replayed = txn.exists { case (app, bid) =>
+        c.exists(_.txn.get(app).exists(_ >= bid))
       }
-      if (txnMulti.nonEmpty) c.foreach { cc =>
-        val present = txnMulti.keySet.count(cc.txn.contains)
-        if (present == txnMulti.size) { // full replay: every file loaded
-          staged.foreach(s => f.delete(s._1, true))
+      val present = c.map(cc => txnMulti.keySet.count(cc.txn.contains)).getOrElse(0)
+      if (replayed || present > 0) {
+        // replayed batch: already committed — clean up and no-op; the
+        // post-commit hooks below see nothing staged
+        staged.foreach(s => f.delete(s._1, true))
+        staged = None
+        if (present > 0 && present == txnMulti.size) // full replay
           throw new CopyReplayedException(base.get)
-        }
-        if (present > 0) { // overlapping concurrent load: staged batch
-          staged.foreach(s => f.delete(s._1, true)) // would double-load
+        if (present > 0) // overlapping concurrent load: would double-load
           throw new ConcurrentCopyException(
             s"$path: $present of ${txnMulti.size} source files were loaded " +
               "concurrently; re-diff against the new manifest")
+        Left(base.get)
+      } else {
+        // identity allocation, then generated fill/enforce (a generation may
+        // reference the identity column), all BEFORE the schema-match
+        // contract, so a writer that (correctly) omits either still appends.
+        // The allocation (an eager zipWithIndex count job) is MEMOIZED on
+        // the props it read — a lost CAS race whose winner didn't change the
+        // write contract reuses it; a changed hwm/declaration recomputes.
+        val curProps = c.map(_.props).getOrElse(Map.empty)
+        val (idDf, idAdvance) = idCache match {
+          case Some((p, d, a, _)) if p == curProps => (d, a)
+          case prev =>
+            prev.foreach(_._4.foreach(_.unpersist()))
+            val (d, a, src) = applyIdentity(df, curProps, path)
+            idCache = Some((curProps, d, a, src))
+            (d, a)
         }
-      }
-      // identity allocation, then generated fill/enforce (a generation may
-      // reference the identity column), all BEFORE the schema-match
-      // contract, so a writer that (correctly) omits either still appends.
-      // The allocation (an eager zipWithIndex count job) is MEMOIZED on
-      // the props it read — a lost CAS race whose winner didn't change the
-      // write contract reuses it; a changed hwm/declaration recomputes.
-      val curProps0 = c.map(_.props).getOrElse(Map.empty)
-      val (idDf, idAdvance) = idCache match {
-        case Some((p, d, a, _)) if p == curProps0 => (d, a)
-        case prev =>
-          prev.foreach(_._4.foreach(_.unpersist()))
-          val (d, a, src) = applyIdentity(df, curProps0, path)
-          idCache = Some((curProps0, d, a, src))
-          (d, a)
-      }
-      val effDf = applyGenerated(idDf, curProps0, path)
-      c.flatMap(_.schema).foreach { bs =>
-        require(bs.fieldNames.toSet == effDf.schema.fieldNames.toSet &&
-          bs.fields.forall(bf =>
-            effDf.schema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType)),
-          s"append schema mismatch vs $path: table ${bs.simpleString}, " +
-            s"batch ${effDf.schema.simpleString}")
-      }
-      val curColMap = c.map(_.colMap).getOrElse(Map.empty)
-      // a table's partition layout is part of its contract: appends inherit
-      // it; an explicit partitionBy must agree (it cannot re-layout —
-      // carried files keep their dirs)
-      val parentPart = c.flatMap(_.schema).map(partitionColsOf).getOrElse(Nil)
-      val effPart =
-        if (c.isEmpty && partitionCols.nonEmpty) partitionCols else parentPart
-      if (c.nonEmpty && partitionCols.nonEmpty)
-        require(partitionCols == parentPart,
-          s"append partitionBy (${partitionCols.mkString(",")}) must match the " +
-            s"table's layout (${if (parentPart.isEmpty) "unpartitioned"
-            else parentPart.mkString(",")}); only overwrite may re-partition")
-      val curProps = c.map(_.props).getOrElse(Map.empty)
-      if (staged.exists(st => st._5 != curColMap || st._6 != effPart ||
-          st._7 != curProps)) {
-        // a racing DDL changed the physical mapping, a racing OVERWRITE
-        // re-partitioned the table (allowed), or a racing properties
-        // commit changed the write contract (a new CHECK constraint must
-        // validate THIS batch too): files staged under the old contract
-        // are stale — restage under the current one
-        staged.foreach(s => f.delete(s._1, true))
-        staged = None
-      }
-      if (staged.isEmpty) {
-        val shaped = withChecks(
-          optimizeWriteShape(effDf, curProps, effPart), curProps, path)
-        val (dir, rel) =
-          try stage(shaped, root, f, curColMap, effPart, curProps)
-          catch { case e: Throwable => translateViolation(e, path) }
-        val cols = c.map(inheritedStatsCols(spark, root, _, statsCols)).getOrElse(statsCols)
-        val (st, rw) = metaFor(spark, root, rel, cols, curColMap)
-        staged = Some((dir, rel, st, rw, curColMap, effPart, curProps))
-      }
-      val (_, rel, st, rw, _, _, _) = staged.get
-      // merge nullability so an appended nullable column stays readable
-      val schemaJson = c.flatMap(_.schema).map { bs =>
-        StructType(bs.fields.map(bf => bf.copy(nullable = bf.nullable ||
-          effDf.schema.fields.find(_.name == bf.name).exists(_.nullable)))).json
-      }.getOrElse(
-        (if (effPart.isEmpty) effDf.schema
-         else withPartitionMeta(effDf.schema, effPart)).json)
-      val v = base.getOrElse(0L) + 1L
-      // stats is by-name and this append vouches for carry identity, so a
-      // delta-encoded append NEVER forces the parent's (possibly
-      // checkpoint-deferred, million-entry) stats map — it serializes only
-      // the new files' stats it already holds
-      // identity hwm advances ATOMICALLY with the rows this commit added
-      // (rw = the staged files' exact row counts)
-      val idProps = idAdvance(rw.values.sum)
-      val (body, ckptDir) = encodeCommit(spark, root, v,
-        c.map(_.files).getOrElse(Nil) ++ rel, schemaJson,
-        c.map(_.stats).getOrElse(Map.empty) ++ st,
-        c.map(_.rows).getOrElse(Map.empty) ++ rw,
-        c.map(_.txn).getOrElse(Map.empty) ++ txn.toMap ++ txnMulti,
-        c.map(_.dv).getOrElse(Seq.empty), c.map(_.dvRows).getOrElse(Map.empty),
-        parent = c, colMap = curColMap,
-        physDropped = c.map(_.physDropped).getOrElse(Set.empty),
-        carriedIdentical = true, statsAddOnly = Some(st),
-        props = if (idProps.isEmpty) None else Some(curProps ++ idProps))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
+        val effDf = applyGenerated(idDf, curProps, path)
+        c.flatMap(_.schema).foreach { bs =>
+          require(bs.fieldNames.toSet == effDf.schema.fieldNames.toSet &&
+            bs.fields.forall(bf =>
+              effDf.schema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType)),
+            s"append schema mismatch vs $path: table ${bs.simpleString}, " +
+              s"batch ${effDf.schema.simpleString}")
+        }
+        val curColMap = c.map(_.colMap).getOrElse(Map.empty)
+        // a table's partition layout is part of its contract: appends inherit
+        // it; an explicit partitionBy must agree (it cannot re-layout —
+        // carried files keep their dirs)
+        val parentPart = c.flatMap(_.schema).map(partitionColsOf).getOrElse(Nil)
+        val effPart =
+          if (c.isEmpty && partitionCols.nonEmpty) partitionCols else parentPart
+        if (c.nonEmpty && partitionCols.nonEmpty)
+          require(partitionCols == parentPart,
+            s"append partitionBy (${partitionCols.mkString(",")}) must match the " +
+              s"table's layout (${if (parentPart.isEmpty) "unpartitioned"
+              else parentPart.mkString(",")}); only overwrite may re-partition")
+        if (staged.exists(st => st._5 != curColMap || st._6 != effPart ||
+            st._7 != curProps)) {
+          // a racing DDL changed the physical mapping, a racing OVERWRITE
+          // re-partitioned the table (allowed), or a racing properties
+          // commit changed the write contract (a new CHECK constraint must
+          // validate THIS batch too): files staged under the old contract
+          // are stale — restage under the current one
+          staged.foreach(s => f.delete(s._1, true))
+          staged = None
+        }
+        if (staged.isEmpty) {
+          val shaped = withChecks(
+            optimizeWriteShape(effDf, curProps, effPart), curProps, path)
+          val (dir, rel) =
+            try stage(shaped, root, f, curColMap, effPart, curProps)
+            catch { case e: Throwable => translateViolation(e, path) }
+          val cols = c.map(inheritedStatsCols(spark, root, _, statsCols)).getOrElse(statsCols)
+          val (st, rw) = metaFor(spark, root, rel, cols, curColMap)
+          staged = Some((dir, rel, st, rw, curColMap, effPart, curProps))
+        }
+        val (_, rel, st, rw, _, _, _) = staged.get
+        // merge nullability so an appended nullable column stays readable
+        val schemaJson = c.flatMap(_.schema).map { bs =>
+          StructType(bs.fields.map(bf => bf.copy(nullable = bf.nullable ||
+            effDf.schema.fields.find(_.name == bf.name).exists(_.nullable)))).json
+        }.getOrElse(
+          (if (effPart.isEmpty) effDf.schema
+           else withPartitionMeta(effDf.schema, effPart)).json)
+        val v = base.getOrElse(0L) + 1L
+        // stats is by-name and this append vouches for carry identity, so a
+        // delta-encoded append NEVER forces the parent's (possibly
+        // checkpoint-deferred, million-entry) stats map — it serializes only
+        // the new files' stats it already holds
+        // identity hwm advances ATOMICALLY with the rows this commit added
+        // (rw = the staged files' exact row counts)
+        val idProps = idAdvance(rw.values.sum)
+        val (body, ckptDir) = encodeCommit(spark, root, v,
+          c.map(_.files).getOrElse(Nil) ++ rel, schemaJson,
+          c.map(_.stats).getOrElse(Map.empty) ++ st,
+          c.map(_.rows).getOrElse(Map.empty) ++ rw,
+          c.map(_.txn).getOrElse(Map.empty) ++ txn.toMap ++ txnMulti,
+          c.map(_.dv).getOrElse(Seq.empty), c.map(_.dvRows).getOrElse(Map.empty),
+          parent = c, colMap = curColMap,
+          physDropped = c.map(_.physDropped).getOrElse(Set.empty),
+          carriedIdentical = true, statsAddOnly = Some(st),
+          props = if (idProps.isEmpty) None else Some(curProps ++ idProps))
         // staged files stay valid for the next slot (content is
         // base-independent); only the txn/schema checks re-run
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt append commit races in a row; giving up")
+        Right(Staged(v, body, ckptDir))
       }
     } finally idCache.foreach(_._4.foreach(_.unpersist()))
     // post-commit hygiene: bin-pack the touched partitions when the table
@@ -2009,62 +2049,60 @@ object VersionedTable {
     val f = fs(spark, root)
     def missingOf(c: Commit): Seq[String] =
       (c.files ++ c.dv).filterNot(r => f.exists(new Path(root, r)))
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
+    // (target, pre-restore head) of the attempt that staged the commit
+    var restored: Option[(Commit, Commit)] = None
+    val committed = commitLoop(spark, path, "restore") { head =>
+      restored = None
       require(f.exists(manifest(root, toV)), s"$path has no version $toV")
-      val head = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      if (head == toV) return head
-      val target = readManifest(spark, f, root, toV)
-      val cur = readManifest(spark, f, root, head)
-      // RESTORE vs VACUUM race guard: a vacuum computing liveness BEFORE
-      // this restore commits may drop toV and delete files referenced only
-      // by dropped versions — the CAS alone can't see that. Check the
-      // target's files before committing, and re-verify after winning: if
-      // the race hit anyway, COMPENSATE by re-publishing the pre-restore
-      // head (whose files the vacuum kept — it was a kept version) rather
-      // than leave a head that points at deleted data.
-      val preMissing = missingOf(target)
-      require(preMissing.isEmpty,
-        s"$path: cannot restore to $toV — ${preMissing.size} file(s) already " +
-          s"removed (concurrent vacuum?): ${preMissing.take(3).mkString(",")}")
-      val v = head + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, target.files,
-        target.schema.map(_.json).getOrElse("null"),
-        target.stats, target.rows, cur.txn, target.dv, target.dvRows,
-        parent = Some(cur), colMap = target.colMap,
-        physDropped = target.physDropped,
-        props = Some(target.props), // RESTORE restores properties too
-        // restored files keep the ids THEIR commit assigned; the watermark
-        // stays monotone vs the abandoned head so later mints never collide
-        rowIdSeed = Some((math.max(cur.rowHwm, target.rowHwm), target.baseRow)))
-      if (tryCommit(f, root, v, body)) {
-        val postMissing = missingOf(target)
-        if (postMissing.nonEmpty) {
-          // compensation re-publishes cur; seed off the JUST-COMMITTED v so
-          // any ids it minted stay fenced
-          val vC = readManifest(spark, f, root, v)
-          val (undo, undoCkpt) = encodeCommit(spark, root, v + 1L, cur.files,
-            cur.schema.map(_.json).getOrElse("null"),
-            cur.stats, cur.rows, cur.txn, cur.dv, cur.dvRows,
-            parent = Some(target), forceFull = true,
-            colMap = cur.colMap, physDropped = cur.physDropped,
-            props = Some(cur.props),
-            rowIdSeed = Some((math.max(vC.rowHwm, cur.rowHwm), cur.baseRow)))
-          if (!tryCommit(f, root, v + 1L, undo)) // best-effort compensation
-            undoCkpt.foreach(d => f.delete(d, true))
-          throw new IllegalStateException(
-            s"$path: restore to $toV raced a vacuum — ${postMissing.size} of its " +
-              s"file(s) were deleted after the commit; re-published version $head " +
-              s"as ${v + 1L}. Re-run restore within the vacuum retention window.")
-        }
-        committed = v
-      } else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt restore commit races in a row; giving up")
+      val (b, cur) = head.getOrElse(noVersions(path))
+      if (b == toV) Left(b)
+      else {
+        val target = readManifest(spark, f, root, toV)
+        // RESTORE vs VACUUM race guard: a vacuum computing liveness BEFORE
+        // this restore commits may drop toV and delete files referenced only
+        // by dropped versions — the CAS alone can't see that. Check the
+        // target's files before committing, and re-verify after winning: if
+        // the race hit anyway, COMPENSATE by re-publishing the pre-restore
+        // head (whose files the vacuum kept — it was a kept version) rather
+        // than leave a head that points at deleted data.
+        val preMissing = missingOf(target)
+        require(preMissing.isEmpty,
+          s"$path: cannot restore to $toV — ${preMissing.size} file(s) already " +
+            s"removed (concurrent vacuum?): ${preMissing.take(3).mkString(",")}")
+        val v = b + 1L
+        val (body, ckptDir) = encodeCommit(spark, root, v, target.files,
+          target.schema.map(_.json).getOrElse("null"),
+          target.stats, target.rows, cur.txn, target.dv, target.dvRows,
+          parent = Some(cur), colMap = target.colMap,
+          physDropped = target.physDropped,
+          props = Some(target.props), // RESTORE restores properties too
+          // restored files keep the ids THEIR commit assigned; the watermark
+          // stays monotone vs the abandoned head so later mints never collide
+          rowIdSeed = Some((math.max(cur.rowHwm, target.rowHwm), target.baseRow)))
+        restored = Some((target, cur))
+        Right(Staged(v, body, ckptDir))
+      }
+    }
+    restored.foreach { case (target, cur) =>
+      val postMissing = missingOf(target)
+      if (postMissing.nonEmpty) {
+        // compensation re-publishes cur; seed off the JUST-COMMITTED version
+        // so any ids it minted stay fenced
+        val vC = readManifest(spark, f, root, committed)
+        val (undo, undoCkpt) = encodeCommit(spark, root, committed + 1L, cur.files,
+          cur.schema.map(_.json).getOrElse("null"),
+          cur.stats, cur.rows, cur.txn, cur.dv, cur.dvRows,
+          parent = Some(target), forceFull = true,
+          colMap = cur.colMap, physDropped = cur.physDropped,
+          props = Some(cur.props),
+          rowIdSeed = Some((math.max(vC.rowHwm, cur.rowHwm), cur.baseRow)))
+        if (!tryCommit(f, root, committed + 1L, undo)) // best-effort compensation
+          undoCkpt.foreach(d => f.delete(d, true))
+        throw new IllegalStateException(
+          s"$path: restore to $toV raced a vacuum — ${postMissing.size} of its " +
+            s"file(s) were deleted after the commit; re-published version " +
+            s"${committed - 1L} as ${committed + 1L}. Re-run restore within " +
+            "the vacuum retention window.")
       }
     }
     committed
@@ -2211,8 +2249,7 @@ object VersionedTable {
         require(f.exists(manifest(root, x)), s"$path has no version $x")
         x
       case None =>
-        latestVersion(spark, path).getOrElse(
-          throw new IllegalArgumentException(s"$path has no committed versions"))
+        latestVersion(spark, path).getOrElse(noVersions(path))
     }
     (root, f, v, readManifest(spark, f, root, v))
   }
@@ -2953,159 +2990,149 @@ object VersionedTable {
       incremental: Boolean = false): (Long, Seq[String]) = {
     require(cols.nonEmpty, "analyzeNdv needs at least one column")
     val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
     var analyzed: Seq[String] = Nil
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    val committed = commitLoop(spark, path, "analyze") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
+      analyzed = Nil
       val s = c.schema.getOrElse(throw new IllegalArgumentException(
         s"$path: ANALYZE needs a schema-recorded table"))
       val missing = cols.filterNot(s.fieldNames.contains)
       require(missing.isEmpty,
         s"$path: ANALYZE names missing column(s): ${missing.mkString(",")}")
-      if (c.files.isEmpty) return (b, Nil)
       // INCREMENTAL: scan only the files still needing a sketch for some
       // requested column — the steady-state cost of keeping dictionary
       // pruning and NDV gates fresh across appends is O(new files), not
       // O(table). Every append otherwise silently stales them.
-      val todo: Seq[String] =
-        if (!incremental) c.files
-        else {
-          val needy = needsSketch(spark, root, c, s, cols)
-          if (needy.isEmpty && cols.forall(ndvColsIn(c.props).contains))
-            return (b, Nil) // fully covered: nothing to scan, no commit
-          else if (needy.isEmpty) c.files // roster drifted: re-prove fully
-          else needy
-        }
-      analyzed = todo
-      val sub = StructType(s.fields.filter(fl => cols.contains(fl.name)))
-      val keyed0 = physReadKeyed(spark, root, c, sub, todo, withKeys = true)
-      val keyed =
-        if (!todo.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) keyed0
-        else keyed0.join(
-          spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-            .select(col(FileKeyCol), col(RowIdxCol)),
-          Seq(FileKeyCol, RowIdxCol), "left_anti")
-      // one patch per (file, column): the KMV sketch, the EXACT sum (for
-      // integral/decimal columns — cast into a 38-digit decimal so the
-      // fold is loss-free; floating sums are not order-exact and skip),
-      // and the non-null count (disambiguates an all-null file's sum 0
-      // from an overflowed fold's null) — serialized as one JSON string
-      // so the executor-side checkpoint merge channel stays a simple
-      // string map
-      val sumEligible: Set[String] = cols.filter(n =>
-        sumExactType(s(s.fieldIndex(n)).dataType)).toSet
-      def patchExpr(n: String): Column = {
-        val sumC: Column = s(s.fieldIndex(n)).dataType match {
-          case d: org.apache.spark.sql.types.DecimalType =>
-            sum(col(n).cast(org.apache.spark.sql.types
-              .DecimalType(38, d.scale))).cast("string")
-          case t if sumExactType(t) =>
-            sum(col(n).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-              .cast("string")
-          case _ => lit(null).cast("string")
-        }
-        // JOINT null counts for every requested pair this column leads
-        // (lexicographically) — the two-nullable boundary composition's
-        // license; zero counts are recorded too (absence means unknown)
-        val pairs = cols.filter(_ > n).sorted
-        // per-SET null-any count for a 3+ column ANALYZE, recorded once
-        // on the set's lexicographically-first column: rows null in >= 1
-        // requested column — `rows − nullAny` is then the exact all-non-
-        // null count the boundary walk needs past two nullables
-        val naKey: Option[String] =
-          if (cols.size >= 3 && n == cols.min)
-            Some(cols.sorted.filterNot(_ == n).mkString(","))
-          else None
-        val fields = Seq(
-          graft.functions.KmvHashesAgg(col(n), NdvSketchK).as("ndv"),
-          sumC.as("sum"), count(col(n)).as("cnt")) ++
-          (if (pairs.isEmpty) Nil
-           else Seq(map(pairs.flatMap(m => Seq(lit(m),
-             sum(when(col(n).isNull && col(m).isNull, 1L)
-               .otherwise(0L)))): _*).as("jn"))) ++
-          naKey.map(k => map(lit(k),
-            sum(when(cols.map(col(_).isNull).reduce(_ || _), 1L)
-              .otherwise(0L))).as("na")).toSeq
-        to_json(struct(fields: _*)).as(n)
-      }
-      val sketchDf = keyed.groupBy(col(FileKeyCol))
-        .agg(patchExpr(cols.head), cols.tail.map(patchExpr): _*)
-      val v = b + 1L
-      // the analyzed-column roster rides TBLPROPERTIES so plan-time
-      // consumers can answer "is there a sketch for this column?" from the
-      // O(1) manifest head WITHOUT forcing the lazy checkpoint stats map —
-      // ndvOfCommit gates on it, keeping un-analyzed reads zero-cost
-      val roster = (ndvColsIn(c.props) ++ cols).distinct.sorted
-      val nextProps = c.props + (NdvColsKey -> roster.mkString(","))
-      val (body, ckptDir) =
-        if (c.ckptInfo.isDefined && c.files.size > CkptInlineMaxFiles) {
-          // DISTRIBUTED authoring: the sketch frame joins the anchor
-          // checkpoint rows on the EXECUTORS (writeCkptFromAnchor's
-          // ndvMerge channel); only the post-anchor adds' sketches —
-          // O(changed files) by construction — come back to the driver.
-          // The full stats map is NEVER materialized here: a million-file
-          // ANALYZE costs one column-pruned data scan plus one
-          // checkpoint-sized Spark job, same as any other anchored ride.
-          sketchDf.persist() // scanned once for adds, once for the ride
-          val aSet = c.ckptInfo.get._2
-          val addKeys = c.files.filterNot(aSet)
-          val addSk: Map[String, Map[String, String]] =
-            if (addKeys.isEmpty) Map.empty
-            else sketchDf.filter(col(FileKeyCol).isInCollection(addKeys))
-              .collect().map(r => r.getString(0) -> cols.map(n =>
-                n -> r.getAs[String](n)).toMap)
-              .toMap
-          val addStats: DataSkipping.FileStats = addKeys.map { fk =>
-            val prior = c.statsAdds.getOrElse(fk, Map.empty)
-            fk -> (prior ++ addSk.getOrElse(fk, Map.empty).map { case (n, js) =>
-              n -> DataSkipping.applyAnalyzePatch(
-                prior.getOrElse(n,
-                  DataSkipping.ColStat(None, None, 0L, allNulls = false)),
-                js, sumEligible(n))
-            })
-          }.toMap
-          try encodeCommit(spark, root, v, c.files, s.json,
-            stats = c.stats, // by-name: never forced on this path
-            rows = c.rows, txn = c.txn, dv = c.dv, dvRows = c.dvRows,
-            parent = Some(c), forceFull = true,
-            colMap = c.colMap, physDropped = c.physDropped,
-            statsAddOnly = Some(addStats),
-            ndvMerge = Some((sketchDf, cols, sumEligible)),
-            props = Some(nextProps))
-          finally sketchDf.unpersist()
-        } else {
-          // inline/small tables: merge on the driver (stats are already
-          // driver-resident at this size)
-          val sketches: Map[String, Map[String, String]] =
-            sketchDf.collect().map { r =>
-              r.getString(0) -> cols.map(n => n -> r.getAs[String](n)).toMap
-            }.toMap
-          val newStats: DataSkipping.FileStats = c.files.map { fk =>
-            val prior = c.stats.getOrElse(fk, Map.empty)
-            val sk = sketches.getOrElse(fk, Map.empty)
-            fk -> (prior ++ sk.map { case (n, js) =>
-              n -> DataSkipping.applyAnalyzePatch(
-                prior.getOrElse(n,
-                  DataSkipping.ColStat(None, None, 0L, allNulls = false)),
-                js, sumEligible(n))
-            })
-          }.toMap
-          // carried stats CHANGED → not delta-expressible; encodes full
-          encodeCommit(spark, root, v, c.files, s.json,
-            newStats, c.rows, c.txn, c.dv, c.dvRows, parent = Some(c),
-            colMap = c.colMap, physDropped = c.physDropped,
-            props = Some(nextProps))
-        }
-      if (tryCommit(f, root, v, body)) committed = v
+      lazy val needy = needsSketch(spark, root, c, s, cols)
+      if (c.files.isEmpty) Left(b)
+      else if (incremental && needy.isEmpty &&
+          cols.forall(ndvColsIn(c.props).contains))
+        Left(b) // fully covered: nothing to scan, no commit
       else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt analyze commit races in a row; giving up")
+        val todo: Seq[String] =
+          if (!incremental || needy.isEmpty) c.files // roster drifted: re-prove fully
+          else needy
+        analyzed = todo
+        val sub = StructType(s.fields.filter(fl => cols.contains(fl.name)))
+        val keyed0 = physReadKeyed(spark, root, c, sub, todo, withKeys = true)
+        val keyed =
+          if (!todo.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) keyed0
+          else keyed0.join(
+            spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
+              .select(col(FileKeyCol), col(RowIdxCol)),
+            Seq(FileKeyCol, RowIdxCol), "left_anti")
+        // one patch per (file, column): the KMV sketch, the EXACT sum (for
+        // integral/decimal columns — cast into a 38-digit decimal so the
+        // fold is loss-free; floating sums are not order-exact and skip),
+        // and the non-null count (disambiguates an all-null file's sum 0
+        // from an overflowed fold's null) — serialized as one JSON string
+        // so the executor-side checkpoint merge channel stays a simple
+        // string map
+        val sumEligible: Set[String] = cols.filter(n =>
+          sumExactType(s(s.fieldIndex(n)).dataType)).toSet
+        def patchExpr(n: String): Column = {
+          val sumC: Column = s(s.fieldIndex(n)).dataType match {
+            case d: org.apache.spark.sql.types.DecimalType =>
+              sum(col(n).cast(org.apache.spark.sql.types
+                .DecimalType(38, d.scale))).cast("string")
+            case t if sumExactType(t) =>
+              sum(col(n).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+                .cast("string")
+            case _ => lit(null).cast("string")
+          }
+          // JOINT null counts for every requested pair this column leads
+          // (lexicographically) — the two-nullable boundary composition's
+          // license; zero counts are recorded too (absence means unknown)
+          val pairs = cols.filter(_ > n).sorted
+          // per-SET null-any count for a 3+ column ANALYZE, recorded once
+          // on the set's lexicographically-first column: rows null in >= 1
+          // requested column — `rows − nullAny` is then the exact all-non-
+          // null count the boundary walk needs past two nullables
+          val naKey: Option[String] =
+            if (cols.size >= 3 && n == cols.min)
+              Some(cols.sorted.filterNot(_ == n).mkString(","))
+            else None
+          val fields = Seq(
+            graft.functions.KmvHashesAgg(col(n), NdvSketchK).as("ndv"),
+            sumC.as("sum"), count(col(n)).as("cnt")) ++
+            (if (pairs.isEmpty) Nil
+             else Seq(map(pairs.flatMap(m => Seq(lit(m),
+               sum(when(col(n).isNull && col(m).isNull, 1L)
+                 .otherwise(0L)))): _*).as("jn"))) ++
+            naKey.map(k => map(lit(k),
+              sum(when(cols.map(col(_).isNull).reduce(_ || _), 1L)
+                .otherwise(0L))).as("na")).toSeq
+          to_json(struct(fields: _*)).as(n)
+        }
+        val sketchDf = keyed.groupBy(col(FileKeyCol))
+          .agg(patchExpr(cols.head), cols.tail.map(patchExpr): _*)
+        val v = b + 1L
+        // the analyzed-column roster rides TBLPROPERTIES so plan-time
+        // consumers can answer "is there a sketch for this column?" from the
+        // O(1) manifest head WITHOUT forcing the lazy checkpoint stats map —
+        // ndvOfCommit gates on it, keeping un-analyzed reads zero-cost
+        val roster = (ndvColsIn(c.props) ++ cols).distinct.sorted
+        val nextProps = c.props + (NdvColsKey -> roster.mkString(","))
+        val (body, ckptDir) =
+          if (c.ckptInfo.isDefined && c.files.size > CkptInlineMaxFiles) {
+            // DISTRIBUTED authoring: the sketch frame joins the anchor
+            // checkpoint rows on the EXECUTORS (writeCkptFromAnchor's
+            // ndvMerge channel); only the post-anchor adds' sketches —
+            // O(changed files) by construction — come back to the driver.
+            // The full stats map is NEVER materialized here: a million-file
+            // ANALYZE costs one column-pruned data scan plus one
+            // checkpoint-sized Spark job, same as any other anchored ride.
+            sketchDf.persist() // scanned once for adds, once for the ride
+            val aSet = c.ckptInfo.get._2
+            val addKeys = c.files.filterNot(aSet)
+            val addSk: Map[String, Map[String, String]] =
+              if (addKeys.isEmpty) Map.empty
+              else sketchDf.filter(col(FileKeyCol).isInCollection(addKeys))
+                .collect().map(r => r.getString(0) -> cols.map(n =>
+                  n -> r.getAs[String](n)).toMap)
+                .toMap
+            val addStats: DataSkipping.FileStats = addKeys.map { fk =>
+              val prior = c.statsAdds.getOrElse(fk, Map.empty)
+              fk -> (prior ++ addSk.getOrElse(fk, Map.empty).map { case (n, js) =>
+                n -> DataSkipping.applyAnalyzePatch(
+                  prior.getOrElse(n,
+                    DataSkipping.ColStat(None, None, 0L, allNulls = false)),
+                  js, sumEligible(n))
+              })
+            }.toMap
+            try encodeCommit(spark, root, v, c.files, s.json,
+              stats = c.stats, // by-name: never forced on this path
+              rows = c.rows, txn = c.txn, dv = c.dv, dvRows = c.dvRows,
+              parent = Some(c), forceFull = true,
+              colMap = c.colMap, physDropped = c.physDropped,
+              statsAddOnly = Some(addStats),
+              ndvMerge = Some((sketchDf, cols, sumEligible)),
+              props = Some(nextProps))
+            finally sketchDf.unpersist()
+          } else {
+            // inline/small tables: merge on the driver (stats are already
+            // driver-resident at this size)
+            val sketches: Map[String, Map[String, String]] =
+              sketchDf.collect().map { r =>
+                r.getString(0) -> cols.map(n => n -> r.getAs[String](n)).toMap
+              }.toMap
+            val newStats: DataSkipping.FileStats = c.files.map { fk =>
+              val prior = c.stats.getOrElse(fk, Map.empty)
+              val sk = sketches.getOrElse(fk, Map.empty)
+              fk -> (prior ++ sk.map { case (n, js) =>
+                n -> DataSkipping.applyAnalyzePatch(
+                  prior.getOrElse(n,
+                    DataSkipping.ColStat(None, None, 0L, allNulls = false)),
+                  js, sumEligible(n))
+              })
+            }.toMap
+            // carried stats CHANGED → not delta-expressible; encodes full
+            encodeCommit(spark, root, v, c.files, s.json,
+              newStats, c.rows, c.txn, c.dv, c.dvRows, parent = Some(c),
+              colMap = c.colMap, physDropped = c.physDropped,
+              props = Some(nextProps))
+          }
+        Right(Staged(v, body, ckptDir))
       }
     }
     (committed, analyzed)
@@ -3511,15 +3538,9 @@ object VersionedTable {
     * Concurrency: the merge pins the base version it read; if another
     * writer commits first, the claim on base+1 fails and the merge is
     * RECOMPUTED against the new head (optimistic concurrency, Delta-style)
-    * — a lost race can never silently drop the other writer's rows. */
-  def upsert(updates: DataFrame, path: String, keys: Seq[String]): Long =
-    upsert(updates, path, keys, evolveSchema = false, latestBy = None)
-
-  def upsert(updates: DataFrame, path: String, keys: Seq[String],
-      evolveSchema: Boolean): Long =
-    upsert(updates, path, keys, evolveSchema, latestBy = None)
-
-  /** @param evolveSchema true = columns present on only one side are kept
+    * — a lost race can never silently drop the other writer's rows.
+    *
+    * @param evolveSchema true = columns present on only one side are kept
     *                     and null-filled on the other (Delta's
     *                     mergeSchema/autoMerge behavior); false = schemas
     *                     must match by name.
@@ -3528,42 +3549,15 @@ object VersionedTable {
     *                 (the runbook's "keep record with max(ingested_at)").
     *                 Without it, intra-batch duplicate keys are rejected —
     *                 silently unioning them in would commit a table that
-    *                 violates the MERGE uniqueness contract. */
-  def upsert(
-      updates: DataFrame,
-      path: String,
-      keys: Seq[String],
-      evolveSchema: Boolean,
-      latestBy: Option[String]): Long =
-    upsert(updates, path, keys, evolveSchema, latestBy, Nil)
-
-  /** @param statsCols as in [[write]]: record per-file min/max for these
+    *                 violates the MERGE uniqueness contract.
+    * @param statsCols as in [[write]]: record per-file min/max for these
     *                  columns for the files this merge writes (parent's
     *                  stats columns are inherited when empty), so a table
-    *                  maintained by MERGE keeps its data-skipping reads. */
-  def upsert(
-      updates: DataFrame,
-      path: String,
-      keys: Seq[String],
-      evolveSchema: Boolean,
-      latestBy: Option[String],
-      statsCols: Seq[String]): Long =
-    upsert(updates, path, keys, evolveSchema, latestBy, statsCols, txn = None)
-
-  /** @param txn optional (appId, batchId) exactly-once marker, as in
+    *                  maintained by MERGE keeps its data-skipping reads.
+    * @param txn optional (appId, batchId) exactly-once marker, as in
     *            [[commitBatch]]: a replayed (appId, batchId) upsert is a
-    *            no-op — the streaming MERGE sink's idempotence. */
-  def upsert(
-      updates: DataFrame,
-      path: String,
-      keys: Seq[String],
-      evolveSchema: Boolean,
-      latestBy: Option[String],
-      statsCols: Seq[String],
-      txn: Option[(String, Long)]): Long =
-    upsert(updates, path, keys, evolveSchema, latestBy, statsCols, txn, None)
-
-  /** @param deleteWhere Delta's `WHEN MATCHED [AND cond] THEN DELETE`
+    *            no-op — the streaming MERGE sink's idempotence.
+    * @param deleteWhere Delta's `WHEN MATCHED [AND cond] THEN DELETE`
     *                    clause: update rows satisfying this predicate are
     *                    TOMBSTONES — their keys are removed from the table
     *                    and the rows are not inserted. This is the verb
@@ -3572,20 +3566,8 @@ object VersionedTable {
     *                    predicate is evaluated on the (deduplicated)
     *                    update row; NULL counts as false (the row upserts
     *                    normally). Copy-on-write file selection already
-    *                    covers tombstone keys — they are update keys. */
-  def upsert(
-      updates: DataFrame,
-      path: String,
-      keys: Seq[String],
-      evolveSchema: Boolean,
-      latestBy: Option[String],
-      statsCols: Seq[String],
-      txn: Option[(String, Long)],
-      deleteWhere: Option[Column]): Long =
-    upsert(updates, path, keys, evolveSchema, latestBy, statsCols, txn,
-      deleteWhere, guardBy = None)
-
-  /** @param guardBy OUT-OF-ORDER guard (the APPLY CHANGES INTO sequencing
+    *                    covers tombstone keys — they are update keys.
+    * @param guardBy OUT-OF-ORDER guard (the APPLY CHANGES INTO sequencing
     *                contract): a matched table row is replaced only when
     *                the update's value of this column is >= the stored
     *                row's — a late-arriving OLDER change (update or
@@ -3630,12 +3612,12 @@ object VersionedTable {
       updates: DataFrame,
       path: String,
       keys: Seq[String],
-      evolveSchema: Boolean,
-      latestBy: Option[String],
-      statsCols: Seq[String],
-      txn: Option[(String, Long)],
-      deleteWhere: Option[Column],
-      guardBy: Option[String],
+      evolveSchema: Boolean = false,
+      latestBy: Option[String] = None,
+      statsCols: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None,
+      deleteWhere: Option[Column] = None,
+      guardBy: Option[String] = None,
       dropCols: Seq[String] = Nil,
       txnExpected: Option[(String, Long)] = None,
       propsAdd: Map[String, String] = Map.empty,
@@ -3701,14 +3683,14 @@ object VersionedTable {
     var hookRel: Seq[String] = Nil
     var hookProps: Map[String, String] = Map.empty
     try {
-      var attempt = 0
-      var committed = -1L
-      while (committed < 0) {
-        // pin the exact version the merge is computed against — reading
-        // "latest" below this point would race a concurrent commit past the
-        // CAS check
-        val base = latestVersion(spark, path)
-        val baseC = base.map(b => readManifest(spark, f, root, b))
+      // each attempt pins the exact version the merge is computed against —
+      // reading "latest" inside it would race a concurrent commit past the
+      // CAS check
+      val committed = commitLoop(spark, path, "upsert") { head =>
+        val base = head.map(_._1)
+        val baseC = head.map(_._2)
+        hookRel = Nil
+        hookProps = Map.empty
         // re-check per iteration: the entry check raced a concurrent CREATE
         // or declaration (a None→Some table with identity would otherwise
         // merge id=NULL rows under evolveSchema, silently skipping
@@ -3718,187 +3700,181 @@ object VersionedTable {
             s"$path: MERGE/upsert is not supported on tables with identity " +
               s"column(s) ${identityIn(c.props).keys.mkString(",")}")
         }
-        txn.foreach { case (app, bid) =>
-          if (baseC.exists(_.txn.get(app).exists(_ >= bid))) return base.get
-        }
-        // after the replay no-op: a watermark that moved PAST the batch is a
-        // replay, a watermark that moved but not past it is a stale window
-        txnExpected.foreach { case (app, expected) =>
-          val stored = baseC.flatMap(_.txn.get(app))
-          if (!stored.contains(expected))
-            throw new ConcurrentTxnException(path, app, expected, stored)
-        }
-        propsExpected.foreach { case (k, expected) =>
-          val stored = baseC.flatMap(_.props.get(k))
-          if (!stored.contains(expected))
-            throw new ConcurrentPropException(path, k, expected, stored)
-        }
-        val newTxn = baseC.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
-        val (files, schemaJson, statsFn, statsAdd, rows, stagedDir, dvKeep,
-            dvRowsKeep, cMap, physDrop) = baseC match {
-          case None =>
-            val (dir, rel) = stage(inserts, root, f)
-            val (st, rw) = metaFor(spark, root, rel, statsCols)
-            (rel, inserts.schema.json, () => st, st, rw, dir,
-              Seq.empty[String], Map.empty[String, Long],
-              Map.empty[String, String], Set.empty[String])
-          case Some(c) =>
-            val updSchema = inserts.schema
-            // (rewrite candidates, provably-unmatched carries, merged schema)
-            val (rewriteKeys, carryKeys, merged) = c.schema match {
-              case Some(bs) =>
-                if (!evolveSchema)
-                  require(bs.fieldNames.toSet == updSchema.fieldNames.toSet,
-                    s"upsert schema mismatch vs $path (table ${bs.fieldNames.mkString(",")} " +
-                      s"vs updates ${updSchema.fieldNames.mkString(",")}); " +
-                      "pass evolveSchema=true to merge them")
-                val typesOk = bs.fields.forall(bf =>
-                  updSchema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType))
-                if (!typesOk) (c.files, Seq.empty[String], None) // coercion → full rewrite
-                else {
-                  val mergedRaw = bs.fields.map { bf =>
-                    updSchema.fields.find(_.name == bf.name) match {
-                      case Some(uf) => bf.copy(nullable = bf.nullable || uf.nullable)
-                      case None => bf.copy(nullable = true) // null-filled on the update side
-                    }
-                  } ++ updSchema.fields.filterNot(uf => bs.fieldNames.contains(uf.name))
-                    .map(_.copy(nullable = true)) // absent from carried files
-                  // partitioned layout contract: partition columns stay LAST
-                  // (an evolved column would otherwise land after them)
-                  val basePart = partitionColsOf(bs).toSet
-                  val mergedFields =
-                    if (basePart.isEmpty) mergedRaw
-                    else mergedRaw.filterNot(fl => basePart(fl.name)) ++
-                      mergedRaw.filter(fl => basePart(fl.name))
-                  // an evolved column REUSING a dropped physical name can't
-                  // ride identity-mapped over carried files (their stale
-                  // bytes would resurrect): rewrite everything instead, so
-                  // no carried file exists to mis-bind
-                  val resurrects = updSchema.fieldNames.toSet
-                    .diff(bs.fieldNames.toSet).exists(c.physDropped)
-                  val (rw, cy) =
-                    if (resurrects) (c.files, Seq.empty[String])
-                    else selectRewrite(spark, root, c, bs, deduped, keys)
-                  (rw, cy, Some(StructType(mergedFields)))
-                }
-              case None => (c.files, Seq.empty[String], None) // legacy: no schema to prove carries
-            }
-            val rewriteDf =
-              if (rewriteKeys.isEmpty && merged.isDefined) {
-                // pure-insert fast path: stats prove NO existing file holds a
-                // matching key — stage only the updates, aligned to the
-                // merged schema
-                val m = merged.get
-                inserts.select(m.fields.map(fl =>
-                  if (updSchema.fieldNames.contains(fl.name)) col(fl.name)
-                  else lit(null).cast(fl.dataType).as(fl.name)).toSeq: _*)
-              } else if (rewriteKeys.isEmpty) inserts // empty/legacy base
-              else {
-                // row tracking: carried rows ride with their materialized
-                // ids; a MERGE-matched incoming row INHERITS the id of the
-                // stored row it replaces (min over any legacy duplicate-key
-                // rows — deterministic), so updates keep identity and the
-                // row-keyed change feed pairs them; truly-new keys stay
-                // null and draw fresh ids from the new file's base
-                val tracked = rowTrackingOn(c.props)
-                val base = rewriteSource(spark, root, c, rewriteKeys)
-                def inherited(src: DataFrame): DataFrame =
-                  if (!tracked) src
-                  else src.join(
-                    base.groupBy(keys.map(col): _*)
-                      .agg(min(col(RowIdCol)).as(RowIdCol)),
-                    keys, "left")
-                guardBy match {
-                  case None =>
-                    base.join(deduped.select(keys.map(col): _*).distinct(),
-                        keys, "left_anti")
-                      .unionByName(inherited(inserts),
-                        allowMissingColumns = evolveSchema)
-                  case Some(seq) =>
-                    // sequencing guard, decided ONCE PER KEY (not per base
-                    // row — a table holding duplicate key rows must not
-                    // half-apply): the update wins iff its sequence is
-                    // non-NULL and >= the key's max stored sequence (NULL
-                    // stored sequences are always replaceable; a NULL
-                    // update sequence never replaces; ties → update, so
-                    // re-deliveries re-apply idempotently). An update that
-                    // wins replaces EVERY stored row of its key — which
-                    // also collapses pre-existing duplicates. Costs one
-                    // extra pass over the candidate files, but that pass
-                    // reads only the key+sequence columns (column-pruned),
-                    // not the full rows.
-                    val bmax = base.groupBy(keys.map(col): _*)
-                      .agg(max(col(seq)).as("__graft_bseq"),
-                        lit(true).as("__graft_present"))
-                    // absent key (present NULL after the left join) → the
-                    // update always lands, even with a NULL sequence — the
-                    // guard only arbitrates against STORED rows
-                    val dec = deduped
-                      .select((keys.map(col) :+ col(seq).as("__graft_useq")): _*)
-                      .join(bmax, keys, "left")
-                      .select((keys.map(col) :+
-                        (col("__graft_present").isNull ||
-                          (col("__graft_useq").isNotNull &&
-                            (col("__graft_bseq").isNull ||
-                              col("__graft_useq") >= col("__graft_bseq"))))
-                          .as("__graft_uwins")): _*)
-                    val survivors = base.join(dec, keys, "left")
-                      .filter(!coalesce(col("__graft_uwins"), lit(false)))
-                      .drop("__graft_uwins")
-                    val applied = inherited(inserts)
-                      .join(dec, keys, "left")
-                      .filter(coalesce(col("__graft_uwins"), lit(true)))
-                      .drop("__graft_uwins")
-                    survivors.unionByName(applied,
-                      allowMissingColumns = evolveSchema)
-                }
+        if (txn.exists { case (app, bid) =>
+            baseC.exists(_.txn.get(app).exists(_ >= bid)) }) Left(base.get)
+        else {
+          // after the replay no-op: a watermark that moved PAST the batch is a
+          // replay, a watermark that moved but not past it is a stale window
+          txnExpected.foreach { case (app, expected) =>
+            val stored = baseC.flatMap(_.txn.get(app))
+            if (!stored.contains(expected))
+              throw new ConcurrentTxnException(path, app, expected, stored)
+          }
+          propsExpected.foreach { case (k, expected) =>
+            val stored = baseC.flatMap(_.props.get(k))
+            if (!stored.contains(expected))
+              throw new ConcurrentPropException(path, k, expected, stored)
+          }
+          val newTxn = baseC.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
+          val (files, schemaJson, statsFn, statsAdd, rows, stagedDir, dvKeep,
+              dvRowsKeep, cMap, physDrop) = baseC match {
+            case None =>
+              val (dir, rel) = stage(inserts, root, f)
+              val (st, rw) = metaFor(spark, root, rel, statsCols)
+              (rel, inserts.schema.json, () => st, st, rw, dir,
+                Seq.empty[String], Map.empty[String, Long],
+                Map.empty[String, String], Set.empty[String])
+            case Some(c) =>
+              val updSchema = inserts.schema
+              // (rewrite candidates, provably-unmatched carries, merged schema)
+              val (rewriteKeys, carryKeys, merged) = c.schema match {
+                case Some(bs) =>
+                  if (!evolveSchema)
+                    require(bs.fieldNames.toSet == updSchema.fieldNames.toSet,
+                      s"upsert schema mismatch vs $path (table ${bs.fieldNames.mkString(",")} " +
+                        s"vs updates ${updSchema.fieldNames.mkString(",")}); " +
+                        "pass evolveSchema=true to merge them")
+                  val typesOk = bs.fields.forall(bf =>
+                    updSchema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType))
+                  if (!typesOk) (c.files, Seq.empty[String], None) // coercion → full rewrite
+                  else {
+                    val mergedRaw = bs.fields.map { bf =>
+                      updSchema.fields.find(_.name == bf.name) match {
+                        case Some(uf) => bf.copy(nullable = bf.nullable || uf.nullable)
+                        case None => bf.copy(nullable = true) // null-filled on the update side
+                      }
+                    } ++ updSchema.fields.filterNot(uf => bs.fieldNames.contains(uf.name))
+                      .map(_.copy(nullable = true)) // absent from carried files
+                    // partitioned layout contract: partition columns stay LAST
+                    // (an evolved column would otherwise land after them)
+                    val basePart = partitionColsOf(bs).toSet
+                    val mergedFields =
+                      if (basePart.isEmpty) mergedRaw
+                      else mergedRaw.filterNot(fl => basePart(fl.name)) ++
+                        mergedRaw.filter(fl => basePart(fl.name))
+                    // an evolved column REUSING a dropped physical name can't
+                    // ride identity-mapped over carried files (their stale
+                    // bytes would resurrect): rewrite everything instead, so
+                    // no carried file exists to mis-bind
+                    val resurrects = updSchema.fieldNames.toSet
+                      .diff(bs.fieldNames.toSet).exists(c.physDropped)
+                    val (rw, cy) =
+                      if (resurrects) (c.files, Seq.empty[String])
+                      else selectRewrite(spark, root, c, bs, deduped, keys)
+                    (rw, cy, Some(StructType(mergedFields)))
+                  }
+                case None => (c.files, Seq.empty[String], None) // legacy: no schema to prove carries
               }
-            // carried-file rows are valid by the ADD CONSTRAINT invariant;
-            // the union re-checks them only because they ride the rewrite —
-            // one in-task pass, no extra scan
-            val (dir, rel0) =
-              try stage(withContract(rewriteDf, c.props, path), root, f,
-                c.colMap, c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
-              catch { case e: Throwable => translateViolation(e, path) }
-            val (st0, rw0) = metaFor(spark, root, rel0,
-              inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-            val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
-            val carrySet = carryKeys.toSet
-            val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-            (carryKeys ++ rel,
-              // the materialized id column is physical-only — never schema
-              merged.map(_.json).getOrElse(rewriteDf.drop(RowIdCol).schema.json),
-              // LAZY: a delta-encoded merge serializes only the new files'
-              // stats (statsAdd); the full carried map is evaluated only
-              // when this commit lands on a checkpoint boundary
-              () => c.stats.filter(kv => carrySet(kv._1)) ++ st,
-              st,
-              c.rows.filter(kv => carrySet(kv._1)) ++ rw,
-              dir, dvK, dvR, c.colMap,
-              // no carried file left → no stale physical column anywhere
-              if (carryKeys.isEmpty) Set.empty[String] else c.physDropped)
-        }
-        val v = base.getOrElse(0L) + 1L
-        val (body, ckptDir) = encodeCommit(spark, root, v, files, schemaJson,
-          statsFn(), rows, newTxn, dvKeep, dvRowsKeep, parent = baseC,
-          colMap = cMap, physDropped = physDrop,
-          carriedIdentical = true, statsAddOnly = Some(statsAdd),
-          props =
-            if (propsAdd.isEmpty) None
-            else Some(baseC.map(_.props).getOrElse(Map.empty) ++ propsAdd))
-        if (tryCommit(f, root, v, body)) {
-          committed = v
+              val rewriteDf =
+                if (rewriteKeys.isEmpty && merged.isDefined) {
+                  // pure-insert fast path: stats prove NO existing file holds a
+                  // matching key — stage only the updates, aligned to the
+                  // merged schema
+                  val m = merged.get
+                  inserts.select(m.fields.map(fl =>
+                    if (updSchema.fieldNames.contains(fl.name)) col(fl.name)
+                    else lit(null).cast(fl.dataType).as(fl.name)).toSeq: _*)
+                } else if (rewriteKeys.isEmpty) inserts // empty/legacy base
+                else {
+                  // row tracking: carried rows ride with their materialized
+                  // ids; a MERGE-matched incoming row INHERITS the id of the
+                  // stored row it replaces (min over any legacy duplicate-key
+                  // rows — deterministic), so updates keep identity and the
+                  // row-keyed change feed pairs them; truly-new keys stay
+                  // null and draw fresh ids from the new file's base
+                  val tracked = rowTrackingOn(c.props)
+                  val base = rewriteSource(spark, root, c, rewriteKeys)
+                  def inherited(src: DataFrame): DataFrame =
+                    if (!tracked) src
+                    else src.join(
+                      base.groupBy(keys.map(col): _*)
+                        .agg(min(col(RowIdCol)).as(RowIdCol)),
+                      keys, "left")
+                  guardBy match {
+                    case None =>
+                      base.join(deduped.select(keys.map(col): _*).distinct(),
+                          keys, "left_anti")
+                        .unionByName(inherited(inserts),
+                          allowMissingColumns = evolveSchema)
+                    case Some(seq) =>
+                      // sequencing guard, decided ONCE PER KEY (not per base
+                      // row — a table holding duplicate key rows must not
+                      // half-apply): the update wins iff its sequence is
+                      // non-NULL and >= the key's max stored sequence (NULL
+                      // stored sequences are always replaceable; a NULL
+                      // update sequence never replaces; ties → update, so
+                      // re-deliveries re-apply idempotently). An update that
+                      // wins replaces EVERY stored row of its key — which
+                      // also collapses pre-existing duplicates. Costs one
+                      // extra pass over the candidate files, but that pass
+                      // reads only the key+sequence columns (column-pruned),
+                      // not the full rows.
+                      val bmax = base.groupBy(keys.map(col): _*)
+                        .agg(max(col(seq)).as("__graft_bseq"),
+                          lit(true).as("__graft_present"))
+                      // absent key (present NULL after the left join) → the
+                      // update always lands, even with a NULL sequence — the
+                      // guard only arbitrates against STORED rows
+                      val dec = deduped
+                        .select((keys.map(col) :+ col(seq).as("__graft_useq")): _*)
+                        .join(bmax, keys, "left")
+                        .select((keys.map(col) :+
+                          (col("__graft_present").isNull ||
+                            (col("__graft_useq").isNotNull &&
+                              (col("__graft_bseq").isNull ||
+                                col("__graft_useq") >= col("__graft_bseq"))))
+                            .as("__graft_uwins")): _*)
+                      val survivors = base.join(dec, keys, "left")
+                        .filter(!coalesce(col("__graft_uwins"), lit(false)))
+                        .drop("__graft_uwins")
+                      val applied = inherited(inserts)
+                        .join(dec, keys, "left")
+                        .filter(coalesce(col("__graft_uwins"), lit(true)))
+                        .drop("__graft_uwins")
+                      survivors.unionByName(applied,
+                        allowMissingColumns = evolveSchema)
+                  }
+                }
+              // carried-file rows are valid by the ADD CONSTRAINT invariant;
+              // the union re-checks them only because they ride the rewrite —
+              // one in-task pass, no extra scan
+              val (dir, rel0) =
+                try stage(withContract(rewriteDf, c.props, path), root, f,
+                  c.colMap, c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+                catch { case e: Throwable => translateViolation(e, path) }
+              val (st0, rw0) = metaFor(spark, root, rel0,
+                inheritedStatsCols(spark, root, c, statsCols), c.colMap)
+              val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
+              val carrySet = carryKeys.toSet
+              val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
+              (carryKeys ++ rel,
+                // the materialized id column is physical-only — never schema
+                merged.map(_.json).getOrElse(rewriteDf.drop(RowIdCol).schema.json),
+                // LAZY: a delta-encoded merge serializes only the new files'
+                // stats (statsAdd); the full carried map is evaluated only
+                // when this commit lands on a checkpoint boundary
+                () => c.stats.filter(kv => carrySet(kv._1)) ++ st,
+                st,
+                c.rows.filter(kv => carrySet(kv._1)) ++ rw,
+                dir, dvK, dvR, c.colMap,
+                // no carried file left → no stale physical column anywhere
+                if (carryKeys.isEmpty) Set.empty[String] else c.physDropped)
+          }
+          val v = base.getOrElse(0L) + 1L
+          val (body, ckptDir) = encodeCommit(spark, root, v, files, schemaJson,
+            statsFn(), rows, newTxn, dvKeep, dvRowsKeep, parent = baseC,
+            colMap = cMap, physDropped = physDrop,
+            carriedIdentical = true, statsAddOnly = Some(statsAdd),
+            props =
+              if (propsAdd.isEmpty) None
+              else Some(baseC.map(_.props).getOrElse(Map.empty) ++ propsAdd))
           hookRel = statsAdd.keys.toSeq match {
             case Nil => files.filterNot(baseC.map(_.files.toSet).getOrElse(Set.empty))
             case ks => ks
           }
           hookProps = baseC.map(_.props).getOrElse(Map.empty)
-        } else {
-          f.delete(stagedDir, true) // stale merge — recompute against the new head
-          ckptDir.foreach(d => f.delete(d, true))
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"$path: lost $attempt upsert commit races in a row; giving up")
+          // a lost race makes the merge stale — recompute against the new head
+          Right(Staged(v, body, ckptDir, Seq(stagedDir)))
         }
       }
       // a MERGE-maintained table fragments exactly like an append-
@@ -3959,45 +3935,37 @@ object VersionedTable {
       statsCols: Seq[String] = Nil): Long = {
     val root = new Path(path)
     val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
     var hookProps: Map[String, String] = Map.empty
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
-      hookProps = c.props
+    val committed = commitLoop(spark, path, "delete") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
+      hookProps = Map.empty
       fenceMvWrite(c.props, path, "DELETE")
       val (candKeys, carryKeys) = c.schema match {
         case Some(s) =>
           pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
         case _ => (c.files, Seq.empty[String])
       }
-      if (candKeys.isEmpty) return b // provably nothing to delete
-      val kept = rewriteSource(spark, root, c, candKeys)
-        .filter(!coalesce(predicate, lit(false))) // keep p=false AND p=null rows
-      val (dir, rel0) = stage(kept, root, f, c.colMap,
-        c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
-      val (st0, rw0) = metaFor(spark, root, rel0,
-        inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-      val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
-      val carrySet = carryKeys.toSet
-      val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-        c.schema.map(_.json).getOrElse(kept.drop(RowIdCol).schema.json),
-        c.stats.filter(kv => carrySet(kv._1)) ++ st,
-        c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-        parent = Some(c), colMap = c.colMap,
-        physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
-        carriedIdentical = true, statsAddOnly = Some(st))
-      if (tryCommit(f, root, v, body)) committed = v
+      if (candKeys.isEmpty) Left(b) // provably nothing to delete
       else {
-        f.delete(dir, true) // stale — recompute against the new head
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt delete commit races in a row; giving up")
+        hookProps = c.props
+        val kept = rewriteSource(spark, root, c, candKeys)
+          .filter(!coalesce(predicate, lit(false))) // keep p=false AND p=null rows
+        val (dir, rel0) = stage(kept, root, f, c.colMap,
+          c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+        val (st0, rw0) = metaFor(spark, root, rel0,
+          inheritedStatsCols(spark, root, c, statsCols), c.colMap)
+        val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
+        val carrySet = carryKeys.toSet
+        val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
+        val v = b + 1L
+        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
+          c.schema.map(_.json).getOrElse(kept.drop(RowIdCol).schema.json),
+          c.stats.filter(kv => carrySet(kv._1)) ++ st,
+          c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
+          parent = Some(c), colMap = c.colMap,
+          physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
+          carriedIdentical = true, statsAddOnly = Some(st))
+        Right(Staged(v, body, ckptDir, Seq(dir))) // stale if lost: recompute
       }
     }
     autoRefreshViewsAfter(spark, path, hookProps)
@@ -4022,14 +3990,10 @@ object VersionedTable {
     require(set.nonEmpty, "UPDATE requires at least one assignment")
     val root = new Path(path)
     val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
     var hookProps: Map[String, String] = Map.empty
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
-      hookProps = c.props
+    val committed = commitLoop(spark, path, "update") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
+      hookProps = Map.empty
       fenceMvWrite(c.props, path, "UPDATE")
       val s = c.schema.getOrElse(throw new IllegalArgumentException(
         s"$path: UPDATE needs a schema-recorded table"))
@@ -4042,47 +4006,43 @@ object VersionedTable {
           "values are allocated by the table")
       val (candKeys, carryKeys) =
         pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
-      if (candKeys.isEmpty) return b // provably nothing to update
-      val hit = coalesce(predicate, lit(false))
-      // updated rows KEEP their tracked id (SQL UPDATE preserves identity;
-      // the row-keyed change feed pairs them as pre/post images)
-      val tracked = rowTrackingOn(c.props)
-      val updated = rewriteSource(spark, root, c, candKeys).select(
-        (s.fields.map { fl =>
-          set.get(fl.name) match {
-            case Some(v) =>
-              when(hit, v.cast(fl.dataType)).otherwise(col(fl.name)).as(fl.name)
-            case None => col(fl.name)
-          }
-        }.toSeq ++ (if (tracked) Seq(col(RowIdCol)) else Nil)): _*)
-      // withContract (not just withChecks): an UPDATE that modifies a
-      // source column of a generated column without keeping the generated
-      // value consistent refuses loudly — the remedy is to SET the
-      // generated column too (or drop the generation); silently serving a
-      // stale derived value is the failure mode generation exists to kill
-      val (dir, rel) =
-        try stage(withContract(updated, c.props, path), root, f, c.colMap,
-          partitionColsOf(s), c.props)
-        catch { case e: Throwable => translateViolation(e, path) }
-      val (st, rw) = metaFor(spark, root, rel,
-        inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-      val carrySet = carryKeys.toSet
-      val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-        s.json,
-        c.stats.filter(kv => carrySet(kv._1)) ++ st,
-        c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-        parent = Some(c), colMap = c.colMap,
-        physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
-        carriedIdentical = true, statsAddOnly = Some(st))
-      if (tryCommit(f, root, v, body)) committed = v
+      if (candKeys.isEmpty) Left(b) // provably nothing to update
       else {
-        f.delete(dir, true) // stale — recompute against the new head
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt update commit races in a row; giving up")
+        hookProps = c.props
+        val hit = coalesce(predicate, lit(false))
+        // updated rows KEEP their tracked id (SQL UPDATE preserves identity;
+        // the row-keyed change feed pairs them as pre/post images)
+        val tracked = rowTrackingOn(c.props)
+        val updated = rewriteSource(spark, root, c, candKeys).select(
+          (s.fields.map { fl =>
+            set.get(fl.name) match {
+              case Some(v) =>
+                when(hit, v.cast(fl.dataType)).otherwise(col(fl.name)).as(fl.name)
+              case None => col(fl.name)
+            }
+          }.toSeq ++ (if (tracked) Seq(col(RowIdCol)) else Nil)): _*)
+        // withContract (not just withChecks): an UPDATE that modifies a
+        // source column of a generated column without keeping the generated
+        // value consistent refuses loudly — the remedy is to SET the
+        // generated column too (or drop the generation); silently serving a
+        // stale derived value is the failure mode generation exists to kill
+        val (dir, rel) =
+          try stage(withContract(updated, c.props, path), root, f, c.colMap,
+            partitionColsOf(s), c.props)
+          catch { case e: Throwable => translateViolation(e, path) }
+        val (st, rw) = metaFor(spark, root, rel,
+          inheritedStatsCols(spark, root, c, statsCols), c.colMap)
+        val carrySet = carryKeys.toSet
+        val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
+        val v = b + 1L
+        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
+          s.json,
+          c.stats.filter(kv => carrySet(kv._1)) ++ st,
+          c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
+          parent = Some(c), colMap = c.colMap,
+          physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
+          carriedIdentical = true, statsAddOnly = Some(st))
+        Right(Staged(v, body, ckptDir, Seq(dir))) // stale if lost: recompute
       }
     }
     autoRefreshViewsAfter(spark, path, hookProps)
@@ -4397,33 +4357,23 @@ object VersionedTable {
       set: Map[String, String], unset: Seq[String],
       expectedBase: Option[Long] = None): Long = {
     val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
+    commitLoop(spark, path, "set-properties") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       expectedBase.foreach { e =>
         if (b != e) throw new ConcurrentTxnException(path, "(base)", e, Some(b))
       }
-      val c = readManifest(spark, f, root, b)
       val next = (c.props -- unset) ++ set
-      if (next == c.props) return b // no-op: nothing changed
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.map(_.json).getOrElse("null"), c.stats, c.rows, c.txn,
-        c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
-        physDropped = c.physDropped, carriedIdentical = true,
-        statsAddOnly = Some(Map.empty), props = Some(next))
-      if (tryCommit(f, root, v, body)) committed = v
+      if (next == c.props) Left(b) // no-op: nothing changed
       else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt set-properties commit races in a row; giving up")
+        val v = b + 1L
+        val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
+          c.schema.map(_.json).getOrElse("null"), c.stats, c.rows, c.txn,
+          c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
+          physDropped = c.physDropped, carriedIdentical = true,
+          statsAddOnly = Some(Map.empty), props = Some(next))
+        Right(Staged(v, body, ckptDir))
       }
     }
-    committed
   }
 
   /** The table's persistent properties at a version (TBLPROPERTIES). */
@@ -4531,13 +4481,8 @@ object VersionedTable {
       s"constraint name '$name' must be an identifier")
     val key = ConstraintPrefix + name
     val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    commitLoop(spark, path, "add-constraint") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       require(!c.props.contains(key),
         s"$path: constraint '$name' already exists " +
           s"(CHECK (${c.props(key)})); DROP it first")
@@ -4554,15 +4499,8 @@ object VersionedTable {
         physDropped = c.physDropped, carriedIdentical = true,
         statsAddOnly = Some(Map.empty),
         props = Some(c.props + (key -> predicateSql)))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt add-constraint commit races in a row; giving up")
-      }
+      Right(Staged(v, body, ckptDir))
     }
-    committed
   }
 
   /** ALTER TABLE DROP CONSTRAINT: removes the stored predicate (metadata
@@ -4699,13 +4637,8 @@ object VersionedTable {
       exprSql: String): Long = {
     val key = GeneratedPrefix + name
     val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    commitLoop(spark, path, "set-generated") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       require(!c.props.contains(key),
         s"$path: column $name is already generated " +
           s"(${c.props(key)}); drop the generation first")
@@ -4730,15 +4663,8 @@ object VersionedTable {
           (if (zoneDep) Map(GeneratedZonePrefix + name ->
             spark.sessionState.conf.sessionLocalTimeZone)
            else Map.empty)))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt set-generated commit races in a row; giving up")
-      }
+      Right(Staged(v, body, ckptDir))
     }
-    committed
   }
 
   /** Remove the generation declaration (metadata commit): the column stays,
@@ -4830,17 +4756,12 @@ object VersionedTable {
       allowExplicit: Boolean = false): Long = {
     require(step != 0L, s"$path: identity step must be non-zero")
     val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
     // every precondition validates INSIDE the CAS loop against the pinned
     // version (like setGeneratedColumn): a racing append cannot slip rows
     // under the declaration — losing the race re-validates emptiness
     // against the new head
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    commitLoop(spark, path, "declare-identity") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       val s = c.schema.getOrElse(throw new IllegalStateException(
         s"$path: version $b records no schema"))
       require(s.fieldNames.contains(name), s"$path: no such column: $name")
@@ -4871,15 +4792,8 @@ object VersionedTable {
           (IdentityPrefix + name ->
             s"start=$start;step=$step;explicit=$allowExplicit") +
           (IdentityHwmPrefix + name -> start.toString)))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt declare-identity commit races in a row; giving up")
-      }
+      Right(Staged(v, body, ckptDir))
     }
-    committed
   }
 
   /** Remove the identity declaration AND its high-water mark (metadata
@@ -4938,13 +4852,8 @@ object VersionedTable {
       renameStats: Option[(String, String)] = None,
       propsTransform: Map[String, String] => Map[String, String] = identity): Long = {
     val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    commitLoop(spark, path, s"$verb-column") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       require(c.schema.isDefined, s"$path: schema DDL needs a schema-recorded table")
       val v = b + 1L
       val (next, nextMap, nextDropped) = change(c.schema.get, c, v)
@@ -4975,15 +4884,8 @@ object VersionedTable {
         keepStatsCols = if (reshape) Some(keep) else None,
         renameStats = renameStats,
         props = if (nextProps == c.props) None else Some(nextProps))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt $verb-column commit races in a row; giving up")
-      }
+      Right(Staged(v, body, ckptDir))
     }
-    committed
   }
 
   /** Merge-on-read DELETE via DELETION VECTORS (Delta's DV idiom): mark
@@ -5003,10 +4905,104 @@ object VersionedTable {
     * every subsequent read pay the anti-join.
     *
     * Candidate files come from manifest stats like the CoW path — a file
-    * provably without matches contributes nothing and is never scanned. */
+    * provably without matches contributes nothing and is never scanned.
+    *
+    * @param purgeFraction see [[DefaultDvPurgeFraction]]; compared against
+    *                      (existing + new marks) / file rows per file. */
   def deleteVectorized(spark: SparkSession, path: String,
-      predicate: Column): Long =
-    deleteVectorized(spark, path, predicate, DefaultDvPurgeFraction)
+      predicate: Column, purgeFraction: Double = DefaultDvPurgeFraction): Long = {
+    val root = new Path(path)
+    val f = fs(spark, root)
+    var hookProps: Map[String, String] = Map.empty
+    val committed = commitLoop(spark, path, "dv-delete") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
+      hookProps = Map.empty
+      fenceMvWrite(c.props, path, "DELETE")
+      require(c.schema.isDefined,
+        s"$path: vectorized delete needs a schema-recorded table")
+      val s = c.schema.get
+      val (candKeys, _) =
+        pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
+      if (candKeys.isEmpty) Left(b) // provably nothing to delete
+      else {
+        // scan ONLY candidate files, with existing DVs applied (so a second
+        // delete never double-marks a row — generations stay disjoint and
+        // countRows' subtraction stays exact)
+        val live = {
+          val base = physReadKeyed(spark, root, c, s, candKeys, withKeys = true)
+          if (!candKeys.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) base
+          else {
+            val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
+              .filter(col(FileKeyCol).isin(candKeys: _*))
+            base.join(broadcast(dvAll), Seq(FileKeyCol, RowIdxCol), "left_anti")
+          }
+        }
+        val marked = live.filter(coalesce(predicate, lit(false)))
+          .select(col(FileKeyCol), col(RowIdxCol)).cache()
+        try {
+          val perFile = marked.groupBy(col(FileKeyCol)).count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          if (perFile.isEmpty) Left(b) // predicate matched no live row
+          else {
+            hookProps = c.props
+            val mergedDvRows = c.dvRows ++ perFile.map { case (k, n) =>
+              k -> (c.dvRows.getOrElse(k, 0L) + n)
+            }
+            // AUTO-PURGE: files the merged marks would push past the threshold
+            // are rewritten (survivors materialized) in this SAME commit — the
+            // marks never land, so the read-side anti-join stays bounded.
+            // Unknown row counts (legacy commits) never purge: conservative.
+            val purgeKeys = c.files.filter { fk =>
+              val m = mergedDvRows.getOrElse(fk, 0L)
+              m > 0L && c.rows.get(fk).exists(r => r > 0L && m.toDouble / r > purgeFraction)
+            }
+            val purgeSet = purgeKeys.toSet
+            val carryKeys = c.files.filterNot(purgeSet)
+            // marks for carried files ride in a new sidecar; marks for purged
+            // files are consumed by their rewrite
+            val carriedMarks =
+              if (purgeKeys.isEmpty) marked
+              else marked.filter(!col(FileKeyCol).isin(purgeKeys: _*))
+            val (markDirs, markRel) =
+              if (!perFile.keys.exists(k => !purgeSet(k))) (Nil, Seq.empty[String])
+              else {
+                val (d, r) = stage(carriedMarks, root, f)
+                (Seq(d), r)
+              }
+            val (dataDirs, dataRel, st, rw) =
+              if (purgeKeys.isEmpty)
+                (Nil, Seq.empty[String],
+                  Map.empty: DataSkipping.FileStats, Map.empty[String, Long])
+              else {
+                // the source applies the OLD marks; the predicate filter
+                // drops this delete's matches — survivors only (ids carried)
+                val survivors = rewriteSource(spark, root, c, purgeKeys)
+                  .filter(!coalesce(predicate, lit(false)))
+                val (d, r0) = stage(survivors, root, f, c.colMap,
+                  c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+                val (s0, c0) = metaFor(spark, root, r0,
+                  inheritedStatsCols(spark, root, c, Nil), c.colMap)
+                val (r, s2, r2) = dropEmpty(r0, s0, c0)
+                (Seq(d), r, s2, r2)
+              }
+            val dvRowsKeep = mergedDvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
+            val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv ++ markRel
+            val v = b + 1L
+            val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ dataRel, s.json,
+              c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
+              c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
+              c.txn, dvKeep, dvRowsKeep, parent = Some(c),
+              colMap = c.colMap, physDropped = c.physDropped,
+              carriedIdentical = true, statsAddOnly = Some(st))
+            // stale marks if lost — recompute against the new head
+            Right(Staged(v, body, ckptDir, markDirs ++ dataDirs))
+          }
+        } finally marked.unpersist()
+      }
+    }
+    autoRefreshViewsAfter(spark, path, hookProps)
+    committed
+  }
 
   /** Marked-rows fraction above which DV hygiene kicks in AUTOMATICALLY: a
     * [[deleteVectorized]] that would push a file past this materializes
@@ -5016,108 +5012,6 @@ object VersionedTable {
     * ever-growing anti-join until someone remembers to OPTIMIZE. Pass
     * `purgeFraction = 1.0` to opt a delete out (pure merge-on-read). */
   val DefaultDvPurgeFraction: Double = 0.5
-
-  /** @param purgeFraction see [[DefaultDvPurgeFraction]]; compared against
-    *                      (existing + new marks) / file rows per file. */
-  def deleteVectorized(spark: SparkSession, path: String,
-      predicate: Column, purgeFraction: Double): Long = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    var hookProps: Map[String, String] = Map.empty
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
-      hookProps = c.props
-      fenceMvWrite(c.props, path, "DELETE")
-      require(c.schema.isDefined,
-        s"$path: vectorized delete needs a schema-recorded table")
-      val s = c.schema.get
-      val (candKeys, _) =
-        pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
-      if (candKeys.isEmpty) return b // provably nothing to delete
-      // scan ONLY candidate files, with existing DVs applied (so a second
-      // delete never double-marks a row — generations stay disjoint and
-      // countRows' subtraction stays exact)
-      val live = {
-        val base = physReadKeyed(spark, root, c, s, candKeys, withKeys = true)
-        if (!candKeys.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) base
-        else {
-          val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-            .filter(col(FileKeyCol).isin(candKeys: _*))
-          base.join(broadcast(dvAll), Seq(FileKeyCol, RowIdxCol), "left_anti")
-        }
-      }
-      val marked = live.filter(coalesce(predicate, lit(false)))
-        .select(col(FileKeyCol), col(RowIdxCol)).cache()
-      try {
-        val perFile = marked.groupBy(col(FileKeyCol)).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (perFile.isEmpty) return b // predicate matched no live row
-        val mergedDvRows = c.dvRows ++ perFile.map { case (k, n) =>
-          k -> (c.dvRows.getOrElse(k, 0L) + n)
-        }
-        // AUTO-PURGE: files the merged marks would push past the threshold
-        // are rewritten (survivors materialized) in this SAME commit — the
-        // marks never land, so the read-side anti-join stays bounded.
-        // Unknown row counts (legacy commits) never purge: conservative.
-        val purgeKeys = c.files.filter { fk =>
-          val m = mergedDvRows.getOrElse(fk, 0L)
-          m > 0L && c.rows.get(fk).exists(r => r > 0L && m.toDouble / r > purgeFraction)
-        }
-        val purgeSet = purgeKeys.toSet
-        val carryKeys = c.files.filterNot(purgeSet)
-        // marks for carried files ride in a new sidecar; marks for purged
-        // files are consumed by their rewrite
-        val carriedMarks =
-          if (purgeKeys.isEmpty) marked
-          else marked.filter(!col(FileKeyCol).isin(purgeKeys: _*))
-        val newCarriedMarks = perFile.keys.exists(k => !purgeSet(k))
-        val (markDir, markRel) =
-          if (newCarriedMarks) stage(carriedMarks, root, f)
-          else (new Path(root, s".no-marks"), Seq.empty[String])
-        val (dataDir, dataRel, st, rw) =
-          if (purgeKeys.isEmpty)
-            (new Path(root, s".no-purge"), Seq.empty[String],
-              Map.empty: DataSkipping.FileStats, Map.empty[String, Long])
-          else {
-            // the source applies the OLD marks; the predicate filter
-            // drops this delete's matches — survivors only (ids carried)
-            val survivors = rewriteSource(spark, root, c, purgeKeys)
-              .filter(!coalesce(predicate, lit(false)))
-            val (d, r0) = stage(survivors, root, f, c.colMap,
-              c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
-            val (s0, c0) = metaFor(spark, root, r0,
-              inheritedStatsCols(spark, root, c, Nil), c.colMap)
-            val (r, s2, r2) = dropEmpty(r0, s0, c0)
-            (d, r, s2, r2)
-          }
-        val dvRowsKeep = mergedDvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
-        val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv ++ markRel
-        val v = b + 1L
-        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ dataRel, s.json,
-          c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
-          c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
-          c.txn, dvKeep, dvRowsKeep, parent = Some(c),
-          colMap = c.colMap, physDropped = c.physDropped,
-          carriedIdentical = true, statsAddOnly = Some(st))
-        if (tryCommit(f, root, v, body)) committed = v
-        else {
-          // stale marks — recompute against the new head
-          if (newCarriedMarks) f.delete(markDir, true)
-          if (purgeKeys.nonEmpty) f.delete(dataDir, true)
-          ckptDir.foreach(d => f.delete(d, true))
-          attempt += 1
-          require(attempt < MaxCommitRetries,
-            s"$path: lost $attempt dv-delete commit races in a row; giving up")
-        }
-      } finally marked.unpersist()
-    }
-    autoRefreshViewsAfter(spark, path, hookProps)
-    committed
-  }
 
   /** Maintenance verb: MATERIALIZE deletion-vector marks — rewrite every
     * file whose marked fraction exceeds `minFraction` (default: any marked
@@ -5130,45 +5024,35 @@ object VersionedTable {
       minFraction: Double = 0.0): Long = {
     val root = new Path(path)
     val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    commitLoop(spark, path, "purge") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       val purgeKeys = c.files.filter { fk =>
         val m = c.dvRows.getOrElse(fk, 0L)
         m > 0L && c.rows.get(fk).exists(r => r > 0L && m.toDouble / r > minFraction)
       }
-      if (purgeKeys.isEmpty) return b
-      val purgeSet = purgeKeys.toSet
-      val carryKeys = c.files.filterNot(purgeSet)
-      val survivors = rewriteSource(spark, root, c, purgeKeys) // marks applied
-      val (dir, rel0) = stage(survivors, root, f, c.colMap,
-        c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
-      val (st0, rw0) = metaFor(spark, root, rel0,
-        inheritedStatsCols(spark, root, c, Nil), c.colMap)
-      val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
-      val dvRowsKeep = c.dvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
-      val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-        c.schema.map(_.json).getOrElse(survivors.drop(RowIdCol).schema.json),
-        c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
-        c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
-        c.txn, dvKeep, dvRowsKeep, parent = Some(c),
-        colMap = c.colMap, physDropped = c.physDropped,
-        carriedIdentical = true, statsAddOnly = Some(st))
-      if (tryCommit(f, root, v, body)) committed = v
+      if (purgeKeys.isEmpty) Left(b)
       else {
-        f.delete(dir, true)
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt purge commit races in a row; giving up")
+        val purgeSet = purgeKeys.toSet
+        val carryKeys = c.files.filterNot(purgeSet)
+        val survivors = rewriteSource(spark, root, c, purgeKeys) // marks applied
+        val (dir, rel0) = stage(survivors, root, f, c.colMap,
+          c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+        val (st0, rw0) = metaFor(spark, root, rel0,
+          inheritedStatsCols(spark, root, c, Nil), c.colMap)
+        val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
+        val dvRowsKeep = c.dvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
+        val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv
+        val v = b + 1L
+        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
+          c.schema.map(_.json).getOrElse(survivors.drop(RowIdCol).schema.json),
+          c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
+          c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
+          c.txn, dvKeep, dvRowsKeep, parent = Some(c),
+          colMap = c.colMap, physDropped = c.physDropped,
+          carriedIdentical = true, statsAddOnly = Some(st))
+        Right(Staged(v, body, ckptDir, Seq(dir)))
       }
     }
-    committed
   }
 
   /** OPTIMIZE: bin-pack the head version's small files into ~`targetBytes`
@@ -5368,10 +5252,6 @@ object VersionedTable {
       }
     }
 
-  def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): Long =
-    compact(spark, path, targetBytes, where = None)
-
   /** Resolve `where` against the schema and require it to reference ONLY
     * partition columns: partition values are exact per directory, so the
     * scope is EXACT — the predicate is evaluated directly against each
@@ -5418,13 +5298,15 @@ object VersionedTable {
     }.toSet
   }
 
-  /** Partition-scoped OPTIMIZE (`OPTIMIZE t WHERE p = v`): bin-pack only
-    * the files in partitions matching `where` — at 100 TB you only ever
-    * compact recent partitions, and the file-size probe itself must be
-    * O(scope), not O(table). Out-of-scope files (and their stats, rows and
-    * deletion-vector marks) are carried by reference, byte-identical. */
-  def compact(spark: SparkSession, path: String, targetBytes: Long,
-      where: Option[Column]): Long =
+  /** OPTIMIZE, optionally partition-scoped (`OPTIMIZE t WHERE p = v`):
+    * bin-pack only the files in partitions matching `where` — at 100 TB
+    * you only ever compact recent partitions, and the file-size probe
+    * itself must be O(scope), not O(table). Out-of-scope files (and their
+    * stats, rows and deletion-vector marks) are carried by reference,
+    * byte-identical. */
+  def compact(spark: SparkSession, path: String,
+      targetBytes: Long = 128L * 1024 * 1024,
+      where: Option[Column] = None): Long =
     compactImpl(spark, path, targetBytes, (root, c) => where match {
       case None => c.files.toSet
       case Some(p) => partitionScope(spark, root, c, p, "OPTIMIZE")
@@ -5437,163 +5319,107 @@ object VersionedTable {
       scopeOf: (Path, Commit) => Set[String]): Long = {
     val root = new Path(path)
     val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
+    commitLoop(spark, path, "compact") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       val scope: Set[String] = scopeOf(root, c)
       val sized = c.files.filter(scope)
         .map(r => r -> f.getFileStatus(new Path(root, r)).getLen)
       val smallSet = sized.filter(_._2 < targetBytes / 2).map(_._1).toSet
-      if (smallSet.size < 2) return b // nothing worth packing
-      val carry = c.files.filterNot(smallSet)
-      val totalSmall = sized.collect { case (r, n) if smallSet(r) => n }.sum
-      val nOut = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
-      val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
-      val small = rewriteSource(spark, root, c, c.files.filter(smallSet))
-      // partitioned tables pack PER DIRECTORY: a plain coalesce would give
-      // every output task rows of many partitions, and the partitioned
-      // stage would re-split each into one file per dir — nOut × dirs tiny
-      // files, the opposite of compaction
-      val packed =
-        if (partCols.isEmpty) small.coalesce(nOut)
-        else small.repartition(nOut, partCols.map(col): _*)
-      val (dir, rel) = stage(packed, root, f, c.colMap, partCols, c.props)
-      val (st, rw) = metaFor(spark, root, rel, inheritedStatsCols(spark, root, c, Nil), c.colMap)
-      val carrySet = carry.toSet
-      val (dvK, dvR) = c.dvFor(carrySet) // packed files materialized their DVs
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, carry ++ rel,
-        c.schema.map(_.json).getOrElse(packed.drop(RowIdCol).schema.json),
-        c.stats.filter(kv => carrySet(kv._1)) ++ st,
-        c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-        parent = Some(c), colMap = c.colMap,
-        physDropped = if (carry.isEmpty) Set.empty else c.physDropped,
-        carriedIdentical = true, statsAddOnly = Some(st))
-      if (tryCommit(f, root, v, body)) committed = v
+      if (smallSet.size < 2) Left(b) // nothing worth packing
       else {
-        f.delete(dir, true)
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt compact commit races in a row; giving up")
+        val carry = c.files.filterNot(smallSet)
+        val totalSmall = sized.collect { case (r, n) if smallSet(r) => n }.sum
+        val nOut = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
+        val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
+        val small = rewriteSource(spark, root, c, c.files.filter(smallSet))
+        // partitioned tables pack PER DIRECTORY: a plain coalesce would give
+        // every output task rows of many partitions, and the partitioned
+        // stage would re-split each into one file per dir — nOut × dirs tiny
+        // files, the opposite of compaction
+        val packed =
+          if (partCols.isEmpty) small.coalesce(nOut)
+          else small.repartition(nOut, partCols.map(col): _*)
+        val (dir, rel) = stage(packed, root, f, c.colMap, partCols, c.props)
+        val (st, rw) = metaFor(spark, root, rel, inheritedStatsCols(spark, root, c, Nil), c.colMap)
+        val carrySet = carry.toSet
+        val (dvK, dvR) = c.dvFor(carrySet) // packed files materialized their DVs
+        val v = b + 1L
+        val (body, ckptDir) = encodeCommit(spark, root, v, carry ++ rel,
+          c.schema.map(_.json).getOrElse(packed.drop(RowIdCol).schema.json),
+          c.stats.filter(kv => carrySet(kv._1)) ++ st,
+          c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
+          parent = Some(c), colMap = c.colMap,
+          physDropped = if (carry.isEmpty) Set.empty else c.physDropped,
+          carriedIdentical = true, statsAddOnly = Some(st))
+        Right(Staged(v, body, ckptDir, Seq(dir)))
       }
     }
-    committed
   }
 
-  /** OPTIMIZE ZORDER BY (a, b): rewrite the head version z-ordered on two
-    * clustering columns as a NEW version, recording per-file stats on
-    * exactly those columns — the reference's own scan-pruning maintenance
+  /** OPTIMIZE ZORDER BY (cols): rewrite the head version z-ordered on the
+    * clustering columns as a NEW version (dims × bits must fit a signed
+    * long), recording per-file stats on exactly those columns — the
+    * reference's own scan-pruning maintenance
     * (`sql/ddl/02_silver_events.sql:61` ZORDER BY; Delta's
-    * `OPTIMIZE ... ZORDER BY`). After this commit every file covers one
-    * aligned z-tile, so [[readWhere]]'s manifest pruning turns a selective
-    * 2-D predicate into a handful of file opens. A full rewrite by design
-    * (re-clustering moves every row); history stays time-travelable and
-    * the streaming-txn watermarks carry forward. */
-  def zOrderBy(spark: SparkSession, path: String, a: String, b: String,
-      bits: Int = 16): Long = zOrderBy(spark, path, Seq(a, b), bits)
-
-  /** Partition-scoped ZORDER (`OPTIMIZE t WHERE p = v ZORDER BY (a, b)`):
-    * re-cluster only the partitions matching `where` (which must reference
+    * `OPTIMIZE ... ZORDER BY`). After this commit every rewritten file
+    * covers one aligned z-tile, so [[readWhere]]'s manifest pruning turns a
+    * selective multi-column predicate into a handful of file opens. History
+    * stays time-travelable and the streaming-txn watermarks carry forward.
+    *
+    * Partition-scoped ZORDER (`OPTIMIZE t WHERE p = v ZORDER BY (a, b)`):
+    * `where` re-clusters only the partitions it matches (it must reference
     * partition columns only — see [[partitionScope]]); every out-of-scope
     * file is carried by reference, byte-identical, keeping its stats and
-    * deletion-vector marks. Unlike the whole-table rewrite, a scoped
-    * zorder CANNOT shed the column mapping (carried files still need it),
-    * so rewritten files stage under the mapping and the manifest keeps
-    * colmap/phys_dropped. The idiom at 100 TB: cluster yesterday's
+    * deletion-vector marks. A rewrite that carries files CANNOT shed the
+    * column mapping (carried files still need it), so rewritten files stage
+    * under the mapping and the manifest keeps colmap/phys_dropped; a rewrite
+    * covering every file sheds it. The idiom at 100 TB: cluster yesterday's
     * partition after its last append, never touch the other 3 years. */
   def zOrderBy(spark: SparkSession, path: String, cols: Seq[String],
-      bits: Int, where: Option[Column]): Long = {
-    if (where.isEmpty) return zOrderBy(spark, path, cols, bits)
+      bits: Int = 16, where: Option[Column] = None): Long = {
     val root = new Path(path)
     val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val b = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, b)
-      require(bucketSpecIn(c.props).isEmpty,
-        s"$path: ZORDER is not supported on bucketed tables — the bucket " +
-          "layout is the table's clustering (OPTIMIZE compacts per bucket)")
-      val scope = partitionScope(spark, root, c, where.get, "ZORDER")
-      if (scope.isEmpty) return b // predicate matches no partition
-      val s = c.schema.get // partitionScope required it
-      val partCols = partitionColsOf(s)
-      val cand = c.files.filter(scope)
-      val base = rewriteSource(spark, root, c, cand)
-      val placed =
-        if (partCols.isEmpty) TableIO.zPlaced(base, cols, bits)
-        else TableIO.zPlacedWithin(base, partCols, cols, bits)
-      val (dir, rel) = stage(placed, root, f, c.colMap, partCols, c.props)
-      val (st, rw) = metaFor(spark, root, rel, cols, c.colMap)
-      val carryKeys = c.files.filterNot(scope)
-      val carrySet = carryKeys.toSet
-      val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-        s.json,
-        c.stats.filter(kv => carrySet(kv._1)) ++ st,
-        c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-        parent = Some(c), colMap = c.colMap,
-        physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
-        carriedIdentical = true, statsAddOnly = Some(st))
-      if (tryCommit(f, root, v, body)) committed = v
-      else {
-        f.delete(dir, true)
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt scoped-zorder commit races in a row; giving up")
-      }
-    }
-    committed
-  }
-
-  /** N-dimensional variant: cluster on any number of columns (dims × bits
-    * must fit a signed long); stats are recorded on exactly those columns. */
-  def zOrderBy(spark: SparkSession, path: String, cols: Seq[String],
-      bits: Int): Long = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      val bse = latestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"$path has no committed versions"))
-      val c = readManifest(spark, f, root, bse)
+    commitLoop(spark, path, "zorder") { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
       // the bucket shuffle in stage would destroy the z-placement, and a
       // bucketed table's layout contract IS its clustering — refuse
       require(bucketSpecIn(c.props).isEmpty,
         s"$path: ZORDER is not supported on bucketed tables — the bucket " +
           "layout is the table's clustering (OPTIMIZE compacts per bucket)")
-      val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
-      val base = rewriteSource(spark, root, c, c.files)
-      // partitioned tables z-order WITHIN partitions (Delta's semantics):
-      // clustering spans the z columns inside each dir, never across dirs
-      val placed =
-        if (partCols.isEmpty) TableIO.zPlaced(base, cols, bits)
-        else TableIO.zPlacedWithin(base, partCols, cols, bits)
-      val (dir, rel) = stage(placed, root, f, partitionCols = partCols,
-        props = c.props)
-      val (st, rw) = metaFor(spark, root, rel, cols)
-      val v = bse + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, rel,
-        c.schema.map(_.json).getOrElse(placed.drop(RowIdCol).schema.json), st, rw, c.txn,
-        parent = Some(c))
-      if (tryCommit(f, root, v, body)) committed = v
+      val scope = where.fold(c.files.toSet)(partitionScope(spark, root, c, _, "ZORDER"))
+      if (where.nonEmpty && scope.isEmpty) Left(b) // predicate matches no partition
       else {
-        f.delete(dir, true)
-        ckptDir.foreach(d => f.delete(d, true))
-        attempt += 1
-        require(attempt < MaxCommitRetries,
-          s"$path: lost $attempt zorder commit races in a row; giving up")
+        val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
+        val base = rewriteSource(spark, root, c, c.files.filter(scope))
+        // partitioned tables z-order WITHIN partitions (Delta's semantics):
+        // clustering spans the z columns inside each dir, never across dirs
+        val placed =
+          if (partCols.isEmpty) TableIO.zPlaced(base, cols, bits)
+          else TableIO.zPlacedWithin(base, partCols, cols, bits)
+        val carryKeys = c.files.filterNot(scope)
+        val colMap = if (carryKeys.isEmpty) Map.empty[String, String] else c.colMap
+        val (dir, rel) = stage(placed, root, f, colMap, partCols, c.props)
+        val (st, rw) = metaFor(spark, root, rel, cols, colMap)
+        val v = b + 1L
+        val (body, ckptDir) =
+          if (carryKeys.isEmpty)
+            encodeCommit(spark, root, v, rel,
+              c.schema.map(_.json).getOrElse(placed.drop(RowIdCol).schema.json),
+              st, rw, c.txn, parent = Some(c))
+          else {
+            val carrySet = carryKeys.toSet
+            val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
+            // carried files mean a `where` scope, and partitionScope
+            // required a recorded schema
+            encodeCommit(spark, root, v, carryKeys ++ rel, c.schema.get.json,
+              c.stats.filter(kv => carrySet(kv._1)) ++ st,
+              c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
+              parent = Some(c), colMap = c.colMap, physDropped = c.physDropped,
+              carriedIdentical = true, statsAddOnly = Some(st))
+          }
+        Right(Staged(v, body, ckptDir, Seq(dir)))
       }
     }
-    committed
   }
 
   /** Row-level change feed between two committed versions: multiset diff

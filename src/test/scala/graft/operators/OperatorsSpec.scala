@@ -57,6 +57,25 @@ class NearDupSpec extends SparkSpec {
     val actual = NearDup.signatures(sh)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(actual == expected)
+    // the interpreted path (no whole-stage codegen, interpreted
+    // projections) yields the same bytes
+    val direct = graft.functions.SaltedMd5Bin(
+      org.apache.spark.sql.catalyst.expressions.Literal("é ü 中"), "#7")
+      .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
+      .asInstanceOf[Array[Byte]]
+    assert(direct.sameElements(java.security.MessageDigest.getInstance("MD5")
+      .digest("é ü 中#7".getBytes("UTF-8"))))
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val interpreted = NearDup.signatures(sh)
+        .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      assert(interpreted == expected)
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
   test("identical docs are found by both exact jaccard and minhash with j=1.0") {

@@ -224,7 +224,7 @@ class BucketedGraftSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // layout hashes on the column
       VersionedTable.dropColumns(spark, p, Seq("k")) }
     intercept[IllegalArgumentException] { // bucket layout IS the clustering
-      VersionedTable.zOrderBy(spark, p, "k", "x") }
+      VersionedTable.zOrderBy(spark, p, Seq("k", "x")) }
     // rename FOLLOWS (the hint list rekeys) — and the layout keeps working
     VersionedTable.renameColumn(spark, p, "k", "key")
     VersionedTable.append(Seq((5L, 6L)).toDF("key", "x"), p)

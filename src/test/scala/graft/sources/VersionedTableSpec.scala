@@ -245,7 +245,7 @@ class VersionedTableSpec extends SparkSpec {
     val box = col("a").between(10, 20) && col("b").between(200, 210)
     assert(VersionedTable.pruneInfo(spark, path, box)._2.isEmpty,
       "random layout must not prune (sanity)")
-    val v2 = VersionedTable.zOrderBy(spark, path, "a", "b", bits = 8)
+    val v2 = VersionedTable.zOrderBy(spark, path, Seq("a", "b"), bits = 8)
     assert(v2 == 2L)
     // after ZORDER the same box predicate skips files
     val (kept, skipped) = VersionedTable.pruneInfo(spark, path, box)
@@ -1836,5 +1836,141 @@ class VersionedTableSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException] {
       VersionedTable.declareIdentityColumn(spark, path, "n") }
     assert(e2.getMessage.contains("generated column"), e2.getMessage)
+  }
+
+  /** Commit store that refuses, under the table root `under`, the first
+    * claim of every version (each commit loses exactly one race) — or
+    * every claim (`always`). Claims elsewhere go to the filesystem store. */
+  private class LosingCommitStore(under: String, always: Boolean = false)
+      extends VersionedTable.CommitStore {
+    val claims = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val refused = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
+        root: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
+        body: Array[Byte]): Boolean = {
+      val mine = dest.toUri.getPath.startsWith(under + "/")
+      if (mine) claims.incrementAndGet()
+      if (mine && (always || refused.add(dest.toString))) false
+      else VersionedTable.FsCommitStore.putIfAbsent(f, root, dest, body)
+    }
+  }
+
+  private def withStore[A](store: VersionedTable.CommitStore)(body: => A): A = {
+    val saved = VersionedTable.commitStore
+    VersionedTable.commitStore = store
+    try body finally VersionedTable.commitStore = saved
+  }
+
+  /** Staged data dirs and checkpoint dirs under the table root that no
+    * committed version references — what a lost race must never leave
+    * behind. A checkpoint manifest lists its files in the checkpoint
+    * parquet, so data files are resolved per version, not read off the
+    * manifest text. */
+  private def unreferenced(path: String): Seq[String] = {
+    val root = new java.io.File(path)
+    val log = new java.io.File(root, "_graft_log")
+    val refs = log.listFiles().filter(_.getName.endsWith(".json"))
+      .map(m => new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8")) ++
+      VersionedTable.versions(spark, path).flatMap(VersionedTable.filesOf(spark, path, _))
+    val dirs = root.listFiles().filter(d => d.isDirectory && d.getName.startsWith("d-")) ++
+      log.listFiles().filter(d => d.isDirectory && d.getName.startsWith("ckpt-"))
+    dirs.map(_.getName).filterNot(n => refs.exists(_.contains(n))).toSeq
+  }
+
+  private def sortedRows(path: String): Seq[String] =
+    VersionedTable.read(spark, path).collect().map(_.toString).toSeq.sorted
+
+  test("lost race: every write verb retries through the one commit loop — one version, same result, nothing staged left") {
+    import org.apache.spark.sql.types.{DoubleType, StructField}
+    val base = spark.range(0, 40, 1, 4).select(col("id"),
+      (col("id") % 4).as("g"), concat(lit("v"), col("id")).as("v"))
+    def table(p: String): Unit = VersionedTable.write(base, p, Seq("id"))
+    val src = java.nio.file.Files.createTempDirectory("copysrc").toString
+    base.filter(col("id") < 8).withColumn("id", col("id") + 1000)
+      .write.mode("overwrite").parquet(src)
+    // (verb, setup, the verb's one commit)
+    val verbs: Seq[(String, String => Unit, String => Long)] = Seq(
+      ("write", table, p => VersionedTable.write(base.filter(col("id") < 20), p, Seq("id"))),
+      ("append", table, p => VersionedTable.append(
+        base.withColumn("id", col("id") + 100), p)),
+      ("copyInto", table, p => VersionedTable.copyInto(spark, p, src)._1),
+      ("restore", { p => table(p); VersionedTable.delete(spark, p, col("id") < 10) },
+        p => VersionedTable.restore(spark, p, 1L)),
+      ("analyzeNdv", table, p => VersionedTable.analyzeNdvInfo(spark, p, Seq("id"))._1),
+      ("upsert", table, p => VersionedTable.upsert(
+        spark.range(35, 45).select(col("id"), (col("id") % 4).as("g"),
+          lit("U").as("v")), p, Seq("id"))),
+      ("delete", table, p => VersionedTable.delete(spark, p, col("id") < 5)),
+      ("update", table, p => VersionedTable.update(spark, p, col("id") < 5,
+        Map("v" -> lit("U")))),
+      ("setProperties", table, p => VersionedTable.setProperties(spark, p,
+        Map("owner" -> "ops"))),
+      ("addCheckConstraint", table, p => VersionedTable.addCheckConstraint(
+        spark, p, "nonneg", "id >= 0")),
+      ("setGeneratedColumn", table, p => VersionedTable.setGeneratedColumn(
+        spark, p, "g", "id % 4")),
+      ("declareIdentityColumn", p => VersionedTable.write(base.filter(lit(false)), p),
+        p => VersionedTable.declareIdentityColumn(spark, p, "id")),
+      ("addColumns", table, p => VersionedTable.addColumns(spark, p,
+        Seq(StructField("w", DoubleType)))),
+      ("deleteVectorized", table, p => VersionedTable.deleteVectorized(
+        spark, p, col("id") === 3)),
+      ("purgeDeletes", { p => table(p)
+        VersionedTable.deleteVectorized(spark, p, col("id") < 3, purgeFraction = 1.0) },
+        p => VersionedTable.purgeDeletes(spark, p)),
+      ("compact", table, p => VersionedTable.compact(spark, p)),
+      ("zOrderBy", table, p => VersionedTable.zOrderBy(spark, p, Seq("id", "g"))),
+      ("zOrderBy scoped", p => VersionedTable.write(base, p, Seq("id"),
+        partitionBy = Seq("g")),
+        p => VersionedTable.zOrderBy(spark, p, Seq("id"), where = Some(col("g") === 1L))))
+    val savedInline = VersionedTable.CkptInlineMaxFiles
+    try verbs.foreach { case (name, setup, verb) =>
+      val Seq(raced, calm) = Seq("raced", "calm").map(t =>
+        java.nio.file.Files.createTempDirectory(s"race-$t").toString + "/t")
+      Seq(raced, calm).foreach { p =>
+        setup(p)
+        // land the verb's commit on a checkpoint version
+        while (VersionedTable.latestVersion(spark, p).get < VersionedTable.CheckpointEvery - 1)
+          VersionedTable.setProperties(spark, p,
+            Map("pad" -> VersionedTable.latestVersion(spark, p).get.toString))
+      }
+      // every checkpoint rides a parquet dir, so a lost claim has one to drop
+      VersionedTable.CkptInlineMaxFiles = 0
+      val before = VersionedTable.latestVersion(spark, raced).get
+      // a delete that empties a file stages a dir it then drops — setup
+      // leftovers are not the verb's
+      val leftBefore = unreferenced(raced)
+      val store = new LosingCommitStore(raced)
+      val vRaced = withStore(store)(verb(raced))
+      val vCalm = verb(calm)
+      VersionedTable.CkptInlineMaxFiles = savedInline
+      assert(store.claims.get == 2, s"$name: claims ${store.claims.get}")
+      assert(vRaced == before + 1 && vCalm == vRaced, s"$name: $vRaced vs $vCalm")
+      assert(VersionedTable.latestVersion(spark, raced).contains(before + 1), name)
+      assert(sortedRows(raced) == sortedRows(calm), name)
+      assert(VersionedTable.propertiesOf(spark, raced) ==
+        VersionedTable.propertiesOf(spark, calm), name)
+      val left = unreferenced(raced).diff(leftBefore)
+      assert(left.isEmpty, s"$name left $left")
+    } finally VersionedTable.CkptInlineMaxFiles = savedInline
+  }
+
+  test("lost race: a verb that loses every claim gives up after exactly MaxCommitRetries") {
+    Seq[(String, String => Long)](
+      ("append", p => VersionedTable.append(spark.range(5, 8).toDF("id"), p)),
+      ("delete", p => VersionedTable.delete(spark, p, col("id") < 2)),
+      ("set-properties", p => VersionedTable.setProperties(spark, p, Map("k" -> "v")))
+    ).foreach { case (what, verb) =>
+      val path = java.nio.file.Files.createTempDirectory("giveup").toString + "/t"
+      VersionedTable.write(spark.range(0, 5, 1, 2).toDF("id"), path)
+      val store = new LosingCommitStore(path, always = true)
+      val e = intercept[IllegalArgumentException](withStore(store)(verb(path)))
+      assert(e.getMessage.contains(
+        s"lost ${VersionedTable.MaxCommitRetries} $what commit races"), e.getMessage)
+      assert(store.claims.get == VersionedTable.MaxCommitRetries, what)
+      assert(VersionedTable.latestVersion(spark, path).contains(1L), what)
+      // a verb whose staged rewrite goes stale drops it on every lost claim
+      if (what == "delete") assert(unreferenced(path).isEmpty, unreferenced(path))
+    }
   }
 }

@@ -122,7 +122,7 @@ class ZOrderSpec extends SparkSpec {
       .toDF("id", "score", "name"), p)                                    // v4 mapped file
     val before = VersionedTable.read(spark, p).collect().map(_.toString).toSet
     assert(before == Set("[1,10,null]", "[2,20,null]", "[3,30,null]", "[4,40,dd]"))
-    val v = VersionedTable.zOrderBy(spark, p, "id", "score")
+    val v = VersionedTable.zOrderBy(spark, p, Seq("id", "score"))
     assert(VersionedTable.read(spark, p).collect().map(_.toString).toSet == before)
     // pre-zorder version still binds its own mapping (time travel intact)
     assert(VersionedTable.read(spark, p, Some(v - 1))
