@@ -8,9 +8,11 @@ import graft.sources.TableIO
   * reference's sequential script runner (`local/run_all.ps1:19-23`:
   * bronze ×1, silver ×1, gold ×3), as one in-process DAG.
   *
-  * Unlike the reference (which re-executes the full plan for every write +
-  * count, SURVEY.md §3), the silver parse fan-out is persisted once and all
-  * downstream consumers read it — same results, one parse.
+  * Each layer reads the previous layer's written table, not its in-memory
+  * plan: silver events and rejects each parse bronze (two writes of one
+  * `Silver.transform`), the six gold KPIs each read silver events back
+  * from disk, and the closing counts read every table once more. Nothing
+  * is persisted.
   */
 object Pipeline {
 
@@ -42,11 +44,9 @@ object Pipeline {
     // clustered like the suggested ZORDER (02_silver_events.sql:54-61),
     // rejects by reject date (03_silver_rejects.sql:23)
     val silver = Silver.transform(TableIO.read(spark, wh.bronze))
-    val events = silver.events.persist()
-    val rejects = silver.rejects
-    TableIO.write(events, wh.silverEvents, partitionBy = Seq("p_event_date"),
+    TableIO.write(silver.events, wh.silverEvents, partitionBy = Seq("p_event_date"),
       clusterBy = Seq("story_id", "author_id", "event_type"))
-    TableIO.write(rejects, wh.silverRejects, partitionBy = Seq("p_reject_date"))
+    TableIO.write(silver.rejects, wh.silverRejects, partitionBy = Seq("p_reject_date"))
 
     // Gold: six KPI tables (kpis_local.py, retention_local.py,
     // bottlenecks_local.py; post-release engagement from docs/kpis.md:99-114)
@@ -58,7 +58,7 @@ object Pipeline {
     TableIO.write(Gold.stageBottlenecks(ev), wh.bottlenecks)
     TableIO.write(Gold.postReleaseEngagement(ev), wh.postRelease, partitionBy = Seq("p_event_date"))
 
-    val counts = Counts(
+    Counts(
       bronze = TableIO.read(spark, wh.bronze).count(),
       silver = TableIO.read(spark, wh.silverEvents).count(),
       rejects = TableIO.read(spark, wh.silverRejects).count(),
@@ -68,8 +68,6 @@ object Pipeline {
       dropoff = TableIO.read(spark, wh.dropoff).count(),
       bottlenecks = TableIO.read(spark, wh.bottlenecks).count(),
       postRelease = TableIO.read(spark, wh.postRelease).count())
-    events.unpersist()
-    counts
   }
 
   /** Partition-aware incremental / backfill silver run

@@ -2624,11 +2624,11 @@ object SkippingQueries {
   // join-shape rewrite compose exactly.
   // --------------------------------------------------------------------------
   private def mvjFactPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvjfact_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvjfact_v2", "lineitem.parquet")
   private def mvjDimPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvjdim_v1", "part.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvjdim_v2", "part.parquet")
   private def mvjViewPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvjview_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvjview_v2", "lineitem.parquet")
 
   /** Builds/resumes the join-view fixture chain (idempotent across runs);
     * shared by q_mv_join and q_mv_join_residual. Returns (fact, dim, mv). */
@@ -2685,11 +2685,11 @@ object SkippingQueries {
   // replays the DML as set logic and re-joins both dims raw.
   // --------------------------------------------------------------------------
   private def mvStarFactPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvstarfact_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvstarfact_v2", "lineitem.parquet")
   private def mvStarDim2Path(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvstard2_v1", "supplier.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvstard2_v2", "supplier.parquet")
   private def mvStarViewPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvstarview_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvstarview_v2", "lineitem.parquet")
 
   def mvStar(spark: SparkSession, dir: String): DataFrame = {
     val fact = mvStarFactPath(dir)
@@ -2805,11 +2805,11 @@ object SkippingQueries {
   // re-joins lineitem for real.
   // --------------------------------------------------------------------------
   private def mvddFactPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvddfact_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvddfact_v2", "lineitem.parquet")
   private def mvddDimPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvdddim_v1", "part.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvdddim_v2", "part.parquet")
   private def mvddViewPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvddview_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvddview_v2", "lineitem.parquet")
 
   def mvDimDelta(spark: SparkSession, dir: String): DataFrame = {
     val fact = mvddFactPath(dir)
@@ -2866,11 +2866,11 @@ object SkippingQueries {
   // view; DuckDB executes the actual LEFT JOIN raw.
   // --------------------------------------------------------------------------
   private def mvlFactPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvlfact_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvlfact_v2", "lineitem.parquet")
   private def mvlDimPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvldim_v1", "part.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvldim_v2", "part.parquet")
   private def mvlViewPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvlview_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvlview_v2", "lineitem.parquet")
 
   def mvLeftJoin(spark: SparkSession, dir: String): DataFrame = {
     val fact = mvlFactPath(dir)
@@ -2937,11 +2937,11 @@ object SkippingQueries {
   // the dim re-brand + fact delete and aggregates the real join.
   // --------------------------------------------------------------------------
   private def mvsdFactPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvsdfact_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvsdfact_v2", "lineitem.parquet")
   private def mvsdDimPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvsddim_v1", "part.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvsddim_v2", "part.parquet")
   private def mvsdViewPath(dir: String): String =
-    SkippingQueries.cachedFixturePath(dir, "mvsdview_v1", "lineitem.parquet")
+    SkippingQueries.cachedFixturePath(dir, "mvsdview_v2", "lineitem.parquet")
 
   def mvStarDistinct(spark: SparkSession, dir: String): DataFrame = {
     val fact = mvsdFactPath(dir)

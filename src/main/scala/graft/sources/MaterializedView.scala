@@ -134,7 +134,7 @@ object MaterializedView {
     * `fact INNER JOIN dim ON fk = pk` instead of the bare fact. The FACT
     * is the [[SourceKey]] source (its change feed drives the incremental
     * refresh, exactly as for plain views); the DIMENSION is a second graft
-    * table, pinned at [[JoinDimVersionKey]]:
+    * table, pinned at its version in [[JoinsKey]]:
     *
     *  - the dim's join keys must be UNIQUE (a primary key) — checked with
     *    one O(dim) aggregate at create and at every FULL refresh; without
@@ -153,48 +153,34 @@ object MaterializedView {
     * At 100 TB this is the shape that matters: the fact's daily delta
     * joins a broadcast-sized dim, and the dashboard's star aggregate reads
     * the view's kilobytes instead of re-joining the fact. */
-  val JoinDimKey = "graft.mv.joinDim"
-  /** `fk<US>pk` pairs joined by `<RS>` — fact column = dim column. */
-  val JoinKeysKey = "graft.mv.joinKeys"
-  val JoinDimVersionKey = "graft.mv.joinDimVersion"
-  /** MULTI-DIM star views: `dim<GS>keysRaw<GS>pin` items joined by
-    * `<FS>` — written instead of the three legacy keys when the view
-    * joins MORE than one dimension (single-dim views keep the legacy
-    * encoding so pre-existing views and their pins parse unchanged). */
+  /** Every joined dimension of a join view, in join order:
+    * `dim<GS>keysRaw<GS>pin` items joined by `<FS>`, where `keysRaw` is
+    * `fk<US>pk` pairs joined by `<RS>` (fact column = dim column) and
+    * `pin` the dim version the view's content was built against. The
+    * distinct helpers of a join view carry their own copy of it. */
   val JoinsKey = "graft.mv.joins"
   private val Fs = '\u001C'; private val Gs = '\u001D'
-
-  private[graft] def joinSpecIn(props: Map[String, String])
-      : Option[(String, Seq[(String, String)], Long)] =
-    for {
-      dim <- props.get(JoinDimKey).filter(_.nonEmpty)
-      keysRaw <- props.get(JoinKeysKey).filter(_.nonEmpty)
-      v <- props.get(JoinDimVersionKey).map(_.toLong)
-    } yield (dim, parseKeys(keysRaw), v)
 
   private def parseKeys(keysRaw: String): Seq[(String, String)] =
     keysRaw.split(Rs.toString).toSeq.map { item =>
       val Array(fk, pk) = item.split(Us.toString, 2); (fk, pk)
     }
 
-  /** EVERY joined dimension of the view, in join order: the multi-dim
-    * encoding when present, else the legacy single-dim triple, else
-    * empty (a plain view). The ONE accessor all maintenance and rewrite
+  /** EVERY joined dimension of the view, in join order ([[JoinsKey]]);
+    * empty for a plain view. The ONE accessor all maintenance and rewrite
     * paths read. */
   private[graft] def joinsIn(props: Map[String, String])
       : Seq[(String, Seq[(String, String)], Long)] =
-    props.get(JoinsKey).filter(_.nonEmpty) match {
-      case Some(raw) => raw.split(Fs.toString).toSeq.map { item =>
+    props.get(JoinsKey).filter(_.nonEmpty).toSeq
+      .flatMap(_.split(Fs.toString).toSeq).map { item =>
         val Array(dim, keysRaw, v) = item.split(Gs.toString, 3)
         (dim, parseKeys(keysRaw), v.toLong)
       }
-      case None => joinSpecIn(props).toSeq
-    }
 
   private def keysRawOf(keys: Seq[(String, String)]): String =
     keys.map { case (fk, pk) => s"$fk$Us$pk" }.mkString(Rs.toString)
 
-  private[graft] def serializeJoins(
+  private def serializeJoins(
       joins: Seq[(String, Seq[(String, String)], Long)]): String =
     joins.map { case (dim, keys, v) => s"$dim$Gs${keysRawOf(keys)}$Gs$v" }
       .mkString(Fs.toString)
@@ -370,20 +356,6 @@ object MaterializedView {
         "matches NULL; coalesce or filter null keys upstream")
   }
 
-  def create(spark: SparkSession, srcPath: String, mvPath: String,
-      groupBy: Seq[String], sumCols: Seq[String]): Long =
-    create(spark, srcPath, mvPath, groupBy, sumCols, where = None)
-
-  def create(spark: SparkSession, srcPath: String, mvPath: String,
-      groupBy: Seq[String], sumCols: Seq[String],
-      where: Option[String]): Long =
-    create(spark, srcPath, mvPath, groupBy, sumCols, Nil, where)
-
-  def create(spark: SparkSession, srcPath: String, mvPath: String,
-      groupBy: Seq[String], sumCols: Seq[String], minMaxCols: Seq[String],
-      where: Option[String]): Long =
-    create(spark, srcPath, mvPath, groupBy, sumCols, minMaxCols, where, Nil)
-
   /** CREATE MATERIALIZED VIEW: one full aggregation of the source's head
     * snapshot, committed with the txn watermark pinned to the source
     * version it read. Idempotent/resumable: an existing view just gets
@@ -393,8 +365,8 @@ object MaterializedView {
     * group alias a DERIVED key (see [[GroupExprsKey]] — the
     * `to_date(ts) AS day` daily rollup). */
   def create(spark: SparkSession, srcPath: String, mvPath: String,
-      groupBy: Seq[String], sumCols: Seq[String], minMaxCols: Seq[String],
-      where: Option[String], partitionBy: Seq[String],
+      groupBy: Seq[String], sumCols: Seq[String], minMaxCols: Seq[String] = Nil,
+      where: Option[String] = None, partitionBy: Seq[String] = Nil,
       groupKeyExprs: Map[String, String] = Map.empty,
       distinctCols: Seq[String] = Nil): Long =
     createImpl(spark, srcPath, mvPath, groupBy, sumCols, minMaxCols,
@@ -402,7 +374,7 @@ object MaterializedView {
       distinctCols = distinctCols)
 
   /** CREATE a JOIN materialized view over `fact INNER JOIN dim` (see
-    * [[JoinDimKey]]): group/value columns come from the JOINED frame (the
+    * [[JoinsKey]]): group/value columns come from the JOINED frame (the
     * fact's columns plus the dim's non-key columns). The dim is pinned at
     * its current head; its join keys are validated UNIQUE and its non-key
     * column names validated collision-free against the fact's — both
@@ -575,7 +547,7 @@ object MaterializedView {
       // create WITH joins against it is a redefinition, not a resume.
       val createCompleted = p.contains(SourceKey)
       val joinPropsPresent =
-        p.contains(JoinsKey) || p.contains(JoinDimKey) || createCompleted
+        p.contains(JoinsKey) || createCompleted
       require(p.get(SourceKey).forall(_ == srcPath) &&
           p.get(GroupByKey).forall(_ == groupBy.mkString(",")) &&
           p.get(SumColsKey).forall(_ == sumCols.mkString(",")) &&
@@ -615,11 +587,7 @@ object MaterializedView {
     // fact-watermark move to replay-guard on), advanced atomically with
     // each helper fold. Initialized only when absent: a resume must not
     // rewind pins a refresh has already advanced.
-    val helperPinProps: Map[String, String] = joins match {
-      case Nil => Map.empty
-      case Seq((_, _, dimV)) => Map(JoinDimVersionKey -> dimV.toString)
-      case many => Map(JoinsKey -> serializeJoins(many))
-    }
+    val helperPinProps = pinPropsOf(joins)
     distincts.foreach { t =>
       val hp = distinctHelperPath(mvPath, t)
       if (VersionedTable.latestVersion(spark, hp).isEmpty) {
@@ -644,18 +612,7 @@ object MaterializedView {
       GroupExprsKey -> serializeExprs(groupKeyExprs),
       // stored even when absent ("") so the redefinition guard catches a
       // WHERE being ADDED to a view created without one
-      WhereKey -> where.getOrElse("")) ++
-      // single-dim views keep the LEGACY three-key encoding (pre-existing
-      // views, pins and their consumers parse unchanged); multi-dim stars
-      // land the list form
-      (joins match {
-        case Nil => Map.empty[String, String]
-        case Seq((dim, keys, dimV)) => Map(
-          JoinDimKey -> dim,
-          JoinKeysKey -> keysRawOf(keys),
-          JoinDimVersionKey -> dimV.toString)
-        case many => Map(JoinsKey -> serializeJoins(many))
-      }))
+      WhereKey -> where.getOrElse("")) ++ pinPropsOf(joins))
   }
 
   private def serializeExprs(exprOf: Map[String, String]): String =
@@ -737,30 +694,16 @@ object MaterializedView {
       repairSrc = () => withDim(VersionedTable.read(spark, src, Some(v1))),
       what = s"refresh of $mvPath",
       txn = Some(App -> v1), txnExpected = App -> v0,
-      propsExpected = pinPropsExpected(props, joins))
+      propsExpected = pinPropsOf(joins))
   }
 
-  /** The stored PIN encoding of a join view's props — the `propsExpected`
-    * CAS every incremental merge carries, so a delta computed against
-    * these pins can only land on a view still AT them. Plain views carry
-    * nothing. */
-  private def pinPropsExpected(props: Map[String, String],
-      joins: Seq[(String, Seq[(String, String)], Long)])
+  /** The PIN encoding of `joins` as view (or helper) props; plain views
+    * carry nothing. Also the `propsExpected` CAS every incremental merge
+    * carries, so a delta computed against these pins can only land on a
+    * view still AT them. */
+  private def pinPropsOf(joins: Seq[(String, Seq[(String, String)], Long)])
       : Map[String, String] =
-    if (joins.isEmpty) Map.empty
-    else if (props.contains(JoinDimKey))
-      Map(JoinDimVersionKey -> props(JoinDimVersionKey))
-    else Map(JoinsKey -> props(JoinsKey))
-
-  /** The pin encoding with `dim` advanced to `head` — what a dim-delta
-    * merge lands via `propsAdd` (legacy single-dim key or the list form,
-    * matching the stored encoding). */
-  private def pinPropsAdvanced(props: Map[String, String],
-      joins: Seq[(String, Seq[(String, String)], Long)],
-      dim: String, head: Long): Map[String, String] =
-    if (props.contains(JoinDimKey)) Map(JoinDimVersionKey -> head.toString)
-    else Map(JoinsKey -> serializeJoins(joins.map(j =>
-      if (j._1 == dim) (j._1, j._2, head) else j)))
+    if (joins.isEmpty) Map.empty else Map(JoinsKey -> serializeJoins(joins))
 
   /** Accumulated column space (fact ∪ dims joined BEFORE `until`) — what
     * [[validateJoin]] checks a dim's keys and names against, chain-ordered
@@ -861,8 +804,9 @@ object MaterializedView {
     mergeDelta(spark, mvPath, props, chg, () => repairSrc(),
       what = s"dim-delta refresh of $mvPath ($dim $pin→$head)",
       txn = None, txnExpected = App -> v0,
-      propsAdd = pinPropsAdvanced(props, joins, dim, head),
-      propsExpected = pinPropsExpected(props, joins))
+      propsAdd = pinPropsOf(joins.map(j =>
+        if (j._1 == dim) (j._1, j._2, head) else j)),
+      propsExpected = pinPropsOf(joins))
   }
 
   /** The signed-delta → MERGE core shared by the fact pass and the dim
@@ -1150,12 +1094,7 @@ object MaterializedView {
     // the re-pinned dim versions, in the stored encoding — landed on the
     // view AND on every helper (whose own pin copy is the dim pass's
     // idempotence token)
-    val pinAdd: Map[String, String] = rePinned match {
-      case Nil => Map.empty[String, String]
-      case Seq((_, _, dimV)) if props.contains(JoinDimKey) =>
-        Map(JoinDimVersionKey -> dimV.toString)
-      case many => Map(JoinsKey -> serializeJoins(many))
-    }
+    val pinAdd = pinPropsOf(rePinned)
     // distinct HELPERS rebuild FIRST (each replay-safe under the same
     // (App, v1) txn): a crash between a helper and the view leaves the
     // helper AHEAD, which the incremental path detects and skips — the
@@ -1195,8 +1134,7 @@ object MaterializedView {
     VersionedTable.mvMaintenance.set(true)
     // the re-pinned dim versions land IN the snapshot commit — a separate
     // props commit would leave a crash window where the content (built
-    // against the new dims) and the pins (still the old ones) disagree.
-    // Single-dim views keep their legacy pin key; stars re-land the list
+    // against the new dims) and the pins (still the old ones) disagree
     try VersionedTable.commitSnapshotRaw(agg, mvPath,
       statsCols = groupBy, partitionBy = partitionBy,
       txn = if (wm.exists(_ >= v1)) None else Some(App -> v1),

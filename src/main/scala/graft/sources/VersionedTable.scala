@@ -75,9 +75,14 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   *    dropped versions (file-granular: a file carried forward by a kept
   *    version survives the drop of the version that wrote it)
   *
-  * Manifests written by older releases (a single `"dir"` instead of
-  * `"files"`) remain readable: the file list is resolved by listing and
-  * their stats keys are remapped.
+  * ONE MANIFEST FORM: every manifest lists its files inline (`"files"`),
+  * in a parquet checkpoint (`"ckpt"`), or as a delta against its parent
+  * (`"base"`), and every form records the table `schema`, the commit
+  * stamp `ts` and a row count for every file it lists. That is the only
+  * form the writers produce and the only one readers accept: any other
+  * manifest (a single `"dir"`, no `schema`, no `ts`, a file without a row
+  * count) is refused with an `UnsupportedOperationException` naming the
+  * table and the version, at the same gate that checks reader features.
   *
   * METADATA SCALING (the full stack, each piece spec-pinned):
   *  - manifests are DELTA-ENCODED between full checkpoints (every
@@ -232,8 +237,7 @@ object VersionedTable {
     *                manifest at commit time — [[versionAt]] resolves
     *                TIMESTAMP AS OF from this, so vacuum's re-anchor
     *                rewrite (which refreshes the file's mtime) cannot
-    *                shift time travel. 0 = legacy manifest (mtime
-    *                fallback) */
+    *                shift time travel */
   /** Lazily-forced per-file stats: checkpoint-backed commits defer the
     * scan+parse of a potentially million-entry stats column until a
     * consumer actually needs the full map (write verbs, metadata MIN/MAX,
@@ -267,7 +271,7 @@ object VersionedTable {
     *                  layers only — small by construction) */
   private final case class Commit(
       files: Seq[String],
-      schema: Option[StructType],
+      schema: StructType,
       statsRef: LazyStats,
       rows: Map[String, Long],
       txn: Map[String, Long],
@@ -340,12 +344,13 @@ object VersionedTable {
       .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty)
   }
 
+  /** The commit stamp; [[checkManifest]] has proven the field present. */
   private def tsOf(node: com.fasterxml.jackson.databind.JsonNode): Long =
-    Option(node.get("ts")).map(_.asLong()).getOrElse(0L)
+    node.get("ts").asLong()
 
-  private def schemaOf(node: com.fasterxml.jackson.databind.JsonNode): Option[StructType] =
-    Option(node.get("schema")).filterNot(_.isNull).map(s =>
-      DataType.fromJson(s.toString).asInstanceOf[StructType])
+  /** The table schema; [[checkManifest]] has proven the field present. */
+  private def schemaOf(node: com.fasterxml.jackson.databind.JsonNode): StructType =
+    DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType]
 
   // --------------------------------------------------------------------------
   // PROTOCOL FEATURE GATING (Delta's reader/writer protocol, per-manifest
@@ -417,7 +422,13 @@ object VersionedTable {
         .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ > 0)
     } yield (cols, n)
 
-  private def checkReaderFeatures(node: com.fasterxml.jackson.databind.JsonNode,
+  /** The read gate every manifest passes before anything interprets it:
+    * its reader features must be ones this build supports, and it must be
+    * in the one form the writers produce — a file list (`files`, `ckpt`
+    * or a `base` delta), a non-null `schema` and a `ts`. Row counts are
+    * checked where the file lists are parsed ([[parseFull]],
+    * [[applyDelta]]). */
+  private def checkManifest(node: com.fasterxml.jackson.databind.JsonNode,
       root: Path, v: Long): Unit = {
     val unknown = strArr(node, "rf").toSet.diff(SupportedReaderFeatures)
     if (unknown.nonEmpty) throw new UnsupportedOperationException(
@@ -425,7 +436,23 @@ object VersionedTable {
         s"${unknown.toSeq.sorted.mkString(", ")} this build does not " +
         s"support (supported: ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}); " +
         "upgrade to read this table")
+    if (!node.has("files") && !node.has("ckpt") && !node.has("base"))
+      refuseForm(root, v, "lists no files (no \"files\", \"ckpt\" or \"base\")")
+    if (!node.hasNonNull("schema")) refuseForm(root, v, "records no schema")
+    if (!node.has("ts")) refuseForm(root, v, "records no commit time (ts)")
   }
+
+  private def refuseForm(root: Path, v: Long, what: String): Nothing =
+    throw new UnsupportedOperationException(
+      s"$root version $v: the manifest $what; this build reads only " +
+        "manifests that list their files, schema, commit time and per-file " +
+        "row counts")
+
+  /** Every listed file must carry a row count (the written form). */
+  private def requireRows(root: Path, v: Long, files: Iterable[String],
+      rows: Map[String, Long]): Unit =
+    files.find(fk => !rows.contains(fk)).foreach(fk =>
+      refuseForm(root, v, s"records no row count for $fk"))
 
   /** The head manifest's declared (readerFeatures, writerFeatures). */
   def protocolOf(spark: SparkSession, path: String): (Set[String], Set[String]) = {
@@ -438,39 +465,46 @@ object VersionedTable {
 
   private def readManifest(spark: SparkSession, f: FileSystem, root: Path,
       v: Long): Commit = {
-    // walk delta manifests down to their full (or legacy) anchor, then
-    // replay them oldest-first; every node on the chain gets the reader-
-    // feature gate BEFORE anything interprets it
+    // walk delta manifests down to their full anchor, then replay them
+    // oldest-first; every node on the chain passes the manifest gate
+    // BEFORE anything interprets it
     var cur = v
-    var node = parseManifest(f, root, v)
-    checkReaderFeatures(node, root, cur)
-    var deltas = List.empty[com.fasterxml.jackson.databind.JsonNode]
+    var node = checkedManifest(f, root, v)
+    var deltas = List.empty[(Long, com.fasterxml.jackson.databind.JsonNode)]
     while (node.has("base")) {
-      deltas ::= node // ends ordered oldest-first
+      deltas ::= cur -> node // ends ordered oldest-first
       cur = node.get("base").asLong()
-      node = parseManifest(f, root, cur)
-      checkReaderFeatures(node, root, cur)
+      node = checkedManifest(f, root, cur)
     }
-    var c = parseFull(spark, f, root, node)
-    deltas.foreach(d => c = applyDelta(c, d))
+    var c = parseFull(spark, root, cur, node)
+    deltas.foreach { case (dV, d) => c = applyDelta(root, dV, c, d) }
     c
+  }
+
+  private def checkedManifest(f: FileSystem, root: Path, v: Long)
+      : com.fasterxml.jackson.databind.JsonNode = {
+    val node = parseManifest(f, root, v)
+    checkManifest(node, root, v)
+    node
   }
 
   /** Replay one delta manifest on top of its parent's resolved commit.
     * The stats composition is itself LAZY (a thunk over the parent's
     * thunk), so replaying a chain on a checkpoint-anchored commit forces
     * nothing until some consumer asks for the full stats map. */
-  private def applyDelta(c: Commit,
+  private def applyDelta(root: Path, v: Long, c: Commit,
       d: com.fasterxml.jackson.databind.JsonNode): Commit = {
     val removed = strArr(d, "files_remove").toSet
     val added = strArr(d, "files_add")
     val adds = Option(d.get("stats_add"))
       .map(DataSkipping.fromJson).getOrElse(Map.empty: DataSkipping.FileStats)
+    val rowsAdd = longMap(d, "rows_add")
+    requireRows(root, v, added, rowsAdd)
     Commit(
       c.files.filterNot(removed) ++ added,
       schemaOf(d),
       new LazyStats(() => c.stats.filter(kv => !removed(kv._1)) ++ adds),
-      c.rows.filter(kv => !removed(kv._1)) ++ longMap(d, "rows_add"),
+      c.rows.filter(kv => !removed(kv._1)) ++ rowsAdd,
       longMap(d, "txn"),
       strArr(d, "dv"),
       longMap(d, "dv_rows"),
@@ -486,53 +520,42 @@ object VersionedTable {
         longMap(d, "base_row_add"))
   }
 
-  private def parseFull(spark: SparkSession, f: FileSystem, root: Path,
+  private def parseFull(spark: SparkSession, root: Path, v: Long,
       node: com.fasterxml.jackson.databind.JsonNode): Commit =
-    Option(node.get("files")) match {
-      case Some(_) =>
-        Commit(strArr(node, "files"), schemaOf(node),
-          LazyStats.of(Option(node.get("stats"))
-            .map(DataSkipping.fromJson).getOrElse(Map.empty: DataSkipping.FileStats)),
-          longMap(node, "rows"), longMap(node, "txn"),
-          strArr(node, "dv"), longMap(node, "dv_rows"),
-          strMap(node, "colmap"), strArr(node, "phys_dropped").toSet, tsOf(node),
-          props = strMap(node, "props"),
-          wf = strArr(node, "wf").toSet,
-          rowHwm = Option(node.get("row_hwm")).map(_.asLong()).getOrElse(0L),
-          baseRow = longMap(node, "base_row"))
-      case None if node.has("ckpt") =>
-        // parquet checkpoint: the file list + per-file stats/rows live in a
-        // parquet dir written and parsed by Spark itself — the manifest
-        // JSON stays O(1) no matter how many files the table holds. The
-        // file list + row counts scan reads ONLY those columns (columnar);
-        // the stats column is deferred behind LazyStats and most readers
-        // never touch it (pruning runs distributed via ckptInfo).
-        val rel = node.get("ckpt").asText()
-        val (files, rows, baseRow) = readCkptLight(spark, root, rel)
-        Commit(files, schemaOf(node),
-          new LazyStats(() => readCkptStats(spark, root, rel)),
-          rows, longMap(node, "txn"),
-          strArr(node, "dv"), longMap(node, "dv_rows"),
-          strMap(node, "colmap"), strArr(node, "phys_dropped").toSet, tsOf(node),
-          ckptInfo = Some((rel, files.toSet)),
-          props = strMap(node, "props"),
-          wf = strArr(node, "wf").toSet,
-          rowHwm = Option(node.get("row_hwm")).map(_.asLong()).getOrElse(0L),
-          baseRow = baseRow)
-      case None =>
-        // legacy single-dir manifest: resolve the file list by listing the
-        // dir (as pre-file-list readers did) and remap stats keys from bare
-        // names to dir-relative paths
-        val dirName = node.get("dir").asText()
-        val dir = new Path(root, dirName)
-        val files = if (f.exists(dir)) f.listStatus(dir).map(_.getPath.getName)
-          .filter(_.endsWith(".parquet")).sorted.map(n => s"$dirName/$n").toSeq
-        else Seq.empty
-        val stats = Option(node.get("stats"))
-          .map(DataSkipping.fromJson).getOrElse(Map.empty: DataSkipping.FileStats)
-          .map { case (name, cs) => s"$dirName/$name" -> cs }
-        Commit(files, schemaOf(node), LazyStats.of(stats),
-          Map.empty, Map.empty, Seq.empty, Map.empty)
+    if (node.has("files")) {
+      val files = strArr(node, "files")
+      val rows = longMap(node, "rows")
+      requireRows(root, v, files, rows)
+      Commit(files, schemaOf(node),
+        LazyStats.of(Option(node.get("stats"))
+          .map(DataSkipping.fromJson).getOrElse(Map.empty: DataSkipping.FileStats)),
+        rows, longMap(node, "txn"),
+        strArr(node, "dv"), longMap(node, "dv_rows"),
+        strMap(node, "colmap"), strArr(node, "phys_dropped").toSet, tsOf(node),
+        props = strMap(node, "props"),
+        wf = strArr(node, "wf").toSet,
+        rowHwm = Option(node.get("row_hwm")).map(_.asLong()).getOrElse(0L),
+        baseRow = longMap(node, "base_row"))
+    } else {
+      // parquet checkpoint: the file list + per-file stats/rows live in a
+      // parquet dir written and parsed by Spark itself — the manifest
+      // JSON stays O(1) no matter how many files the table holds. The
+      // file list + row counts scan reads ONLY those columns (columnar);
+      // the stats column is deferred behind LazyStats and most readers
+      // never touch it (pruning runs distributed via ckptInfo).
+      val rel = node.get("ckpt").asText()
+      val (files, rows, baseRow) = readCkptLight(spark, root, rel)
+      requireRows(root, v, files, rows)
+      Commit(files, schemaOf(node),
+        new LazyStats(() => readCkptStats(spark, root, rel)),
+        rows, longMap(node, "txn"),
+        strArr(node, "dv"), longMap(node, "dv_rows"),
+        strMap(node, "colmap"), strArr(node, "phys_dropped").toSet, tsOf(node),
+        ckptInfo = Some((rel, files.toSet)),
+        props = strMap(node, "props"),
+        wf = strArr(node, "wf").toSet,
+        rowHwm = Option(node.get("row_hwm")).map(_.asLong()).getOrElse(0L),
+        baseRow = baseRow)
     }
 
   /** The version anchoring `v`'s delta chain (v itself when its manifest is
@@ -610,15 +633,8 @@ object VersionedTable {
     val rm = removed // small closure: O(changed files since anchor)
     val keep = keepStatsCols
     val ren = renameStats
-    val anchorDf = spark.read.parquet(new Path(root, anchorRel).toString)
-    // pre-row-tracking anchors lack the base_row column; carried files
-    // then have no ids (the caller falls back to a full authoring when it
-    // actually needs to introduce them — see encodeCommit)
-    val anchorBase =
-      if (anchorDf.columns.contains("base_row")) col("base_row")
-      else lit(null).cast("long").as("base_row")
-    val carried0 = anchorDf
-      .select(col("idx"), col("path"), col("rows"), col("stats"), anchorBase)
+    val carried0 = spark.read.parquet(new Path(root, anchorRel).toString)
+      .select(col("idx"), col("path"), col("rows"), col("stats"), col("base_row"))
       .as[(Int, String, Option[Long], Option[String], Option[Long])]
       .mapPartitions(_.collect {
         case (i, p, rw, st, br) if !rm.contains(p) =>
@@ -683,11 +699,8 @@ object VersionedTable {
     * columns (the stats column never leaves the parquet pages). */
   private def readCkptLight(spark: SparkSession, root: Path, rel: String)
       : (Seq[String], Map[String, Long], Map[String, Long]) = {
-    val df0 = spark.read.parquet(new Path(root, rel).toString)
-    val hasBase = df0.columns.contains("base_row") // pre-feature checkpoints
-    val rowsArr = df0
-      .select(col("idx"), col("path"), col("rows"),
-        (if (hasBase) col("base_row") else lit(null).cast("long")).as("base_row"))
+    val rowsArr = spark.read.parquet(new Path(root, rel).toString)
+      .select(col("idx"), col("path"), col("rows"), col("base_row"))
       .collect().sortBy(r => (r.getInt(0), r.getString(1)))
     val files = rowsArr.map(_.getString(1)).toSeq
     val rowCounts = rowsArr.iterator.filterNot(_.isNullAt(2))
@@ -817,6 +830,9 @@ object VersionedTable {
           s"support (supported: ${SupportedWriterFeatures.toSeq.sorted.mkString(", ")}); " +
           "the table remains readable — upgrade to write to it")
     }
+    // the one manifest form: every listed file carries its row count
+    files.foreach(fk => require(rows.contains(fk),
+      s"$root version $v: no row count for $fk"))
     // TABLE PROPERTIES carry from the parent unless a verb sets them
     // explicitly (the props-changing commits, restore, vacuum re-anchor) —
     // a property survives every maintenance verb the way the schema does
@@ -838,12 +854,6 @@ object VersionedTable {
         (seedHwm, seedBase.filter(kv => fileSet0(kv._1)), false)
       else {
         val fresh = files.filterNot(seedBase.contains)
-        fresh.foreach { fk =>
-          require(rows.contains(fk),
-            s"$root: row tracking needs a row count for every file but $fk " +
-              "has none (pre-rowcount manifest); OPTIMIZE the table before " +
-              s"enabling $RowTrackingKey")
-        }
         var hwm = seedHwm
         val assigned = fresh.map { fk => val b = hwm; hwm += rows(fk); fk -> b }
         val parentFiles = parent.map(_.files.toSet).getOrElse(Set.empty[String])
@@ -953,7 +963,7 @@ object VersionedTable {
     // versionAt's binary search requires non-decreasing timestamps along the
     // log; without this, cross-writer clock skew could order a later version
     // EARLIER and make TIMESTAMP AS OF resolve a version other than "the
-    // latest committed at or before ts". Legacy parents (ts=0) add nothing.
+    // latest committed at or before ts".
     val tsVal =
       if (ts > 0L) ts
       else math.max(System.currentTimeMillis(), parent.map(_.ts + 1L).getOrElse(0L))
@@ -1547,7 +1557,7 @@ object VersionedTable {
           // — old versions keep their own layout via their own manifests)
           val effPart =
             if (partitionCols.nonEmpty) partitionCols
-            else parent.flatMap(_.schema).map(partitionColsOf).getOrElse(Nil)
+            else parent.map(p => partitionColsOf(p.schema)).getOrElse(Nil)
           // identity allocation (skipped on the CREATE TABLE path, whose
           // declared empty frame legitimately carries the column), then
           // generation (a generated PARTITION column must exist before the
@@ -1881,7 +1891,7 @@ object VersionedTable {
             (d, a)
         }
         val effDf = applyGenerated(idDf, curProps, path)
-        c.flatMap(_.schema).foreach { bs =>
+        c.map(_.schema).foreach { bs =>
           require(bs.fieldNames.toSet == effDf.schema.fieldNames.toSet &&
             bs.fields.forall(bf =>
               effDf.schema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType)),
@@ -1892,7 +1902,7 @@ object VersionedTable {
         // a table's partition layout is part of its contract: appends inherit
         // it; an explicit partitionBy must agree (it cannot re-layout —
         // carried files keep their dirs)
-        val parentPart = c.flatMap(_.schema).map(partitionColsOf).getOrElse(Nil)
+        val parentPart = c.map(p => partitionColsOf(p.schema)).getOrElse(Nil)
         val effPart =
           if (c.isEmpty && partitionCols.nonEmpty) partitionCols else parentPart
         if (c.nonEmpty && partitionCols.nonEmpty)
@@ -1922,7 +1932,7 @@ object VersionedTable {
         }
         val (_, rel, st, rw, _, _, _) = staged.get
         // merge nullability so an appended nullable column stays readable
-        val schemaJson = c.flatMap(_.schema).map { bs =>
+        val schemaJson = c.map(_.schema).map { bs =>
           StructType(bs.fields.map(bf => bf.copy(nullable = bf.nullable ||
             effDf.schema.fields.find(_.name == bf.name).exists(_.nullable)))).json
         }.getOrElse(
@@ -1980,8 +1990,7 @@ object VersionedTable {
     * (epoch millis). Commit times come from the `ts` field RECORDED INSIDE
     * each manifest at commit time — not the manifest file's mtime, which
     * vacuum's re-anchor rewrite refreshes (an mtime-based resolution
-    * shifted after vacuum). Legacy manifests without the field fall back
-    * to mtime. None when the table has no version that old. */
+    * shifted after vacuum). None when the table has no version that old. */
   def versionAt(spark: SparkSession, path: String, tsMillis: Long): Option[Long] = {
     val root = new Path(path)
     val f = fs(spark, root)
@@ -2003,9 +2012,7 @@ object VersionedTable {
     // BINARY SEARCH over the (version-ordered, ts-non-decreasing) log:
     // O(log V) small manifest parses instead of parsing every manifest.
     // Commit stamps are enforced monotonic at write time (manifestJson:
-    // ts = max(now, parent.ts+1), Delta's idiom), so the precondition holds
-    // on any table written by this code; legacy mixed-clock tables keep the
-    // exact linear fallback below.
+    // ts = max(now, parent.ts+1), Delta's idiom), so the search is exact.
     var lo = floor
     var hi = head
     var ans = -1L
@@ -2014,20 +2021,11 @@ object VersionedTable {
       if (commitTime(f, root, mid) <= tsMillis) { ans = mid; lo = mid + 1 }
       else hi = mid - 1
     }
-    if (ans >= 0) Some(ans)
-    else
-      // a local timestamp inversion (pre-monotonic-stamp history, out-of-
-      // order legacy mtime) can hide a hit from the binary search — fall
-      // back to the exact linear contract rather than answer None for a
-      // table the old scan resolved
-      (floor to head).filter(v => commitTime(f, root, v) <= tsMillis).lastOption
+    Option.when(ans >= 0)(ans)
   }
 
-  private def commitTime(f: FileSystem, root: Path, v: Long): Long = {
-    val recorded = tsOf(parseManifest(f, root, v))
-    if (recorded > 0L) recorded
-    else f.getFileStatus(manifest(root, v)).getModificationTime
-  }
+  private def commitTime(f: FileSystem, root: Path, v: Long): Long =
+    tsOf(checkedManifest(f, root, v))
 
   /** Read the table as of a wall-clock instant (see [[versionAt]]). */
   def readAsOfTimestamp(spark: SparkSession, path: String, tsMillis: Long): DataFrame = {
@@ -2071,8 +2069,7 @@ object VersionedTable {
             s"removed (concurrent vacuum?): ${preMissing.take(3).mkString(",")}")
         val v = b + 1L
         val (body, ckptDir) = encodeCommit(spark, root, v, target.files,
-          target.schema.map(_.json).getOrElse("null"),
-          target.stats, target.rows, cur.txn, target.dv, target.dvRows,
+          target.schema.json, target.stats, target.rows, cur.txn, target.dv, target.dvRows,
           parent = Some(cur), colMap = target.colMap,
           physDropped = target.physDropped,
           props = Some(target.props), // RESTORE restores properties too
@@ -2090,8 +2087,7 @@ object VersionedTable {
         // so any ids it minted stay fenced
         val vC = readManifest(spark, f, root, committed)
         val (undo, undoCkpt) = encodeCommit(spark, root, committed + 1L, cur.files,
-          cur.schema.map(_.json).getOrElse("null"),
-          cur.stats, cur.rows, cur.txn, cur.dv, cur.dvRows,
+          cur.schema.json, cur.stats, cur.rows, cur.txn, cur.dv, cur.dvRows,
           parent = Some(target), forceFull = true,
           colMap = cur.colMap, physDropped = cur.physDropped,
           props = Some(cur.props),
@@ -2159,7 +2155,7 @@ object VersionedTable {
       }
     val v = 1L
     val (body, ckptDir) = encodeCommit(spark, destRoot, v, c.files,
-      c.schema.map(_.json).getOrElse("null"), c.stats, c.rows,
+      c.schema.json, c.stats, c.rows,
       txn = Map.empty, dv = c.dv, dvRows = c.dvRows,
       colMap = c.colMap, physDropped = c.physDropped,
       carriedIdentical = true, statsAddOnly = Some(Map.empty),
@@ -2226,9 +2222,9 @@ object VersionedTable {
     * the pinned logical schema directly against column-mapped files would
     * stream every mapped column as null) and caches them together. */
   private[graft] def filesAndMappingOf(spark: SparkSession, path: String,
-      v: Long): (Seq[String], Map[String, String], Seq[String], Option[StructType]) = {
+      v: Long): (Seq[String], Map[String, String], Seq[String], StructType) = {
     val (_, _, c) = commitFor(spark, path, Some(v))
-    (c.files, c.colMap, c.schema.map(partitionColsOf).getOrElse(Nil), c.schema)
+    (c.files, c.colMap, partitionColsOf(c.schema), c.schema)
   }
 
   private def commitFor(spark: SparkSession, path: String,
@@ -2336,7 +2332,7 @@ object VersionedTable {
   /** Physical names of the commit's declared partition columns — the only
     * keys [[partFragOf]] may treat as partition metadata. */
   private def partPhysOf(c: Commit): Set[String] =
-    c.schema.map(partitionColsOf).getOrElse(Nil).map(c.physName).toSet
+    partitionColsOf(c.schema).map(c.physName).toSet
 
   /** The raw (hive-unescaped) value of partition column `physName` inside a
     * fragment; None for the hive null sentinel or an absent segment. */
@@ -2359,7 +2355,7 @@ object VersionedTable {
     * row-reading primitive behind the fallback/CDF/streaming/DV paths. */
   private def physReadKeyed(spark: SparkSession, root: Path, c: Commit,
       s: StructType, files: Seq[String], withKeys: Boolean): DataFrame = {
-    val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
+    val partCols = partitionColsOf(c.schema)
       .filter(s.fieldNames.contains)
     val partSet = partCols.toSet
     val dataS = StructType(s.fields.filterNot(fl => partSet(fl.name)))
@@ -2446,18 +2442,13 @@ object VersionedTable {
     * stays narrow (no shuffle of the table to apply a small delete). */
   private def dataFrameFor(spark: SparkSession, root: Path, c: Commit,
       files: Seq[String]): DataFrame = {
-    val abs = files.map(r => new Path(root, r).toString)
-    val plain = c.schema match {
-      case Some(s) if abs.isEmpty =>
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-      case Some(s) => physRead(spark, root, c, s, files)
-      case None if abs.isEmpty => spark.emptyDataFrame
-      case None => spark.read.parquet(abs: _*) // pre-schema manifests
-    }
+    val s = c.schema
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
     // only files with marked rows need the anti-join at all
-    if (abs.isEmpty || !files.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) plain
+    else if (!files.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L))
+      physRead(spark, root, c, s, files)
     else {
-      val s = c.schema.get // dv commits always record a schema
       val base = physReadKeyed(spark, root, c, s, files, withKeys = true)
       val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
       val dvScoped =
@@ -2493,8 +2484,7 @@ object VersionedTable {
     * DV/partition metadata joins. */
   private def rowIdFrame(spark: SparkSession, root: Path, c: Commit,
       files: Seq[String]): DataFrame = {
-    val s = c.schema.getOrElse(
-      sys.error(s"$root: row tracking requires a schema-recorded table"))
+    val s = c.schema
     val outFields = s.fields.toSeq :+ StructField(RowIdCol, LongType, nullable = true)
     if (files.isEmpty)
       return spark.createDataFrame(
@@ -2540,9 +2530,9 @@ object VersionedTable {
     * (the `format("graft-table")` batch path): any `.filter` the caller
     * composes later prunes files AT PLAN TIME via manifest stats — the
     * read-then-filter idiom no longer silently scans every file, and DV/
-    * column mapping ride inside the file format instead of a join. Legacy
-    * no-schema manifests — and tables whose deletion vectors exceed the
-    * broadcast bound — keep the anti-join read. */
+    * column mapping ride inside the file format instead of a join. Tables
+    * whose deletion vectors exceed the broadcast bound keep the anti-join
+    * read. */
   def read(spark: SparkSession, path: String, asOf: Option[Long] = None): DataFrame = {
     val (root, _, v, c) = commitForV(spark, path, asOf)
     if (relationEligible(spark, c))
@@ -2551,15 +2541,13 @@ object VersionedTable {
     else dataFrameFor(spark, root, c, c.files)
   }
 
-  /** Relation reads need a recorded schema (legacy manifests infer) and
-    * driver-collectable deletion-vector marks (the format applies them as
-    * a broadcast mark set; past the bound the anti-join read scales
-    * better — and such a table should be purged, see
+  /** Relation reads need driver-collectable deletion-vector marks (the
+    * format applies them as a broadcast mark set; past the bound the
+    * anti-join read scales better — and such a table should be purged, see
     * [[DefaultDvPurgeFraction]]). */
   private def relationEligible(spark: SparkSession, c: Commit): Boolean =
-    c.schema.isDefined &&
-      c.files.iterator.map(fk => c.dvRows.getOrElse(fk, 0L)).sum <=
-        dvBroadcastBound(spark)
+    c.files.iterator.map(fk => c.dvRows.getOrElse(fk, 0L)).sum <=
+      dvBroadcastBound(spark)
 
   /** The `format("graft-table")` batch relation over one committed version:
     * plan-time file skipping (pushed filters → [[pruneFiles]], distributed
@@ -2572,9 +2560,6 @@ object VersionedTable {
   private[graft] def batchRelation(spark: SparkSession, path: String,
       asOf: Option[Long]): org.apache.spark.sql.sources.BaseRelation = {
     val (root, _, v, c) = commitForV(spark, path, asOf)
-    require(c.schema.isDefined,
-      s"$path: format(\"graft-table\") batch reads need a schema-recorded " +
-        "table (legacy manifests: use VersionedTable.read)")
     if (relationEligible(spark, c)) relationFor(spark, root, v, c)
     else new DvAntiJoinRelation(spark, root, c)
   }
@@ -2582,14 +2567,14 @@ object VersionedTable {
   private def relationFor(spark: SparkSession, root: Path, version: Long,
       c: Commit): org.apache.spark.sql.sources.BaseRelation =
     org.apache.spark.sql.graft.GraftBatchShim.relation(
-      spark, root, c.schema.get, c.files,
+      spark, root, c.schema, c.files,
       keep = {
         case Some(resolved) => pruneFiles(spark, root, c, resolved)._1
         case None => c.files
       },
       colMap = c.colMap,
       dvMarks = dvThunkFor(spark, root, c),
-      partitionCols = partitionColsOf(c.schema.get),
+      partitionCols = partitionColsOf(c.schema),
       minMaxOf = minMaxOfCommit(c, _),
       ndvOf = ndvOfCommit(spark, root, c, _),
       // declared bucket layout → the scan reports HashPartitioning(cols, n)
@@ -2614,27 +2599,20 @@ object VersionedTable {
       // generation SQL for generated PARTITION columns only — licenses the
       // base-column → partition-filter derivation rule
       generatedPartDefs = {
-        val parts = partitionColsOf(c.schema.get).toSet
+        val parts = partitionColsOf(c.schema).toSet
         val zones = generatedZonesIn(c.props)
         generatedIn(c.props).collect { case (n, sql) if parts(n) =>
           n -> (sql, zones.get(n)) }
       },
       // exact snapshot row count from the manifest (DV marks are disjoint
       // per generation, so the subtraction is exact — same contract as
-      // countRows); None when a legacy commit predates row recording
-      liveRows =
-        if (c.files.forall(c.rows.contains))
-          Some(c.files.map(c.rows).sum -
-            c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum)
-        else None,
+      // countRows)
+      liveRows = Some(c.files.map(c.rows).sum -
+        c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum),
       // exact per-file live rows (same DV-disjointness contract) — the
-      // partition-census rewrite's license; empty when any file predates
-      // row recording so the census is exact or absent
-      fileRows =
-        if (c.files.forall(c.rows.contains))
-          c.files.map(fk =>
-            fk -> (c.rows(fk) - c.dvRows.getOrElse(fk, 0L))).toMap
-        else Map.empty,
+      // partition-census rewrite's license
+      fileRows = c.files.map(fk =>
+        fk -> (c.rows(fk) - c.dvRows.getOrElse(fk, 0L))).toMap,
       // exact per-(file, column) bounds for census MIN/MAX of data columns
       // — per-file twin of minMaxOfCommit's refusal rules: a DV-marked
       // file could have lost its extremum, truncated string bounds are
@@ -2662,11 +2640,9 @@ object VersionedTable {
       fileNonNullOf = (fk, column) =>
         if (c.dvRows.getOrElse(fk, 0L) > 0L) None
         else if (c.rows.get(fk).contains(0L)) Some(0L) // vacuous
-        else for {
-          rows <- c.rows.get(fk)
-          st <- c.stats.get(fk).flatMap(_.get(column))
-          if st.allNulls || (st.min.isDefined && st.max.isDefined)
-        } yield if (st.allNulls) 0L else rows - st.numNulls,
+        else c.stats.get(fk).flatMap(_.get(column))
+          .filter(st => st.allNulls || (st.min.isDefined && st.max.isDefined))
+          .map(st => if (st.allNulls) 0L else c.rows(fk) - st.numNulls),
       // exact per-(file, column) live SUM from ANALYZE — immutable files
       // keep it valid forever; DV marks could have removed any subset of
       // the summed rows, so marked files answer nothing
@@ -2806,7 +2782,7 @@ object VersionedTable {
       with org.apache.spark.sql.sources.PrunedFilteredScan {
     override def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
     override val schema: StructType =
-      org.apache.spark.sql.graft.GraftBatchShim.nullable(c.schema.get)
+      org.apache.spark.sql.graft.GraftBatchShim.nullable(c.schema)
     override def toString: String = s"GraftDvAntiJoin(${c.files.size} files)"
     override def buildScan(requiredColumns: Array[String],
         filters: Array[org.apache.spark.sql.sources.Filter])
@@ -2814,7 +2790,7 @@ object VersionedTable {
       val pred = filters.flatMap(filterToColumn(_)).reduceOption(_ && _)
       val kept = pred match {
         case Some(p) =>
-          pruneFiles(spark, root, c, DataSkipping.resolve(spark, c.schema.get, p))._1
+          pruneFiles(spark, root, c, DataSkipping.resolve(spark, c.schema, p))._1
         case None => c.files
       }
       val df = dataFrameFor(spark, root, c, kept)
@@ -2900,34 +2876,29 @@ object VersionedTable {
     }
   }
 
-  /** `count(*)` from the manifest alone — zero data files opened. Answers
-    * None when any file predates row-count recording (legacy commits);
-    * callers then fall back to `read(...).count()`. At any scale this is
-    * the most common query, and it costs one small JSON read. */
+  /** `count(*)` from the manifest alone — zero data files opened; every
+    * manifest records a row count per file, so the answer is always
+    * present. At any scale this is the most common query, and it costs one
+    * small JSON read. */
   def countRows(spark: SparkSession, path: String,
       asOf: Option[Long] = None): Option[Long] = {
     val (_, _, c) = commitFor(spark, path, asOf)
-    if (c.files.isEmpty) Some(0L)
-    else if (c.files.forall(c.rows.contains))
-      // deletion-vector generations mark disjoint row sets (each is
-      // computed over the DV-applied view), so the subtraction is exact
-      Some(c.files.map(c.rows).sum - c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum)
-    else None
+    // deletion-vector generations mark disjoint row sets (each is computed
+    // over the DV-applied view), so the subtraction is exact
+    Some(c.files.map(c.rows).sum - c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum)
   }
 
   /** SHOW PARTITIONS from the manifest alone: one row per live partition
     * value — (display fragment under LOGICAL names, live file count, exact
-    * row count when every file in the partition has a recorded count,
-    * DV-deleted rows subtracted). Zero data files opened, zero directory
-    * listings: partition values come from the file keys the manifest
-    * already holds, so the statement is O(live files) driver work — the
-    * same order as planning any read. Refused on unpartitioned tables. */
+    * row count with DV-deleted rows subtracted). Zero data files opened,
+    * zero directory listings: partition values come from the file keys the
+    * manifest already holds, so the statement is O(live files) driver work
+    * — the same order as planning any read. Refused on unpartitioned
+    * tables. */
   def partitionsOf(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): Seq[(String, Int, Option[Long])] = {
+      asOf: Option[Long] = None): Seq[(String, Int, Long)] = {
     val (_, _, c) = commitFor(spark, path, asOf)
-    val s = c.schema.getOrElse(throw new IllegalArgumentException(
-      s"$path: SHOW PARTITIONS needs a schema-recorded table"))
-    val partCols = partitionColsOf(s)
+    val partCols = partitionColsOf(c.schema)
     require(partCols.nonEmpty, s"$path is not partitioned")
     c.files.groupBy(partFragOf(_, partPhysOf(c))).toSeq.map { case (frag, fs) =>
       // display under LOGICAL names (the fragment holds physical ones)
@@ -2937,11 +2908,8 @@ object VersionedTable {
           .getOrElse("__HIVE_DEFAULT_PARTITION__")
         s"$n=$shown"
       }.mkString("/")
-      val rows =
-        if (fs.forall(c.rows.contains))
-          Some(fs.map(c.rows).sum - fs.map(fk => c.dvRows.getOrElse(fk, 0L)).sum)
-        else None
-      (display, fs.size, rows)
+      (display, fs.size,
+        fs.map(c.rows).sum - fs.map(fk => c.dvRows.getOrElse(fk, 0L)).sum)
     }.sortBy(_._1)
   }
 
@@ -2994,8 +2962,7 @@ object VersionedTable {
     val committed = commitLoop(spark, path, "analyze") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
       analyzed = Nil
-      val s = c.schema.getOrElse(throw new IllegalArgumentException(
-        s"$path: ANALYZE needs a schema-recorded table"))
+      val s = c.schema
       val missing = cols.filterNot(s.fieldNames.contains)
       require(missing.isEmpty,
         s"$path: ANALYZE names missing column(s): ${missing.mkString(",")}")
@@ -3244,15 +3211,13 @@ object VersionedTable {
   /** Fraction of live rows living in files WITHOUT a sketch for `column`
     * — the operational re-ANALYZE signal (uncounted rows underestimate
     * NDV, which conservatively widens size estimates until the next
-    * analyze). None when the column was never analyzed or any row count
-    * is unknown; 0.0 means the sketches are fully current. Manifest-only,
-    * zero data files opened. */
+    * analyze). None when the column was never analyzed; 0.0 means the
+    * sketches are fully current. Manifest-only, zero data files opened. */
   def ndvStaleness(spark: SparkSession, path: String, column: String,
       asOf: Option[Long] = None): Option[Double] = {
     val (root, _, c) = commitFor(spark, path, asOf)
     if (!ndvColsIn(c.props).contains(column)) return None
     if (c.files.isEmpty) return Some(0.0)
-    if (!c.files.forall(c.rows.contains)) return None
     val total = c.files.map(c.rows).sum
     if (total == 0L) return Some(0.0)
     // which live files carry a sketch for `column`: answered off the
@@ -3372,17 +3337,14 @@ object VersionedTable {
     // the relation path prunes the SAME predicate at plan time (pushed data
     // filters → pruneFiles inside listFiles), so read().filter() and
     // readWhere() are now literally the same plan; the explicit pre-pruned
-    // scan remains for legacy/huge-DV tables
+    // scan remains for huge-DV tables
     val (root, _, v, c) = commitForV(spark, path, asOf)
     if (relationEligible(spark, c))
       org.apache.spark.sql.graft.GraftBatchShim.ofRelation(spark,
         relationFor(spark, root, v, c)).filter(predicate)
     else {
-      val (kept, _) = c.schema match {
-        case Some(s) =>
-          pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
-        case _ => (c.files, Seq.empty[String])
-      }
+      val (kept, _) =
+        pruneFiles(spark, root, c, DataSkipping.resolve(spark, c.schema, predicate))
       dataFrameFor(spark, root, c, kept).filter(predicate)
     }
   }
@@ -3448,8 +3410,7 @@ object VersionedTable {
     // pass 1 — partition-value pruning (exact, driver-side, path-derived):
     // a dt-scoped predicate drops whole partition directories before any
     // stat map is consulted or any distributed prune job runs
-    val partFields = c.schema.toSeq.flatMap(s =>
-      partitionColsOf(s).map(n => s(s.fieldIndex(n))))
+    val partFields = partitionColsOf(c.schema).map(n => c.schema(c.schema.fieldIndex(n)))
     val zone = Option(spark.sessionState.conf.sessionLocalTimeZone)
     val partSkipped: Set[String] =
       if (partFields.isEmpty) Set.empty
@@ -3506,11 +3467,8 @@ object VersionedTable {
   private def pruned(spark: SparkSession, path: String, predicate: Column,
       asOf: Option[Long]): (Path, Seq[String], Seq[String], Commit) = {
     val (root, _, c) = commitFor(spark, path, asOf)
-    val (kept, skipped) = c.schema match {
-      case Some(s) =>
-        pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
-      case _ => (c.files, Seq.empty[String]) // no stats/schema recorded: keep all
-    }
+    val (kept, skipped) =
+      pruneFiles(spark, root, c, DataSkipping.resolve(spark, c.schema, predicate))
     (root, kept, skipped, c)
   }
 
@@ -3726,45 +3684,43 @@ object VersionedTable {
                 Map.empty[String, String], Set.empty[String])
             case Some(c) =>
               val updSchema = inserts.schema
+              val bs = c.schema
+              if (!evolveSchema)
+                require(bs.fieldNames.toSet == updSchema.fieldNames.toSet,
+                  s"upsert schema mismatch vs $path (table ${bs.fieldNames.mkString(",")} " +
+                    s"vs updates ${updSchema.fieldNames.mkString(",")}); " +
+                    "pass evolveSchema=true to merge them")
+              val typesOk = bs.fields.forall(bf =>
+                updSchema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType))
               // (rewrite candidates, provably-unmatched carries, merged schema)
-              val (rewriteKeys, carryKeys, merged) = c.schema match {
-                case Some(bs) =>
-                  if (!evolveSchema)
-                    require(bs.fieldNames.toSet == updSchema.fieldNames.toSet,
-                      s"upsert schema mismatch vs $path (table ${bs.fieldNames.mkString(",")} " +
-                        s"vs updates ${updSchema.fieldNames.mkString(",")}); " +
-                        "pass evolveSchema=true to merge them")
-                  val typesOk = bs.fields.forall(bf =>
-                    updSchema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType))
-                  if (!typesOk) (c.files, Seq.empty[String], None) // coercion → full rewrite
-                  else {
-                    val mergedRaw = bs.fields.map { bf =>
-                      updSchema.fields.find(_.name == bf.name) match {
-                        case Some(uf) => bf.copy(nullable = bf.nullable || uf.nullable)
-                        case None => bf.copy(nullable = true) // null-filled on the update side
-                      }
-                    } ++ updSchema.fields.filterNot(uf => bs.fieldNames.contains(uf.name))
-                      .map(_.copy(nullable = true)) // absent from carried files
-                    // partitioned layout contract: partition columns stay LAST
-                    // (an evolved column would otherwise land after them)
-                    val basePart = partitionColsOf(bs).toSet
-                    val mergedFields =
-                      if (basePart.isEmpty) mergedRaw
-                      else mergedRaw.filterNot(fl => basePart(fl.name)) ++
-                        mergedRaw.filter(fl => basePart(fl.name))
-                    // an evolved column REUSING a dropped physical name can't
-                    // ride identity-mapped over carried files (their stale
-                    // bytes would resurrect): rewrite everything instead, so
-                    // no carried file exists to mis-bind
-                    val resurrects = updSchema.fieldNames.toSet
-                      .diff(bs.fieldNames.toSet).exists(c.physDropped)
-                    val (rw, cy) =
-                      if (resurrects) (c.files, Seq.empty[String])
-                      else selectRewrite(spark, root, c, bs, deduped, keys)
-                    (rw, cy, Some(StructType(mergedFields)))
-                  }
-                case None => (c.files, Seq.empty[String], None) // legacy: no schema to prove carries
-              }
+              val (rewriteKeys, carryKeys, merged) =
+                if (!typesOk) (c.files, Seq.empty[String], None) // coercion → full rewrite
+                else {
+                  val mergedRaw = bs.fields.map { bf =>
+                    updSchema.fields.find(_.name == bf.name) match {
+                      case Some(uf) => bf.copy(nullable = bf.nullable || uf.nullable)
+                      case None => bf.copy(nullable = true) // null-filled on the update side
+                    }
+                  } ++ updSchema.fields.filterNot(uf => bs.fieldNames.contains(uf.name))
+                    .map(_.copy(nullable = true)) // absent from carried files
+                  // partitioned layout contract: partition columns stay LAST
+                  // (an evolved column would otherwise land after them)
+                  val basePart = partitionColsOf(bs).toSet
+                  val mergedFields =
+                    if (basePart.isEmpty) mergedRaw
+                    else mergedRaw.filterNot(fl => basePart(fl.name)) ++
+                      mergedRaw.filter(fl => basePart(fl.name))
+                  // an evolved column REUSING a dropped physical name can't
+                  // ride identity-mapped over carried files (their stale
+                  // bytes would resurrect): rewrite everything instead, so
+                  // no carried file exists to mis-bind
+                  val resurrects = updSchema.fieldNames.toSet
+                    .diff(bs.fieldNames.toSet).exists(c.physDropped)
+                  val (rw, cy) =
+                    if (resurrects) (c.files, Seq.empty[String])
+                    else selectRewrite(spark, root, c, bs, deduped, keys)
+                  (rw, cy, Some(StructType(mergedFields)))
+                }
               val rewriteDf =
                 if (rewriteKeys.isEmpty && merged.isDefined) {
                   // pure-insert fast path: stats prove NO existing file holds a
@@ -3774,7 +3730,7 @@ object VersionedTable {
                   inserts.select(m.fields.map(fl =>
                     if (updSchema.fieldNames.contains(fl.name)) col(fl.name)
                     else lit(null).cast(fl.dataType).as(fl.name)).toSeq: _*)
-                } else if (rewriteKeys.isEmpty) inserts // empty/legacy base
+                } else if (rewriteKeys.isEmpty) inserts // empty base, coerced types
                 else {
                   // row tracking: carried rows ride with their materialized
                   // ids; a MERGE-matched incoming row INHERITS the id of the
@@ -3840,7 +3796,7 @@ object VersionedTable {
               // one in-task pass, no extra scan
               val (dir, rel0) =
                 try stage(withContract(rewriteDf, c.props, path), root, f,
-                  c.colMap, c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+                  c.colMap, partitionColsOf(c.schema), c.props)
                 catch { case e: Throwable => translateViolation(e, path) }
               val (st0, rw0) = metaFor(spark, root, rel0,
                 inheritedStatsCols(spark, root, c, statsCols), c.colMap)
@@ -3940,18 +3896,15 @@ object VersionedTable {
       val (b, c) = head.getOrElse(noVersions(path))
       hookProps = Map.empty
       fenceMvWrite(c.props, path, "DELETE")
-      val (candKeys, carryKeys) = c.schema match {
-        case Some(s) =>
-          pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
-        case _ => (c.files, Seq.empty[String])
-      }
+      val (candKeys, carryKeys) =
+        pruneFiles(spark, root, c, DataSkipping.resolve(spark, c.schema, predicate))
       if (candKeys.isEmpty) Left(b) // provably nothing to delete
       else {
         hookProps = c.props
         val kept = rewriteSource(spark, root, c, candKeys)
           .filter(!coalesce(predicate, lit(false))) // keep p=false AND p=null rows
         val (dir, rel0) = stage(kept, root, f, c.colMap,
-          c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+          partitionColsOf(c.schema), c.props)
         val (st0, rw0) = metaFor(spark, root, rel0,
           inheritedStatsCols(spark, root, c, statsCols), c.colMap)
         val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
@@ -3959,7 +3912,7 @@ object VersionedTable {
         val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
         val v = b + 1L
         val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-          c.schema.map(_.json).getOrElse(kept.drop(RowIdCol).schema.json),
+          c.schema.json,
           c.stats.filter(kv => carrySet(kv._1)) ++ st,
           c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
           parent = Some(c), colMap = c.colMap,
@@ -3995,8 +3948,7 @@ object VersionedTable {
       val (b, c) = head.getOrElse(noVersions(path))
       hookProps = Map.empty
       fenceMvWrite(c.props, path, "UPDATE")
-      val s = c.schema.getOrElse(throw new IllegalArgumentException(
-        s"$path: UPDATE needs a schema-recorded table"))
+      val s = c.schema
       val missing = set.keySet -- s.fieldNames.toSet
       require(missing.isEmpty,
         s"$path: UPDATE assigns to missing column(s): ${missing.mkString(",")}")
@@ -4334,9 +4286,9 @@ object VersionedTable {
     if (set.get(RowTrackingKey).exists(_.trim.equalsIgnoreCase("true")))
       latestVersion(spark, path).foreach { _ =>
         val (_, _, c) = commitFor(spark, path, None)
-        c.schema.foreach(s => require(!s.fieldNames.contains(RowIdCol),
+        require(!c.schema.fieldNames.contains(RowIdCol),
           s"$path: cannot enable $RowTrackingKey — the schema already has " +
-            s"a column named $RowIdCol (reserved for row tracking)"))
+            s"a column named $RowIdCol (reserved for row tracking)")
       }
     setPropertiesInternal(spark, path, set, unset)
   }
@@ -4367,7 +4319,7 @@ object VersionedTable {
       else {
         val v = b + 1L
         val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-          c.schema.map(_.json).getOrElse("null"), c.stats, c.rows, c.txn,
+          c.schema.json, c.stats, c.rows, c.txn,
           c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
           physDropped = c.physDropped, carriedIdentical = true,
           statsAddOnly = Some(Map.empty), props = Some(next))
@@ -4494,7 +4446,7 @@ object VersionedTable {
           "(DELETE/UPDATE the violating rows)")
       val v = b + 1L
       val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.map(_.json).getOrElse("null"), c.stats, c.rows, c.txn,
+        c.schema.json, c.stats, c.rows, c.txn,
         c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
         physDropped = c.physDropped, carriedIdentical = true,
         statsAddOnly = Some(Map.empty),
@@ -4644,8 +4596,7 @@ object VersionedTable {
           s"(${c.props(key)}); drop the generation first")
       require(!identityIn(c.props).contains(name),
         s"$path: $name is an identity column — a column cannot be both")
-      val s = c.schema.getOrElse(throw new IllegalStateException(
-        s"$path: version $b records no schema"))
+      val s = c.schema
       val zoneDep = validateGenerationExpr(spark, s, name, exprSql,
         generatedIn(c.props).keySet - name)
       val bad = read(spark, path, Some(b))
@@ -4655,7 +4606,7 @@ object VersionedTable {
           "existing rows hold a different value; fix the data first")
       val v = b + 1L
       val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.map(_.json).getOrElse("null"), c.stats, c.rows, c.txn,
+        c.schema.json, c.stats, c.rows, c.txn,
         c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
         physDropped = c.physDropped, carriedIdentical = true,
         statsAddOnly = Some(Map.empty),
@@ -4762,8 +4713,7 @@ object VersionedTable {
     // against the new head
     commitLoop(spark, path, "declare-identity") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
-      val s = c.schema.getOrElse(throw new IllegalStateException(
-        s"$path: version $b records no schema"))
+      val s = c.schema
       require(s.fieldNames.contains(name), s"$path: no such column: $name")
       require(s(s.fieldIndex(name)).dataType ==
         org.apache.spark.sql.types.LongType,
@@ -4784,7 +4734,7 @@ object VersionedTable {
           "CREATE TABLE, or CTAS into a fresh table")
       val v = b + 1L
       val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.map(_.json).getOrElse("null"), c.stats, c.rows, c.txn,
+        c.schema.json, c.stats, c.rows, c.txn,
         c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
         physDropped = c.physDropped, carriedIdentical = true,
         statsAddOnly = Some(Map.empty),
@@ -4854,9 +4804,8 @@ object VersionedTable {
     val root = new Path(path)
     commitLoop(spark, path, s"$verb-column") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
-      require(c.schema.isDefined, s"$path: schema DDL needs a schema-recorded table")
       val v = b + 1L
-      val (next, nextMap, nextDropped) = change(c.schema.get, c, v)
+      val (next, nextMap, nextDropped) = change(c.schema, c, v)
       val keep = next.fieldNames.toSet
       // LAZY: on a checkpoint-anchored table the stats prune runs on the
       // EXECUTORS (keepStatsCols → writeCkptFromAnchor); this driver-side
@@ -4918,9 +4867,7 @@ object VersionedTable {
       val (b, c) = head.getOrElse(noVersions(path))
       hookProps = Map.empty
       fenceMvWrite(c.props, path, "DELETE")
-      require(c.schema.isDefined,
-        s"$path: vectorized delete needs a schema-recorded table")
-      val s = c.schema.get
+      val s = c.schema
       val (candKeys, _) =
         pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
       if (candKeys.isEmpty) Left(b) // provably nothing to delete
@@ -4951,10 +4898,9 @@ object VersionedTable {
             // AUTO-PURGE: files the merged marks would push past the threshold
             // are rewritten (survivors materialized) in this SAME commit — the
             // marks never land, so the read-side anti-join stays bounded.
-            // Unknown row counts (legacy commits) never purge: conservative.
             val purgeKeys = c.files.filter { fk =>
               val m = mergedDvRows.getOrElse(fk, 0L)
-              m > 0L && c.rows.get(fk).exists(r => r > 0L && m.toDouble / r > purgeFraction)
+              m > 0L && m.toDouble / c.rows(fk) > purgeFraction
             }
             val purgeSet = purgeKeys.toSet
             val carryKeys = c.files.filterNot(purgeSet)
@@ -4979,7 +4925,7 @@ object VersionedTable {
                 val survivors = rewriteSource(spark, root, c, purgeKeys)
                   .filter(!coalesce(predicate, lit(false)))
                 val (d, r0) = stage(survivors, root, f, c.colMap,
-                  c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+                  partitionColsOf(c.schema), c.props)
                 val (s0, c0) = metaFor(spark, root, r0,
                   inheritedStatsCols(spark, root, c, Nil), c.colMap)
                 val (r, s2, r2) = dropEmpty(r0, s0, c0)
@@ -5028,7 +4974,7 @@ object VersionedTable {
       val (b, c) = head.getOrElse(noVersions(path))
       val purgeKeys = c.files.filter { fk =>
         val m = c.dvRows.getOrElse(fk, 0L)
-        m > 0L && c.rows.get(fk).exists(r => r > 0L && m.toDouble / r > minFraction)
+        m > 0L && m.toDouble / c.rows(fk) > minFraction
       }
       if (purgeKeys.isEmpty) Left(b)
       else {
@@ -5036,7 +4982,7 @@ object VersionedTable {
         val carryKeys = c.files.filterNot(purgeSet)
         val survivors = rewriteSource(spark, root, c, purgeKeys) // marks applied
         val (dir, rel0) = stage(survivors, root, f, c.colMap,
-          c.schema.map(partitionColsOf).getOrElse(Nil), c.props)
+          partitionColsOf(c.schema), c.props)
         val (st0, rw0) = metaFor(spark, root, rel0,
           inheritedStatsCols(spark, root, c, Nil), c.colMap)
         val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
@@ -5044,7 +4990,7 @@ object VersionedTable {
         val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv
         val v = b + 1L
         val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-          c.schema.map(_.json).getOrElse(survivors.drop(RowIdCol).schema.json),
+          c.schema.json,
           c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
           c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
           c.txn, dvKeep, dvRowsKeep, parent = Some(c),
@@ -5264,8 +5210,7 @@ object VersionedTable {
   private def partitionScope(spark: SparkSession, root: Path, c: Commit,
       where: Column, verb: String): Set[String] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference}
-    val s = c.schema.getOrElse(throw new IllegalArgumentException(
-      s"$root: partition-scoped $verb needs a schema-recorded table"))
+    val s = c.schema
     val partCols = partitionColsOf(s)
     val partFields = partCols.map(n => s(s.fieldIndex(n)))
     val resolved = DataSkipping.resolve(spark, s, where)
@@ -5330,7 +5275,7 @@ object VersionedTable {
         val carry = c.files.filterNot(smallSet)
         val totalSmall = sized.collect { case (r, n) if smallSet(r) => n }.sum
         val nOut = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
-        val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
+        val partCols = partitionColsOf(c.schema)
         val small = rewriteSource(spark, root, c, c.files.filter(smallSet))
         // partitioned tables pack PER DIRECTORY: a plain coalesce would give
         // every output task rows of many partitions, and the partitioned
@@ -5345,7 +5290,7 @@ object VersionedTable {
         val (dvK, dvR) = c.dvFor(carrySet) // packed files materialized their DVs
         val v = b + 1L
         val (body, ckptDir) = encodeCommit(spark, root, v, carry ++ rel,
-          c.schema.map(_.json).getOrElse(packed.drop(RowIdCol).schema.json),
+          c.schema.json,
           c.stats.filter(kv => carrySet(kv._1)) ++ st,
           c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
           parent = Some(c), colMap = c.colMap,
@@ -5389,7 +5334,7 @@ object VersionedTable {
       val scope = where.fold(c.files.toSet)(partitionScope(spark, root, c, _, "ZORDER"))
       if (where.nonEmpty && scope.isEmpty) Left(b) // predicate matches no partition
       else {
-        val partCols = c.schema.map(partitionColsOf).getOrElse(Nil)
+        val partCols = partitionColsOf(c.schema)
         val base = rewriteSource(spark, root, c, c.files.filter(scope))
         // partitioned tables z-order WITHIN partitions (Delta's semantics):
         // clustering spans the z columns inside each dir, never across dirs
@@ -5404,14 +5349,14 @@ object VersionedTable {
         val (body, ckptDir) =
           if (carryKeys.isEmpty)
             encodeCommit(spark, root, v, rel,
-              c.schema.map(_.json).getOrElse(placed.drop(RowIdCol).schema.json),
+              c.schema.json,
               st, rw, c.txn, parent = Some(c))
           else {
             val carrySet = carryKeys.toSet
             val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
             // carried files mean a `where` scope, and partitionScope
             // required a recorded schema
-            encodeCommit(spark, root, v, carryKeys ++ rel, c.schema.get.json,
+            encodeCommit(spark, root, v, carryKeys ++ rel, c.schema.json,
               c.stats.filter(kv => carrySet(kv._1)) ++ st,
               c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
               parent = Some(c), colMap = c.colMap, physDropped = c.physDropped,
@@ -5469,7 +5414,7 @@ object VersionedTable {
         cFrom.dvRows.getOrElse(fk, 0L) > 0L || cTo.dvRows.getOrElse(fk, 0L) > 0L)
     if (dvCandFiles.isEmpty) fileDiff
     else {
-      val s = cTo.schema.orElse(cFrom.schema).get // dv commits record a schema
+      val s = cTo.schema
       def marksOf(c: Commit): DataFrame =
         if (c.dv.isEmpty)
           spark.createDataFrame(
@@ -5495,8 +5440,7 @@ object VersionedTable {
       // bind with the TO version's physical mapping (common files hold the
       // same bytes; mapping differences across a DDL boundary follow the
       // destination version's view, like the file diff does)
-      val cb = if (cTo.schema.isDefined) cTo else cFrom
-      val markedRows = physReadKeyed(spark, root, cb, s, dvCandFiles,
+      val markedRows = physReadKeyed(spark, root, cTo, s, dvCandFiles,
         withKeys = true)
         .join(broadcast(markDelta), Seq(FileKeyCol, RowIdxCol))
         .select(col("_change_type") +:
@@ -5587,7 +5531,7 @@ object VersionedTable {
         cFrom.dvRows.getOrElse(fk, 0L) > 0L || cTo.dvRows.getOrElse(fk, 0L) > 0L)
     if (dvCandFiles.isEmpty) fileDiff
     else {
-      val s = cTo.schema.orElse(cFrom.schema).get
+      val s = cTo.schema
       def marksOf(c: Commit): DataFrame =
         if (c.dv.isEmpty)
           spark.createDataFrame(
@@ -5605,15 +5549,14 @@ object VersionedTable {
         .unionByName(fromMarks
           .join(toMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
           .withColumn("_change_type", lit("insert")))
-      val cb = if (cTo.schema.isDefined) cTo else cFrom
       val sPlus = StructType(s.fields :+
         StructField(RowIdCol, LongType, nullable = true))
-      val marked = physReadKeyed(spark, root, cb, sPlus, dvCandFiles,
+      val marked = physReadKeyed(spark, root, cTo, sPlus, dvCandFiles,
         withKeys = true)
         .join(broadcast(markDelta), Seq(FileKeyCol, RowIdxCol))
       import spark.implicits._
       // a carried file's base id is identical in both commits (immutable)
-      val lookup = dvCandFiles.map(fk => (fk, cb.baseRow.get(fk)))
+      val lookup = dvCandFiles.map(fk => (fk, cTo.baseRow.get(fk)))
         .toDF(FileKeyCol, "__graft_base")
       val withIds = marked.join(broadcast(lookup), Seq(FileKeyCol))
         .withColumn(RowIdCol,
@@ -5628,9 +5571,8 @@ object VersionedTable {
   }
 
   /** DESCRIBE HISTORY: one row per committed version — file count,
-    * manifest row count (null for pre-rowcount commits), and the streaming
-    * txn watermarks — assembled from manifests only (no data files
-    * opened). */
+    * manifest row count, and the streaming txn watermarks — assembled from
+    * manifests only (no data files opened). */
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val root = new Path(path)
@@ -5642,21 +5584,16 @@ object VersionedTable {
     // checkpoint up to CheckpointEvery times — O(V·chain) vs this O(V).
     var cur: Option[(Long, Commit)] = None
     versions(spark, path).map { v =>
-      val node = parseManifest(f, root, v)
+      val node = checkedManifest(f, root, v)
       val c = cur match {
         case Some((pv, pc)) if node.has("base") && node.get("base").asLong() == pv =>
-          applyDelta(pc, node)
+          applyDelta(root, v, pc, node)
         case _ if node.has("base") => readManifest(spark, f, root, v) // gap: chain walk
-        case _ => parseFull(spark, f, root, node)
+        case _ => parseFull(spark, root, v, node)
       }
       cur = Some((v, c))
       val dvDeleted = c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum
-      val rows =
-        if (c.files.isEmpty) Some(0L)
-        else if (c.files.forall(c.rows.contains))
-          Some(c.files.map(c.rows).sum - dvDeleted)
-        else None
-      (v, c.files.size, rows,
+      (v, c.files.size, Some(c.files.map(c.rows).sum - dvDeleted),
         c.txn.toSeq.sortBy(_._1).map { case (a, b) => s"$a=$b" }.mkString(","),
         dvDeleted)
     }.toDF("version", "num_files", "num_rows", "txn", "num_dv_deleted")
@@ -5747,11 +5684,10 @@ object VersionedTable {
       System.currentTimeMillis() - orphanRetentionMs)
     val rootOrphans = f.listStatus(root).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      val versioned = n.startsWith("d-") || n.startsWith("v=") // incl. legacy layout
       val staleStage = !st.isDirectory &&
         n.startsWith(".commit-") && n.endsWith(".tmp")
       if (st.getModificationTime < cutoff &&
-        ((st.isDirectory && versioned && !liveDirs.contains(n)) || staleStage))
+        ((st.isDirectory && n.startsWith("d-") && !liveDirs.contains(n)) || staleStage))
         Some(st.getPath -> st.isDirectory)
       else None
     }
@@ -5815,14 +5751,10 @@ object VersionedTable {
       if (chainAnchor(f, root, mk) < mk) {
         val c = readManifest(spark, f, root, mk)
         // SAME logical commit re-encoded: preserve the original commit ts
-        // (legacy manifests: preserve the file's mtime as the ts) so
-        // TIMESTAMP AS OF resolves identically across the vacuum
-        val origTs = if (c.ts > 0L) c.ts
-          else f.getFileStatus(manifest(root, mk)).getModificationTime
-        val (body, _) = encodeCommit(spark, root, mk, c.files,
-          c.schema.map(_.json).getOrElse("null"),
+        // so TIMESTAMP AS OF resolves identically across the vacuum
+        val (body, _) = encodeCommit(spark, root, mk, c.files, c.schema.json,
           c.stats, c.rows, c.txn, c.dv, c.dvRows, // no parent → full form
-          colMap = c.colMap, physDropped = c.physDropped, ts = origTs,
+          colMap = c.colMap, physDropped = c.physDropped, ts = c.ts,
           props = Some(c.props), // same logical commit: keep its props
           inheritWf = c.wf,
           // the re-encoded commit IS its own anchor source: a ckpt-chained

@@ -436,9 +436,6 @@ case class GraftDescribeDetailCommand(cat: String,
         e._1 == VersionedTable.NumBucketsKey ||
         e._1 == MaterializedView.SourceKey ||
         e._1 == MaterializedView.ViewsKey ||
-        e._1 == MaterializedView.JoinDimKey ||
-        e._1 == MaterializedView.JoinKeysKey ||
-        e._1 == MaterializedView.JoinDimVersionKey ||
         e._1 == MaterializedView.JoinsKey ||
         e._1 == MaterializedView.DistinctColsKey ||
         e._1.startsWith(graft.sources.ForeignKeys.Prefix) ||
@@ -485,12 +482,8 @@ case class GraftDescribeDetailCommand(cat: String,
         // views its pin copy matches the view's
         val inStep = (wm, hWm) match {
           case (Some(vw), Some(hw)) =>
-            hw >= vw && {
-              val hProps = VersionedTable.propertiesOf(session, hp)
-              Seq(MaterializedView.JoinDimVersionKey,
-                  MaterializedView.JoinsKey)
-                .forall(k => props.get(k) == hProps.get(k))
-            }
+            hw >= vw && props.get(MaterializedView.JoinsKey) ==
+              VersionedTable.propertiesOf(session, hp).get(MaterializedView.JoinsKey)
           case _ => false
         }
         s"$hp@${hWm.map(_.toString).getOrElse("?")}" +
@@ -649,11 +642,6 @@ case class GraftApplyChangesCommand(cat: String, path: String,
   }
 }
 
-/** `SHOW PARTITIONS` from the manifest alone: one row per live partition
-  * value with its file count and exact row count (DV-subtracted; null
-  * when a legacy file predates row-count recording). No directory
-  * listing, no data files opened — partition values come from the file
-  * keys the manifest already holds. */
 /** `SHOW MATERIALIZED VIEWS ON src` — one row per registered view with
   * its maintenance facts: group/aggregate definition, predicate, refresh
   * watermark vs the source head, and whether the rewrite would fire RIGHT
@@ -697,6 +685,10 @@ case class GraftShowMaterializedViewsCommand(cat: String,
   }
 }
 
+/** `SHOW PARTITIONS` from the manifest alone: one row per live partition
+  * value with its file count and exact row count (DV-subtracted). No
+  * directory listing, no data files opened — partition values come from
+  * the file keys the manifest already holds. */
 case class GraftShowPartitionsCommand(cat: String,
     path: String) extends LeafRunnableCommand {
 
@@ -708,7 +700,7 @@ case class GraftShowPartitionsCommand(cat: String,
   override def run(session: SparkSession): Seq[Row] = {
     val p = GraftSqlStatements.graftPath(session, cat, path, "SHOW PARTITIONS")
     VersionedTable.partitionsOf(session, p).map { case (part, nf, nr) =>
-      Row(part, nf, nr.map(java.lang.Long.valueOf).orNull)
+      Row(part, nf, nr)
     }
   }
 }

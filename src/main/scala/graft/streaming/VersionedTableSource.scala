@@ -112,8 +112,7 @@ class VersionedTableSourceProvider extends StreamSourceProvider
           partitionCols = parts)
     }
     // the returned relation is unused by SaveIntoDataSourceCommand; keep it
-    // LAZY (TableScan over the public read API) so a save() onto a legacy
-    // schema-less table doesn't throw AFTER its commit already landed
+    // LAZY (TableScan over the public read API) so a save() pays no read
     val outerCtx = sqlContext
     new BaseRelation with org.apache.spark.sql.sources.TableScan {
       override def sqlContext: SQLContext = outerCtx
@@ -307,15 +306,15 @@ private[streaming] class VersionedTableSource(
     * re-resolve the same chains for files and again for the mapping. */
   private val metaCache =
     new java.util.LinkedHashMap[Long, (Seq[String], Map[String, String], Seq[String],
-        Option[StructType])](
+        StructType)](
       8, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[Long, (Seq[String], Map[String, String], Seq[String],
-            Option[StructType])])
+            StructType)])
           : Boolean = size > 4
     }
   private def metaAt(v: Long): (Seq[String], Map[String, String], Seq[String],
-      Option[StructType]) =
+      StructType) =
     Option(metaCache.get(v)).getOrElse {
       val m = VersionedTable.filesAndMappingOf(spark, path, v)
       metaCache.put(v, m)
@@ -340,9 +339,7 @@ private[streaming] class VersionedTableSource(
     VersionedTable.latestVersion(spark, path)
       .map { v =>
         val m = metaAt(v)
-        (v, m._2, m._3,
-          m._4.map(_.fields.map(f => f.name -> f.dataType).toMap)
-            .getOrElse(Map.empty[String, org.apache.spark.sql.types.DataType]))
+        (v, m._2, m._3, m._4.fields.map(f => f.name -> f.dataType).toMap)
       }
       .getOrElse((-1L, Map.empty[String, String], Seq.empty[String],
         Map.empty[String, org.apache.spark.sql.types.DataType]))
@@ -430,10 +427,10 @@ private[streaming] class VersionedTableSource(
     // (Historic widenings inside the backlog are fine: the pinned WIDE
     // schema reads pre-widen narrow files via the native widening path.)
     if (toV > pinnedVersion) {
-      val widened = toSchema.map(_.fields.collect {
+      val widened = toSchema.fields.collect {
         case f if pinnedTypes.get(f.name).exists(_ != f.dataType) =>
           s"${f.name}: ${pinnedTypes(f.name).simpleString}→${f.dataType.simpleString}"
-      }.toSeq).getOrElse(Nil)
+      }.toSeq
       if (widened.nonEmpty)
         throw new IllegalStateException(
           s"$path: column type(s) changed since this stream started " +

@@ -38,7 +38,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *              matching rows (conservative; unknown shapes keep all)
   * @param liveRows exact live row count of this snapshot from the commit
   *                 manifest (per-file rows minus deletion-vector marks),
-  *                 None when any file predates row-count recording. Powers
+  *                 None when the index is not a whole snapshot (see
+  *                 [[GraftFileIndex.restrictedTo]]). Powers
   *                 the metadata-only COUNT(*) rewrite (GraftMetadataCount)
   *                 — a plain .count() then answers without touching data.
   * @param partSchema the table's partition dimension (empty when
@@ -101,8 +102,7 @@ private[graft] class GraftFileIndex(
     /** EXACT live rows per file (manifest rows minus deletion-vector
       * marks) — what licenses the partition-census rewrite
       * ([[graft.sql.GraftMetadataCount]]'s grouped case) to answer
-      * GROUP-BY-partition-column aggregates without opening a data file.
-      * Empty when any live file predates row recording. */
+      * GROUP-BY-partition-column aggregates without opening a data file. */
     val fileRows: Map[String, Long] = Map.empty,
     /** EXACT per-(file, column) min/max bounds from manifest stats, in the
       * stats domain — `None` when the file cannot answer exactly (DV

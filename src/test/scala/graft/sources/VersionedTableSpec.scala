@@ -1880,7 +1880,10 @@ class VersionedTableSpec extends SparkSpec {
   private def sortedRows(path: String): Seq[String] =
     VersionedTable.read(spark, path).collect().map(_.toString).toSeq.sorted
 
-  test("lost race: every write verb retries through the one commit loop — one version, same result, nothing staged left") {
+  /** Every write verb as (verb, setup, the verb's one commit), each
+    * committing exactly one new version over its setup — the table the
+    * lost-race and manifest-form specs drive. */
+  private def writeVerbs(): Seq[(String, String => Unit, String => Long)] = {
     import org.apache.spark.sql.types.{DoubleType, StructField}
     val base = spark.range(0, 40, 1, 4).select(col("id"),
       (col("id") % 4).as("g"), concat(lit("v"), col("id")).as("v"))
@@ -1888,8 +1891,7 @@ class VersionedTableSpec extends SparkSpec {
     val src = java.nio.file.Files.createTempDirectory("copysrc").toString
     base.filter(col("id") < 8).withColumn("id", col("id") + 1000)
       .write.mode("overwrite").parquet(src)
-    // (verb, setup, the verb's one commit)
-    val verbs: Seq[(String, String => Unit, String => Long)] = Seq(
+    Seq(
       ("write", table, p => VersionedTable.write(base.filter(col("id") < 20), p, Seq("id"))),
       ("append", table, p => VersionedTable.append(
         base.withColumn("id", col("id") + 100), p)),
@@ -1923,17 +1925,22 @@ class VersionedTableSpec extends SparkSpec {
       ("zOrderBy scoped", p => VersionedTable.write(base, p, Seq("id"),
         partitionBy = Seq("g")),
         p => VersionedTable.zOrderBy(spark, p, Seq("id"), where = Some(col("g") === 1L))))
+  }
+
+  /** Pad `p` with property commits until its next commit is a checkpoint
+    * version. */
+  private def padToCheckpoint(p: String): Unit =
+    while (VersionedTable.latestVersion(spark, p).get < VersionedTable.CheckpointEvery - 1)
+      VersionedTable.setProperties(spark, p,
+        Map("pad" -> VersionedTable.latestVersion(spark, p).get.toString))
+
+  test("lost race: every write verb retries through the one commit loop — one version, same result, nothing staged left") {
     val savedInline = VersionedTable.CkptInlineMaxFiles
-    try verbs.foreach { case (name, setup, verb) =>
+    try writeVerbs().foreach { case (name, setup, verb) =>
       val Seq(raced, calm) = Seq("raced", "calm").map(t =>
         java.nio.file.Files.createTempDirectory(s"race-$t").toString + "/t")
-      Seq(raced, calm).foreach { p =>
-        setup(p)
-        // land the verb's commit on a checkpoint version
-        while (VersionedTable.latestVersion(spark, p).get < VersionedTable.CheckpointEvery - 1)
-          VersionedTable.setProperties(spark, p,
-            Map("pad" -> VersionedTable.latestVersion(spark, p).get.toString))
-      }
+      // land the verb's commit on a checkpoint version
+      Seq(raced, calm).foreach { p => setup(p); padToCheckpoint(p) }
       // every checkpoint rides a parquet dir, so a lost claim has one to drop
       VersionedTable.CkptInlineMaxFiles = 0
       val before = VersionedTable.latestVersion(spark, raced).get
@@ -1972,5 +1979,96 @@ class VersionedTableSpec extends SparkSpec {
       // a verb whose staged rewrite goes stale drops it on every lost claim
       if (what == "delete") assert(unreferenced(path).isEmpty, unreferenced(path))
     }
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def manifestFile(path: String, v: Long): java.nio.file.Path =
+    java.nio.file.Paths.get(path, "_graft_log", f"$v%08d.json")
+
+  /** Assert manifest `v` of `path` is in the form the writers produce — a
+    * file list (`files` inline, a `ckpt` parquet, or a `base` delta's
+    * `files_add`), a schema, a commit time, and a row count for every file
+    * it lists — reading the bytes directly, not through the reader that
+    * enforces the same. Returns the form. */
+  private def assertWrittenForm(path: String, v: Long, what: String): String = {
+    import scala.jdk.CollectionConverters._
+    val node = json.readTree(java.nio.file.Files.readAllBytes(manifestFile(path, v)))
+    val at = s"$what: version $v"
+    assert(node.hasNonNull("schema") && node.get("schema").isObject, s"$at has no schema")
+    assert(node.has("ts") && node.get("ts").asLong() > 0L, s"$at has no ts")
+    def listed(field: String): Seq[String] =
+      node.get(field).elements().asScala.map(_.asText()).toSeq
+    def counted(files: Seq[String], rowsField: String): Unit =
+      files.foreach(fk => assert(node.get(rowsField).has(fk), s"$at: no row count for $fk"))
+    if (node.has("files")) { counted(listed("files"), "rows"); "files" }
+    else if (node.has("ckpt")) {
+      val ckpt = spark.read.parquet(
+        java.nio.file.Paths.get(path, node.get("ckpt").asText()).toString)
+      val rows = ckpt.select(col("path"), col("rows")).collect()
+      assert(rows.map(_.getString(0)).toSet ==
+        VersionedTable.filesOf(spark, path, v).toSet, s"$at: checkpoint file list")
+      rows.foreach(r => assert(!r.isNullAt(1), s"$at: no row count for ${r.getString(0)}"))
+      "ckpt"
+    } else {
+      assert(node.has("base"), s"$at lists no files")
+      counted(listed("files_add"), "rows_add")
+      "delta"
+    }
+  }
+
+  test("manifest form: every write verb commits files or ckpt with schema, ts and per-file row counts") {
+    val savedInline = VersionedTable.CkptInlineMaxFiles
+    try writeVerbs().foreach { case (name, setup, verb) =>
+      // as written, then landed on an inline and on a parquet checkpoint
+      Seq(("natural", None), ("inline", Some(savedInline)), ("parquet", Some(0)))
+        .foreach { case (kind, ckptInline) =>
+          val p = java.nio.file.Files.createTempDirectory(s"form-$kind").toString + "/t"
+          setup(p)
+          ckptInline.foreach { n => padToCheckpoint(p); VersionedTable.CkptInlineMaxFiles = n }
+          val v = verb(p)
+          VersionedTable.CkptInlineMaxFiles = savedInline
+          val forms = VersionedTable.versions(spark, p)
+            .map(u => u -> assertWrittenForm(p, u, s"$name/$kind")).toMap
+          val want = kind match {
+            case "natural" => Set("files", "delta")
+            case "inline" => Set("files")
+            case _ => Set("ckpt")
+          }
+          assert(want(forms(v)), s"$name/$kind: head form ${forms(v)}")
+        }
+    } finally VersionedTable.CkptInlineMaxFiles = savedInline
+  }
+
+  test("manifest form: a dir-form manifest, or one without schema, ts or a row count, is refused naming path and version") {
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val path = java.nio.file.Files.createTempDirectory("form").toString + "/t"
+    VersionedTable.write(Seq((1L, "a")).toDF("id", "s"), path)  // v1: full
+    VersionedTable.append(Seq((2L, "b")).toDF("id", "s"), path) // v2: delta on v1
+    val v1Dir = VersionedTable.filesOf(spark, path, 1L).head.takeWhile(_ != '/')
+    def refusedAfter(v: Long, edit: ObjectNode => Unit, why: String): Unit = {
+      val mf = manifestFile(path, v)
+      val orig = java.nio.file.Files.readAllBytes(mf)
+      val node = json.readTree(orig).asInstanceOf[ObjectNode]
+      edit(node)
+      java.nio.file.Files.write(mf, json.writeValueAsBytes(node))
+      try {
+        val e = intercept[UnsupportedOperationException] {
+          VersionedTable.read(spark, path).collect() }
+        assert(e.getMessage.contains(s"$path version $v") &&
+          e.getMessage.contains(why), e.getMessage)
+      } finally java.nio.file.Files.write(mf, orig)
+    }
+    // the single-dir manifest of early releases
+    refusedAfter(1L, { n =>
+      Seq("files", "rows", "stats").foreach(n.remove)
+      n.put("dir", v1Dir)
+    }, "lists no files")
+    refusedAfter(2L, n => n.remove("schema"), "records no schema")
+    refusedAfter(2L, n => n.remove("ts"), "records no commit time")
+    refusedAfter(1L, n => n.set[ObjectNode]("rows", json.createObjectNode()),
+      "records no row count")
+    // the untouched table reads again
+    assert(VersionedTable.read(spark, path).count() == 2)
   }
 }

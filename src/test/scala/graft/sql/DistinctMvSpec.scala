@@ -292,8 +292,8 @@ class DistinctMvSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == want && got == Map("x" -> (3L, 2L), "y" -> (3L, 3L)))
     // the helper carries the view's dim-pin copy from create
-    assert(VersionedTable.propertiesOf(spark, hp)
-      .contains(MaterializedView.JoinDimVersionKey))
+    assert(MaterializedView.joinsIn(VersionedTable.propertiesOf(spark, hp))
+      .nonEmpty)
     // FACT pass: a dup user (ndv still), a new user, a last-occurrence
     // delete — the joined change feed folds the helper under the watermark
     VersionedTable.append(Seq(("g0", 2L, 17L), ("g2", 7L, 18L))
@@ -317,9 +317,8 @@ class DistinctMvSpec extends SparkSpec {
     assert(got == want && got("z") == (1L, 1L))
     // the helper's pin advanced with the folds: it matches the view's
     val vp = VersionedTable.propertiesOf(spark, mv)
-    assert(VersionedTable.propertiesOf(spark, hp)
-      .get(MaterializedView.JoinDimVersionKey) ==
-      vp.get(MaterializedView.JoinDimVersionKey),
+    assert(MaterializedView.joinsIn(VersionedTable.propertiesOf(spark, hp)) ==
+      MaterializedView.joinsIn(vp),
       "helper pin must track the view pin")
     // the star rewrite answers COUNT(DISTINCT): exact grouping from the
     // view's ndv column, the GLOBAL rollup from the helper — fact and dim
@@ -350,10 +349,8 @@ class DistinctMvSpec extends SparkSpec {
     VersionedTable.append(Seq(("g1", 3L, 19L)).toDF("g", "u", "v"), src)
     MaterializedView.fullRefresh(spark, mv)
     assert(got == want)
-    assert(VersionedTable.propertiesOf(spark, hp)
-      .get(MaterializedView.JoinDimVersionKey) ==
-      VersionedTable.propertiesOf(spark, mv)
-        .get(MaterializedView.JoinDimVersionKey))
+    assert(MaterializedView.joinsIn(VersionedTable.propertiesOf(spark, hp)) ==
+      MaterializedView.joinsIn(VersionedTable.propertiesOf(spark, mv)))
   }
 
   test("refusals and ownership: joins, redefinition, helper refresh, DROP") {

@@ -328,11 +328,11 @@ class MvRewriteSpec extends SparkSpec {
       src, statsCols = Seq("id"))
     val e1 = intercept[IllegalArgumentException] {
       MaterializedView.create(spark, src, base + "/mv1", Seq("g"), Seq("v"),
-        Some("id > unix_timestamp(current_date())")) }
+        where = Some("id > unix_timestamp(current_date())")) }
     assert(e1.getMessage.contains("reads the clock"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
       MaterializedView.create(spark, src, base + "/mv2", Seq("g"), Seq("v"),
-        Some("rand() > 0.5")) }
+        where = Some("rand() > 0.5")) }
     assert(e2.getMessage.contains("non-deterministic"), e2.getMessage)
     // neither refusal left a half-created view behind
     assert(VersionedTable.latestVersion(spark, base + "/mv1").isEmpty)
@@ -348,7 +348,7 @@ class MvRewriteSpec extends SparkSpec {
     MaterializedView.create(spark, src, mv, Seq("g"), Seq("v")) // resume ok
     val e = intercept[IllegalArgumentException] {
       MaterializedView.create(spark, src, mv, Seq("g"), Seq("v"),
-        Some("v > 5")) }
+        where = Some("v > 5")) }
     assert(e.getMessage.contains("different"), e.getMessage)
     // a COMPLETED plain view (join props absent because it HAS no joins)
     // refuses a re-create WITH joins — absent join props only mean
