@@ -54,24 +54,44 @@ object SkippingQueries {
     * when direct children are added/removed — an in-place rewrite of a
     * nested part file would serve a stale fixture. So the fingerprint is
     * the RECURSIVE listing: (relative name, length, mtime) of every
-    * regular file under the source, sorted for determinism. */
+    * regular file under the source, sorted for determinism. The key also
+    * folds in [[buildDigest]], so a fixture written by another build of
+    * the program is never served and no tag needs a hand bump. */
   private[graft] def cachedFixturePath(dir: String, tag: String,
       srcName: String): String = {
     val src = new java.io.File(s"$dir/$srcName")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      // listFiles is null for unreadable/concurrently-removed dirs
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .toSeq.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
     val files =
-      if (src.exists()) walk(src)
+      if (src.exists()) filesUnder(src)
         .map(f => s"${f.getPath.stripPrefix(src.getPath)}|${f.length}|${f.lastModified}")
       else Seq("absent")
-    val ident = s"$dir|${files.mkString(";")}"
+    val ident = s"$dir|${files.mkString(";")}|$buildDigest"
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_$key"
   }
+
+  /** Regular files under `f` (itself when a file), sorted by name. */
+  private def filesUnder(f: java.io.File): Seq[java.io.File] =
+    // listFiles is null for unreadable/concurrently-removed dirs
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
+      .toSeq.sortBy(_.getName).flatMap(filesUnder)
+    else Seq(f)
+
+  /** MD5 of the compiled program this JVM runs — every class file (name
+    * and bytes) of the classes dir or jar this object was loaded from —
+    * computed once per JVM. Without a code source it is a random token:
+    * fixtures then live for one JVM, never longer. */
+  private lazy val buildDigest: String =
+    Option(getClass.getProtectionDomain.getCodeSource).map { cs =>
+      val root = new java.io.File(cs.getLocation.toURI)
+      val md = java.security.MessageDigest.getInstance("MD5")
+      filesUnder(root).filter(f => !root.isDirectory || f.getName.endsWith(".class"))
+        .foreach { f =>
+          md.update(f.getPath.stripPrefix(root.getPath).getBytes("UTF-8"))
+          md.update(java.nio.file.Files.readAllBytes(f.toPath))
+        }
+      md.digest().map("%02x".format(_)).mkString
+    }.getOrElse(java.util.UUID.randomUUID().toString)
 
   /** Deterministic per-dataset location of the clustered versioned copy. */
   def tablePath(dir: String): String = cachedTablePath(dir, "skipscan_v1")
@@ -268,7 +288,6 @@ object SkippingQueries {
       .getOrElse(throw new IllegalStateException(
         s"$path: user_id stats expected on the clustered copy"))
     val n = VersionedTable.countRows(spark, path)
-      .getOrElse(VersionedTable.read(spark, path).count())
     Seq((mn.asInstanceOf[BigDecimal].toLong, mx.asInstanceOf[BigDecimal].toLong, n))
       .toDF("min_user", "max_user", "n_rows")
   }

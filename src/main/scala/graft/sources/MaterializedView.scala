@@ -628,6 +628,10 @@ object MaterializedView {
     * reference. MIN/MAX fold on inserts; groups whose stored extremum was
     * deleted (without an equal re-insert) recompute from a key-filtered
     * source scan. No-op (current version) when the source hasn't moved.
+    * The change feed is evaluated ONCE per refresh: its column-pruned,
+    * keyed rows are cached for the merge, and every consumer (the delta
+    * aggregate, each COUNT(DISTINCT) helper's delta, the NULL-group check,
+    * the MERGE's probe and cache) reads that copy.
     * Crash-safe: a re-run of an applied (App, version) is the upsert
     * replay no-op.
     *
@@ -821,6 +825,27 @@ object MaterializedView {
       txn: Option[(String, Long)], txnExpected: (String, Long),
       propsAdd: Map[String, String] = Map.empty,
       propsExpected: Map[String, String] = Map.empty): Long = {
+    // the ONE evaluation of the change feed this refresh makes: the delta
+    // aggregate, each distinct helper's delta, the NULL-group refusal and
+    // the MERGE's own probe and cache all read this column-pruned copy
+    val valueCols = (colsOf(props, SumColsKey) ++ colsOf(props, MinMaxColsKey) ++
+      distinctsIn(props).flatten).distinct
+    val keyedChg = keyed(
+      applyWhere(chg, props.get(WhereKey).filter(_.nonEmpty), what),
+      colsOf(props, GroupByKey), groupExprsIn(props),
+      valueCols :+ "_change_type").cache()
+    try mergeKeyed(spark, mvPath, props, keyedChg, repairSrc, what, txn,
+      txnExpected, propsAdd, propsExpected)
+    finally keyedChg.unpersist()
+  }
+
+  /** [[mergeDelta]]'s body over the cached, keyed change feed. */
+  private def mergeKeyed(spark: SparkSession, mvPath: String,
+      props: Map[String, String], keyedChg: DataFrame,
+      repairSrc: () => DataFrame, what: String,
+      txn: Option[(String, Long)], txnExpected: (String, Long),
+      propsAdd: Map[String, String],
+      propsExpected: Map[String, String]): Long = {
     val groupBy = colsOf(props, GroupByKey)
     val sumCols = colsOf(props, SumColsKey)
     val minMaxCols = colsOf(props, MinMaxColsKey)
@@ -832,10 +857,6 @@ object MaterializedView {
     def ins(c: String): Column = when(isIns, col(c)) // else null: min/max skip
     def del(c: String): Column = when(!isIns, col(c))
     val exprOf = groupExprsIn(props)
-    val valueCols = (sumCols ++ minMaxCols).distinct
-    val keyedChg = keyed(applyWhere(chg, where, what),
-      groupBy, exprOf,
-      (valueCols ++ distincts.flatten).distinct :+ "_change_type")
     val delta0 = keyedChg
       .groupBy(groupBy.map(col): _*)
       .agg(sum(sign).as("d_count"),

@@ -1196,13 +1196,17 @@ object VersionedTable {
   /** Drop ZERO-ROW staged files from a commit's file list: a copy-on-write
     * rewrite whose survivors are empty (e.g. DELETE matching a whole file)
     * must shrink the table, not add an unprunable empty file that every
-    * later scan and skipping pass pays for. The physical file stays on
-    * disk unreferenced; vacuum's orphan sweep reclaims it. */
-  private def dropEmpty(rel: Seq[String], st: DataSkipping.FileStats,
-      rw: Map[String, Long])
+    * later scan and skipping pass pays for. The dropped files are deleted
+    * here — the whole staged `dir` when none of its files is live — so
+    * nothing of the rewrite is left on disk unreferenced. */
+  private def dropEmpty(f: FileSystem, root: Path, dir: Path, rel: Seq[String],
+      st: DataSkipping.FileStats, rw: Map[String, Long])
       : (Seq[String], DataSkipping.FileStats, Map[String, Long]) = {
-    val live = rel.filter(r => rw.getOrElse(r, 1L) > 0L).toSet
-    (rel.filter(live), st.filter(kv => live(kv._1)), rw.filter(kv => live(kv._1)))
+    val (live, empty) = rel.partition(r => rw(r) > 0L)
+    if (live.isEmpty) f.delete(dir, true)
+    else empty.foreach(r => f.delete(new Path(root, r), false))
+    val liveSet = live.toSet
+    (live, st.filter(kv => liveSet(kv._1)), rw.filter(kv => liveSet(kv._1)))
   }
 
   /** The stats columns a maintenance commit should keep collecting when the
@@ -2881,11 +2885,11 @@ object VersionedTable {
     * present. At any scale this is the most common query, and it costs one
     * small JSON read. */
   def countRows(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): Option[Long] = {
+      asOf: Option[Long] = None): Long = {
     val (_, _, c) = commitFor(spark, path, asOf)
     // deletion-vector generations mark disjoint row sets (each is computed
     // over the DV-applied view), so the subtraction is exact
-    Some(c.files.map(c.rows).sum - c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum)
+    c.files.map(c.rows).sum - c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum
   }
 
   /** SHOW PARTITIONS from the manifest alone: one row per live partition
@@ -3594,10 +3598,6 @@ object VersionedTable {
     val spark = updates.sparkSession
     val root = new Path(path)
     val f = fs(spark, root)
-    // cache: the merge reads `updates` several times (key bounds, IN-list
-    // probe, anti-join key set, union right side) — at 100 TB the updates
-    // are the SMALL side; recomputing their lineage per consumer is the
-    // only part of the merge that wouldn't scale with the update
     // generated columns: FILL absent ones on the update side up front (so
     // the schema-match/evolution contract sees full rows); supplied values
     // are enforced again with fresh props at the staging site inside the
@@ -3616,20 +3616,28 @@ object VersionedTable {
         applyGenerated(updates, props, path)
       case None => updates
     }
-    val deduped = (latestBy match {
+    // cache: the merge reads `updates` several times (duplicate-key probe,
+    // key bounds, IN-list probe, anti-join key set, union right side) — at
+    // 100 TB the updates are the SMALL side; recomputing their lineage per
+    // consumer is the only part of the merge that wouldn't scale with the
+    // update
+    val deduped = latestBy match {
       case Some(ord) =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ord).desc)
         updatesG.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
+          .filter(col("__rn") === 1).drop("__rn").cache()
       case None =>
-        val dups = updatesG.groupBy(keys.map(col): _*)
+        // cached BEFORE the probe, whose scan fills it
+        val u = updatesG.cache()
+        val dups = u.groupBy(keys.map(col): _*)
           .count().filter(col("count") > 1).limit(1).count()
+        if (dups != 0) u.unpersist()
         require(dups == 0,
           s"updates contain duplicate merge keys ${keys.mkString(",")}; " +
             "pass latestBy to pick a survivor")
-        updatesG
-    }).cache()
+        u
+    }
     // tombstones' keys participate in the anti-join (they remove matched
     // rows) but only non-tombstone rows are (re-)inserted; bookkeeping
     // columns leave AFTER the dedup/tombstone/guard decisions used them
@@ -3800,7 +3808,7 @@ object VersionedTable {
                 catch { case e: Throwable => translateViolation(e, path) }
               val (st0, rw0) = metaFor(spark, root, rel0,
                 inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-              val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
+              val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
               val carrySet = carryKeys.toSet
               val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
               (carryKeys ++ rel,
@@ -3907,7 +3915,7 @@ object VersionedTable {
           partitionColsOf(c.schema), c.props)
         val (st0, rw0) = metaFor(spark, root, rel0,
           inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-        val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
+        val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
         val carrySet = carryKeys.toSet
         val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
         val v = b + 1L
@@ -4928,7 +4936,7 @@ object VersionedTable {
                   partitionColsOf(c.schema), c.props)
                 val (s0, c0) = metaFor(spark, root, r0,
                   inheritedStatsCols(spark, root, c, Nil), c.colMap)
-                val (r, s2, r2) = dropEmpty(r0, s0, c0)
+                val (r, s2, r2) = dropEmpty(f, root, d, r0, s0, c0)
                 (Seq(d), r, s2, r2)
               }
             val dvRowsKeep = mergedDvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
@@ -4985,7 +4993,7 @@ object VersionedTable {
           partitionColsOf(c.schema), c.props)
         val (st0, rw0) = metaFor(spark, root, rel0,
           inheritedStatsCols(spark, root, c, Nil), c.colMap)
-        val (rel, st, rw) = dropEmpty(rel0, st0, rw0)
+        val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
         val dvRowsKeep = c.dvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
         val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv
         val v = b + 1L
@@ -5367,13 +5375,24 @@ object VersionedTable {
     }
   }
 
+  /** The signed-multiplicity column of [[changes]]' aggregation. */
+  private val ChangeSignCol = "__graft_cdf_net"
+
   /** Row-level change feed between two committed versions: multiset diff
     * tagged insert/delete (an unchanged row appears in neither).
+    *
+    * ONE SIGNED AGGREGATION: the rows of the added files carry +1, the
+    * rows of the removed files −1; one group-by over every aligned column
+    * sums the signs, groups netting to zero leave, and each survivor is
+    * emitted |net| times — `insert` for a positive net, `delete` for a
+    * negative one. That is the multiset `exceptAll` computes in each
+    * direction (same null-safe, NaN/−0.0-normalized grouping), in one
+    * exchange and one scan of each side instead of two of each.
     *
     * FILE-GRANULAR: a file carried by reference from `fromV` into `toV`
     * holds, by construction, identical live rows in both versions (same
     * bytes, same deletion-vector marks) — its rows cancel out of the
-    * multiset diff without being read. So the exceptAll pair runs ONLY
+    * multiset diff without being read. So the aggregation runs ONLY
     * over files removed by one side or added by the other: a one-tile
     * MERGE at 100 TB diffs two files, not the table. Files common to both
     * versions can differ only by NEW deletion-vector marks; those rows are
@@ -5397,10 +5416,14 @@ object VersionedTable {
     def aligned(df: DataFrame) = df.select(allCols.map { c =>
       if (df.columns.contains(c)) col(c) else lit(null).cast(types(c)).as(c)
     }: _*)
-    val b = aligned(before)
-    val a = aligned(after)
-    val fileDiff = a.exceptAll(b).withColumn("_change_type", lit("insert"))
-      .unionByName(b.exceptAll(a).withColumn("_change_type", lit("delete")))
+    val net = aligned(after).withColumn(ChangeSignCol, lit(1L))
+      .unionByName(aligned(before).withColumn(ChangeSignCol, lit(-1L)))
+      .groupBy(allCols.map(col): _*)
+      .agg(sum(col(ChangeSignCol)).as(ChangeSignCol))
+      .filter(col(ChangeSignCol) =!= 0L)
+    val fileDiff = net.select(allCols.map(col) :+ explode(array_repeat(
+      when(col(ChangeSignCol) > 0L, lit("insert")).otherwise(lit("delete")),
+      abs(col(ChangeSignCol)).cast("int"))).as("_change_type"): _*)
     // Carried files whose deletion-vector marks can DIFFER — in EITHER
     // direction: a dv-delete grows a file's mark set, but RESTORE across a
     // dv-delete shrinks it (un-deleting rows = CDF inserts) or swaps it at
@@ -5593,7 +5616,7 @@ object VersionedTable {
       }
       cur = Some((v, c))
       val dvDeleted = c.files.map(fk => c.dvRows.getOrElse(fk, 0L)).sum
-      (v, c.files.size, Some(c.files.map(c.rows).sum - dvDeleted),
+      (v, c.files.size, c.files.map(c.rows).sum - dvDeleted,
         c.txn.toSeq.sortBy(_._1).map { case (a, b) => s"$a=$b" }.mkString(","),
         dvDeleted)
     }.toDF("version", "num_files", "num_rows", "txn", "num_dv_deleted")

@@ -303,7 +303,7 @@ case class GraftEagerAggregation(spark: SparkSession)
             .filter(d => d.factPin == snapV && d.fkCols.size == 1)
             .flatMap { d =>
               scala.util.Try(graft.sources.VersionedTable.countRows(
-                spark, d.dimPath, Some(d.dimPin))).toOption.flatten
+                spark, d.dimPath, Some(d.dimPin))).toOption
                 .map(n => d.fkCols.head -> (n + 1L))
             }.toMap
         case None => Map.empty
@@ -339,7 +339,7 @@ case class GraftEagerAggregation(spark: SparkSession)
           val plain = props.get(MV.WhereKey).forall(_.isEmpty) &&
             MV.joinsIn(props).isEmpty
           val fresh = VT.lastTxn(spark, mv, MV.App).contains(snapV)
-          if (covers && plain && fresh) VT.countRows(spark, mv) else None
+          if (covers && plain && fresh) Some(VT.countRows(spark, mv)) else None
         }.toOption.flatten
       }.nextOption()
     }

@@ -376,7 +376,7 @@ case class GraftDescribeDetailCommand(cat: String,
     AttributeReference("format", StringType, nullable = false)(),
     AttributeReference("version", LongType, nullable = false)(),
     AttributeReference("num_files", IntegerType, nullable = false)(),
-    AttributeReference("num_rows", LongType, nullable = true)(),
+    AttributeReference("num_rows", LongType, nullable = false)(),
     AttributeReference("partition_columns", StringType, nullable = false)(),
     AttributeReference("properties", StringType, nullable = false)(),
     AttributeReference("check_constraints", StringType, nullable = false)(),
@@ -428,7 +428,7 @@ case class GraftDescribeDetailCommand(cat: String,
     val (wm, fresh) = mvFacts(session, p, props)
     Seq(Row(p, "graft-table", v,
       VersionedTable.filesOf(session, p, v).size,
-      VersionedTable.countRows(session, p).map(java.lang.Long.valueOf).orNull,
+      VersionedTable.countRows(session, p),
       partCols.mkString(","),
       kv(props.filterNot(e => declPrefixes.exists(e._1.startsWith) ||
         e._1 == VersionedTable.NdvColsKey || // surfaced in dedicated columns
@@ -695,7 +695,7 @@ case class GraftShowPartitionsCommand(cat: String,
   override val output: Seq[Attribute] = Seq(
     AttributeReference("partition", StringType, nullable = false)(),
     AttributeReference("num_files", IntegerType, nullable = false)(),
-    AttributeReference("num_rows", LongType, nullable = true)())
+    AttributeReference("num_rows", LongType, nullable = false)())
 
   override def run(session: SparkSession): Seq[Row] = {
     val p = GraftSqlStatements.graftPath(session, cat, path, "SHOW PARTITIONS")
@@ -799,7 +799,7 @@ case class GraftDescribeHistoryCommand(cat: String,
   override val output: Seq[Attribute] = Seq(
     AttributeReference("version", LongType, nullable = false)(),
     AttributeReference("num_files", IntegerType, nullable = false)(),
-    AttributeReference("num_rows", LongType, nullable = true)(),
+    AttributeReference("num_rows", LongType, nullable = false)(),
     AttributeReference("txn", StringType, nullable = false)(),
     AttributeReference("num_dv_deleted", LongType, nullable = false)())
 

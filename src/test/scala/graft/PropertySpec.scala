@@ -164,7 +164,7 @@ class PropertySpec extends SparkSpec {
         val want = rows.toSeq.sortBy(_._1).map { case (_, m) =>
           cols.map { case (n, _) => m.getOrElse(n, null) }.toVector }
         assert(got == want, s"seed=$seed at $label:\n got=$got\nwant=$want")
-        assert(VersionedTable.countRows(spark, path).contains(rows.size.toLong),
+        assert(VersionedTable.countRows(spark, path) == rows.size.toLong,
           s"seed=$seed at $label: countRows")
       }
       val init = (0 until 8).map(_ => freshRow(0))

@@ -736,4 +736,26 @@ class MaterializedViewSpec extends SparkSpec {
     MaterializedView.refresh(spark, mv)
     assert(viewRows(mv) == fullAgg(src))
   }
+
+  test("one refresh scans the removed source file in exactly one job (plain and COUNT(DISTINCT) views)") {
+    Seq(Nil, Seq("id")).foreach { distinctCols =>
+      val base = tmp(); val src = base + "/src"; val mv = base + "/mv"
+      VersionedTable.write(
+        (1L to 100L).map(i => (i, if (i % 2 == 0) "a" else "b", i % 3, i))
+          .toDF("id", "g", "g2", "v").repartitionByRange(4, col("id")),
+        src, statsCols = Seq("id"))
+      MaterializedView.create(spark, src, mv, Seq("g", "g2"), Seq("v"),
+        distinctCols = distinctCols)
+      val v1 = VersionedTable.latestVersion(spark, src).get
+      VersionedTable.delete(spark, src, col("id") <= 3L) // rewrites one file
+      val removed = VersionedTable.filesOf(spark, src, v1)
+        .diff(VersionedTable.filesOf(spark, src, v1 + 1))
+      assert(removed.size == 1, removed)
+      val jobs = OpenLoggingFs.jobsOpening(spark, s"$src/${removed.head}") {
+        MaterializedView.refresh(spark, mv)
+      }
+      assert(jobs.size == 1, s"distinct=$distinctCols: jobs $jobs")
+      assert(viewRows(mv) == fullAgg(src), s"distinct=$distinctCols")
+    }
+  }
 }

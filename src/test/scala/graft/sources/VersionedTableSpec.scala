@@ -256,7 +256,7 @@ class VersionedTableSpec extends SparkSpec {
     val b = VersionedTable.read(spark, path, Some(1L))
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
     assert(VersionedTable.readWhere(spark, path, box).count() == 11 * 11)
-    assert(VersionedTable.countRows(spark, path).contains(256L * 256))
+    assert(VersionedTable.countRows(spark, path) == 256L * 256)
   }
 
   test("row-level DELETE rewrites only intersecting files; old version intact") {
@@ -313,7 +313,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(kept.isEmpty && skipped.size == after.size,
       "compacted files must carry recomputed stats")
     // metadata row counts recomputed too
-    assert(VersionedTable.countRows(spark, path).contains(2000L))
+    assert(VersionedTable.countRows(spark, path) == 2000L)
     // compacting an already-compact table is a no-op
     assert(VersionedTable.compact(spark, path, targetBytes = 1L << 30) == v2)
   }
@@ -324,15 +324,15 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.upsert(
       spark.range(2000, 2010).select(col("id"), lit("n").as("v")), path, Seq("id"))
     VersionedTable.delete(spark, path, col("id").between(0, 9))
-    assert(VersionedTable.countRows(spark, path).contains(1000L))
-    assert(VersionedTable.countRows(spark, path, Some(2L)).contains(1010L))
-    assert(VersionedTable.countRows(spark, path, Some(3L)).contains(1000L))
-    assert(VersionedTable.countRows(spark, path).get ==
+    assert(VersionedTable.countRows(spark, path) == 1000L)
+    assert(VersionedTable.countRows(spark, path, Some(2L)) == 1010L)
+    assert(VersionedTable.countRows(spark, path, Some(3L)) == 1000L)
+    assert(VersionedTable.countRows(spark, path) ==
       VersionedTable.read(spark, path).count())
     // the proof it never opens data: physically destroy every data file —
     // the metadata count still answers
     filesOf(path).foreach(f => localFile(f).delete())
-    assert(VersionedTable.countRows(spark, path).contains(1000L))
+    assert(VersionedTable.countRows(spark, path) == 1000L)
   }
 
   test("commitBatch is exactly-once per (appId, batchId): replay is a no-op") {
@@ -404,7 +404,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(now.filter(col("id").between(100, 149)).count() == 0)
     assert(now.filter(col("id") === 99L).count() == 1)
     // metadata count subtracts the marks; history reports them
-    assert(VersionedTable.countRows(spark, path).contains(950L))
+    assert(VersionedTable.countRows(spark, path) == 950L)
     val h = VersionedTable.history(spark, path).orderBy("version").collect()
     assert(h(1).getLong(4) == 50L, h.mkString(";"))
     // pre-delete snapshot intact; change feed shows the marked rows
@@ -413,7 +413,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(ch.length == 50 && ch.forall(_.getAs[String]("_change_type") == "delete"))
     // a second, OVERLAPPING dv delete marks only still-live rows
     VersionedTable.deleteVectorized(spark, path, col("id").between(140, 159))
-    assert(VersionedTable.countRows(spark, path).contains(940L))
+    assert(VersionedTable.countRows(spark, path) == 940L)
     assert(VersionedTable.read(spark, path).count() == 940)
     // CoW upsert over marked keys: the touched file materializes its DVs
     VersionedTable.upsert(
@@ -423,13 +423,13 @@ class VersionedTableSpec extends SparkSpec {
     assert(afterUp.filter(col("v") === "BACK").count() == 6)
     assert(afterUp.filter(col("id").between(106, 159)).count() == 0,
       "marks on the rewritten file must not resurrect other deleted rows")
-    assert(VersionedTable.countRows(spark, path).contains(946L))
+    assert(VersionedTable.countRows(spark, path) == 946L)
     // OPTIMIZE purges every remaining mark (files rewritten)
     VersionedTable.compact(spark, path, targetBytes = 1L << 30)
     val hc = VersionedTable.history(spark, path).orderBy(col("version").desc).first()
     assert(hc.getLong(4) == 0L, "compaction must materialize deletion vectors")
     assert(VersionedTable.read(spark, path).count() == 946)
-    assert(VersionedTable.countRows(spark, path).contains(946L))
+    assert(VersionedTable.countRows(spark, path) == 946L)
   }
 
   test("automatic DV purge: past-threshold files materialize, anti-join disappears") {
@@ -440,7 +440,7 @@ class VersionedTableSpec extends SparkSpec {
     // NOT land — that file rewrites to its 100 survivors in the same commit
     VersionedTable.deleteVectorized(spark, path, col("id") < 150)
     assert(VersionedTable.read(spark, path).count() == 850)
-    assert(VersionedTable.countRows(spark, path).contains(850L))
+    assert(VersionedTable.countRows(spark, path) == 850L)
     val h2 = VersionedTable.history(spark, path).orderBy(col("version").desc).first()
     assert(h2.getLong(4) == 0L, "auto-purge must leave zero deletion-vector marks")
     assert((filesOf(path) intersect v1Files).size == 3, "only the hot file rewrites")
@@ -457,7 +457,7 @@ class VersionedTableSpec extends SparkSpec {
     val h4 = VersionedTable.history(spark, path).orderBy(col("version").desc).first()
     assert(h4.getLong(4) == 0L)
     assert(VersionedTable.read(spark, path).count() == 849)
-    assert(VersionedTable.countRows(spark, path).contains(849L))
+    assert(VersionedTable.countRows(spark, path) == 849L)
     assert(!VersionedTable.read(spark, path).queryExecution.executedPlan.toString
       .contains("LeftAnti"))
     assert((filesOf(path) intersect v2Files).size == 3, "purge rewrites only marked files")
@@ -476,7 +476,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.versions(spark, path) == Seq(2L))
     val now = VersionedTable.read(spark, path)
     assert(now.count() == 990 && now.filter(col("id") < 10).count() == 0)
-    assert(VersionedTable.countRows(spark, path).contains(990L))
+    assert(VersionedTable.countRows(spark, path) == 990L)
     // a provably-empty dv delete is a no-op
     assert(VersionedTable.deleteVectorized(spark, path, col("id") === 999999L) == 2L)
   }
@@ -824,7 +824,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(f.exists(head), "_head pointer must be written on commit")
     VersionedTable.listCalls.set(0L)
     assert(VersionedTable.read(spark, path).count() == 1)
-    assert(VersionedTable.countRows(spark, path).contains(1L))
+    assert(VersionedTable.countRows(spark, path) == 1L)
     assert(VersionedTable.latestVersion(spark, path).contains(3L))
     assert(VersionedTable.listCalls.get() == 0L,
       "pointer-based reads must not list _graft_log")
@@ -947,7 +947,7 @@ class VersionedTableSpec extends SparkSpec {
       // return)
       VersionedTable.ckptStatsParses.set(0L)
       assert(VersionedTable.read(spark, path).count() == 12)
-      assert(VersionedTable.countRows(spark, path).contains(12L))
+      assert(VersionedTable.countRows(spark, path) == 12L)
       val (kept, skipped) = VersionedTable.pruneInfo(spark, path, col("id") === 5)
       assert(kept.size == 1 && skipped.size == 11,
         s"stats must survive the parquet round-trip: ${kept.size}/${skipped.size}")
@@ -1019,7 +1019,7 @@ class VersionedTableSpec extends SparkSpec {
       val json20 = new String(bytes, "UTF-8")
       assert(json20.contains("\"ckpt\"") && !json20.contains("\"files\""))
       // resolution off the ridden checkpoints stays fully correct
-      assert(VersionedTable.countRows(spark, path).contains(19L))
+      assert(VersionedTable.countRows(spark, path) == 19L)
       val now = VersionedTable.read(spark, path)
       assert(now.columns.toSeq == Seq("id", "w"))
       assert(now.count() == 19L)
@@ -1065,7 +1065,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(appended.filter(col("w") === 7).count() == 10,
       "appends through the mapping must serve real values")
     // metadata count subtracts marks across the whole composition
-    assert(VersionedTable.countRows(spark, path).contains(1000L - 20L + 10L))
+    assert(VersionedTable.countRows(spark, path) == 1000L - 20L + 10L)
     // time travel: v1 pre-everything (w = old values), v2 has the marks
     val v1 = VersionedTable.read(spark, path, Some(1L))
     assert(v1.count() == 1000 && v1.filter(col("w") === col("k") * 2).count() == 1000)
@@ -1142,7 +1142,7 @@ class VersionedTableSpec extends SparkSpec {
     // every version resolves correctly through its chain
     for (v <- 1L to 15L)
       assert(VersionedTable.read(spark, path, Some(v)).count() == 1000 + (v - 1))
-    assert(VersionedTable.countRows(spark, path).contains(1014L))
+    assert(VersionedTable.countRows(spark, path) == 1014L)
     // skipping still works through the chain (stats carried by reference)
     assert(VersionedTable.pruneInfo(spark, path, col("id") === 2000L)._2.nonEmpty)
     // vacuum drops v1..v12 including the v10 checkpoint the kept chain used:
@@ -1157,7 +1157,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.append(
       spark.range(3000, 3001).select(col("id"), lit("y").as("v")), path)
     assert(VersionedTable.read(spark, path).count() == 1015)
-    assert(VersionedTable.countRows(spark, path).contains(1015L))
+    assert(VersionedTable.countRows(spark, path) == 1015L)
   }
 
   test("RESTORE is a metadata-only undo; TIMESTAMP AS OF resolves by commit time") {
@@ -1175,7 +1175,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(v3 == 3L)
     assert(VersionedTable.read(spark, path).count() == 1000)
     assert(filesOf(path) == filesOf(path, Some(1L)), "restore must reference, not copy")
-    assert(VersionedTable.countRows(spark, path).contains(1000L))
+    assert(VersionedTable.countRows(spark, path) == 1000L)
     // the mistake stays in history; restoring the head is a no-op
     assert(VersionedTable.read(spark, path, Some(2L)).count() == 500)
     assert(VersionedTable.restore(spark, path, 3L) == 3L)
@@ -1216,7 +1216,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(now.filter(col("id").between(100, 109)).count() == 0)
     assert(now.filter(col("id").between(200, 209)).count() == 0)
     assert(now.filter(col("id") >= 5000).count() == 10)
-    assert(VersionedTable.countRows(spark, path).contains(990L))
+    assert(VersionedTable.countRows(spark, path) == 990L)
     // every intermediate version remains a readable snapshot
     VersionedTable.versions(spark, path).foreach { v =>
       assert(VersionedTable.read(spark, path, Some(v)).count() > 0)
@@ -1271,7 +1271,7 @@ class VersionedTableSpec extends SparkSpec {
       assert(vs == Seq(2L, 3L, 4L, 5L), s"one winner per slot through the fake: $vs")
       assert(mem.puts.get() >= 5L, "commits must route through the injected store")
       assert(VersionedTable.read(spark, path).count() == 5)
-      assert(VersionedTable.countRows(spark, path).contains(5L))
+      assert(VersionedTable.countRows(spark, path) == 5L)
     } finally VersionedTable.commitStore = saved
   }
 
@@ -1319,8 +1319,8 @@ class VersionedTableSpec extends SparkSpec {
     val vs = VersionedTable.versions(spark, path)
     assert(vs == (vs.head to vs.last), s"log must stay dense: $vs")
     vs.foreach(v => VersionedTable.read(spark, path, Some(v)).count())
-    assert(VersionedTable.countRows(spark, path)
-      .forall(_ == VersionedTable.read(spark, path).count()))
+    assert(VersionedTable.countRows(spark, path) ==
+      VersionedTable.read(spark, path).count())
     assert(VersionedTable.history(spark, path).count() == vs.size)
     // each successful verb's effect is observable AT ITS OWN VERSION — or
     // that version was legitimately vacuumed away (refusal-or-effect: no
@@ -2070,5 +2070,147 @@ class VersionedTableSpec extends SparkSpec {
       "records no row count")
     // the untouched table reads again
     assert(VersionedTable.read(spark, path).count() == 2)
+  }
+
+  /** The change feed's reference model: both full snapshots aligned to the
+    * union of their columns, diffed by two `exceptAll`s. */
+  private def modelChanges(path: String, fromV: Long, toV: Long)
+      : org.apache.spark.sql.DataFrame = {
+    val before = VersionedTable.read(spark, path, Some(fromV))
+    val after = VersionedTable.read(spark, path, Some(toV))
+    val types = (before.schema ++ after.schema).map(fl => fl.name -> fl.dataType).toMap
+    val cols = (before.columns ++ after.columns).distinct
+    def aligned(df: org.apache.spark.sql.DataFrame) = df.select(cols.map(c =>
+      if (df.columns.contains(c)) col(c) else lit(null).cast(types(c)).as(c)): _*)
+    val (b, a) = (aligned(before), aligned(after))
+    a.exceptAll(b).withColumn("_change_type", lit("insert"))
+      .unionByName(b.exceptAll(a).withColumn("_change_type", lit("delete")))
+  }
+
+  test("change feed equals the two-exceptAll model: duplicates, NULL, NaN, -0.0, evolved schema, DV delete, RESTORE") {
+    val path = java.nio.file.Files.createTempDirectory("cdfm").toString + "/t"
+    val nan = Double.NaN
+    def rows(rs: (Long, Option[String], Option[Double])*) =
+      rs.toDF("id", "s", "x").coalesce(1)
+    // v1: a duplicated row (x2), a tripled one (x3), NULL, NaN, -0.0
+    VersionedTable.write(rows(
+      (1L, Some("a"), Some(1.0)), (1L, Some("a"), Some(1.0)),
+      (7L, Some("g"), Some(2.0)), (7L, Some("g"), Some(2.0)), (7L, Some("g"), Some(2.0)),
+      (2L, None, Some(nan)), (3L, Some("c"), Some(-0.0)), (6L, Some("f"), Some(-0.0)),
+      (4L, Some("d"), Some(0.5))), path)
+    // v2: a full rewrite — multiplicities 2→1 and 3→1, NaN kept, -0.0 → 0.0
+    // (equal under the normalized grouping), a -0.0 row leaves, NULLs arrive
+    VersionedTable.write(rows(
+      (1L, Some("a"), Some(1.0)), (7L, Some("g"), Some(2.0)),
+      (2L, None, Some(nan)), (3L, Some("c"), Some(0.0)),
+      (4L, Some("d"), Some(0.5)), (5L, None, None)), path)
+    // v3: an evolved schema (new column e) through a MERGE
+    VersionedTable.upsert(Seq((5L, "e", 2.5, "new")).toDF("id", "s", "x", "e"),
+      path, Seq("id"), evolveSchema = true)
+    // v4: a deletion-vector delete carried on the rewritten file
+    VersionedTable.deleteVectorized(spark, path, col("id") === 4L)
+    // v5: RESTORE across that DV delete; v6: a duplicate in a new file
+    VersionedTable.restore(spark, path, 3L)
+    VersionedTable.append(
+      Seq((1L, "a", 1.0, Option.empty[String])).toDF("id", "s", "x", "e"), path)
+    assert(VersionedTable.latestVersion(spark, path).contains(6L))
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for (fromV <- 1L to 5L; toV <- fromV + 1 to 6L) {
+      val want = modelChanges(path, fromV, toV)
+      val got = VersionedTable.changes(spark, path, fromV, toV)
+        .select(want.columns.map(col).toSeq: _*)
+      assert(sorted(got) == sorted(want), s"changes($fromV, $toV)")
+    }
+    // the cases the model pins are really in the feed
+    val ch12 = sorted(VersionedTable.changes(spark, path, 1L, 2L)
+      .select("id", "_change_type"))
+    assert(ch12 == Seq("[1,delete]", "[5,insert]", "[6,delete]", "[7,delete]",
+      "[7,delete]"), ch12)
+    assert(sorted(VersionedTable.changes(spark, path, 4L, 5L)) ==
+      Seq("[4,d,0.5,null,insert]"))
+  }
+
+  test("a non-DV change feed is one full-row shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val path = java.nio.file.Files.createTempDirectory("cdfx").toString + "/t"
+    rangeTable(path)
+    VersionedTable.upsert( // rewrites the tile(s) holding ids 240..259
+      spark.range(240, 260).select(col("id"), lit("U").as("v")), path, Seq("id"))
+    val ch = VersionedTable.changes(spark, path, 1L, 2L)
+    assert(ch.count() == 40)
+    ch.collect()
+    def shuffles(sp: SparkPlan): Seq[ShuffleExchangeExec] = sp.collect {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: ShuffleExchangeExec => Seq(e)
+    }.flatten
+    val finalPlan = ch.queryExecution.executedPlan
+    val fullRow = shuffles(finalPlan).count(_.outputPartitioning match {
+      case h: HashPartitioning =>
+        Set("id", "v").subsetOf(h.expressions.flatMap(_.references.map(_.name)).toSet)
+      case _ => false
+    })
+    assert(fullRow == 1, s"full-row exchanges = $fullRow:\n$finalPlan")
+  }
+
+  test("a copy-on-write rewrite that empties a file leaves no unreferenced staged dir") {
+    def strays(path: String): Seq[String] = {
+      val root = new java.io.File(path)
+      val refs = VersionedTable.versions(spark, path)
+        .flatMap(VersionedTable.filesOf(spark, path, _)).toSet ++
+        new java.io.File(root, "_graft_log").listFiles().filter(_.getName.endsWith(".json"))
+          .map(m => new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8"))
+      root.listFiles().filter(d => d.isDirectory && d.getName.startsWith("d-"))
+        .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(fl => s"${d.getName}/${fl.getName}"))
+        .filterNot(k => refs.exists(_.contains(k))).toSeq
+    }
+    // four single-file tiles of 250 ids; each verb empties tile 0
+    def tiles(path: String): Unit = (0L until 1000L by 250L).foreach { lo =>
+      val df = spark.range(lo, lo + 250).select(col("id"),
+        concat(lit("v"), col("id")).as("v")).coalesce(1)
+      if (lo == 0L) VersionedTable.write(df, path, Seq("id"))
+      else VersionedTable.append(df, path, Seq("id"))
+    }
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "delete" -> (p => VersionedTable.delete(spark, p, col("id") < 250L)),
+      "upsert" -> (p => VersionedTable.upsert(
+        spark.range(0, 250).select(col("id"), lit(null).cast("string").as("v")),
+        p, Seq("id"), deleteWhere = Some(col("v").isNull))),
+      "deleteVectorized" -> (p =>
+        VersionedTable.deleteVectorized(spark, p, col("id") < 250L)),
+      "purgeDeletes" -> { p =>
+        VersionedTable.deleteVectorized(spark, p, col("id") < 250L, purgeFraction = 1.0)
+        VersionedTable.purgeDeletes(spark, p)
+      })
+    verbs.foreach { case (what, verb) =>
+      val path = java.nio.file.Files.createTempDirectory("empt").toString + "/t"
+      tiles(path)
+      verb(path)
+      assert(VersionedTable.read(spark, path).count() == 750L, what)
+      assert(filesOf(path).size == 3, s"$what: ${filesOf(path)}")
+      assert(unreferenced(path).isEmpty, s"$what: ${unreferenced(path)}")
+      assert(strays(path).isEmpty, s"$what: ${strays(path)}")
+    }
+  }
+
+  test("upsert evaluates its update frame once: the duplicate-key probe fills the cache") {
+    val base = java.nio.file.Files.createTempDirectory("upsone").toString
+    val path = base + "/t"
+    rangeTable(path)
+    val updFile = base + "/upd"
+    spark.range(100, 110).select(col("id"), lit("U").as("v"))
+      .coalesce(1).write.parquet(updFile)
+    val part = new java.io.File(updFile).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    val jobs = OpenLoggingFs.jobsOpening(spark, part) {
+      VersionedTable.upsert(spark.read.parquet(updFile), path, Seq("id"))
+    }
+    assert(jobs.size == 1, s"jobs $jobs")
+    assert(VersionedTable.read(spark, path).filter(col("v") === "U").count() == 10L)
   }
 }
