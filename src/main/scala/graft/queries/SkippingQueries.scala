@@ -56,7 +56,10 @@ object SkippingQueries {
     * the RECURSIVE listing: (relative name, length, mtime) of every
     * regular file under the source, sorted for determinism. The key also
     * folds in [[buildDigest]], so a fixture written by another build of
-    * the program is never served and no tag needs a hand bump. */
+    * the program is never served and no tag needs a hand bump, and the dir
+    * name starts with that digest's prefix ([[buildPrefix]]), so a stale
+    * fixture names the build that wrote it and [[sweepStale]] can retire
+    * it. */
   private[graft] def cachedFixturePath(dir: String, tag: String,
       srcName: String): String = {
     val src = new java.io.File(s"$dir/$srcName")
@@ -67,7 +70,32 @@ object SkippingQueries {
     val ident = s"$dir|${files.mkString(";")}|$buildDigest"
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(ident.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_$key"
+    sweepStale
+    s"${System.getProperty("java.io.tmpdir")}/$buildPrefix${tag}_$key"
+  }
+
+  /** Fixture dir names of this build start with this: `graft_` and the
+    * first 8 hex digits of [[buildDigest]]. */
+  private lazy val buildPrefix: String = s"graft_${buildDigest.take(8)}_"
+
+  /** A fixture dir of another build is swept only once it is older than
+    * this — far longer than any run of the suite or the benchmarks, so a
+    * concurrent JVM of another build keeps the fixtures it is reading. */
+  private val StaleFixtureAgeMs: Long = 6L * 60 * 60 * 1000
+
+  /** Once per JVM, before the first fixture path is handed out: delete
+    * every `graft_*` dir in the temp dir whose name does not carry this
+    * build's [[buildPrefix]] (another build's digest, or none — named
+    * before the prefix existed) and that is older than
+    * [[StaleFixtureAgeMs]]. Fixtures are rebuilt on demand, so a wrong
+    * guess costs a rebuild, never a result. */
+  private lazy val sweepStale: Unit = {
+    val cutoff = System.currentTimeMillis() - StaleFixtureAgeMs
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(d => d.isDirectory && d.getName.startsWith("graft_") &&
+        !d.getName.startsWith(buildPrefix) && d.lastModified() < cutoff)
+      .foreach(d => scala.util.Try(org.apache.commons.io.FileUtils.deleteDirectory(d)))
   }
 
   /** Regular files under `f` (itself when a file), sorted by name. */

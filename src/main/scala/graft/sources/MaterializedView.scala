@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * DLT/Databricks materialized-view story on this engine's own change
   * feed: the view is a graft table holding `GROUP BY` aggregates of a
   * source graft table, and REFRESH applies only the source's CHANGES
-  * since the last refresh (one [[VersionedTable.changes]] diff + one CoW
+  * since the last refresh (one [[VersionedTable.changes]] diff + one
   * MERGE), never a full recompute.
   *
   * Maintained aggregates: COUNT(*), SUM(col), MIN(col), MAX(col) per
@@ -55,12 +55,14 @@ import org.apache.spark.sql.functions._
   * fact's daily dashboard read kilobytes.
   *
   * Scale shape at 100 TB: refresh cost is O(changed source files) to read
-  * the diff (changes() is file-granular) + O(touched view files) to merge
-  * it (CoW file selection on the group keys, which are the view's stats
-  * columns) + O(repaired groups' source data) when a MIN/MAX extremum was
-  * deleted — a view over a 100 TB fact whose daily delta touches one
-  * partition refreshes by reading that partition's files and rewriting
-  * the handful of view files whose key bounds admit the changed groups. */
+  * the diff (changes() is file-granular, and a source MERGE done by
+  * marks contributes only its applied and marked rows) + O(touched view
+  * files) to merge it (MERGE file selection on the group keys, which are
+  * the view's stats columns) + O(repaired groups' source data) when a
+  * MIN/MAX extremum was deleted — a view over a 100 TB fact whose daily
+  * delta touches one partition refreshes by reading that partition's files
+  * and merging into the handful of view files whose key bounds admit the
+  * changed groups. */
 object MaterializedView {
 
   /** txn app id carried by the create snapshot and every refresh MERGE;

@@ -28,9 +28,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   * parent version. That is what makes every write-side verb file-granular,
   * the property that survives 100 TB:
   *
-  *  - [[upsert]] (MERGE) rewrites ONLY the files whose recorded key bounds
-  *    admit a matching update key (copy-on-write, like Delta MERGE); a
-  *    daily upsert touching 0.1% of keys rewrites ~0.1% of bytes, not 100%.
+  *  - [[upsert]] (MERGE) reads ONLY the files whose recorded key bounds
+  *    admit a matching update key, and of those marks the replaced rows in
+  *    a deletion-vector sidecar (merge-on-read, like Delta MERGE with
+  *    deletion vectors) unless the marks would pass
+  *    [[DefaultDvPurgeFraction]] of a file, which it then rewrites; a daily
+  *    upsert touching 0.1% of keys writes ~0.1% of rows, not 100%.
   *  - [[delete]] rewrites only files whose stats intersect the predicate.
   *  - [[compact]] (OPTIMIZE) bin-packs small files into target-size files
   *    as a new version, carrying already-right-sized files untouched.
@@ -2220,15 +2223,20 @@ object VersionedTable {
     filesOf(spark, path, v).forall(r => f.exists(new Path(root, r)))
   }
 
-  /** A version's file list AND logical→physical column mapping in ONE
-    * manifest resolution — the streaming source needs both per batch (the
-    * mapping to read appended files with their PHYSICAL schema; binding
-    * the pinned logical schema directly against column-mapped files would
-    * stream every mapped column as null) and caches them together. */
-  private[graft] def filesAndMappingOf(spark: SparkSession, path: String,
-      v: Long): (Seq[String], Map[String, String], Seq[String], StructType) = {
+  /** What the streaming source needs of one version, from ONE manifest
+    * resolution: the file list, the logical→physical column mapping (to
+    * read appended files with their PHYSICAL schema; binding the pinned
+    * logical schema directly against column-mapped files would stream
+    * every mapped column as null), the partition columns, the schema and
+    * the per-file deletion-vector mark counts. */
+  private[graft] final case class VersionMeta(files: Seq[String],
+      colMap: Map[String, String], partCols: Seq[String], schema: StructType,
+      dvRows: Map[String, Long])
+
+  private[graft] def versionMetaOf(spark: SparkSession, path: String,
+      v: Long): VersionMeta = {
     val (_, _, c) = commitFor(spark, path, Some(v))
-    (c.files, c.colMap, partitionColsOf(c.schema), c.schema)
+    VersionMeta(c.files, c.colMap, partitionColsOf(c.schema), c.schema, c.dvRows)
   }
 
   private def commitFor(spark: SparkSession, path: String,
@@ -2452,18 +2460,50 @@ object VersionedTable {
     // only files with marked rows need the anti-join at all
     else if (!files.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L))
       physRead(spark, root, c, s, files)
-    else {
-      val base = physReadKeyed(spark, root, c, s, files, withKeys = true)
-      val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-      val dvScoped =
-        if (files.size == c.files.size) dvAll
-        else dvAll.filter(col(FileKeyCol).isin(files: _*))
-      val dvSide =
-        if (c.dvRows.values.sum <= dvBroadcastBound(spark)) broadcast(dvScoped)
-        else dvScoped
-      base.join(dvSide, Seq(FileKeyCol, RowIdxCol), "left_anti")
-        .select(s.fields.map(fl => col(fl.name)).toSeq: _*)
-    }
+    else liveKeyed(spark, root, c, s, files, withIds = false)
+      .select(s.fields.map(fl => col(fl.name)).toSeq: _*)
+  }
+
+  /** The commit's deletion-vector marks on `files` — broadcast while the
+    * table's marks stay under [[dvBroadcastBound]]. */
+  private def marksOn(spark: SparkSession, root: Path, c: Commit,
+      files: Seq[String]): DataFrame = {
+    val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
+    val dvScoped =
+      if (files.size == c.files.size) dvAll
+      else dvAll.filter(col(FileKeyCol).isin(files: _*))
+    if (c.dvRows.values.sum <= dvBroadcastBound(spark)) broadcast(dvScoped)
+    else dvScoped
+  }
+
+  /** The LIVE rows of `files` (the commit's marks removed) with columns
+    * `s` — any subset of the commit's — plus their ([[FileKeyCol]],
+    * [[RowIdxCol]]) keys and, with `withIds`, their tracked id as
+    * [[RowIdCol]]: the one keyed read behind [[rowIdFrame]], the MERGE
+    * probe and the DV-delete scan. */
+  private def liveKeyed(spark: SparkSession, root: Path, c: Commit,
+      s: StructType, files: Seq[String], withIds: Boolean): DataFrame = {
+    val sRead =
+      if (withIds) StructType(s.fields :+ StructField(RowIdCol, LongType, nullable = true))
+      else s
+    val keyed = physReadKeyed(spark, root, c, sRead, files, withKeys = true)
+    val live =
+      if (!files.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) keyed
+      else keyed.join(marksOn(spark, root, c, files), Seq(FileKeyCol, RowIdxCol), "left_anti")
+    if (withIds) withTrackedIds(spark, c, files, live) else live
+  }
+
+  /** Resolve [[RowIdCol]] on a keyed read of `files`: the materialized id
+    * where a previous rewrite wrote one (schema-bound parquet read: files
+    * without the column read null), else the file's base id + row index —
+    * one broadcast lookup row per file, like the DV/partition joins. */
+  private def withTrackedIds(spark: SparkSession, c: Commit, files: Seq[String],
+      keyed: DataFrame): DataFrame = {
+    import spark.implicits._
+    val lookup = files.map(fk => (fk, c.baseRow.get(fk))).toDF(FileKeyCol, "__graft_base")
+    keyed.join(broadcast(lookup), Seq(FileKeyCol))
+      .withColumn(RowIdCol, coalesce(col(RowIdCol), col("__graft_base") + col(RowIdxCol)))
+      .drop("__graft_base")
   }
 
   /** The table with each row's TRACKED id exposed as [[RowIdCol]] (long):
@@ -2481,39 +2521,14 @@ object VersionedTable {
 
   /** (data columns ++ [[RowIdCol]]) over a subset of a commit's files —
     * also the carried-row source for every CoW rewrite when tracking is
-    * on, so ids survive the rewrite. The id is the materialized column
-    * where a previous rewrite wrote one (schema-bound parquet read: files
-    * without the column read null), else the file's base id + row index;
-    * the base-id lookup is one broadcast row per file, exactly like the
-    * DV/partition metadata joins. */
+    * on, so ids survive the rewrite. */
   private def rowIdFrame(spark: SparkSession, root: Path, c: Commit,
       files: Seq[String]): DataFrame = {
     val s = c.schema
-    val outFields = s.fields.toSeq :+ StructField(RowIdCol, LongType, nullable = true)
     if (files.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(outFields))
-    val sPlus = StructType(s.fields :+ StructField(RowIdCol, LongType, nullable = true))
-    val keyed = physReadKeyed(spark, root, c, sPlus, files, withKeys = true)
-    val afterDv =
-      if (!files.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) keyed
-      else {
-        val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-        val dvScoped =
-          if (files.size == c.files.size) dvAll
-          else dvAll.filter(col(FileKeyCol).isin(files: _*))
-        val dvSide =
-          if (c.dvRows.values.sum <= dvBroadcastBound(spark)) broadcast(dvScoped)
-          else dvScoped
-        keyed.join(dvSide, Seq(FileKeyCol, RowIdxCol), "left_anti")
-      }
-    import spark.implicits._
-    val lookup = files.map(fk => (fk, c.baseRow.get(fk)))
-      .toDF(FileKeyCol, "__graft_base")
-    afterDv.join(broadcast(lookup), Seq(FileKeyCol))
-      .withColumn(RowIdCol,
-        coalesce(col(RowIdCol), col("__graft_base") + col(RowIdxCol)))
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        StructType(s.fields :+ StructField(RowIdCol, LongType, nullable = true)))
+    else liveKeyed(spark, root, c, s, files, withIds = true)
       .select(s.fields.map(fl => col(fl.name)).toSeq :+ col(RowIdCol): _*)
   }
 
@@ -3483,19 +3498,33 @@ object VersionedTable {
     * version — so the merge inherits the log's atomicity AND leaves the
     * pre-merge snapshot time-travelable.
     *
-    * COPY-ON-WRITE: when the base manifest carries per-file stats, the
+    * MERGE-ON-READ: when the base manifest carries per-file stats, the
     * merge first computes the update keys' per-column bounds (one small
     * aggregate over `updates`; an exact IN-list when there are at most
-    * [[MaxInKeys]] distinct keys) and rewrites ONLY the files whose
-    * recorded key ranges admit a match — every other file is carried into
-    * the new version by reference, bytes untouched. Matching is
-    * conservative per construction (a necessary condition per key column),
-    * so a carried file provably holds no matched key. A stats-less table
-    * degrades to whole-table rewrite, never to wrong results.
+    * [[MaxInKeys]] distinct keys); only the files whose recorded key ranges
+    * admit a match are CANDIDATES — every other file is carried into the
+    * new version by reference, bytes untouched. Matching is conservative
+    * per construction (a necessary condition per key column), so a carried
+    * file provably holds no matched key. A stats-less table makes every
+    * file a candidate, never a wrong result.
     *
-    * Plan shape: one left_anti hash join of rewrite-files-minus-updates on
-    * the key (the only shuffle; AQE broadcasts small sides) + union — no
-    * per-row driver work, scales with the UPDATE, not the table.
+    * One column-pruned PROBE of the candidates' live rows (file key, row
+    * index, merge keys, and the `guardBy` sequence and the tracked row id
+    * when needed) finds the rows the merge replaces. Then, per candidate,
+    * the one mark-or-rewrite rule of [[rewriteOverMarked]]: a file whose
+    * replaced rows plus existing marks exceed [[DefaultDvPurgeFraction]] of
+    * its rows is REWRITTEN (its other rows ride with the applied ones, as
+    * copy-on-write); any other file with matches keeps its bytes and its
+    * replaced rows are MARKED in one deletion-vector sidecar; a candidate
+    * without a match is carried untouched. Only the applied rows are
+    * staged besides the rewrites, so a small MERGE writes what it changes
+    * and [[changes]] diffs only that. Merges that coerce a type or reuse a
+    * dropped physical name rewrite every file instead.
+    *
+    * Plan shape: the probe (no shuffle: broadcast file metadata), one
+    * per-file count of the matched rows, and for rewritten files one
+    * left_anti join on the key + union — no per-row driver work, scales
+    * with the UPDATE, not the table.
     *
     * Concurrency: the merge pins the base version it read; if another
     * writer commits first, the claim on base+1 fails and the merge is
@@ -3682,12 +3711,12 @@ object VersionedTable {
               throw new ConcurrentPropException(path, k, expected, stored)
           }
           val newTxn = baseC.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
-          val (files, schemaJson, statsFn, statsAdd, rows, stagedDir, dvKeep,
+          val (files, schemaJson, statsFn, statsAdd, rows, stagedDirs, dvKeep,
               dvRowsKeep, cMap, physDrop) = baseC match {
             case None =>
               val (dir, rel) = stage(inserts, root, f)
               val (st, rw) = metaFor(spark, root, rel, statsCols)
-              (rel, inserts.schema.json, () => st, st, rw, dir,
+              (rel, inserts.schema.json, () => st, st, rw, Seq(dir),
                 Seq.empty[String], Map.empty[String, Long],
                 Map.empty[String, String], Set.empty[String])
             case Some(c) =>
@@ -3700,9 +3729,10 @@ object VersionedTable {
                     "pass evolveSchema=true to merge them")
               val typesOk = bs.fields.forall(bf =>
                 updSchema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType))
-              // (rewrite candidates, provably-unmatched carries, merged schema)
-              val (rewriteKeys, carryKeys, merged) =
-                if (!typesOk) (c.files, Seq.empty[String], None) // coercion → full rewrite
+              // (candidate files, merged schema, whether matches may be
+              // marked instead of rewritten)
+              val (candidates, merged, markable) =
+                if (!typesOk) (c.files, None, false) // coercion → full rewrite
                 else {
                   val mergedRaw = bs.fields.map { bf =>
                     updSchema.fields.find(_.name == bf.name) match {
@@ -3724,105 +3754,142 @@ object VersionedTable {
                   // no carried file exists to mis-bind
                   val resurrects = updSchema.fieldNames.toSet
                     .diff(bs.fieldNames.toSet).exists(c.physDropped)
-                  val (rw, cy) =
-                    if (resurrects) (c.files, Seq.empty[String])
-                    else selectRewrite(spark, root, c, bs, deduped, keys)
-                  (rw, cy, Some(StructType(mergedFields)))
+                  val cand =
+                    if (resurrects) c.files
+                    else mergeCandidates(spark, root, c, bs, deduped, keys)
+                  (cand, Some(StructType(mergedFields)), !resurrects)
                 }
-              val rewriteDf =
-                if (rewriteKeys.isEmpty && merged.isDefined) {
-                  // pure-insert fast path: stats prove NO existing file holds a
-                  // matching key — stage only the updates, aligned to the
-                  // merged schema
-                  val m = merged.get
-                  inserts.select(m.fields.map(fl =>
-                    if (updSchema.fieldNames.contains(fl.name)) col(fl.name)
-                    else lit(null).cast(fl.dataType).as(fl.name)).toSeq: _*)
-                } else if (rewriteKeys.isEmpty) inserts // empty base, coerced types
+              // the applied rows, aligned to the merged schema when no
+              // carried row rides along
+              def alignedApplied(applied: DataFrame): DataFrame = merged match {
+                case None => applied
+                case Some(m) => applied.select(m.fields.map(fl =>
+                  if (applied.columns.contains(fl.name)) col(fl.name)
+                  else lit(null).cast(fl.dataType).as(fl.name)).toSeq ++
+                  applied.columns.filter(_ == RowIdCol).map(col): _*)
+              }
+              val tracked = rowTrackingOn(c.props)
+              // ONE column-pruned probe of the candidates' live rows: file
+              // key, row index, merge keys, and the guard sequence and the
+              // tracked id when needed — it decides which stored rows the
+              // merge replaces without reading their full rows. Cached only
+              // when the guard or the id inheritance reads it again.
+              val probe =
+                if (candidates.isEmpty) None
                 else {
-                  // row tracking: carried rows ride with their materialized
-                  // ids; a MERGE-matched incoming row INHERITS the id of the
-                  // stored row it replaces (min over any legacy duplicate-key
-                  // rows — deterministic), so updates keep identity and the
-                  // row-keyed change feed pairs them; truly-new keys stay
-                  // null and draw fresh ids from the new file's base
-                  val tracked = rowTrackingOn(c.props)
-                  val base = rewriteSource(spark, root, c, rewriteKeys)
-                  def inherited(src: DataFrame): DataFrame =
-                    if (!tracked) src
-                    else src.join(
-                      base.groupBy(keys.map(col): _*)
-                        .agg(min(col(RowIdCol)).as(RowIdCol)),
-                      keys, "left")
-                  guardBy match {
-                    case None =>
-                      base.join(deduped.select(keys.map(col): _*).distinct(),
-                          keys, "left_anti")
-                        .unionByName(inherited(inserts),
-                          allowMissingColumns = evolveSchema)
-                    case Some(seq) =>
-                      // sequencing guard, decided ONCE PER KEY (not per base
+                  val pr = liveKeyed(spark, root, c,
+                    StructType(bs.fields.filter(fl =>
+                      (keys ++ guardBy).exists(_.equalsIgnoreCase(fl.name)))),
+                    candidates, withIds = tracked)
+                  Some(if (guardBy.isDefined || tracked) pr.cache() else pr)
+                }
+              // the (file, row index) of every stored row the merge
+              // replaces, cached for the per-file count and the sidecar
+              var matchedKeys: Option[DataFrame] = None
+              try {
+                val (rewriteDf, rewriteSet, newMarks, markDir) =
+                  probe match {
+                    // pure insert: stats prove NO existing file holds a
+                    // matching key — stage only the updates
+                    case None => (alignedApplied(inserts), Set.empty[String],
+                      Map.empty[String, Long], None)
+                    case Some(pr) =>
+                      // sequencing guard, decided ONCE PER KEY (not per stored
                       // row — a table holding duplicate key rows must not
                       // half-apply): the update wins iff its sequence is
                       // non-NULL and >= the key's max stored sequence (NULL
-                      // stored sequences are always replaceable; a NULL
-                      // update sequence never replaces; ties → update, so
-                      // re-deliveries re-apply idempotently). An update that
-                      // wins replaces EVERY stored row of its key — which
-                      // also collapses pre-existing duplicates. Costs one
-                      // extra pass over the candidate files, but that pass
-                      // reads only the key+sequence columns (column-pruned),
-                      // not the full rows.
-                      val bmax = base.groupBy(keys.map(col): _*)
-                        .agg(max(col(seq)).as("__graft_bseq"),
-                          lit(true).as("__graft_present"))
-                      // absent key (present NULL after the left join) → the
-                      // update always lands, even with a NULL sequence — the
-                      // guard only arbitrates against STORED rows
-                      val dec = deduped
-                        .select((keys.map(col) :+ col(seq).as("__graft_useq")): _*)
-                        .join(bmax, keys, "left")
-                        .select((keys.map(col) :+
-                          (col("__graft_present").isNull ||
-                            (col("__graft_useq").isNotNull &&
-                              (col("__graft_bseq").isNull ||
-                                col("__graft_useq") >= col("__graft_bseq"))))
-                            .as("__graft_uwins")): _*)
-                      val survivors = base.join(dec, keys, "left")
-                        .filter(!coalesce(col("__graft_uwins"), lit(false)))
-                        .drop("__graft_uwins")
-                      val applied = inherited(inserts)
-                        .join(dec, keys, "left")
+                      // stored sequences are always replaceable; a NULL update
+                      // sequence never replaces; ties → update, so
+                      // re-deliveries re-apply idempotently); an absent key
+                      // always lands. An update that wins replaces EVERY
+                      // stored row of its key — which also collapses
+                      // pre-existing duplicates.
+                      val dec = guardBy.map { seq =>
+                        val bmax = pr.groupBy(keys.map(col): _*)
+                          .agg(max(col(seq)).as("__graft_bseq"),
+                            lit(true).as("__graft_present"))
+                        deduped
+                          .select((keys.map(col) :+ col(seq).as("__graft_useq")): _*)
+                          .join(bmax, keys, "left")
+                          .select((keys.map(col) :+
+                            (col("__graft_present").isNull ||
+                              (col("__graft_useq").isNotNull &&
+                                (col("__graft_bseq").isNull ||
+                                  col("__graft_useq") >= col("__graft_bseq"))))
+                              .as("__graft_uwins")): _*)
+                      }
+                      // keys whose stored rows this merge replaces
+                      val replaced = dec
+                        .map(_.filter(col("__graft_uwins")).select(keys.map(col): _*))
+                        .getOrElse(deduped.select(keys.map(col): _*).distinct())
+                      val matched = pr.join(replaced, keys, "left_semi")
+                        .select(col(FileKeyCol), col(RowIdxCol)).cache()
+                      matchedKeys = Some(matched)
+                      val perFile =
+                        if (!markable) Map.empty[String, Long]
+                        else matched.groupBy(col(FileKeyCol)).count().collect()
+                          .map(r => r.getString(0) -> r.getLong(1)).toMap
+                      val rw = if (markable) rewriteOverMarked(c, perFile) else candidates.toSet
+                      val marks = perFile.filter(kv => !rw(kv._1))
+                      // row tracking: a MERGE-matched incoming row INHERITS the
+                      // id of the stored row it replaces (min over any legacy
+                      // duplicate-key rows — deterministic), so updates keep
+                      // identity and the row-keyed change feed pairs them;
+                      // truly-new keys stay null and draw fresh ids from the
+                      // new file's base
+                      val inherited =
+                        if (!tracked) inserts
+                        else inserts.join(pr.groupBy(keys.map(col): _*)
+                          .agg(min(col(RowIdCol)).as(RowIdCol)), keys, "left")
+                      val applied = dec.fold(inherited)(d => inherited
+                        .join(d, keys, "left")
                         .filter(coalesce(col("__graft_uwins"), lit(true)))
-                        .drop("__graft_uwins")
-                      survivors.unionByName(applied,
-                        allowMissingColumns = evolveSchema)
+                        .drop("__graft_uwins"))
+                      // files past the rule are rewritten copy-on-write: their
+                      // unreplaced rows (ids carried) ride with the applied ones
+                      val df =
+                        if (rw.isEmpty) alignedApplied(applied)
+                        else rewriteSource(spark, root, c, c.files.filter(rw))
+                          .join(replaced, keys, "left_anti")
+                          .unionByName(applied, allowMissingColumns = evolveSchema)
+                      // the others keep their bytes; their matched rows are
+                      // marked in one sidecar
+                      val md =
+                        if (marks.isEmpty) None
+                        else Some(stage(matched
+                          .filter(col(FileKeyCol).isin(marks.keys.toSeq: _*)), root, f))
+                      (df, rw, marks, md)
                   }
-                }
-              // carried-file rows are valid by the ADD CONSTRAINT invariant;
-              // the union re-checks them only because they ride the rewrite —
-              // one in-task pass, no extra scan
-              val (dir, rel0) =
-                try stage(withContract(rewriteDf, c.props, path), root, f,
-                  c.colMap, partitionColsOf(c.schema), c.props)
-                catch { case e: Throwable => translateViolation(e, path) }
-              val (st0, rw0) = metaFor(spark, root, rel0,
-                inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-              val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
-              val carrySet = carryKeys.toSet
-              val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-              (carryKeys ++ rel,
-                // the materialized id column is physical-only — never schema
-                merged.map(_.json).getOrElse(rewriteDf.drop(RowIdCol).schema.json),
-                // LAZY: a delta-encoded merge serializes only the new files'
-                // stats (statsAdd); the full carried map is evaluated only
-                // when this commit lands on a checkpoint boundary
-                () => c.stats.filter(kv => carrySet(kv._1)) ++ st,
-                st,
-                c.rows.filter(kv => carrySet(kv._1)) ++ rw,
-                dir, dvK, dvR, c.colMap,
-                // no carried file left → no stale physical column anywhere
-                if (carryKeys.isEmpty) Set.empty[String] else c.physDropped)
+                // carried-file rows are valid by the ADD CONSTRAINT invariant;
+                // the union re-checks them only because they ride the rewrite —
+                // one in-task pass, no extra scan
+                val (dir, rel0) =
+                  try stage(withContract(rewriteDf, c.props, path), root, f,
+                    c.colMap, partitionColsOf(c.schema), c.props)
+                  catch { case e: Throwable => translateViolation(e, path) }
+                val (st0, rw0) = metaFor(spark, root, rel0,
+                  inheritedStatsCols(spark, root, c, statsCols), c.colMap)
+                val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
+                val carried = c.files.filterNot(rewriteSet)
+                val carrySet = carried.toSet
+                // rewritten files materialized their DVs; marked ones add theirs
+                val (dvK, dvR) = c.dvFor(carrySet)
+                (carried ++ rel,
+                  // the materialized id column is physical-only — never schema
+                  merged.map(_.json).getOrElse(rewriteDf.drop(RowIdCol).schema.json),
+                  // LAZY: a delta-encoded merge serializes only the new files'
+                  // stats (statsAdd); the full carried map is evaluated only
+                  // when this commit lands on a checkpoint boundary
+                  () => c.stats.filter(kv => carrySet(kv._1)) ++ st,
+                  st,
+                  c.rows.filter(kv => carrySet(kv._1)) ++ rw,
+                  dir +: markDir.map(_._1).toSeq,
+                  dvK ++ markDir.toSeq.flatMap(_._2),
+                  dvR ++ newMarks.map { case (fk, n) => fk -> (c.dvRows.getOrElse(fk, 0L) + n) },
+                  c.colMap,
+                  // no carried file left → no stale physical column anywhere
+                  if (carried.isEmpty) Set.empty[String] else c.physDropped)
+              } finally (probe ++ matchedKeys).foreach(_.unpersist())
           }
           val v = base.getOrElse(0L) + 1L
           val (body, ckptDir) = encodeCommit(spark, root, v, files, schemaJson,
@@ -3838,7 +3905,7 @@ object VersionedTable {
           }
           hookProps = baseC.map(_.props).getOrElse(Map.empty)
           // a lost race makes the merge stale — recompute against the new head
-          Right(Staged(v, body, ckptDir, Seq(stagedDir)))
+          Right(Staged(v, body, ckptDir, stagedDirs))
         }
       }
       // a MERGE-maintained table fragments exactly like an append-
@@ -3851,27 +3918,25 @@ object VersionedTable {
     } finally deduped.unpersist()
   }
 
-  /** Copy-on-write file selection: build a predicate every MATCHED current
+  /** MERGE candidate selection: build a predicate every MATCHED current
     * row must satisfy (per key column: membership in the update keys'
     * IN-list, or their [min, max] range when the key set is large), then
-    * prune the base files with it. Kept files MAY contain matches
-    * (rewrite); skipped files provably contain none (carry). Any failure
-    * (exotic key type, stats gap) falls back to rewrite-everything —
+    * prune the base files with it. Kept files MAY contain matches (the
+    * probe decides); skipped files provably contain none (carry). Any
+    * failure (exotic key type, stats gap) falls back to every file —
     * selection is an optimization, never a correctness dependency. */
-  private def selectRewrite(spark: SparkSession, root: Path, c: Commit,
-      schema: StructType,
-      updates: DataFrame, keys: Seq[String]): (Seq[String], Seq[String]) = {
+  private def mergeCandidates(spark: SparkSession, root: Path, c: Commit,
+      schema: StructType, updates: DataFrame, keys: Seq[String]): Seq[String] = {
     // ckpt-anchored commits must NOT probe c.stats here (that forces the
     // deferred map); their selection runs distributed via pruneFiles
     if (c.files.isEmpty || (c.ckptInfo.isEmpty && c.stats.isEmpty))
-      return (c.files, Seq.empty)
+      return c.files
     scala.util.Try {
       val aggs = keys.flatMap(k => Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k")))
       val r = updates.agg(aggs.head, aggs.tail: _*).head()
       // a key column whose update values are ALL null can never
-      // equality-match an existing row: nothing to rewrite
-      if (keys.indices.exists(i => r.isNullAt(2 * i)))
-        (Seq.empty[String], c.files)
+      // equality-match an existing row: no candidate
+      if (keys.indices.exists(i => r.isNullAt(2 * i))) Seq.empty[String]
       else {
         val distinctRows =
           updates.select(keys.map(col): _*).distinct().limit(MaxInKeys + 1).collect()
@@ -3882,9 +3947,9 @@ object VersionedTable {
           } else col(k) >= lit(r.get(2 * i)) && col(k) <= lit(r.get(2 * i + 1))
         }
         val resolved = DataSkipping.resolve(spark, schema, perCol.reduce(_ && _))
-        pruneFiles(spark, root, c, resolved)
+        pruneFiles(spark, root, c, resolved)._1
       }
-    }.getOrElse((c.files, Seq.empty))
+    }.getOrElse(c.files)
   }
 
   /** Row-level DELETE as a versioned commit (the MERGE-family verb Delta
@@ -4883,15 +4948,7 @@ object VersionedTable {
         // scan ONLY candidate files, with existing DVs applied (so a second
         // delete never double-marks a row — generations stay disjoint and
         // countRows' subtraction stays exact)
-        val live = {
-          val base = physReadKeyed(spark, root, c, s, candKeys, withKeys = true)
-          if (!candKeys.exists(fk => c.dvRows.getOrElse(fk, 0L) > 0L)) base
-          else {
-            val dvAll = spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-              .filter(col(FileKeyCol).isin(candKeys: _*))
-            base.join(broadcast(dvAll), Seq(FileKeyCol, RowIdxCol), "left_anti")
-          }
-        }
+        val live = liveKeyed(spark, root, c, s, candKeys, withIds = false)
         val marked = live.filter(coalesce(predicate, lit(false)))
           .select(col(FileKeyCol), col(RowIdxCol)).cache()
         try {
@@ -4903,14 +4960,11 @@ object VersionedTable {
             val mergedDvRows = c.dvRows ++ perFile.map { case (k, n) =>
               k -> (c.dvRows.getOrElse(k, 0L) + n)
             }
-            // AUTO-PURGE: files the merged marks would push past the threshold
-            // are rewritten (survivors materialized) in this SAME commit — the
-            // marks never land, so the read-side anti-join stays bounded.
-            val purgeKeys = c.files.filter { fk =>
-              val m = mergedDvRows.getOrElse(fk, 0L)
-              m > 0L && m.toDouble / c.rows(fk) > purgeFraction
-            }
-            val purgeSet = purgeKeys.toSet
+            // AUTO-PURGE: files the new marks would push past the threshold
+            // are rewritten (survivors materialized) in this SAME commit —
+            // the marks never land, so the read-side anti-join stays bounded
+            val purgeSet = rewriteOverMarked(c, perFile, purgeFraction)
+            val purgeKeys = c.files.filter(purgeSet)
             val carryKeys = c.files.filterNot(purgeSet)
             // marks for carried files ride in a new sidecar; marks for purged
             // files are consumed by their rewrite
@@ -4959,13 +5013,24 @@ object VersionedTable {
   }
 
   /** Marked-rows fraction above which DV hygiene kicks in AUTOMATICALLY: a
-    * [[deleteVectorized]] that would push a file past this materializes
-    * that file's survivors in the same commit instead of carrying the
-    * marks (Delta tracks the same deleted-rows-fraction to self-schedule
-    * purges). Without it, a table absorbing daily point deletes pays an
-    * ever-growing anti-join until someone remembers to OPTIMIZE. Pass
-    * `purgeFraction = 1.0` to opt a delete out (pure merge-on-read). */
+    * [[deleteVectorized]] or [[upsert]] that would push a file past this
+    * rewrites that file in the same commit instead of carrying the marks
+    * (Delta tracks the same deleted-rows-fraction to self-schedule
+    * purges); see [[rewriteOverMarked]]. Without it, a table absorbing
+    * daily point deletes pays an ever-growing anti-join until someone
+    * remembers to OPTIMIZE. Pass `purgeFraction = 1.0` to opt a delete out
+    * (pure merge-on-read). */
   val DefaultDvPurgeFraction: Double = 0.5
+
+  /** THE mark-or-rewrite rule of the verbs that remove rows by marking them
+    * ([[upsert]], [[deleteVectorized]]): of the files gaining `newMarks`
+    * (rows per file), those whose existing plus new marks would exceed
+    * `fraction` of their rows are REWRITTEN instead; every other one keeps
+    * its bytes and takes the marks. */
+  private def rewriteOverMarked(c: Commit, newMarks: Map[String, Long],
+      fraction: Double = DefaultDvPurgeFraction): Set[String] =
+    newMarks.collect { case (fk, n) if n > 0L &&
+      (c.dvRows.getOrElse(fk, 0L) + n).toDouble / c.rows(fk) > fraction => fk }.toSet
 
   /** Maintenance verb: MATERIALIZE deletion-vector marks — rewrite every
     * file whose marked fraction exceeds `minFraction` (default: any marked
@@ -5393,87 +5458,83 @@ object VersionedTable {
     * holds, by construction, identical live rows in both versions (same
     * bytes, same deletion-vector marks) — its rows cancel out of the
     * multiset diff without being read. So the aggregation runs ONLY
-    * over files removed by one side or added by the other: a one-tile
-    * MERGE at 100 TB diffs two files, not the table. Files common to both
-    * versions can differ only by NEW deletion-vector marks; those rows are
-    * looked up by (file, row_index) against the mark delta and appended as
-    * deletes — again touching only the marked files.
+    * over files removed by one side or added by the other, plus the rows
+    * whose marks differ in files common to both ([[markDelta]], looked up
+    * by (file, row_index) in the marked files alone): a MERGE that marks
+    * k rows of one tile at 100 TB aggregates its applied rows and those k
+    * rows, not the tile and not the table. Marked rows join the same
+    * signed aggregation (−1 when newly marked, +1 when un-marked), so a
+    * re-sent unchanged row cancels like any other.
     *
     * Versions with evolved schemas (see upsert's evolveSchema) are aligned
     * first: columns missing on one side become typed nulls, so a row that
     * only gained a null new column reads as unchanged. */
   def changes(spark: SparkSession, path: String, fromV: Long, toV: Long): DataFrame = {
-    val (root, f, cFrom) = commitFor(spark, path, Some(fromV))
+    val (root, _, cFrom) = commitFor(spark, path, Some(fromV))
     val (_, _, cTo) = commitFor(spark, path, Some(toV))
     val fromSet = cFrom.files.toSet
     val toSet = cTo.files.toSet
-    val removed = cFrom.files.filterNot(toSet)
-    val added = cTo.files.filterNot(fromSet)
-    val before = dataFrameFor(spark, root, cFrom, removed)
-    val after = dataFrameFor(spark, root, cTo, added)
+    val before = dataFrameFor(spark, root, cFrom, cFrom.files.filterNot(toSet))
+    val after = dataFrameFor(spark, root, cTo, cTo.files.filterNot(fromSet))
     val types = (before.schema ++ after.schema).map(fl => fl.name -> fl.dataType).toMap
     val allCols = (before.columns ++ after.columns).distinct
-    def aligned(df: DataFrame) = df.select(allCols.map { c =>
+    def aligned(df: DataFrame, sign: Column) = df.select(allCols.map { c =>
       if (df.columns.contains(c)) col(c) else lit(null).cast(types(c)).as(c)
-    }: _*)
-    val net = aligned(after).withColumn(ChangeSignCol, lit(1L))
-      .unionByName(aligned(before).withColumn(ChangeSignCol, lit(-1L)))
+    } :+ sign.as(ChangeSignCol): _*)
+    val signed = aligned(after, lit(1L)).unionByName(aligned(before, lit(-1L)))
+    val net = markDelta(spark, root, cFrom, cTo, withIds = false)
+      .fold(signed)(m => signed.unionByName(aligned(m, col(ChangeSignCol))))
       .groupBy(allCols.map(col): _*)
       .agg(sum(col(ChangeSignCol)).as(ChangeSignCol))
       .filter(col(ChangeSignCol) =!= 0L)
-    val fileDiff = net.select(allCols.map(col) :+ explode(array_repeat(
+    net.select(allCols.map(col) :+ explode(array_repeat(
       when(col(ChangeSignCol) > 0L, lit("insert")).otherwise(lit("delete")),
       abs(col(ChangeSignCol)).cast("int"))).as("_change_type"): _*)
-    // Carried files whose deletion-vector marks can DIFFER — in EITHER
-    // direction: a dv-delete grows a file's mark set, but RESTORE across a
-    // dv-delete shrinks it (un-deleting rows = CDF inserts) or swaps it at
-    // an equal count. Only an identical sidecar list proves identical
-    // marks; otherwise every carried file with marks on either side is a
-    // candidate (unchanged files cancel out of the two anti-joins below —
-    // sidecars are point-delete-sized, so reading them twice is free).
-    val dvCandFiles =
+  }
+
+  /** The rows of files CARRIED from `cFrom` into `cTo` whose deletion-vector
+    * marks differ, with `cTo`'s columns (and with `withIds` their tracked
+    * [[RowIdCol]]) and a [[ChangeSignCol]]: −1 for a row `cTo` newly marks,
+    * +1 for a row it un-marks. Both directions occur: a DV delete or a
+    * marked MERGE grows a file's mark set, RESTORE across one shrinks it
+    * (un-deleting rows) or swaps it at an equal count. Only an identical
+    * sidecar list proves identical marks; otherwise every carried file
+    * with marks on either side is a candidate, and unchanged marks cancel
+    * in the two anti-joins (sidecars hold marks only, so reading them twice
+    * is cheap). None when no carried file can differ. The rows bind with
+    * `cTo`'s physical mapping (carried files hold the same bytes; across a
+    * DDL boundary they read as the destination version sees them, like
+    * the file diff). */
+  private def markDelta(spark: SparkSession, root: Path, cFrom: Commit, cTo: Commit,
+      withIds: Boolean): Option[DataFrame] = {
+    val fromSet = cFrom.files.toSet
+    val cand =
       if (cFrom.dv == cTo.dv) Seq.empty
-      else (fromSet & toSet).toSeq.filter(fk =>
-        cFrom.dvRows.getOrElse(fk, 0L) > 0L || cTo.dvRows.getOrElse(fk, 0L) > 0L)
-    if (dvCandFiles.isEmpty) fileDiff
-    else {
-      val s = cTo.schema
-      def marksOf(c: Commit): DataFrame =
-        if (c.dv.isEmpty)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            StructType(Seq(
-              org.apache.spark.sql.types.StructField(FileKeyCol,
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField(RowIdxCol,
-                org.apache.spark.sql.types.LongType))))
-        else spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-          .filter(col(FileKeyCol).isin(dvCandFiles: _*))
-          .select(col(FileKeyCol), col(RowIdxCol))
-      val fromMarks = marksOf(cFrom)
-      val toMarks = marksOf(cTo)
-      // to-only marks = newly deleted rows; from-only marks = un-deleted
-      // rows surfacing as inserts (the RESTORE direction)
-      val markDelta = toMarks
-        .join(fromMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
-        .withColumn("_change_type", lit("delete"))
-        .unionByName(fromMarks
-          .join(toMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
-          .withColumn("_change_type", lit("insert")))
-      // bind with the TO version's physical mapping (common files hold the
-      // same bytes; mapping differences across a DDL boundary follow the
-      // destination version's view, like the file diff does)
-      val markedRows = physReadKeyed(spark, root, cTo, s, dvCandFiles,
-        withKeys = true)
-        .join(broadcast(markDelta), Seq(FileKeyCol, RowIdxCol))
-        .select(col("_change_type") +:
-          s.fields.map(fl => col(fl.name)).toSeq: _*)
-      // align to the union schema like before/after, tag riding along
-      val alignedMarked = markedRows.select(col("_change_type") +: allCols.map { c =>
-        if (markedRows.columns.contains(c)) col(c) else lit(null).cast(types(c)).as(c)
-      }.toSeq: _*)
-      fileDiff.unionByName(alignedMarked)
-    }
+      else cTo.files.filter(fk => fromSet(fk) &&
+        (cFrom.dvRows.getOrElse(fk, 0L) > 0L || cTo.dvRows.getOrElse(fk, 0L) > 0L))
+    if (cand.isEmpty) return None
+    def marksOf(c: Commit): DataFrame =
+      if (c.dv.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          StructType(Seq(StructField(FileKeyCol, StringType), StructField(RowIdxCol, LongType))))
+      else spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
+        .filter(col(FileKeyCol).isin(cand: _*))
+        .select(col(FileKeyCol), col(RowIdxCol))
+    val fromMarks = marksOf(cFrom)
+    val toMarks = marksOf(cTo)
+    val delta = toMarks.join(fromMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
+      .withColumn(ChangeSignCol, lit(-1L))
+      .unionByName(fromMarks.join(toMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
+        .withColumn(ChangeSignCol, lit(1L)))
+    val s = cTo.schema
+    val sRead =
+      if (withIds) StructType(s.fields :+ StructField(RowIdCol, LongType, nullable = true))
+      else s
+    val rows = physReadKeyed(spark, root, cTo, sRead, cand, withKeys = true)
+      .join(broadcast(delta), Seq(FileKeyCol, RowIdxCol))
+    // a carried file's base id is identical in both commits (immutable)
+    val keyed = if (withIds) withTrackedIds(spark, cTo, cand, rows) else rows
+    Some(keyed.select(sRead.fields.map(fl => col(fl.name)).toSeq :+ col(ChangeSignCol): _*))
   }
 
   /** Row-IDENTITY change feed between two versions — requires row
@@ -5501,10 +5562,16 @@ object VersionedTable {
       s"$path: version $toV predates row tracking — use changes()")
     val fromSet = cFrom.files.toSet
     val toSet = cTo.files.toSet
-    val removed = cFrom.files.filterNot(toSet)
-    val added = cTo.files.filterNot(fromSet)
-    val before = rowIdFrame(spark, root, cFrom, removed)
-    val after = rowIdFrame(spark, root, cTo, added)
+    // carried files differ only by their mark deltas: newly-marked rows
+    // join the before side, un-marked ones (the RESTORE direction) the
+    // after side — each with its tracked id, so a marked MERGE's replaced
+    // row pairs with the row that inherited its id
+    val marks = markDelta(spark, root, cFrom, cTo, withIds = true)
+    def withMarks(df: DataFrame, sign: Long): DataFrame = marks.fold(df)(m =>
+      df.unionByName(m.filter(col(ChangeSignCol) === sign).drop(ChangeSignCol),
+        allowMissingColumns = true))
+    val before = withMarks(rowIdFrame(spark, root, cFrom, cFrom.files.filterNot(toSet)), -1L)
+    val after = withMarks(rowIdFrame(spark, root, cTo, cTo.files.filterNot(fromSet)), 1L)
     val types = (before.schema ++ after.schema)
       .map(fl => fl.name -> fl.dataType).toMap
     val allCols = (before.columns ++ after.columns).distinct
@@ -5542,55 +5609,9 @@ object VersionedTable {
       .select(col(RowIdCol), col("__a").as("__row"),
         when(col("__b").isNull, lit("insert"))
           .otherwise(lit("update_postimage")).as("_change_type"))
-    val fileDiff = pre.unionByName(post).select(
+    pre.unionByName(post).select(
       allCols.map(c2 => col(s"__row.`$c2`").as(c2)) :+
         col(RowIdCol) :+ col("_change_type"): _*)
-    // carried files can differ only by DV mark deltas (same contract and
-    // bound as changes()): newly-marked rows are deletes, un-marked rows
-    // (the RESTORE direction) are inserts — each with its tracked id
-    val dvCandFiles =
-      if (cFrom.dv == cTo.dv) Seq.empty
-      else (fromSet & toSet).toSeq.filter(fk =>
-        cFrom.dvRows.getOrElse(fk, 0L) > 0L || cTo.dvRows.getOrElse(fk, 0L) > 0L)
-    if (dvCandFiles.isEmpty) fileDiff
-    else {
-      val s = cTo.schema
-      def marksOf(c: Commit): DataFrame =
-        if (c.dv.isEmpty)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            StructType(Seq(StructField(FileKeyCol, StringType),
-              StructField(RowIdxCol, LongType))))
-        else spark.read.parquet(c.dv.map(r => new Path(root, r).toString): _*)
-          .filter(col(FileKeyCol).isin(dvCandFiles: _*))
-          .select(col(FileKeyCol), col(RowIdxCol))
-      val fromMarks = marksOf(cFrom)
-      val toMarks = marksOf(cTo)
-      val markDelta = toMarks
-        .join(fromMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
-        .withColumn("_change_type", lit("delete"))
-        .unionByName(fromMarks
-          .join(toMarks, Seq(FileKeyCol, RowIdxCol), "left_anti")
-          .withColumn("_change_type", lit("insert")))
-      val sPlus = StructType(s.fields :+
-        StructField(RowIdCol, LongType, nullable = true))
-      val marked = physReadKeyed(spark, root, cTo, sPlus, dvCandFiles,
-        withKeys = true)
-        .join(broadcast(markDelta), Seq(FileKeyCol, RowIdxCol))
-      import spark.implicits._
-      // a carried file's base id is identical in both commits (immutable)
-      val lookup = dvCandFiles.map(fk => (fk, cTo.baseRow.get(fk)))
-        .toDF(FileKeyCol, "__graft_base")
-      val withIds = marked.join(broadcast(lookup), Seq(FileKeyCol))
-        .withColumn(RowIdCol,
-          coalesce(col(RowIdCol), col("__graft_base") + col(RowIdxCol)))
-      val alignedMarked = withIds.select(
-        allCols.map { c2 =>
-          if (withIds.columns.contains(c2)) col(c2)
-          else lit(null).cast(types(c2)).as(c2)
-        }.toSeq :+ col(RowIdCol) :+ col("_change_type"): _*)
-      fileDiff.unionByName(alignedMarked)
-    }
   }
 
   /** DESCRIBE HISTORY: one row per committed version — file count,

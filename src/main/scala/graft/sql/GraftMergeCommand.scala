@@ -183,9 +183,10 @@ object GraftMergeTranslation {
 }
 
 /** The executable half: project the source to the target row shape, run
-  * [[VersionedTable.upsert]] (optimistic-concurrency CoW merge — file
-  * selection via manifest stats, recompute on lost CAS, tombstone rows
-  * removed not inserted). */
+  * [[VersionedTable.upsert]] (optimistic-concurrency merge — file
+  * selection via manifest stats, matched rows marked or their files
+  * rewritten, recompute on lost CAS, tombstone rows removed not
+  * inserted). */
 case class GraftMergeCommand(
     path: String,
     keys: Seq[String],

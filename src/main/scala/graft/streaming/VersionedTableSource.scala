@@ -21,12 +21,16 @@ import graft.sources.VersionedTable
   *
   * Offsets are committed version numbers. Each batch (fromV, toV] emits the
   * files present in toV but not in fromV, read with toV's schema. Non-append
-  * commits (MERGE/DELETE/OPTIMIZE rewrite or drop files) are REJECTED by
-  * default — a file-level changelog cannot represent row-level rewrites —
-  * unless `ignoreChanges=true`, which re-emits rewritten files whole
-  * (at-least-once for updated rows; Delta's option of the same name and the
-  * same caveat). Deletion-vector-only commits add no files and emit an
-  * empty batch. Use [[graft.sources.VersionedTable.changes]] for a
+  * commits are REJECTED by default — a file-level changelog cannot
+  * represent row-level rewrites — unless `ignoreChanges=true`, which
+  * re-emits what they add (at-least-once for updated rows; Delta's option
+  * of the same name and the same caveat). A commit is non-append when it
+  * rewrites or drops files (a copy-on-write MERGE/DELETE, OPTIMIZE), or
+  * when it adds files AND marks rows of files it carries (a MERGE done by
+  * deletion vectors: the added rows replace marked ones the stream already
+  * emitted) — decided per commit, so an append followed by a DV delete in
+  * one batch still streams. Deletion-vector-only commits add no files and
+  * emit an empty batch. Use [[graft.sources.VersionedTable.changes]] for a
   * row-level diff instead.
   *
   * RATE CONTROL (Delta's maxFilesPerTrigger / backfill-throttle parity):
@@ -300,27 +304,40 @@ private[streaming] class VersionedTableSource(
   private def seedLastEnd(v: Long): Unit =
     lastEnd = Some(lastEnd.fold(v)(math.max(_, v)))
 
-  /** Per-version file lists and column mappings are immutable once
-    * committed — memoize the few the throttle walk and getBatch revisit
-    * (both facts from ONE manifest resolution), so a trigger doesn't
-    * re-resolve the same chains for files and again for the mapping. */
+  /** Per-version file lists, column mappings and mark counts are
+    * immutable once committed — memoize the few the throttle walk and
+    * getBatch revisit (all from ONE manifest resolution), so a trigger
+    * doesn't re-resolve the same chains for each fact. */
   private val metaCache =
-    new java.util.LinkedHashMap[Long, (Seq[String], Map[String, String], Seq[String],
-        StructType)](
-      8, 0.75f, true) {
+    new java.util.LinkedHashMap[Long, VersionedTable.VersionMeta](8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[Long, (Seq[String], Map[String, String], Seq[String],
-            StructType)])
-          : Boolean = size > 4
+          e: java.util.Map.Entry[Long, VersionedTable.VersionMeta]): Boolean = size > 4
     }
-  private def metaAt(v: Long): (Seq[String], Map[String, String], Seq[String],
-      StructType) =
+  private def metaAt(v: Long): VersionedTable.VersionMeta =
     Option(metaCache.get(v)).getOrElse {
-      val m = VersionedTable.filesAndMappingOf(spark, path, v)
+      val m = VersionedTable.versionMetaOf(spark, path, v)
       metaCache.put(v, m)
       m
     }
-  private def filesAt(v: Long): Seq[String] = metaAt(v)._1
+  private def filesAt(v: Long): Seq[String] = metaAt(v).files
+
+  /** The first version of (fromV, toV] that adds files AND marks rows of
+    * files it carries from its parent — a MERGE done by deletion vectors,
+    * whose applied rows replace rows the file-level changelog already
+    * emitted. Decided per commit: an append followed by a DV delete in one
+    * batch is two commits, neither of which does both. */
+  private def markedMergeIn(fromV: Long, toV: Long): Option[Long] = {
+    // a first batch starts at the oldest version vacuum kept
+    val first =
+      if (fromV >= 1L) fromV
+      else VersionedTable.versions(spark, path).headOption.getOrElse(toV)
+    (first + 1L to toV).find { v =>
+      val (prev, cur) = (metaAt(v - 1L), metaAt(v))
+      val prevFiles = prev.files.toSet
+      cur.files.exists(!prevFiles(_)) && cur.files.exists(fk => prevFiles(fk) &&
+        cur.dvRows.getOrElse(fk, 0L) > prev.dvRows.getOrElse(fk, 0L))
+    }
+  }
 
   /** Column mapping PINNED at source creation, like the schema, together
     * with the version it came from. Every batch binds files under THIS
@@ -339,7 +356,7 @@ private[streaming] class VersionedTableSource(
     VersionedTable.latestVersion(spark, path)
       .map { v =>
         val m = metaAt(v)
-        (v, m._2, m._3, m._4.fields.map(f => f.name -> f.dataType).toMap)
+        (v, m.colMap, m.partCols, m.schema.fields.map(f => f.name -> f.dataType).toMap)
       }
       .getOrElse((-1L, Map.empty[String, String], Seq.empty[String],
         Map.empty[String, org.apache.spark.sql.types.DataType]))
@@ -394,7 +411,8 @@ private[streaming] class VersionedTableSource(
     val fromV = start.map(version).getOrElse(math.max(0L, startingVersion - 1L))
     val toV = version(end)
     seedLastEnd(toV) // re-seed after restart (committed AND replay paths)
-    val (toFiles, toMapping, toPartCols, toSchema) = metaAt(toV)
+    val VersionedTable.VersionMeta(toFiles, toMapping, toPartCols, toSchema, _) =
+      metaAt(toV)
     // The guard fires in BOTH directions: forward (toV > pinned — the
     // table was re-partitioned after the stream started) AND on a
     // recovery-REPLAYED batch whose end version predates a re-partitioning
@@ -469,6 +487,16 @@ private[streaming] class VersionedTableSource(
           "changelog cannot represent row-level rewrites; restart with " +
           "option(\"ignoreChanges\",\"true\") to re-emit rewritten files " +
           "whole, or consume VersionedTable.changes for a row-level diff.")
+    if (!ignoreChanges) markedMergeIn(fromV, toV).foreach { v =>
+      throw new IllegalStateException(
+        s"$path: versions ($fromV, $toV] contain a non-append commit " +
+          s"(version $v adds files and marks rows of files it carries — a " +
+          "MERGE by deletion vectors). A file-level changelog cannot " +
+          "represent row-level rewrites; restart with " +
+          "option(\"ignoreChanges\",\"true\") to emit the MERGE's applied " +
+          "rows as appends, or consume VersionedTable.changes for a " +
+          "row-level diff.")
+    }
     val added = toFiles.filterNot(fromFiles)
     val root = new Path(path)
     // COLUMN MAPPING: appended files store PHYSICAL names — bind the

@@ -758,4 +758,33 @@ class MaterializedViewSpec extends SparkSpec {
       assert(viewRows(mv) == fullAgg(src), s"distinct=$distinctCols")
     }
   }
+
+  test("one refresh scans the marked source file in exactly one job (plain and COUNT(DISTINCT) views)") {
+    Seq(Nil, Seq("id")).foreach { distinctCols =>
+      val base = tmp(); val src = base + "/src"; val mv = base + "/mv"
+      VersionedTable.write(
+        (1L to 100L).map(i => (i, if (i % 2 == 0) "a" else "b", i % 3, i))
+          .toDF("id", "g", "g2", "v").repartitionByRange(4, col("id")),
+        src, statsCols = Seq("id"))
+      MaterializedView.create(spark, src, mv, Seq("g", "g2"), Seq("v"),
+        distinctCols = distinctCols)
+      val v1 = VersionedTable.latestVersion(spark, src).get
+      // a MERGE matching 3 rows of one 25-row file marks them
+      VersionedTable.upsert(Seq((1L, "c", 0L, 7L), (2L, "a", 5L, 8L), (3L, "b", 0L, 9L))
+        .toDF("id", "g", "g2", "v"), src, Seq("id"))
+      val before = VersionedTable.filesOf(spark, src, v1)
+      assert(before.forall(VersionedTable.filesOf(spark, src, v1 + 1).contains))
+      val marked = VersionedTable.history(spark, src)
+        .filter(col("version") === v1 + 1).collect().head.getAs[Long]("num_dv_deleted")
+      assert(marked == 3L, s"distinct=$distinctCols: the MERGE must mark, not rewrite")
+      val file = VersionedTable.pruneInfo(spark, src, col("id") <= 3L, Some(v1))._1
+      assert(file.size == 1, file)
+      val jobs = OpenLoggingFs.jobsOpening(spark,
+        new org.apache.hadoop.fs.Path(file.head).toUri.getPath) {
+        MaterializedView.refresh(spark, mv)
+      }
+      assert(jobs.size == 1, s"distinct=$distinctCols: jobs $jobs")
+      assert(viewRows(mv) == fullAgg(src), s"distinct=$distinctCols")
+    }
+  }
 }

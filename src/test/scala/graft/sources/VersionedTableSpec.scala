@@ -153,6 +153,39 @@ class VersionedTableSpec extends SparkSpec {
   private def localFile(f: String): java.io.File =
     new java.io.File(new org.apache.hadoop.fs.Path(f).toUri.getPath)
 
+  /** Per data file (root-relative key), the deletion-vector marks version
+    * `v` records, read from the manifest's bytes (`dv_rows`). */
+  private def marksAt(path: String, v: Long): Map[String, Long] = {
+    val mf = new java.io.File(path, f"_graft_log/$v%08d.json")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(mf)
+    import scala.jdk.CollectionConverters._
+    Option(node.get("dv_rows")).toSeq.flatMap(_.fields().asScala)
+      .map(e => e.getKey -> e.getValue.asLong()).toMap
+  }
+
+  /** Content digest of every data file of version `v`, by root-relative key. */
+  private def digestsAt(path: String, v: Long): Map[String, String] =
+    VersionedTable.filesOf(spark, path, v).map { k =>
+      val bytes = java.nio.file.Files.readAllBytes(new java.io.File(path, k).toPath)
+      k -> java.security.MessageDigest.getInstance("MD5").digest(bytes)
+        .map("%02x".format(_)).mkString
+    }.toMap
+
+  /** Rows of the data files version `v` adds over version `v - 1`. */
+  private def addedRows(path: String, v: Long): Long = {
+    val added = VersionedTable.filesOf(spark, path, v)
+      .diff(VersionedTable.filesOf(spark, path, v - 1))
+    if (added.isEmpty) 0L else spark.read.parquet(added.map(a => s"$path/$a"): _*).count()
+  }
+
+  /** Canonical paths of the files version `v` marks rows of. */
+  private def markedTiles(path: String, v: Long): Set[String] =
+    marksAt(path, v).keySet.map(k => new java.io.File(path, k).getCanonicalPath)
+
+  /** Canonical paths of the files of version 1 whose stats admit `p`. */
+  private def tilesHolding(path: String, p: org.apache.spark.sql.Column): Set[String] =
+    VersionedTable.pruneInfo(spark, path, p, Some(1L))._1.map(localFile(_).getCanonicalPath).toSet
+
   /** Range-clustered 4-file table over id 0..999 with id stats recorded. */
   private def rangeTable(path: String): Unit = {
     val df = spark.range(0, 1000).select(col("id"),
@@ -165,15 +198,22 @@ class VersionedTableSpec extends SparkSpec {
     rangeTable(path)
     val v1Files = filesOf(path)
     assert(v1Files.size == 4)
+    val v1Digests = digestsAt(path, 1L)
     // update keys all inside ONE range tile (ids 100..105)
     val updates = spark.range(100, 106).select(col("id"), lit("UPDATED").as("v"))
     val v2 = VersionedTable.upsert(updates, path, Seq("id"))
     val v2Files = filesOf(path)
-    // file-identity audit: exactly the 3 non-matching tiles carried by
-    // reference — same absolute paths, bytes untouched
-    val carried = v2Files intersect v1Files
-    assert(carried.size == 3, s"carried=${carried.size}, expected 3 of ${v1Files.size}")
-    assert((v1Files -- v2Files).size == 1, "exactly the matched tile replaced")
+    // file-identity audit: 6 of 250 rows match, under the rewrite fraction,
+    // so NO data file is removed — every tile is carried by reference with
+    // its bytes untouched, only the matched tile gains marks (6), and the
+    // added files hold exactly the 6 applied rows
+    assert(v1Files.subsetOf(v2Files), s"no data file removed: ${v1Files -- v2Files}")
+    assert(addedRows(path, 2L) == 6L, "only the applied rows are staged")
+    assert(digestsAt(path, 2L).filter(kv => v1Digests.contains(kv._1)) == v1Digests)
+    val marks = marksAt(path, 2L)
+    assert(marks.values.toSeq == Seq(6L), marks.toString)
+    assert(markedTiles(path, 2L) == tilesHolding(path, col("id").between(100, 105)),
+      "only the matched tile is marked")
     // result is still the correct MERGE
     val got = VersionedTable.read(spark, path)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -215,16 +255,25 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.write(TableIO.zPlaced(grid, "a", "b", bits = 8), path, Seq("a", "b"))
     val v1Files = filesOf(path)
     assert(v1Files.size >= 8, s"need a multi-file layout, got ${v1Files.size}")
+    val v1Digests = digestsAt(path, 1L)
     // update keys confined to one small z-box
-    val updates = grid
-      .filter(col("a").between(8, 11) && col("b").between(8, 11))
+    val box = col("a").between(8, 11) && col("b").between(8, 11)
+    val updates = grid.filter(box)
       .select(col("a"), col("b"), lit(-1L).as("payload"))
     VersionedTable.upsert(updates, path, Seq("a", "b"))
     val v2Files = filesOf(path)
-    val rewritten = v1Files -- v2Files
-    assert(rewritten.nonEmpty, "the matched tile must be rewritten")
-    assert(rewritten.size <= 2,
-      s"a one-tile upsert must not rewrite the table: rewrote ${rewritten.size} of ${v1Files.size}")
+    // 16 matched rows are far under the rewrite fraction of their tile: no
+    // data file is removed, every file keeps its bytes, only the matched
+    // tile(s) gain marks — 16 in all — and only the 16 applied rows are staged
+    assert(v1Files.subsetOf(v2Files), s"no data file removed: ${v1Files -- v2Files}")
+    assert(addedRows(path, 2L) == 16L, "only the applied rows are staged")
+    assert(digestsAt(path, 2L).filter(kv => v1Digests.contains(kv._1)) == v1Digests)
+    val marked = markedTiles(path, 2L)
+    assert(marked.nonEmpty && marked.subsetOf(tilesHolding(path, box)),
+      s"only the matched tile's files are marked: $marked")
+    assert(marked.size <= 2,
+      s"a one-tile upsert must not mark the table: marked ${marked.size} of ${v1Files.size}")
+    assert(marksAt(path, 2L).values.sum == 16L)
     // MERGE result correct
     val got = VersionedTable.read(spark, path)
     assert(got.filter(col("payload") === -1L).count() == 16)
@@ -496,8 +545,11 @@ class VersionedTableSpec extends SparkSpec {
     assert(now.filter(col("id").isin(101L, 102L)).count() == 0)
     assert(now.filter(col("id") === 100L).select("v").as[String].head() == "UPD")
     assert(now.filter(col("id") === 2000L).count() == 1)
-    // still copy-on-write: only the matched tile was rewritten
-    assert((filesOf(path) intersect v1Files).size == 3)
+    // merge-on-read: no data file removed, only the matched tile marked
+    // (its 3 matched rows), only the 2 applied rows staged
+    assert(v1Files.subsetOf(filesOf(path)) && addedRows(path, 2L) == 2L)
+    assert(markedTiles(path, 2L) == tilesHolding(path, col("id").between(100, 102)))
+    assert(marksAt(path, 2L).values.sum == 3L)
     // change feed reports the tombstoned rows as deletes
     val ch = VersionedTable.changes(spark, path, 1L, 2L).collect()
     val dels = ch.filter(_.getAs[String]("_change_type") == "delete").map(_.getLong(0)).toSet
@@ -513,9 +565,12 @@ class VersionedTableSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("cdfg").toString + "/t"
     rangeTable(path)
     val v1Files = filesOf(path)
-    VersionedTable.upsert( // rewrites 1 tile, carries 3
+    VersionedTable.upsert( // marks 6 rows of 1 tile, carries all 4
       spark.range(100, 106).select(col("id"), lit("U").as("v")), path, Seq("id"))
-    val carried = filesOf(path) intersect v1Files
+    val marked = markedTiles(path, 2L)
+    assert(marked == tilesHolding(path, col("id").between(100, 105)))
+    assert(v1Files.subsetOf(filesOf(path)))
+    val carried = v1Files.filterNot(f => marked(localFile(f).getCanonicalPath))
     assert(carried.size == 3)
     val ch = VersionedTable.changes(spark, path, 1L, 2L)
     val got = ch.collect().map(r =>
@@ -1109,7 +1164,8 @@ class VersionedTableSpec extends SparkSpec {
     rangeTable(path) // v1 writes 4 files
     val v1Files = filesOf(path)
     VersionedTable.upsert( // v2 rewrites 1 tile, carries 3 of v1's files
-      spark.range(100, 106).select(col("id"), lit("U").as("v")), path, Seq("id"))
+      // (200 of the tile's 250 rows match: past the rewrite fraction)
+      spark.range(0, 200).select(col("id"), lit("U").as("v")), path, Seq("id"))
     VersionedTable.vacuum(spark, path, keepLast = 1, orphanRetentionMs = 0L)
     assert(VersionedTable.versions(spark, path) == Seq(2L))
     // the 3 carried v1 files must still exist; only the replaced tile is gone
@@ -2138,7 +2194,7 @@ class VersionedTableSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val path = java.nio.file.Files.createTempDirectory("cdfx").toString + "/t"
     rangeTable(path)
-    VersionedTable.upsert( // rewrites the tile(s) holding ids 240..259
+    VersionedTable.upsert( // marks ids 240..259 in the tiles holding them
       spark.range(240, 260).select(col("id"), lit("U").as("v")), path, Seq("id"))
     val ch = VersionedTable.changes(spark, path, 1L, 2L)
     assert(ch.count() == 40)
@@ -2212,5 +2268,135 @@ class VersionedTableSpec extends SparkSpec {
     }
     assert(jobs.size == 1, s"jobs $jobs")
     assert(VersionedTable.read(spark, path).filter(col("v") === "U").count() == 10L)
+  }
+
+  /** One 100-row file over ids 0..99 (payload v<id>) with id stats. */
+  private def oneFile(path: String): Unit =
+    VersionedTable.write(spark.range(0, 100).select(col("id"),
+      concat(lit("v"), col("id")).as("v")).coalesce(1), path, Seq("id"))
+
+  test("marked MERGE: k <= N/2 matches of one N-row file keep every data file byte-identical, stage only the applied rows, record k marks") {
+    Seq(1, 30, 50).foreach { k =>
+      val path = java.nio.file.Files.createTempDirectory("mor").toString + "/t"
+      oneFile(path)
+      val v1Digests = digestsAt(path, 1L)
+      // k matched keys (ids 10 until 10 + k) plus 5 new ones
+      val updates = spark.range(10, 10 + k).union(spark.range(500, 505))
+        .select(col("id"), lit("U").as("v"))
+      val v2 = VersionedTable.upsert(updates, path, Seq("id"))
+      assert(digestsAt(path, v2).filter(kv => v1Digests.contains(kv._1)) == v1Digests,
+        s"k=$k")
+      assert(addedRows(path, v2) == k + 5L, s"k=$k: only the applied rows are staged")
+      assert(marksAt(path, v2) == v1Digests.keySet.map(_ -> k.toLong).toMap, s"k=$k")
+      val model = VersionedTable.read(spark, path, Some(1L))
+        .join(updates.select("id"), Seq("id"), "left_anti").unionByName(updates)
+      assert(sortedRows(path) == model.collect().map(_.toString).toSeq.sorted, s"k=$k")
+      assert(VersionedTable.countRows(spark, path) == 105L)
+    }
+  }
+
+  test("a MERGE above the rewrite fraction rewrites the file and leaves no marks; deleteVectorized shares the boundary") {
+    def layout(verb: String => Unit): (Boolean, Map[String, Long]) = {
+      val path = java.nio.file.Files.createTempDirectory("morb").toString + "/t"
+      oneFile(path)
+      val v1 = VersionedTable.filesOf(spark, path, 1L).toSet
+      verb(path)
+      val v2 = VersionedTable.latestVersion(spark, path).get
+      (v1.subsetOf(VersionedTable.filesOf(spark, path, v2).toSet), marksAt(path, v2))
+    }
+    def merge(k: Int)(p: String): Unit = VersionedTable.upsert(
+      spark.range(0, k).select(col("id"), lit("U").as("v")), p, Seq("id"))
+    def dvDelete(k: Int)(p: String): Unit =
+      VersionedTable.deleteVectorized(spark, p, col("id") < k)
+    // 50 of 100 is not above DefaultDvPurgeFraction (0.5): marked, file kept
+    Seq(merge(50) _, dvDelete(50) _).foreach { verb =>
+      val (kept, marks) = layout(verb)
+      assert(kept && marks.values.toSeq == Seq(50L), marks.toString)
+    }
+    // 51 of 100 is above it: the file is rewritten and no mark lands
+    assert(layout(merge(51)) == ((false, Map.empty[String, Long])))
+    assert(layout(dvDelete(51)) == ((false, Map.empty[String, Long])))
+    // existing marks count toward the fraction: 20 marked + 31 matched > 50
+    val path = java.nio.file.Files.createTempDirectory("morc").toString + "/t"
+    oneFile(path)
+    VersionedTable.deleteVectorized(spark, path, col("id") >= 80)
+    val f1 = VersionedTable.filesOf(spark, path, 2L).toSet
+    VersionedTable.upsert(spark.range(0, 30).select(col("id"), lit("U").as("v")),
+      path, Seq("id"))
+    assert(f1.subsetOf(VersionedTable.filesOf(spark, path, 3L).toSet))
+    assert(marksAt(path, 3L).values.toSeq == Seq(50L))
+    VersionedTable.upsert(spark.range(30, 31).select(col("id"), lit("U").as("v")),
+      path, Seq("id"))
+    assert(!f1.subsetOf(VersionedTable.filesOf(spark, path, 4L).toSet))
+    assert(marksAt(path, 4L).isEmpty)
+    assert(VersionedTable.read(spark, path).count() == 80L)
+    assert(VersionedTable.read(spark, path).filter(col("v") === "U").count() == 31L)
+  }
+
+  test("change feed across a marked MERGE: one full-row exchange fed only by the changed rows, equal to the two-exceptAll model") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val path = java.nio.file.Files.createTempDirectory("morcdf").toString + "/t"
+    VersionedTable.write(spark.range(0, 1000).select(col("id"),
+      concat(lit("v"), col("id")).as("v")).coalesce(1), path, Seq("id"))
+    // 40 matched keys — 20 changed, 20 re-sent unchanged — and 10 new ones
+    val updates = spark.range(100, 120).select(col("id"), lit("U").as("v"))
+      .union(spark.range(120, 140).select(col("id"), concat(lit("v"), col("id")).as("v")))
+      .union(spark.range(5000, 5010).select(col("id"), lit("N").as("v")))
+    VersionedTable.upsert(updates, path, Seq("id"))
+    assert(marksAt(path, 2L).values.toSeq == Seq(40L), "the MERGE must mark, not rewrite")
+    val ch = VersionedTable.changes(spark, path, 1L, 2L)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val want = modelChanges(path, 1L, 2L)
+    // unchanged re-sends cancel: 20 updates (delete + insert) and 10 inserts
+    assert(sorted(ch.select(want.columns.map(col).toSeq: _*)) == sorted(want))
+    assert(ch.collect().length == 50)
+    def shuffles(sp: SparkPlan): Seq[ShuffleExchangeExec] = sp.collect {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: ShuffleExchangeExec => Seq(e)
+    }.flatten
+    val fullRow = shuffles(ch.queryExecution.executedPlan).filter(_.outputPartitioning match {
+      case h: HashPartitioning =>
+        Set("id", "v").subsetOf(h.expressions.flatMap(_.references.map(_.name)).toSet)
+      case _ => false
+    })
+    assert(fullRow.size == 1, ch.queryExecution.executedPlan.toString)
+    // its input: the 50 added rows and the 40 marked ones, never the
+    // marked file's other 960
+    val records = fullRow.head.metrics("shuffleRecordsWritten").value
+    assert(records > 0L && records <= 90L, s"records into the exchange: $records")
+  }
+
+  test("row tracking: changesWithRowIds pairs a marked MERGE's update pre-image and post-image") {
+    val path = java.nio.file.Files.createTempDirectory("morrt").toString + "/t"
+    oneFile(path)
+    VersionedTable.setProperties(spark, path, Map(VersionedTable.RowTrackingKey -> "true"))
+    def ids(v: Long): Map[Long, Long] = VersionedTable.readWithRowIds(spark, path, Some(v))
+      .select(col("id"), col(VersionedTable.RowIdCol)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val v0 = VersionedTable.latestVersion(spark, path).get
+    val before = ids(v0)
+    val vM = VersionedTable.upsert(Seq((3L, "CHANGED"), (4L, "v4"), (700L, "new"))
+      .toDF("id", "v"), path, Seq("id"))
+    assert(marksAt(path, vM).values.toSeq == Seq(2L), "the MERGE must mark, not rewrite")
+    val after = ids(vM)
+    assert(before.forall { case (k, id) => after(k) == id }, "every matched and kept row keeps its id")
+    val cdf = VersionedTable.changesWithRowIds(spark, path, v0, vM)
+      .select(col("id"), col("v"), col(VersionedTable.RowIdCol), col("_change_type"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSet
+    assert(cdf == Set((3L, "v3", before(3L), "update_preimage"),
+      (3L, "CHANGED", before(3L), "update_postimage"),
+      (700L, "new", after(700L), "insert")), cdf.toString)
+    // RESTORE across it reverses the pairing: marks shrink, the file leaves
+    val vR = VersionedTable.restore(spark, path, v0)
+    val back = VersionedTable.changesWithRowIds(spark, path, vM, vR)
+      .select(col("id"), col("v"), col("_change_type")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    assert(back == Set((3L, "CHANGED", "update_preimage"), (3L, "v3", "update_postimage"),
+      (700L, "new", "delete")), back.toString)
   }
 }

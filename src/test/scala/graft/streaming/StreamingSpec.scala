@@ -338,6 +338,42 @@ class StreamingSpec extends SparkSpec {
     assert(all.contains(2 -> "B2"))
   }
 
+  test("versioned table as a streaming SOURCE: a MERGE done by marks is refused per commit; an append then a DV delete streams") {
+    import graft.sources.VersionedTable
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val table = Files.createTempDirectory("vtsrcm").toString + "/t"
+    VersionedTable.write((1 to 10).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), table)
+    def drain(name: String, opts: (String, String)*): Set[(Int, String)] = {
+      val q = spark.readStream.format("graft-table").options(opts.toMap).load(table)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      while (spark.streams.active.nonEmpty) Thread.sleep(50)
+      spark.table(name).collect().map(r => r.getInt(0) -> r.getString(1)).toSet
+    }
+    // an append, then a DV delete of one of the file's rows, in ONE batch
+    // from version 1: neither commit both adds files and marks carried rows
+    VersionedTable.append(Seq((11, "v11")).toDF("id", "v"), table)
+    VersionedTable.deleteVectorized(spark, table, col("id") === 10)
+    assert(drain("vt_srcm1", "startingVersion" -> "2") == Set(11 -> "v11"))
+    // a MERGE matching 1 of 10 rows stays under the rewrite fraction: it
+    // marks the row and adds the applied one — no file is removed, yet the
+    // file-level changelog must refuse it
+    val before = VersionedTable.filesOf(spark, table, 3L)
+    VersionedTable.upsert(Seq((2, "B2")).toDF("id", "v"), table, Seq("id"))
+    assert(before.forall(VersionedTable.filesOf(spark, table, 4L).contains))
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain("vt_srcm2", "startingVersion" -> "4")
+    }
+    assert(err.getMessage.contains("non-append commit") ||
+      Option(err.getCause).exists(_.getMessage.contains("non-append commit")),
+      err.getMessage)
+    while (spark.streams.active.nonEmpty) Thread.sleep(50)
+    // ignoreChanges emits the MERGE's applied rows as appends
+    assert(drain("vt_srcm3", "startingVersion" -> "4", "ignoreChanges" -> "true") ==
+      Set(2 -> "B2"))
+  }
+
   test("table→table streaming ETL: source tails bronze, exactly-once sink merges silver") {
     import graft.sources.VersionedTable
     import spark.implicits._
