@@ -182,7 +182,7 @@ object SkippingQueries {
     if (VersionedTable.latestVersion(spark, path).contains(1L))
       // purgeFraction=1.0 opts OUT of auto-purge: this query's entire point
       // is exercising the merge-on-read path (marks present at scan time)
-      VersionedTable.deleteVectorized(spark, path,
+      VersionedTable.delete(spark, path,
         col("user_id").between(DvLo, DvHi), purgeFraction = 1.0)
     path
   }
@@ -2580,7 +2580,8 @@ object SkippingQueries {
   // --------------------------------------------------------------------------
   // q_mv_minmax — MIN/MAX materialized view under the oracle gate: inserts
   // fold monotonically, and the DELETE removes stored extrema (the max
-  // l_quantity rows of several groups), forcing the per-group repair path;
+  // l_quantity rows of several groups) by marking them in a deletion-vector
+  // sidecar, forcing the per-group repair path over a marked change feed;
   // the rewrite-asserted query then proves repaired extrema, folded counts,
   // and the rollup composition all at once against DuckDB's replay.
   // --------------------------------------------------------------------------

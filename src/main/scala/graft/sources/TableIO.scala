@@ -142,25 +142,16 @@ object TableIO {
         spark.read.schema(schema).parquet(path)
     }
 
-  /** Z-order value for two non-negative integer columns: interleaves the low
-    * `bits` bits of each (a in odd positions, b in even), so sorting by the
-    * result gives MULTI-dimensional locality — parquet row-group min/max
-    * stats become selective on BOTH columns, where a lexicographic
-    * sortWithinPartitions(a, b) leaves b's per-group range at full width.
-    * This is the actual mechanism behind the reference's suggested
-    * `OPTIMIZE ... ZORDER BY` (02_silver_events.sql:61), not just a
-    * stand-in sort. Pure shift/mask expression chain — whole-stage codegen,
-    * no UDF. */
-  def zValue(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      bits: Int = 16): org.apache.spark.sql.Column = zValue(Seq(a, b), bits)
-
   /** N-dimensional Z-order value: interleaves the low `bits` bits of each
-    * column (first column in the most significant interleave position), so
-    * sorting by the result gives N-dimensional locality — clustering on
-    * (tenant, date, type) keeps every file narrow in ALL THREE, where a
-    * lexicographic sort leaves the trailing dimensions at full width per
-    * file. `dims × bits` must fit a signed long. Pure shift/mask expression
-    * chain — whole-stage codegen, no UDF. */
+    * non-negative integer column (first column in the most significant
+    * interleave position), so sorting by the result gives N-dimensional
+    * locality — parquet and manifest min/max stats become selective on
+    * EVERY column, where a lexicographic sort leaves the trailing
+    * dimensions at full width per file. This is the actual mechanism
+    * behind the reference's suggested `OPTIMIZE ... ZORDER BY`
+    * (02_silver_events.sql:61), not just a stand-in sort. `dims × bits`
+    * must fit a signed long. Pure shift/mask expression chain —
+    * whole-stage codegen, no UDF. */
   def zValue(cols: Seq[org.apache.spark.sql.Column],
       bits: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{concat_ws, lit, raise_error, shiftright, when}
@@ -171,7 +162,7 @@ object TableIO {
     // out-of-range values would alias mod 2^bits and silently destroy the
     // locality the clustering exists for — fail loudly instead. Nulls fail
     // loudly too: null-in-null-out here would make the whole z-value null,
-    // which writeZOrdered's partitioner would hit as an opaque executor NPE
+    // which zPlaced's partitioner would hit as an opaque executor NPE
     // on getLong — surface the actual problem (a null clustering key) at
     // the row that has it.
     def checked(c: org.apache.spark.sql.Column) = {
@@ -189,39 +180,19 @@ object TableIO {
     }.reduce(_ + _)
   }
 
-  /** Overwrite `path` with rows clustered along the Z-curve of (a, b):
-    * range-partition by z-value (so file boundaries follow the curve), then
-    * sort within partitions. */
-  /** Rewrite the table clustered along the Z-curve with TILE-ALIGNED file
-    * boundaries: the partition id is the z-value's top bits (an identity
-    * partitioner), not a sampled range split. Sampled boundaries
-    * (repartitionByRange) land a few rows past power-of-two z lines often
-    * enough that a file straddling e.g. the z-space midline carries
-    * min/max stats spanning BOTH dimensions' full width — exactly the files
-    * stats pruning then can't skip. Aligned buckets make every file's
-    * (a, b) ranges provably ≤ the tile width, deterministically. The RDD
-    * hop exists because Spark SQL exposes no explicit-partition-placement
-    * exchange; this is the rare per-partition-imperative case, and it is an
+  /** Tile-aligned z placement of `df` along the Z-curve of `cols`: one
+    * output partition per aligned z-tile of the hypercube, rows z-sorted
+    * within it, so a writer staging 1 file : 1 partition
+    * ([[VersionedTable.write]] with stats columns, [[write]]) gives every
+    * file provably narrow ranges on every column — exactly what file-level
+    * min/max stats need to prune. The partition id is the z-value's top
+    * bits (an identity partitioner), not a sampled range split: sampled
+    * boundaries (repartitionByRange) land a few rows past power-of-two z
+    * lines often enough that a file straddling e.g. the z-space midline
+    * carries stats spanning every dimension's full width — exactly the
+    * files stats pruning then can't skip. The RDD hop exists because Spark
+    * SQL exposes no explicit-partition-placement exchange; this is an
     * OPTIMIZE-style maintenance rewrite, not a query path. */
-  def writeZOrdered(
-      df: DataFrame,
-      path: String,
-      a: String,
-      b: String,
-      bits: Int = 16): Unit =
-    write(zPlaced(df, a, b, bits), path)
-
-  /** The placement underlying [[writeZOrdered]], exposed so other writers
-    * (e.g. [[VersionedTable.write]] with stats columns) can stage the same
-    * tile-aligned layout: one output partition per aligned z-tile, rows
-    * z-sorted within it. Writing the result 1 file : 1 partition gives every
-    * file provably narrow (a, b) ranges — exactly what file-level min/max
-    * stats need to prune effectively. */
-  def zPlaced(df: DataFrame, a: String, b: String, bits: Int = 16): DataFrame =
-    zPlaced(df, Seq(a, b), bits)
-
-  /** N-dimensional tile-aligned z placement: one output partition per
-    * aligned z-tile of the `cols` hypercube, rows z-sorted within it. */
   def zPlaced(df: DataFrame, cols: Seq[String], bits: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
@@ -262,27 +233,6 @@ object TableIO {
       .repartitionByRange(n, keys: _*)
       .sortWithinPartitions(keys: _*)
       .drop("__z")
-  }
-
-  /** Small-file compaction — the other half of the reference's OPTIMIZE
-    * story (01_bronze.sql:18-26 autoCompact): rewrite the table into
-    * ceil(tableBytes / targetFileBytes) files via the atomic overwrite, so
-    * a table that accumulated many small appends goes back to scan-friendly
-    * file sizes. Returns the file count written. */
-  def compact(spark: SparkSession, path: String, targetFileBytes: Long = 128L << 20): Int = {
-    val table = new Path(path)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    var bytes = 0L
-    val it = fs.listFiles(table, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
-    }
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // read fully before the atomic overwrite stages the rewrite
-    val df = read(spark, path)
-    write(df.repartition(nFiles), path)
-    nFiles
   }
 
   /** Hive-partitioned NDJSON writer — the generator-side layout of the

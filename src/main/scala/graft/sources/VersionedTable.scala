@@ -34,7 +34,13 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   *    deletion vectors) unless the marks would pass
   *    [[DefaultDvPurgeFraction]] of a file, which it then rewrites; a daily
   *    upsert touching 0.1% of keys writes ~0.1% of rows, not 100%.
-  *  - [[delete]] rewrites only files whose stats intersect the predicate.
+  *  - [[delete]] reads only files whose stats intersect the predicate and
+  *    marks their matching rows under the same mark-or-rewrite rule,
+  *    rewriting a file only when its marks would pass the fraction.
+  *  - every rewriting verb ([[upsert]], [[delete]], [[update]],
+  *    [[purgeDeletes]], [[compact]], [[zOrderBy]]) lands ONE commit shape,
+  *    [[replaceFiles]]: remove some files, add their rewrite, carry the
+  *    rest with their stats, row counts and marks.
   *  - [[compact]] (OPTIMIZE) bin-packs small files into target-size files
   *    as a new version, carrying already-right-sized files untouched.
   *  - [[append]] / [[commitBatch]] add files without touching any existing
@@ -1232,6 +1238,65 @@ object VersionedTable {
       case None => c.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
     }
 
+  /** THE file-replacement commit every rewriting verb lands (Delta's DML
+    * action shape: remove some files, add some, carry the rest). Over head
+    * `b`/`c`, the staged `rows` (None: a commit that only marks) replace
+    * the `replaced` files at version b + 1:
+    *
+    *  - rows stage under the write contract ([[withContract]]; a violation
+    *    refuses as [[translateViolation]] says), with stats on `statsCols`
+    *    or, when empty, the parent's ([[inheritedStatsCols]]) and a row
+    *    count per file; zero-row staged files drop out ([[dropEmpty]]);
+    *  - every other file is carried with its stats, row count and marks;
+    *    `marks` (new marked rows per carried file, and the (file key, row
+    *    index) rows recording them, staged as one sidecar) add to them,
+    *    and no replaced file keeps a mark;
+    *  - ONE column-mapping rule: a commit that carries files keeps `colmap`
+    *    and `phys_dropped` (carried files still need them); one that
+    *    carries none writes logical names and sheds both.
+    *
+    * `schema`, `txn` and `props` override the parent's. */
+  private def replaceFiles(spark: SparkSession, path: String, b: Long,
+      c: Commit, replaced: Set[String], rows: Option[DataFrame],
+      marks: Option[(Map[String, Long], DataFrame)] = None,
+      statsCols: Seq[String] = Nil, schema: Option[StructType] = None,
+      txn: Option[Map[String, Long]] = None,
+      props: Option[Map[String, String]] = None): Staged = {
+    val root = new Path(path)
+    val f = fs(spark, root)
+    val carried = c.files.filterNot(replaced)
+    val carrySet = carried.toSet
+    val colMap = if (carried.isEmpty) Map.empty[String, String] else c.colMap
+    val sidecar = marks.map { case (_, df) => stage(df, root, f) }
+    val newMarks = marks.fold(Map.empty[String, Long])(_._1)
+    val (dirs, rel, st, rw) = rows match {
+      case None => (Nil, Nil, Map.empty: DataSkipping.FileStats, Map.empty[String, Long])
+      case Some(df) =>
+        val (dir, rel0) =
+          try stage(withContract(df, c.props, path), root, f, colMap,
+            partitionColsOf(c.schema), c.props)
+          catch { case e: Throwable => translateViolation(e, path) }
+        val (st0, rw0) = metaFor(spark, root, rel0,
+          inheritedStatsCols(spark, root, c, statsCols), colMap)
+        val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
+        (Seq(dir), rel, st, rw)
+    }
+    val (dvK, dvR) = c.dvFor(carrySet)
+    val v = b + 1L
+    val (body, ckptDir) = encodeCommit(spark, root, v, carried ++ rel,
+      schema.getOrElse(c.schema).json,
+      // by name: a delta-encoded commit serializes only the added stats
+      c.stats.filter(kv => carrySet(kv._1)) ++ st,
+      c.rows.filter(kv => carrySet(kv._1)) ++ rw, txn.getOrElse(c.txn),
+      dvK ++ sidecar.toSeq.flatMap(_._2),
+      dvR ++ newMarks.map { case (fk, n) => fk -> (dvR.getOrElse(fk, 0L) + n) },
+      parent = Some(c), colMap = colMap,
+      physDropped = if (carried.isEmpty) Set.empty else c.physDropped,
+      carriedIdentical = true, statsAddOnly = Some(st), props = props)
+    // a lost race makes the rewrite stale — the verb recomputes
+    Staged(v, body, ckptDir, sidecar.map(_._1).toSeq ++ dirs, rel)
+  }
+
   /** The commit-store seam (Delta's `LogStore` idiom): everything above the
     * CAS — staging, retries, recompute-on-lost-race, pointer maintenance —
     * is store-agnostic, so the atomic create-if-absent is INJECTABLE. The
@@ -1315,11 +1380,11 @@ object VersionedTable {
   }
 
   /** One attempt's staged commit: the manifest `body` claiming version `v`,
-    * the checkpoint dir its encoding wrote, and the staged data dirs that
-    * go stale if the claim is lost (empty when the next attempt reuses
-    * them). */
+    * the checkpoint dir its encoding wrote, the staged data dirs that go
+    * stale if the claim is lost (empty when the next attempt reuses them),
+    * and the data files the commit adds. */
   private final case class Staged(v: Long, body: String, ckpt: Option[Path],
-      discard: Seq[Path] = Nil)
+      discard: Seq[Path] = Nil, added: Seq[String] = Nil)
 
   private def noVersions(path: String): Nothing =
     throw new IllegalArgumentException(s"$path has no committed versions")
@@ -2237,6 +2302,16 @@ object VersionedTable {
       v: Long): VersionMeta = {
     val (_, _, c) = commitFor(spark, path, Some(v))
     VersionMeta(c.files, c.colMap, partitionColsOf(c.schema), c.schema, c.dvRows)
+  }
+
+  /** Per-file row counts, stats and mark counts of version `v`, with its
+    * column mapping and dropped physical names: what a rewrite carries for
+    * every file it keeps (the carry rule's spec surface). */
+  private[graft] def carryMetaOf(spark: SparkSession, path: String, v: Long)
+      : (Map[String, Long], DataSkipping.FileStats, Map[String, Long],
+        Map[String, String], Set[String]) = {
+    val (_, _, c) = commitFor(spark, path, Some(v))
+    (c.rows, c.stats, c.dvRows, c.colMap, c.physDropped)
   }
 
   private def commitFor(spark: SparkSession, path: String,
@@ -3711,14 +3786,14 @@ object VersionedTable {
               throw new ConcurrentPropException(path, k, expected, stored)
           }
           val newTxn = baseC.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
-          val (files, schemaJson, statsFn, statsAdd, rows, stagedDirs, dvKeep,
-              dvRowsKeep, cMap, physDrop) = baseC match {
+          val staged = baseC match {
             case None =>
               val (dir, rel) = stage(inserts, root, f)
               val (st, rw) = metaFor(spark, root, rel, statsCols)
-              (rel, inserts.schema.json, () => st, st, rw, Seq(dir),
-                Seq.empty[String], Map.empty[String, Long],
-                Map.empty[String, String], Set.empty[String])
+              val (body, ckptDir) = encodeCommit(spark, root, 1L, rel,
+                inserts.schema.json, st, rw, newTxn, statsAddOnly = Some(st),
+                props = if (propsAdd.isEmpty) None else Some(propsAdd))
+              Staged(1L, body, ckptDir, Seq(dir), rel)
             case Some(c) =>
               val updSchema = inserts.schema
               val bs = c.schema
@@ -3787,12 +3862,11 @@ object VersionedTable {
               // replaces, cached for the per-file count and the sidecar
               var matchedKeys: Option[DataFrame] = None
               try {
-                val (rewriteDf, rewriteSet, newMarks, markDir) =
+                val (rewriteDf, rewriteSet, newMarks) =
                   probe match {
                     // pure insert: stats prove NO existing file holds a
                     // matching key — stage only the updates
-                    case None => (alignedApplied(inserts), Set.empty[String],
-                      Map.empty[String, Long], None)
+                    case None => (alignedApplied(inserts), Set.empty[String], None)
                     case Some(pr) =>
                       // sequencing guard, decided ONCE PER KEY (not per stored
                       // row — a table holding duplicate key rows must not
@@ -3854,58 +3928,23 @@ object VersionedTable {
                           .unionByName(applied, allowMissingColumns = evolveSchema)
                       // the others keep their bytes; their matched rows are
                       // marked in one sidecar
-                      val md =
-                        if (marks.isEmpty) None
-                        else Some(stage(matched
-                          .filter(col(FileKeyCol).isin(marks.keys.toSeq: _*)), root, f))
-                      (df, rw, marks, md)
+                      (df, rw, if (marks.isEmpty) None else Some(marks ->
+                        matched.filter(col(FileKeyCol).isin(marks.keys.toSeq: _*))))
                   }
                 // carried-file rows are valid by the ADD CONSTRAINT invariant;
                 // the union re-checks them only because they ride the rewrite —
                 // one in-task pass, no extra scan
-                val (dir, rel0) =
-                  try stage(withContract(rewriteDf, c.props, path), root, f,
-                    c.colMap, partitionColsOf(c.schema), c.props)
-                  catch { case e: Throwable => translateViolation(e, path) }
-                val (st0, rw0) = metaFor(spark, root, rel0,
-                  inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-                val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
-                val carried = c.files.filterNot(rewriteSet)
-                val carrySet = carried.toSet
-                // rewritten files materialized their DVs; marked ones add theirs
-                val (dvK, dvR) = c.dvFor(carrySet)
-                (carried ++ rel,
+                replaceFiles(spark, path, base.get, c, rewriteSet, Some(rewriteDf),
+                  newMarks, statsCols,
                   // the materialized id column is physical-only — never schema
-                  merged.map(_.json).getOrElse(rewriteDf.drop(RowIdCol).schema.json),
-                  // LAZY: a delta-encoded merge serializes only the new files'
-                  // stats (statsAdd); the full carried map is evaluated only
-                  // when this commit lands on a checkpoint boundary
-                  () => c.stats.filter(kv => carrySet(kv._1)) ++ st,
-                  st,
-                  c.rows.filter(kv => carrySet(kv._1)) ++ rw,
-                  dir +: markDir.map(_._1).toSeq,
-                  dvK ++ markDir.toSeq.flatMap(_._2),
-                  dvR ++ newMarks.map { case (fk, n) => fk -> (c.dvRows.getOrElse(fk, 0L) + n) },
-                  c.colMap,
-                  // no carried file left → no stale physical column anywhere
-                  if (carried.isEmpty) Set.empty[String] else c.physDropped)
+                  schema = Some(merged.getOrElse(rewriteDf.drop(RowIdCol).schema)),
+                  txn = Some(newTxn),
+                  props = if (propsAdd.isEmpty) None else Some(c.props ++ propsAdd))
               } finally (probe ++ matchedKeys).foreach(_.unpersist())
           }
-          val v = base.getOrElse(0L) + 1L
-          val (body, ckptDir) = encodeCommit(spark, root, v, files, schemaJson,
-            statsFn(), rows, newTxn, dvKeep, dvRowsKeep, parent = baseC,
-            colMap = cMap, physDropped = physDrop,
-            carriedIdentical = true, statsAddOnly = Some(statsAdd),
-            props =
-              if (propsAdd.isEmpty) None
-              else Some(baseC.map(_.props).getOrElse(Map.empty) ++ propsAdd))
-          hookRel = statsAdd.keys.toSeq match {
-            case Nil => files.filterNot(baseC.map(_.files.toSet).getOrElse(Set.empty))
-            case ks => ks
-          }
+          hookRel = staged.added
           hookProps = baseC.map(_.props).getOrElse(Map.empty)
-          // a lost race makes the merge stale — recompute against the new head
-          Right(Staged(v, body, ckptDir, stagedDirs))
+          Right(staged)
         }
       }
       // a MERGE-maintained table fragments exactly like an append-
@@ -3952,70 +3991,97 @@ object VersionedTable {
     }.getOrElse(c.files)
   }
 
-  /** Row-level DELETE as a versioned commit (the MERGE-family verb Delta
-    * spells `DELETE FROM t WHERE p`): rows where `predicate` is TRUE are
-    * removed; rows where it is false or NULL stay. File-granular: only
-    * files whose stats admit a matching row are rewritten — every other
-    * file is carried by reference, byte-identical. A predicate that
-    * provably matches nothing is a no-op (returns the current version,
-    * no new commit). The pre-delete snapshot stays time-travelable and
-    * [[changes]] reports the deleted rows. */
+  /** Row-level DELETE as a versioned commit (the verb Delta spells
+    * `DELETE FROM t WHERE p`): rows where `predicate` is TRUE are removed;
+    * rows where it is false or NULL stay. ONE body, merge-on-read like
+    * Delta's deletion vectors: the matched live rows are MARKED deleted in a
+    * sidecar parquet of (file key, row index) pairs and every data file
+    * keeps its bytes, unless [[rewriteOverMarked]] says a file's existing
+    * plus new marks would pass `purgeFraction` of its rows — that file is
+    * REWRITTEN as its survivors in the same commit instead (so a delete of
+    * a large fraction costs a rewrite, not an ever-growing anti-join).
+    *
+    * File-granular: only files whose manifest stats admit a matching row
+    * are scanned (with their existing marks applied, so a second delete
+    * never double-marks a row); every other file is carried by reference.
+    * A predicate matching no live row commits nothing (returns the current
+    * version). Readers apply marks with a broadcast anti-join on (file,
+    * row_index) (`_metadata.row_index` is stable — committed files are
+    * immutable); [[countRows]] subtracts them, [[changes]] reports the
+    * marked rows as deletes, and every rewriting verb materializes the
+    * marks of the files it replaces. The pre-delete snapshot stays
+    * time-travelable.
+    *
+    * @param purgeFraction see [[DefaultDvPurgeFraction]]; compared against
+    *                      (existing + new marks) / file rows per file.
+    *                      `1.0` never rewrites (pure merge-on-read). */
   def delete(spark: SparkSession, path: String, predicate: Column,
-      statsCols: Seq[String] = Nil): Long = {
+      purgeFraction: Double = DefaultDvPurgeFraction): Long = {
     val root = new Path(path)
-    val f = fs(spark, root)
     var hookProps: Map[String, String] = Map.empty
     val committed = commitLoop(spark, path, "delete") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
       hookProps = Map.empty
       fenceMvWrite(c.props, path, "DELETE")
-      val (candKeys, carryKeys) =
+      val (candKeys, _) =
         pruneFiles(spark, root, c, DataSkipping.resolve(spark, c.schema, predicate))
       if (candKeys.isEmpty) Left(b) // provably nothing to delete
       else {
-        hookProps = c.props
-        val kept = rewriteSource(spark, root, c, candKeys)
-          .filter(!coalesce(predicate, lit(false))) // keep p=false AND p=null rows
-        val (dir, rel0) = stage(kept, root, f, c.colMap,
-          partitionColsOf(c.schema), c.props)
-        val (st0, rw0) = metaFor(spark, root, rel0,
-          inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-        val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
-        val carrySet = carryKeys.toSet
-        val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-        val v = b + 1L
-        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-          c.schema.json,
-          c.stats.filter(kv => carrySet(kv._1)) ++ st,
-          c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-          parent = Some(c), colMap = c.colMap,
-          physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
-          carriedIdentical = true, statsAddOnly = Some(st))
-        Right(Staged(v, body, ckptDir, Seq(dir))) // stale if lost: recompute
+        val live = liveKeyed(spark, root, c, c.schema, candKeys, withIds = false)
+        val marked = live.filter(coalesce(predicate, lit(false)))
+          .select(col(FileKeyCol), col(RowIdxCol)).cache()
+        try {
+          val perFile = marked.groupBy(col(FileKeyCol)).count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          if (perFile.isEmpty) Left(b) // predicate matched no live row
+          else {
+            hookProps = c.props
+            val rewrite = rewriteOverMarked(c, perFile, purgeFraction)
+            val rewriteKeys = c.files.filter(rewrite)
+            // marks for carried files ride in a new sidecar; marks for
+            // rewritten files are consumed by their rewrite
+            val marks = perFile.filter(kv => !rewrite(kv._1))
+            val markRows =
+              if (rewriteKeys.isEmpty) marked
+              else marked.filter(!col(FileKeyCol).isin(rewriteKeys: _*))
+            // the source applies the OLD marks; the predicate filter drops
+            // this delete's matches — survivors only (ids carried)
+            val survivors =
+              if (rewriteKeys.isEmpty) None
+              else Some(rewriteSource(spark, root, c, rewriteKeys)
+                .filter(!coalesce(predicate, lit(false))))
+            Right(replaceFiles(spark, path, b, c, rewrite, survivors,
+              if (marks.isEmpty) None else Some(marks -> markRows)))
+          }
+        } finally marked.unpersist()
       }
     }
     autoRefreshViewsAfter(spark, path, hookProps)
     committed
   }
 
+  /** [[delete]] under its former merge-on-read name. */
+  def deleteVectorized(spark: SparkSession, path: String,
+      predicate: Column, purgeFraction: Double = DefaultDvPurgeFraction): Long =
+    delete(spark, path, predicate, purgeFraction)
+
   /** Row-level UPDATE as a versioned commit (the verb Delta spells
     * `UPDATE t SET c = e WHERE p`): rows where `predicate` is TRUE get
     * each assignment applied (all assignments see the OLD row, standard
     * SQL UPDATE semantics); rows where it is false or NULL are untouched.
-    * File-granular copy-on-write exactly like [[delete]]: only files whose
-    * manifest stats admit a matching row are rewritten — every other file,
-    * including whole untouched partition directories, is carried by
-    * reference, byte-identical. Assignment values are cast to the column's
-    * recorded type under the session's cast semantics (ANSI by default: a
-    * lossy cast fails the commit, never silently truncates). Updating a
+    * File-granular copy-on-write: only files whose manifest stats admit a
+    * matching row are rewritten — every other file, including whole
+    * untouched partition directories, is carried by reference,
+    * byte-identical. Assignment values are cast to the column's recorded
+    * type under the session's cast semantics (ANSI by default: a lossy
+    * cast fails the commit, never silently truncates). Updating a
     * partition column is allowed — rewritten rows land in the directories
     * their NEW values name. A predicate that provably matches nothing is a
     * no-op (current version returned, no new commit). */
   def update(spark: SparkSession, path: String, predicate: Column,
-      set: Map[String, Column], statsCols: Seq[String] = Nil): Long = {
+      set: Map[String, Column]): Long = {
     require(set.nonEmpty, "UPDATE requires at least one assignment")
     val root = new Path(path)
-    val f = fs(spark, root)
     var hookProps: Map[String, String] = Map.empty
     val committed = commitLoop(spark, path, "update") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
@@ -4029,7 +4095,7 @@ object VersionedTable {
       require(idHit.isEmpty,
         s"$path: cannot UPDATE identity column(s) ${idHit.mkString(",")} — " +
           "values are allocated by the table")
-      val (candKeys, carryKeys) =
+      val (candKeys, _) =
         pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
       if (candKeys.isEmpty) Left(b) // provably nothing to update
       else {
@@ -4046,28 +4112,12 @@ object VersionedTable {
               case None => col(fl.name)
             }
           }.toSeq ++ (if (tracked) Seq(col(RowIdCol)) else Nil)): _*)
-        // withContract (not just withChecks): an UPDATE that modifies a
-        // source column of a generated column without keeping the generated
-        // value consistent refuses loudly — the remedy is to SET the
-        // generated column too (or drop the generation); silently serving a
-        // stale derived value is the failure mode generation exists to kill
-        val (dir, rel) =
-          try stage(withContract(updated, c.props, path), root, f, c.colMap,
-            partitionColsOf(s), c.props)
-          catch { case e: Throwable => translateViolation(e, path) }
-        val (st, rw) = metaFor(spark, root, rel,
-          inheritedStatsCols(spark, root, c, statsCols), c.colMap)
-        val carrySet = carryKeys.toSet
-        val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-        val v = b + 1L
-        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-          s.json,
-          c.stats.filter(kv => carrySet(kv._1)) ++ st,
-          c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-          parent = Some(c), colMap = c.colMap,
-          physDropped = if (carryKeys.isEmpty) Set.empty else c.physDropped,
-          carriedIdentical = true, statsAddOnly = Some(st))
-        Right(Staged(v, body, ckptDir, Seq(dir))) // stale if lost: recompute
+        // the write contract refuses an UPDATE that modifies a source
+        // column of a generated column without keeping the generated value
+        // consistent — the remedy is to SET the generated column too (or
+        // drop the generation); silently serving a stale derived value is
+        // the failure mode generation exists to kill
+        Right(replaceFiles(spark, path, b, c, candKeys.toSet, Some(updated)))
       }
     }
     autoRefreshViewsAfter(spark, path, hookProps)
@@ -4380,22 +4430,33 @@ object VersionedTable {
   /** The unguarded property commit the validated entry points share. */
   private def setPropertiesInternal(spark: SparkSession, path: String,
       set: Map[String, String], unset: Seq[String],
-      expectedBase: Option[Long] = None): Long = {
-    val root = new Path(path)
-    commitLoop(spark, path, "set-properties") { head =>
-      val (b, c) = head.getOrElse(noVersions(path))
+      expectedBase: Option[Long] = None): Long =
+    commitProps(spark, path, "set-properties") { (b, c) =>
       expectedBase.foreach { e =>
         if (b != e) throw new ConcurrentTxnException(path, "(base)", e, Some(b))
       }
-      val next = (c.props -- unset) ++ set
-      if (next == c.props) Left(b) // no-op: nothing changed
+      (c.props -- unset) ++ set
+    }
+
+  /** THE property commit: `next` checks its precondition against the head
+    * `commitLoop` pinned (throwing refuses the commit; a lost race re-runs
+    * it against the new head) and returns the head's new properties. The
+    * version carries the same files, schema, stats and marks; unchanged
+    * properties commit nothing. */
+  private def commitProps(spark: SparkSession, path: String, what: String)(
+      next: (Long, Commit) => Map[String, String]): Long = {
+    val root = new Path(path)
+    commitLoop(spark, path, what) { head =>
+      val (b, c) = head.getOrElse(noVersions(path))
+      val props = next(b, c)
+      if (props == c.props) Left(b) // no-op: nothing changed
       else {
         val v = b + 1L
         val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
           c.schema.json, c.stats, c.rows, c.txn,
           c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
           physDropped = c.physDropped, carriedIdentical = true,
-          statsAddOnly = Some(Map.empty), props = Some(next))
+          statsAddOnly = Some(Map.empty), props = Some(props))
         Right(Staged(v, body, ckptDir))
       }
     }
@@ -4505,9 +4566,7 @@ object VersionedTable {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name '$name' must be an identifier")
     val key = ConstraintPrefix + name
-    val root = new Path(path)
-    commitLoop(spark, path, "add-constraint") { head =>
-      val (b, c) = head.getOrElse(noVersions(path))
+    commitProps(spark, path, "add-constraint") { (b, c) =>
       require(!c.props.contains(key),
         s"$path: constraint '$name' already exists " +
           s"(CHECK (${c.props(key)})); DROP it first")
@@ -4517,14 +4576,7 @@ object VersionedTable {
         s"$path: cannot ADD CONSTRAINT $name CHECK ($predicateSql) — " +
           "existing rows violate it; fix the data first " +
           "(DELETE/UPDATE the violating rows)")
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.json, c.stats, c.rows, c.txn,
-        c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
-        physDropped = c.physDropped, carriedIdentical = true,
-        statsAddOnly = Some(Map.empty),
-        props = Some(c.props + (key -> predicateSql)))
-      Right(Staged(v, body, ckptDir))
+      c.props + (key -> predicateSql)
     }
   }
 
@@ -4661,9 +4713,7 @@ object VersionedTable {
   def setGeneratedColumn(spark: SparkSession, path: String, name: String,
       exprSql: String): Long = {
     val key = GeneratedPrefix + name
-    val root = new Path(path)
-    commitLoop(spark, path, "set-generated") { head =>
-      val (b, c) = head.getOrElse(noVersions(path))
+    commitProps(spark, path, "set-generated") { (b, c) =>
       require(!c.props.contains(key),
         s"$path: column $name is already generated " +
           s"(${c.props(key)}); drop the generation first")
@@ -4677,17 +4727,10 @@ object VersionedTable {
       if (bad > 0) throw new IllegalStateException(
         s"$path: cannot declare $name GENERATED ALWAYS AS ($exprSql) — " +
           "existing rows hold a different value; fix the data first")
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.json, c.stats, c.rows, c.txn,
-        c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
-        physDropped = c.physDropped, carriedIdentical = true,
-        statsAddOnly = Some(Map.empty),
-        props = Some(c.props + (key -> exprSql) ++
-          (if (zoneDep) Map(GeneratedZonePrefix + name ->
-            spark.sessionState.conf.sessionLocalTimeZone)
-           else Map.empty)))
-      Right(Staged(v, body, ckptDir))
+      c.props + (key -> exprSql) ++
+        (if (zoneDep) Map(GeneratedZonePrefix + name ->
+          spark.sessionState.conf.sessionLocalTimeZone)
+         else Map.empty)
     }
   }
 
@@ -4779,13 +4822,11 @@ object VersionedTable {
       start: Long = 1L, step: Long = 1L,
       allowExplicit: Boolean = false): Long = {
     require(step != 0L, s"$path: identity step must be non-zero")
-    val root = new Path(path)
     // every precondition validates INSIDE the CAS loop against the pinned
     // version (like setGeneratedColumn): a racing append cannot slip rows
     // under the declaration — losing the race re-validates emptiness
     // against the new head
-    commitLoop(spark, path, "declare-identity") { head =>
-      val (b, c) = head.getOrElse(noVersions(path))
+    commitProps(spark, path, "declare-identity") { (b, c) =>
       val s = c.schema
       require(s.fieldNames.contains(name), s"$path: no such column: $name")
       require(s(s.fieldIndex(name)).dataType ==
@@ -4805,17 +4846,10 @@ object VersionedTable {
         s"$path: identity can only be declared on an empty table (existing " +
           "values could collide with future allocations) — declare it at " +
           "CREATE TABLE, or CTAS into a fresh table")
-      val v = b + 1L
-      val (body, ckptDir) = encodeCommit(spark, root, v, c.files,
-        c.schema.json, c.stats, c.rows, c.txn,
-        c.dv, c.dvRows, parent = Some(c), colMap = c.colMap,
-        physDropped = c.physDropped, carriedIdentical = true,
-        statsAddOnly = Some(Map.empty),
-        props = Some(c.props +
-          (IdentityPrefix + name ->
-            s"start=$start;step=$step;explicit=$allowExplicit") +
-          (IdentityHwmPrefix + name -> start.toString)))
-      Right(Staged(v, body, ckptDir))
+      c.props +
+        (IdentityPrefix + name ->
+          s"start=$start;step=$step;explicit=$allowExplicit") +
+        (IdentityHwmPrefix + name -> start.toString)
     }
   }
 
@@ -4910,120 +4944,18 @@ object VersionedTable {
     }
   }
 
-  /** Merge-on-read DELETE via DELETION VECTORS (Delta's DV idiom): mark
-    * matching rows deleted in a sidecar parquet of (file key, row index)
-    * pairs and commit a new version that keeps EVERY data file
-    * byte-identical — zero rewrite amplification, the right verb for point
-    * deletes (GDPR erasure, bad-record retraction) where copy-on-write
-    * [[delete]] would rewrite a whole file to drop a handful of rows.
-    *
-    * Readers apply DVs with a broadcast anti-join on (file, row_index)
-    * (`_metadata.row_index` is stable — committed files are immutable), so
-    * the data side stays narrow. Every other verb composes: CoW rewrites
-    * materialize the marks for the files they touch, [[compact]] /
-    * [[zOrderBy]] purge them wholesale, [[countRows]] subtracts them, and
-    * [[changes]] reports the marked rows as deletes. Prefer [[delete]]
-    * when the predicate hits a large fraction of rows: a huge DV makes
-    * every subsequent read pay the anti-join.
-    *
-    * Candidate files come from manifest stats like the CoW path — a file
-    * provably without matches contributes nothing and is never scanned.
-    *
-    * @param purgeFraction see [[DefaultDvPurgeFraction]]; compared against
-    *                      (existing + new marks) / file rows per file. */
-  def deleteVectorized(spark: SparkSession, path: String,
-      predicate: Column, purgeFraction: Double = DefaultDvPurgeFraction): Long = {
-    val root = new Path(path)
-    val f = fs(spark, root)
-    var hookProps: Map[String, String] = Map.empty
-    val committed = commitLoop(spark, path, "dv-delete") { head =>
-      val (b, c) = head.getOrElse(noVersions(path))
-      hookProps = Map.empty
-      fenceMvWrite(c.props, path, "DELETE")
-      val s = c.schema
-      val (candKeys, _) =
-        pruneFiles(spark, root, c, DataSkipping.resolve(spark, s, predicate))
-      if (candKeys.isEmpty) Left(b) // provably nothing to delete
-      else {
-        // scan ONLY candidate files, with existing DVs applied (so a second
-        // delete never double-marks a row — generations stay disjoint and
-        // countRows' subtraction stays exact)
-        val live = liveKeyed(spark, root, c, s, candKeys, withIds = false)
-        val marked = live.filter(coalesce(predicate, lit(false)))
-          .select(col(FileKeyCol), col(RowIdxCol)).cache()
-        try {
-          val perFile = marked.groupBy(col(FileKeyCol)).count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          if (perFile.isEmpty) Left(b) // predicate matched no live row
-          else {
-            hookProps = c.props
-            val mergedDvRows = c.dvRows ++ perFile.map { case (k, n) =>
-              k -> (c.dvRows.getOrElse(k, 0L) + n)
-            }
-            // AUTO-PURGE: files the new marks would push past the threshold
-            // are rewritten (survivors materialized) in this SAME commit —
-            // the marks never land, so the read-side anti-join stays bounded
-            val purgeSet = rewriteOverMarked(c, perFile, purgeFraction)
-            val purgeKeys = c.files.filter(purgeSet)
-            val carryKeys = c.files.filterNot(purgeSet)
-            // marks for carried files ride in a new sidecar; marks for purged
-            // files are consumed by their rewrite
-            val carriedMarks =
-              if (purgeKeys.isEmpty) marked
-              else marked.filter(!col(FileKeyCol).isin(purgeKeys: _*))
-            val (markDirs, markRel) =
-              if (!perFile.keys.exists(k => !purgeSet(k))) (Nil, Seq.empty[String])
-              else {
-                val (d, r) = stage(carriedMarks, root, f)
-                (Seq(d), r)
-              }
-            val (dataDirs, dataRel, st, rw) =
-              if (purgeKeys.isEmpty)
-                (Nil, Seq.empty[String],
-                  Map.empty: DataSkipping.FileStats, Map.empty[String, Long])
-              else {
-                // the source applies the OLD marks; the predicate filter
-                // drops this delete's matches — survivors only (ids carried)
-                val survivors = rewriteSource(spark, root, c, purgeKeys)
-                  .filter(!coalesce(predicate, lit(false)))
-                val (d, r0) = stage(survivors, root, f, c.colMap,
-                  partitionColsOf(c.schema), c.props)
-                val (s0, c0) = metaFor(spark, root, r0,
-                  inheritedStatsCols(spark, root, c, Nil), c.colMap)
-                val (r, s2, r2) = dropEmpty(f, root, d, r0, s0, c0)
-                (Seq(d), r, s2, r2)
-              }
-            val dvRowsKeep = mergedDvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
-            val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv ++ markRel
-            val v = b + 1L
-            val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ dataRel, s.json,
-              c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
-              c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
-              c.txn, dvKeep, dvRowsKeep, parent = Some(c),
-              colMap = c.colMap, physDropped = c.physDropped,
-              carriedIdentical = true, statsAddOnly = Some(st))
-            // stale marks if lost — recompute against the new head
-            Right(Staged(v, body, ckptDir, markDirs ++ dataDirs))
-          }
-        } finally marked.unpersist()
-      }
-    }
-    autoRefreshViewsAfter(spark, path, hookProps)
-    committed
-  }
-
   /** Marked-rows fraction above which DV hygiene kicks in AUTOMATICALLY: a
-    * [[deleteVectorized]] or [[upsert]] that would push a file past this
-    * rewrites that file in the same commit instead of carrying the marks
-    * (Delta tracks the same deleted-rows-fraction to self-schedule
-    * purges); see [[rewriteOverMarked]]. Without it, a table absorbing
-    * daily point deletes pays an ever-growing anti-join until someone
-    * remembers to OPTIMIZE. Pass `purgeFraction = 1.0` to opt a delete out
-    * (pure merge-on-read). */
+    * [[delete]] or [[upsert]] that would push a file past this rewrites
+    * that file in the same commit instead of carrying the marks (Delta
+    * tracks the same deleted-rows-fraction to self-schedule purges); see
+    * [[rewriteOverMarked]]. Without it, a table absorbing daily point
+    * deletes pays an ever-growing anti-join until someone remembers to
+    * OPTIMIZE. Pass `purgeFraction = 1.0` to opt a delete out (pure
+    * merge-on-read). */
   val DefaultDvPurgeFraction: Double = 0.5
 
   /** THE mark-or-rewrite rule of the verbs that remove rows by marking them
-    * ([[upsert]], [[deleteVectorized]]): of the files gaining `newMarks`
+    * ([[upsert]], [[delete]]): of the files gaining `newMarks`
     * (rows per file), those whose existing plus new marks would exceed
     * `fraction` of their rows are REWRITTEN instead; every other one keeps
     * its bytes and takes the marks. */
@@ -5033,44 +4965,19 @@ object VersionedTable {
       (c.dvRows.getOrElse(fk, 0L) + n).toDouble / c.rows(fk) > fraction => fk }.toSet
 
   /** Maintenance verb: MATERIALIZE deletion-vector marks — rewrite every
-    * file whose marked fraction exceeds `minFraction` (default: any marked
-    * file) as its surviving rows, dropping the marks, as one commit. The
-    * file-granular complement to [[compact]]/[[zOrderBy]] for a table
-    * whose marks accumulated under an opted-out [[deleteVectorized]]:
-    * afterwards the read plan for those files is a plain scan again (no
-    * anti-join). No-op when nothing qualifies. */
-  def purgeDeletes(spark: SparkSession, path: String,
-      minFraction: Double = 0.0): Long = {
+    * marked file as its surviving rows, dropping the marks, as one commit.
+    * The file-granular complement to [[compact]]/[[zOrderBy]] for a table
+    * whose marks accumulated under an opted-out [[delete]]: afterwards the
+    * read plan for those files is a plain scan again (no anti-join). No-op
+    * when no file is marked. */
+  def purgeDeletes(spark: SparkSession, path: String): Long = {
     val root = new Path(path)
-    val f = fs(spark, root)
     commitLoop(spark, path, "purge") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
-      val purgeKeys = c.files.filter { fk =>
-        val m = c.dvRows.getOrElse(fk, 0L)
-        m > 0L && m.toDouble / c.rows(fk) > minFraction
-      }
+      val purgeKeys = c.files.filter(fk => c.dvRows.getOrElse(fk, 0L) > 0L)
       if (purgeKeys.isEmpty) Left(b)
-      else {
-        val purgeSet = purgeKeys.toSet
-        val carryKeys = c.files.filterNot(purgeSet)
-        val survivors = rewriteSource(spark, root, c, purgeKeys) // marks applied
-        val (dir, rel0) = stage(survivors, root, f, c.colMap,
-          partitionColsOf(c.schema), c.props)
-        val (st0, rw0) = metaFor(spark, root, rel0,
-          inheritedStatsCols(spark, root, c, Nil), c.colMap)
-        val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
-        val dvRowsKeep = c.dvRows.filter(kv => kv._2 > 0L && !purgeSet(kv._1))
-        val dvKeep = if (dvRowsKeep.isEmpty) Seq.empty[String] else c.dv
-        val v = b + 1L
-        val (body, ckptDir) = encodeCommit(spark, root, v, carryKeys ++ rel,
-          c.schema.json,
-          c.stats.filter(kv => !purgeSet(kv._1)) ++ st,
-          c.rows.filter(kv => !purgeSet(kv._1)) ++ rw,
-          c.txn, dvKeep, dvRowsKeep, parent = Some(c),
-          colMap = c.colMap, physDropped = c.physDropped,
-          carriedIdentical = true, statsAddOnly = Some(st))
-        Right(Staged(v, body, ckptDir, Seq(dir)))
-      }
+      else Right(replaceFiles(spark, path, b, c, purgeKeys.toSet,
+        Some(rewriteSource(spark, root, c, purgeKeys)))) // marks applied
     }
   }
 
@@ -5345,7 +5252,6 @@ object VersionedTable {
       val smallSet = sized.filter(_._2 < targetBytes / 2).map(_._1).toSet
       if (smallSet.size < 2) Left(b) // nothing worth packing
       else {
-        val carry = c.files.filterNot(smallSet)
         val totalSmall = sized.collect { case (r, n) if smallSet(r) => n }.sum
         val nOut = math.max(1, math.ceil(totalSmall.toDouble / targetBytes).toInt)
         val partCols = partitionColsOf(c.schema)
@@ -5357,19 +5263,7 @@ object VersionedTable {
         val packed =
           if (partCols.isEmpty) small.coalesce(nOut)
           else small.repartition(nOut, partCols.map(col): _*)
-        val (dir, rel) = stage(packed, root, f, c.colMap, partCols, c.props)
-        val (st, rw) = metaFor(spark, root, rel, inheritedStatsCols(spark, root, c, Nil), c.colMap)
-        val carrySet = carry.toSet
-        val (dvK, dvR) = c.dvFor(carrySet) // packed files materialized their DVs
-        val v = b + 1L
-        val (body, ckptDir) = encodeCommit(spark, root, v, carry ++ rel,
-          c.schema.json,
-          c.stats.filter(kv => carrySet(kv._1)) ++ st,
-          c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-          parent = Some(c), colMap = c.colMap,
-          physDropped = if (carry.isEmpty) Set.empty else c.physDropped,
-          carriedIdentical = true, statsAddOnly = Some(st))
-        Right(Staged(v, body, ckptDir, Seq(dir)))
+        Right(replaceFiles(spark, path, b, c, smallSet, Some(packed)))
       }
     }
   }
@@ -5388,15 +5282,13 @@ object VersionedTable {
     * `where` re-clusters only the partitions it matches (it must reference
     * partition columns only — see [[partitionScope]]); every out-of-scope
     * file is carried by reference, byte-identical, keeping its stats and
-    * deletion-vector marks. A rewrite that carries files CANNOT shed the
-    * column mapping (carried files still need it), so rewritten files stage
-    * under the mapping and the manifest keeps colmap/phys_dropped; a rewrite
-    * covering every file sheds it. The idiom at 100 TB: cluster yesterday's
-    * partition after its last append, never touch the other 3 years. */
+    * deletion-vector marks. Column mapping follows [[replaceFiles]]'s one
+    * rule: kept while files are carried, shed by a rewrite of every file.
+    * The idiom at 100 TB: cluster yesterday's partition after its last
+    * append, never touch the other 3 years. */
   def zOrderBy(spark: SparkSession, path: String, cols: Seq[String],
       bits: Int = 16, where: Option[Column] = None): Long = {
     val root = new Path(path)
-    val f = fs(spark, root)
     commitLoop(spark, path, "zorder") { head =>
       val (b, c) = head.getOrElse(noVersions(path))
       // the bucket shuffle in stage would destroy the z-placement, and a
@@ -5414,28 +5306,8 @@ object VersionedTable {
         val placed =
           if (partCols.isEmpty) TableIO.zPlaced(base, cols, bits)
           else TableIO.zPlacedWithin(base, partCols, cols, bits)
-        val carryKeys = c.files.filterNot(scope)
-        val colMap = if (carryKeys.isEmpty) Map.empty[String, String] else c.colMap
-        val (dir, rel) = stage(placed, root, f, colMap, partCols, c.props)
-        val (st, rw) = metaFor(spark, root, rel, cols, colMap)
-        val v = b + 1L
-        val (body, ckptDir) =
-          if (carryKeys.isEmpty)
-            encodeCommit(spark, root, v, rel,
-              c.schema.json,
-              st, rw, c.txn, parent = Some(c))
-          else {
-            val carrySet = carryKeys.toSet
-            val (dvK, dvR) = c.dvFor(carrySet) // rewritten files materialized their DVs
-            // carried files mean a `where` scope, and partitionScope
-            // required a recorded schema
-            encodeCommit(spark, root, v, carryKeys ++ rel, c.schema.json,
-              c.stats.filter(kv => carrySet(kv._1)) ++ st,
-              c.rows.filter(kv => carrySet(kv._1)) ++ rw, c.txn, dvK, dvR,
-              parent = Some(c), colMap = c.colMap, physDropped = c.physDropped,
-              carriedIdentical = true, statsAddOnly = Some(st))
-          }
-        Right(Staged(v, body, ckptDir, Seq(dir)))
+        // stats on exactly the clustering columns
+        Right(replaceFiles(spark, path, b, c, scope, Some(placed), statsCols = cols))
       }
     }
   }

@@ -12,9 +12,11 @@ import graft.sources.VersionedTable
 /** Translates the two simple row-level DML statements over a graft table —
   * `DELETE FROM graft.`/p` WHERE p` and `UPDATE graft.`/p` SET c = e WHERE p`
   * — to their one-commit [[VersionedTable]] verbs ([[VersionedTable.delete]]
-  * / [[VersionedTable.update]]): copy-on-write, file-granular (untouched
-  * files and whole partition directories carry by reference), optimistic
-  * concurrency, pre-statement snapshot time-travelable. Without this rule
+  * marks matched rows, rewriting only files past the mark-or-rewrite
+  * fraction; [[VersionedTable.update]] rewrites copy-on-write): file-
+  * granular (untouched files and whole partition directories carry by
+  * reference), optimistic concurrency, pre-statement snapshot
+  * time-travelable. Without this rule
   * the statements die in DSv2 planning ("table does not support deletes") —
   * and a user's first CDC fix-up IS `DELETE FROM t WHERE ...`
   * (the operational half of the reference's MERGE runbook,
@@ -78,8 +80,9 @@ object GraftDmlTranslation {
 }
 
 /** `DELETE FROM graft.`/p` WHERE cond` → one [[VersionedTable.delete]]
-  * commit (file-granular CoW; partition-scoped predicates drop or carry
-  * whole directories; a provably-matchless predicate is a no-op). */
+  * commit (file-granular: matched rows are marked in a deletion-vector
+  * sidecar, and a file whose marks would pass the purge fraction is
+  * rewritten instead; a predicate matching no live row is a no-op). */
 case class GraftDeleteCommand(path: String,
     condition: Expression) extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {

@@ -25,13 +25,17 @@ import graft.sources.VersionedTable
   * represent row-level rewrites — unless `ignoreChanges=true`, which
   * re-emits what they add (at-least-once for updated rows; Delta's option
   * of the same name and the same caveat). A commit is non-append when it
-  * rewrites or drops files (a copy-on-write MERGE/DELETE, OPTIMIZE), or
-  * when it adds files AND marks rows of files it carries (a MERGE done by
-  * deletion vectors: the added rows replace marked ones the stream already
-  * emitted) — decided per commit, so an append followed by a DV delete in
-  * one batch still streams. Deletion-vector-only commits add no files and
-  * emit an empty batch. Use [[graft.sources.VersionedTable.changes]] for a
-  * row-level diff instead.
+  * rewrites or drops files (a copy-on-write MERGE/UPDATE, OPTIMIZE, a
+  * DELETE past the purge fraction), or when it adds files AND marks rows
+  * of files it carries (a MERGE done by deletion vectors: the added rows
+  * replace marked ones the stream already emitted) — decided per commit,
+  * so an append followed by a marking delete in one batch still streams.
+  * Deletion-vector-only commits add no files and emit an empty batch: a
+  * [[graft.sources.VersionedTable.delete]] whose marks stay under the
+  * purge fraction streams as an empty batch, while one that rewrites a
+  * file past the fraction is refused (without `ignoreChanges`) like any
+  * rewrite. Use [[graft.sources.VersionedTable.changes]] for a row-level
+  * diff instead.
   *
   * RATE CONTROL (Delta's maxFilesPerTrigger / backfill-throttle parity):
   * without it, a query restarting after a long gap receives EVERYTHING

@@ -22,7 +22,7 @@ class BatchFormatSpec extends SparkSpec {
 
   test("a plain DataFrame filter prunes files at plan time (read-then-filter idiom)") {
     val path = java.nio.file.Files.createTempDirectory("fmtprune").toString + "/t"
-    VersionedTable.write(TableIO.zPlaced(grid, "a", "b", bits = 8),
+    VersionedTable.write(TableIO.zPlaced(grid, Seq("a", "b"), 8),
       path, statsCols = Seq("a", "b"))
     val pred = col("a").between(10, 20) && col("b").between(200, 210)
     val (kept, skipped) = VersionedTable.pruneInfo(spark, path, pred)
@@ -60,7 +60,7 @@ class BatchFormatSpec extends SparkSpec {
     val t2 = System.currentTimeMillis()
     Thread.sleep(5)
     // merge-on-read delete, opted out of auto-purge: marks stay as a DV
-    VersionedTable.deleteVectorized(spark, path, col("id") === 2L, 1.0)     // v3
+    VersionedTable.delete(spark, path, col("id") === 2L, 1.0)     // v3
     val latest = spark.read.format("graft-table").load(path)
     assert(latest.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 4L),
       "deletion-vector marks must be applied inside the format scan")
@@ -113,7 +113,7 @@ class BatchFormatSpec extends SparkSpec {
       val path = java.nio.file.Files.createTempDirectory("fmtdvbig").toString + "/t"
       VersionedTable.write(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
         .toDF("id", "v").repartitionByRange(2, col("id")), path, Seq("id"))
-      VersionedTable.deleteVectorized(spark, path, col("id") === 2L, 1.0)
+      VersionedTable.delete(spark, path, col("id") === 2L, 1.0)
       val df = spark.read.format("graft-table").load(path)
       assert(df.queryExecution.executedPlan.toString.contains("GraftDvAntiJoin"),
         "over-bound DV tables must take the anti-join relation, not a broadcast map")
@@ -188,7 +188,7 @@ class BatchFormatSpec extends SparkSpec {
     VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .coalesce(1), path, Seq("id"))                                      // v1
     VersionedTable.upsert(Seq((2L, "B")).toDF("id", "v"), path, Seq("id")) // v2
-    VersionedTable.deleteVectorized(spark, path, col("id") === 1L, 1.0)    // v3
+    VersionedTable.delete(spark, path, col("id") === 1L, 1.0)    // v3
     def feed(from: Long, to: Long) =
       spark.read.format("graft-table").option("readChangeFeed", "true")
         .option("startingVersion", from.toString)
@@ -219,7 +219,7 @@ class BatchFormatSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("fmthist").toString + "/t"
     VersionedTable.write(Seq((1L, "a")).toDF("id", "v").coalesce(1), path, Seq("id"))
     VersionedTable.append(Seq((2L, "b")).toDF("id", "v").coalesce(1), path)
-    VersionedTable.deleteVectorized(spark, path, col("id") === 1L, 1.0)
+    VersionedTable.delete(spark, path, col("id") === 1L, 1.0)
     val hist = spark.read.format("graft-table").option("history", "true").load(path)
     assert(hist.count() == 3L)
     assert(hist.columns.contains("version"))
@@ -234,7 +234,7 @@ class BatchFormatSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("fmtdvlazy").toString + "/t"
     VersionedTable.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
       .coalesce(1), path, Seq("id"))
-    VersionedTable.deleteVectorized(spark, path, col("id") === 2L, 1.0)
+    VersionedTable.delete(spark, path, col("id") === 2L, 1.0)
     val before = VersionedTable.dvMarkLoads.get()
     val df = VersionedTable.read(spark, path)
     df.schema // schema-only: what the streaming source does at creation

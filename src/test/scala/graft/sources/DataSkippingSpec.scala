@@ -16,7 +16,7 @@ class DataSkippingSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("skip").toString + "/t"
     // z-placed stage: every file covers one aligned z-tile, so its (a, b)
     // min/max are narrow; stats on the clustering columns go in the manifest
-    VersionedTable.write(TableIO.zPlaced(grid, "a", "b", bits = 8),
+    VersionedTable.write(TableIO.zPlaced(grid, Seq("a", "b"), 8),
       path, statsCols = Seq("a", "b"))
     val pred = col("a").between(10, 20) && col("b").between(200, 210)
     val (kept, skipped) = VersionedTable.pruneInfo(spark, path, pred)
@@ -147,7 +147,7 @@ class DataSkippingSpec extends SparkSpec {
 
   test("literal-on-the-left comparisons prune like attribute-first spellings") {
     val path = java.nio.file.Files.createTempDirectory("skiprev").toString + "/t"
-    VersionedTable.write(TableIO.zPlaced(grid, "a", "b", bits = 8), path, Seq("a", "b"))
+    VersionedTable.write(TableIO.zPlaced(grid, Seq("a", "b"), 8), path, Seq("a", "b"))
     val attrFirst = VersionedTable.pruneInfo(spark, path, col("a") < 16)
     val litFirst = VersionedTable.pruneInfo(spark, path, lit(16) > col("a"))
     assert(attrFirst._2.nonEmpty)
@@ -239,8 +239,9 @@ class DataSkippingSpec extends SparkSpec {
     val (k2, s2) = VersionedTable.pruneInfo(spark, path,
       col("ts") === lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
     assert(k2.isEmpty && s2.size == 4)
-    // and the copy-on-write verbs that reuse this resolution stay exact: a
-    // delete keyed on the millis-encoded column removes exactly its rows
+    // and the file-selecting write verbs that reuse this resolution stay
+    // exact: a delete keyed on the millis-encoded column removes exactly its
+    // rows (marked or rewritten, per file)
     VersionedTable.delete(spark, path,
       col("ts") < lit(java.sql.Timestamp.valueOf("2026-01-01 01:00:00")))
     assert(VersionedTable.read(spark, path).count() ==
@@ -353,7 +354,7 @@ class DataSkippingSpec extends SparkSpec {
     assert(multi.collect().head.getLong(1) == 5L)
     // a DV mark makes the marked file's null split unknowable — the whole
     // aggregate scans (and stays right) rather than guessing
-    VersionedTable.deleteVectorized(spark, path, col("k") === 2L,
+    VersionedTable.delete(spark, path, col("k") === 2L,
       purgeFraction = 1.0)
     val afterDv = q()
     assert(GraftBatchShim.scanRootsOf(afterDv).nonEmpty,

@@ -60,7 +60,7 @@ class DictionarySkipSpec extends SparkSpec {
     assert(sb.isEmpty, s"saturated sketches must never prune: $kb / $sb")
     // deletes after the analyze only SHRINK the live set — the stale
     // sketch stays a sound superset and keeps pruning correctly
-    VersionedTable.deleteVectorized(spark, path, col("s") === "date",
+    VersionedTable.delete(spark, path, col("s") === "date",
       purgeFraction = 1.0)
     assert(VersionedTable.readWhere(spark, path, col("s") === "date")
       .count() == 0L)

@@ -255,7 +255,7 @@ class MaterializedViewSpec extends SparkSpec {
     VersionedTable.update(spark, src, col("id") === 1L,
       Map("v" -> (col("v") + 100L)))
     assert(fresh(), "UPDATE must chain the refresh")
-    VersionedTable.deleteVectorized(spark, src, col("id") === 2L, 0.9)
+    VersionedTable.delete(spark, src, col("id") === 2L, 0.9)
     assert(fresh(), "DV delete must chain the refresh")
     VersionedTable.upsert(Seq((3L, "g1", 0L, 999L)).toDF("id", "g", "g2", "v"),
       src, keys = Seq("id"))
@@ -361,7 +361,7 @@ class MaterializedViewSpec extends SparkSpec {
     refuses(VersionedTable.delete(spark, mv, col("g") === "g0"))
     refuses(VersionedTable.update(spark, mv, col("g") === "g0",
       Map(MaterializedView.CountCol -> lit(0L))))
-    refuses(VersionedTable.deleteVectorized(spark, mv, col("g") === "g0", 0.9))
+    refuses(VersionedTable.delete(spark, mv, col("g") === "g0", 0.9))
     refuses(VersionedTable.upsert(bogus, mv, keys = Seq("g", "g2")))
     refuses(spark.sql(s"DELETE FROM graft.`$mv` WHERE g = 'g0'").collect())
     // the fence is for CONTENT, not maintenance: refresh still applies
@@ -724,13 +724,13 @@ class MaterializedViewSpec extends SparkSpec {
       else VersionedTable.append(df, src)
     }
     MaterializedView.create(spark, src, mv, Seq("g", "g2"), Seq("v"))
-    // delete inside ONE file's id range: the diff is that file's rewrite
+    // delete inside ONE file's id range: the diff is that file's marks
     VersionedTable.delete(spark, src, col("id").between(301L, 310L))
     val delta = VersionedTable.changes(spark, src,
       VersionedTable.lastTxn(spark, mv, MaterializedView.App).get,
       VersionedTable.latestVersion(spark, src).get)
     // the change feed is FILE-granular: the diff's rows come from the one
-    // rewritten file (its group) — the other 7 files never contribute
+    // marked file (its group) — the other 7 files never contribute
     val groups = delta.select(col("g")).distinct().as[String].collect().toSet
     assert(groups == Set("g3"), groups.toString)
     MaterializedView.refresh(spark, mv)
@@ -747,7 +747,8 @@ class MaterializedViewSpec extends SparkSpec {
       MaterializedView.create(spark, src, mv, Seq("g", "g2"), Seq("v"),
         distinctCols = distinctCols)
       val v1 = VersionedTable.latestVersion(spark, src).get
-      VersionedTable.delete(spark, src, col("id") <= 3L) // rewrites one file
+      // 20 of one 25-row file's rows, past the fraction: rewrites that file
+      VersionedTable.delete(spark, src, col("id") <= 20L)
       val removed = VersionedTable.filesOf(spark, src, v1)
         .diff(VersionedTable.filesOf(spark, src, v1 + 1))
       assert(removed.size == 1, removed)

@@ -112,7 +112,7 @@ class NdvEstimationSpec extends SparkSpec {
     assert(VersionedTable.ndvFromStats(spark, p, "id").isDefined)
     // a value-skewed DV delete leaves live NDV far below the sketched one;
     // a stale estimate would shrink sizes in the BROADCAST direction
-    VersionedTable.deleteVectorized(spark, p, col("id") > 100L,
+    VersionedTable.delete(spark, p, col("id") > 100L,
       purgeFraction = 1.0)
     assert(VersionedTable.ndvFromStats(spark, p, "id").isEmpty,
       "stale sketches must refuse once marks exist")
@@ -254,7 +254,7 @@ class NdvEstimationSpec extends SparkSpec {
     assert(GraftBatchShim.scanRootsOf(q("v")).isEmpty)
     assert(q("v").collect().head.toSeq == Seq(140L, 4L))
     // DV marks could have removed summed rows — decline, stay right
-    VersionedTable.deleteVectorized(spark, p, col("k") === 3L,
+    VersionedTable.delete(spark, p, col("k") === 3L,
       purgeFraction = 1.0)
     assert(GraftBatchShim.scanRootsOf(q("v")).nonEmpty)
     assert(q("v").collect().head.toSeq == Seq(110L, 3L))

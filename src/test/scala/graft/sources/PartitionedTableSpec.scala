@@ -155,10 +155,10 @@ class PartitionedTableSpec extends SparkSpec {
     sample(90).write.format("graft-table").partitionBy("dt").save(p)
     // partition-scoped mark (predicate on dt) + data-scoped mark (on id),
     // purgeFraction=1.0 keeps the marks live (merge-on-read exercised)
-    VersionedTable.deleteVectorized(spark, p,
+    VersionedTable.delete(spark, p,
       $"dt" === lit(java.sql.Date.valueOf(days.head)) && $"id" < 30,
       purgeFraction = 1.0)
-    VersionedTable.deleteVectorized(spark, p, $"id" >= 80, purgeFraction = 1.0)
+    VersionedTable.delete(spark, p, $"id" >= 80, purgeFraction = 1.0)
     val expected = sample(90)
       .filter(!($"dt" === lit(java.sql.Date.valueOf(days.head)) && $"id" < 30))
       .filter(!($"id" >= 80))
@@ -184,7 +184,7 @@ class PartitionedTableSpec extends SparkSpec {
     val p = tmp()
     Seq((1L, "a b"), (2L, "a b"), (3L, "x:y"), (4L, "plain"))
       .toDF("id", "k").write.format("graft-table").partitionBy("k").save(p)
-    VersionedTable.deleteVectorized(spark, p, $"id" === 1, purgeFraction = 1.0)
+    VersionedTable.delete(spark, p, $"id" === 1, purgeFraction = 1.0)
     val left = spark.read.format("graft-table").load(p)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(left == Set((2L, "a b"), (3L, "x:y"), (4L, "plain")), left.toString)
@@ -194,13 +194,13 @@ class PartitionedTableSpec extends SparkSpec {
     val p = tmp()
     sample(90).write.format("graft-table").partitionBy("dt").save(p)
     // purgeFraction=0.0: every marked file rewrites in the same commit
-    VersionedTable.deleteVectorized(spark, p, $"id" < 30, purgeFraction = 0.0)
+    VersionedTable.delete(spark, p, $"id" < 30, purgeFraction = 0.0)
     val v2 = VersionedTable.latestVersion(spark, p).get
     assert(VersionedTable.filesOf(spark, p, v2).forall(_.contains("/dt=")))
     val t = spark.read.format("graft-table").load(p)
     assert(t.count() == 60 && t.filter($"dt".isNull).count() == 0)
     // now mark-then-purge explicitly
-    VersionedTable.deleteVectorized(spark, p, $"id" >= 80, purgeFraction = 1.0)
+    VersionedTable.delete(spark, p, $"id" >= 80, purgeFraction = 1.0)
     VersionedTable.purgeDeletes(spark, p)
     val vEnd = VersionedTable.latestVersion(spark, p).get
     assert(VersionedTable.filesOf(spark, p, vEnd).forall(_.contains("/dt=")))

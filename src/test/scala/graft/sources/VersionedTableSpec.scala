@@ -132,17 +132,6 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
-  test("compaction rewrites many small files into few, atomically") {
-    import graft.sources.TableIO
-    val path = java.nio.file.Files.createTempDirectory("cmp").toString + "/t"
-    TableIO.write((1 to 10000).toDF("x").repartition(64), path)
-    def nParquet = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(nParquet == 64)
-    TableIO.compact(spark, path, targetFileBytes = 1L << 30)
-    assert(nParquet == 1, nParquet.toString)
-    assert(TableIO.read(spark, path).count() == 10000)
-  }
-
   // ---- file-granular write path (round-5: copy-on-write MERGE family) ----
 
   /** All data files of a version, absolute, via the public pruning surface
@@ -252,7 +241,7 @@ class VersionedTableSpec extends SparkSpec {
       (col("id") / 256).cast("int").as("b"),
       col("id").as("payload"))
     // z-placed: every file covers one aligned z-tile → narrow (a, b) bounds
-    VersionedTable.write(TableIO.zPlaced(grid, "a", "b", bits = 8), path, Seq("a", "b"))
+    VersionedTable.write(TableIO.zPlaced(grid, Seq("a", "b"), 8), path, Seq("a", "b"))
     val v1Files = filesOf(path)
     assert(v1Files.size >= 8, s"need a multi-file layout, got ${v1Files.size}")
     val v1Digests = digestsAt(path, 1L)
@@ -308,15 +297,19 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.countRows(spark, path) == 256L * 256)
   }
 
-  test("row-level DELETE rewrites only intersecting files; old version intact") {
+  test("row-level DELETE marks only intersecting files; old version intact") {
     val path = java.nio.file.Files.createTempDirectory("del").toString + "/t"
     rangeTable(path)
     val v1Files = filesOf(path)
     val v2 = VersionedTable.delete(spark, path, col("id").between(300, 309))
     assert(v2 == 2L)
     val v2Files = filesOf(path)
-    assert((v2Files intersect v1Files).size == 3,
-      "only the one intersecting tile rewritten")
+    // 10 of the tile's 250 rows, under the rewrite fraction: every file is
+    // carried byte-identical and only the one intersecting tile is marked
+    assert(v2Files == v1Files, s"no data file added or removed: ${v2Files -- v1Files}")
+    assert(digestsAt(path, 2L) == digestsAt(path, 1L))
+    assert(markedTiles(path, 2L) == tilesHolding(path, col("id").between(300, 309)) &&
+      marksAt(path, 2L).values.toSeq == Seq(10L), "only the one intersecting tile marked")
     val now = VersionedTable.read(spark, path)
     assert(now.count() == 990)
     assert(now.filter(col("id").between(300, 309)).count() == 0)
@@ -338,6 +331,18 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.delete(spark, p2, col("s") === "kill")
     val left = VersionedTable.read(spark, p2).select("id").as[Int].collect().toSet
     assert(left == Set(1, 2), "p=NULL row must survive DELETE")
+    // candidate files holding no matching LIVE row commit nothing
+    assert(VersionedTable.delete(spark, path, col("id") === 305L) == v2)
+    assert(VersionedTable.versions(spark, path) == Seq(1L, 2L))
+    // past the fraction (200 of the first tile's 250 rows) that one tile is
+    // rewritten as its 50 survivors, unmarked; the marked tile keeps its
+    // marks and the other two their bytes
+    val v4 = VersionedTable.delete(spark, path, col("id") < 200L)
+    val v4Files = filesOf(path)
+    assert(v4 == 3L && v4Files.size == 4 && (v4Files intersect v2Files).size == 3)
+    assert(addedRows(path, 3L) == 50L)
+    assert(marksAt(path, 3L) == marksAt(path, 2L))
+    assert(VersionedTable.read(spark, path).count() == 790L)
   }
 
   test("OPTIMIZE compacts small files into a new version; history + stats survive") {
@@ -444,7 +449,7 @@ class VersionedTableSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("dv").toString + "/t"
     rangeTable(path)
     val v1Files = filesOf(path)
-    val v2 = VersionedTable.deleteVectorized(spark, path, col("id").between(100, 149))
+    val v2 = VersionedTable.delete(spark, path, col("id").between(100, 149))
     assert(v2 == 2L)
     // the whole point: EVERY data file carried byte-identical
     assert(filesOf(path) == v1Files, "DV delete must not touch any data file")
@@ -461,7 +466,7 @@ class VersionedTableSpec extends SparkSpec {
     val ch = VersionedTable.changes(spark, path, 1L, 2L).collect()
     assert(ch.length == 50 && ch.forall(_.getAs[String]("_change_type") == "delete"))
     // a second, OVERLAPPING dv delete marks only still-live rows
-    VersionedTable.deleteVectorized(spark, path, col("id").between(140, 159))
+    VersionedTable.delete(spark, path, col("id").between(140, 159))
     assert(VersionedTable.countRows(spark, path) == 940L)
     assert(VersionedTable.read(spark, path).count() == 940)
     // CoW upsert over marked keys: the touched file materializes its DVs
@@ -487,7 +492,7 @@ class VersionedTableSpec extends SparkSpec {
     val v1Files = filesOf(path)
     // 150/250 = 60% of one file > DefaultDvPurgeFraction: the marks must
     // NOT land — that file rewrites to its 100 survivors in the same commit
-    VersionedTable.deleteVectorized(spark, path, col("id") < 150)
+    VersionedTable.delete(spark, path, col("id") < 150)
     assert(VersionedTable.read(spark, path).count() == 850)
     assert(VersionedTable.countRows(spark, path) == 850L)
     val h2 = VersionedTable.history(spark, path).orderBy(col("version").desc).first()
@@ -496,7 +501,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(!VersionedTable.read(spark, path).queryExecution.executedPlan.toString
       .contains("LeftAnti"), "purged table must read as a plain scan")
     // BELOW-threshold marks still take the merge-on-read path
-    VersionedTable.deleteVectorized(spark, path, col("id") === 500L)
+    VersionedTable.delete(spark, path, col("id") === 500L)
     val v2Files = filesOf(path)
     val h3 = VersionedTable.history(spark, path).orderBy(col("version").desc).first()
     assert(h3.getLong(4) == 1L)
@@ -511,7 +516,7 @@ class VersionedTableSpec extends SparkSpec {
       .contains("LeftAnti"))
     assert((filesOf(path) intersect v2Files).size == 3, "purge rewrites only marked files")
     // opt-out: purgeFraction=1.0 keeps even heavy deletes merge-on-read
-    VersionedTable.deleteVectorized(spark, path, col("id") >= 800, purgeFraction = 1.0)
+    VersionedTable.delete(spark, path, col("id") >= 800, purgeFraction = 1.0)
     val h5 = VersionedTable.history(spark, path).orderBy(col("version").desc).first()
     assert(h5.getLong(4) == 200L, h5.toString)
     assert(VersionedTable.read(spark, path).count() == 649)
@@ -520,14 +525,14 @@ class VersionedTableSpec extends SparkSpec {
   test("deletion-vector sidecars survive vacuum while their version is live") {
     val path = java.nio.file.Files.createTempDirectory("dvv").toString + "/t"
     rangeTable(path)
-    VersionedTable.deleteVectorized(spark, path, col("id") < 10)
+    VersionedTable.delete(spark, path, col("id") < 10)
     VersionedTable.vacuum(spark, path, keepLast = 1, orphanRetentionMs = 0L)
     assert(VersionedTable.versions(spark, path) == Seq(2L))
     val now = VersionedTable.read(spark, path)
     assert(now.count() == 990 && now.filter(col("id") < 10).count() == 0)
     assert(VersionedTable.countRows(spark, path) == 990L)
     // a provably-empty dv delete is a no-op
-    assert(VersionedTable.deleteVectorized(spark, path, col("id") === 999999L) == 2L)
+    assert(VersionedTable.delete(spark, path, col("id") === 999999L) == 2L)
   }
 
   test("MERGE delete clause: one commit applies a CDC batch with tombstones") {
@@ -583,7 +588,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(inputs.nonEmpty && carried.forall(cf => !inputs.contains(cf)),
       s"carried files must not be scanned by the diff: ${inputs.mkString(",")}")
     // DV-delta changes: marks added on a CARRIED file surface as deletes
-    VersionedTable.deleteVectorized(spark, path, col("id").between(300, 304))
+    VersionedTable.delete(spark, path, col("id").between(300, 304))
     val ch2 = VersionedTable.changes(spark, path, 2L, 3L).collect()
     assert(ch2.length == 5 && ch2.forall(_.getAs[String]("_change_type") == "delete"))
     assert(ch2.map(_.getLong(0)).toSet == (300L to 304L).toSet)
@@ -594,7 +599,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.write(
       spark.range(1, 11).select(col("id"), concat(lit("v"), col("id")).as("v"))
         .coalesce(1), path)
-    VersionedTable.deleteVectorized(spark, path, col("id") <= 3) // v2: marks {1,2,3}
+    VersionedTable.delete(spark, path, col("id") <= 3) // v2: marks {1,2,3}
     VersionedTable.restore(spark, path, 1L)                      // v3: marks gone
     // RESTORE across a dv-delete: the un-deleted rows are CDF inserts
     val ch = VersionedTable.changes(spark, path, 2L, 3L).collect()
@@ -603,7 +608,7 @@ class VersionedTableSpec extends SparkSpec {
     assert(ch.map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
     // swap at EQUAL count: v4 marks {8,9,10}; diff v2 -> v4 must surface
     // both directions even though each side marks exactly 3 rows
-    VersionedTable.deleteVectorized(spark, path, col("id") >= 8)
+    VersionedTable.delete(spark, path, col("id") >= 8)
     val ch2 = VersionedTable.changes(spark, path, 2L, 4L).collect()
     val ins = ch2.filter(_.getAs[String]("_change_type") == "insert").map(_.getLong(0)).toSet
     val del = ch2.filter(_.getAs[String]("_change_type") == "delete").map(_.getLong(0)).toSet
@@ -763,7 +768,7 @@ class VersionedTableSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("clone").toString
     val src = base + "/src"; val dst = base + "/dst"
     rangeTable(src)                                            // v1: 4 files
-    VersionedTable.deleteVectorized(spark, src, col("id") === 7L) // v2: DV mark
+    VersionedTable.delete(spark, src, col("id") === 7L) // v2: DV mark
     assert(VersionedTable.cloneTo(spark, src, dst) == 1L)
     // same rows (DV marks carried), fresh one-version history
     assert(VersionedTable.read(spark, dst).count() == 999)
@@ -1101,7 +1106,7 @@ class VersionedTableSpec extends SparkSpec {
       spark.range(0, 1000).select(col("id").as("k"), (col("id") * 2).cast("int").as("w"))
         .repartitionByRange(4, col("k")), path, Seq("k"))
     // v2: dv-mark a small band (below purge threshold)
-    VersionedTable.deleteVectorized(spark, path, col("k").between(100, 119))
+    VersionedTable.delete(spark, path, col("k").between(100, 119))
     // v3-v4: drop w, re-add as INT (fresh physical binding)
     VersionedTable.dropColumns(spark, path, Seq("w"))
     VersionedTable.addColumns(spark, path, Seq(StructField("w", IntegerType)))
@@ -1135,7 +1140,7 @@ class VersionedTableSpec extends SparkSpec {
     // no stats for this column → None
     assert(VersionedTable.minMaxFromStats(spark, path, "v").isEmpty)
     // a deletion-vector mark could BE the extremum → must refuse
-    VersionedTable.deleteVectorized(spark, path, col("id") === 0L)
+    VersionedTable.delete(spark, path, col("id") === 0L)
     assert(VersionedTable.minMaxFromStats(spark, path, "id").isEmpty)
     // ...but the pre-DV version still answers (per-version manifests)
     assert(VersionedTable.minMaxFromStats(spark, path, "id", Some(1L))
@@ -1258,7 +1263,7 @@ class VersionedTableSpec extends SparkSpec {
     val fApp = submit(VersionedTable.append(
       spark.range(5000, 5010).select(col("id"), concat(lit("n"), col("id")).as("v")),
       path))
-    val fDv = submit(VersionedTable.deleteVectorized(spark, path,
+    val fDv = submit(VersionedTable.delete(spark, path,
       col("id").between(100, 109)))
     val fDel = submit(VersionedTable.delete(spark, path, col("id").between(200, 209)))
     gate.countDown()
@@ -1863,7 +1868,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.dropCheckConstraint(spark, path, "x_pos")
     assert(VersionedTable.protocolOf(spark, path)._2.isEmpty)
     // reader features reflect the bytes: a DV delete declares "dv"
-    VersionedTable.deleteVectorized(spark, path, col("id") === -1L,
+    VersionedTable.delete(spark, path, col("id") === -1L,
       purgeFraction = 1.0)
     val (rf, _) = VersionedTable.protocolOf(spark, path)
     assert(!rf.contains("partitioned"), rf.toString)
@@ -1938,11 +1943,14 @@ class VersionedTableSpec extends SparkSpec {
 
   /** Every write verb as (verb, setup, the verb's one commit), each
     * committing exactly one new version over its setup — the table the
-    * lost-race and manifest-form specs drive. */
+    * lost-race and manifest-form specs drive. Tables hold four 10-row
+    * files and an all-null column `w` (re-bindable without changing a
+    * value — the column-mapped variant drops and re-adds it). */
   private def writeVerbs(): Seq[(String, String => Unit, String => Long)] = {
     import org.apache.spark.sql.types.{DoubleType, StructField}
     val base = spark.range(0, 40, 1, 4).select(col("id"),
-      (col("id") % 4).as("g"), concat(lit("v"), col("id")).as("v"))
+      (col("id") % 4).as("g"), concat(lit("v"), col("id")).as("v"),
+      lit(null).cast(DoubleType).as("w"))
     def table(p: String): Unit = VersionedTable.write(base, p, Seq("id"))
     val src = java.nio.file.Files.createTempDirectory("copysrc").toString
     base.filter(col("id") < 8).withColumn("id", col("id") + 1000)
@@ -1957,8 +1965,12 @@ class VersionedTableSpec extends SparkSpec {
       ("analyzeNdv", table, p => VersionedTable.analyzeNdvInfo(spark, p, Seq("id"))._1),
       ("upsert", table, p => VersionedTable.upsert(
         spark.range(35, 45).select(col("id"), (col("id") % 4).as("g"),
-          lit("U").as("v")), p, Seq("id"))),
+          lit("U").as("v"), lit(null).cast(DoubleType).as("w")), p, Seq("id"))),
+      // 5 of a file's 10 rows: marked
       ("delete", table, p => VersionedTable.delete(spark, p, col("id") < 5)),
+      // 8 of a file's 10 rows, past the fraction: the file is rewritten
+      ("delete past the fraction", table,
+        p => VersionedTable.delete(spark, p, col("id") < 8)),
       ("update", table, p => VersionedTable.update(spark, p, col("id") < 5,
         Map("v" -> lit("U")))),
       ("setProperties", table, p => VersionedTable.setProperties(spark, p,
@@ -1970,11 +1982,9 @@ class VersionedTableSpec extends SparkSpec {
       ("declareIdentityColumn", p => VersionedTable.write(base.filter(lit(false)), p),
         p => VersionedTable.declareIdentityColumn(spark, p, "id")),
       ("addColumns", table, p => VersionedTable.addColumns(spark, p,
-        Seq(StructField("w", DoubleType)))),
-      ("deleteVectorized", table, p => VersionedTable.deleteVectorized(
-        spark, p, col("id") === 3)),
+        Seq(StructField("x", DoubleType)))),
       ("purgeDeletes", { p => table(p)
-        VersionedTable.deleteVectorized(spark, p, col("id") < 3, purgeFraction = 1.0) },
+        VersionedTable.delete(spark, p, col("id") < 3, purgeFraction = 1.0) },
         p => VersionedTable.purgeDeletes(spark, p)),
       ("compact", table, p => VersionedTable.compact(spark, p)),
       ("zOrderBy", table, p => VersionedTable.zOrderBy(spark, p, Seq("id", "g"))),
@@ -2073,25 +2083,70 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
+  /** The carry rule of version `v` over `v - 1`: every file carried from
+    * the parent keeps its row count, its stats (unless the verb restates
+    * them, as ANALYZE does) and its marks (a marking verb may add some);
+    * no replaced file keeps a mark. Returns whether `v` replaced every
+    * file of a non-empty parent. */
+  private def assertCarried(p: String, v: Long, what: String,
+      restatesStats: Boolean): Boolean = {
+    val (rowsP, statsP, marksP, _, _) = VersionedTable.carryMetaOf(spark, p, v - 1)
+    val (rowsV, statsV, marksV, _, _) = VersionedTable.carryMetaOf(spark, p, v)
+    val filesP = VersionedTable.filesOf(spark, p, v - 1)
+    val filesV = VersionedTable.filesOf(spark, p, v).toSet
+    val (carried, replaced) = filesP.partition(filesV)
+    carried.foreach { fk =>
+      assert(rowsV.get(fk) == rowsP.get(fk), s"$what: row count of carried $fk")
+      if (!restatesStats)
+        assert(statsV.get(fk) == statsP.get(fk), s"$what: stats of carried $fk")
+      assert(marksV.getOrElse(fk, 0L) >= marksP.getOrElse(fk, 0L),
+        s"$what: marks of carried $fk ${marksP.get(fk)} → ${marksV.get(fk)}")
+    }
+    replaced.foreach(fk => assert(!marksV.contains(fk), s"$what: replaced $fk keeps a mark"))
+    filesP.nonEmpty && carried.isEmpty
+  }
+
   test("manifest form: every write verb commits files or ckpt with schema, ts and per-file row counts") {
+    import org.apache.spark.sql.types.{DoubleType, StructField}
     val savedInline = VersionedTable.CkptInlineMaxFiles
     try writeVerbs().foreach { case (name, setup, verb) =>
-      // as written, then landed on an inline and on a parquet checkpoint
-      Seq(("natural", None), ("inline", Some(savedInline)), ("parquet", Some(0)))
+      // as written, then landed on an inline and on a parquet checkpoint,
+      // then over a column-mapped table (`w` dropped and re-added)
+      val natural = java.nio.file.Files.createTempDirectory("form-natural").toString + "/t"
+      Seq(("natural", None), ("inline", Some(savedInline)), ("parquet", Some(0)),
+        ("mapped", None))
         .foreach { case (kind, ckptInline) =>
-          val p = java.nio.file.Files.createTempDirectory(s"form-$kind").toString + "/t"
+          val p =
+            if (kind == "natural") natural
+            else java.nio.file.Files.createTempDirectory(s"form-$kind").toString + "/t"
           setup(p)
           ckptInline.foreach { n => padToCheckpoint(p); VersionedTable.CkptInlineMaxFiles = n }
+          if (kind == "mapped") {
+            VersionedTable.dropColumns(spark, p, Seq("w"))
+            VersionedTable.addColumns(spark, p, Seq(StructField("w", DoubleType)))
+          }
           val v = verb(p)
           VersionedTable.CkptInlineMaxFiles = savedInline
           val forms = VersionedTable.versions(spark, p)
             .map(u => u -> assertWrittenForm(p, u, s"$name/$kind")).toMap
           val want = kind match {
-            case "natural" => Set("files", "delta")
+            case "natural" | "mapped" => Set("files", "delta")
             case "inline" => Set("files")
             case _ => Set("ckpt")
           }
           assert(want(forms(v)), s"$name/$kind: head form ${forms(v)}")
+          val replacedAll = assertCarried(p, v, s"$name/$kind",
+            restatesStats = name == "analyzeNdv")
+          if (kind == "mapped") {
+            // a commit that rewrites every file sheds the column mapping
+            // and still reads the same values
+            if (replacedAll) {
+              val (_, _, _, colMap, physDropped) = VersionedTable.carryMetaOf(spark, p, v)
+              assert(colMap.isEmpty && physDropped.isEmpty,
+                s"$name/mapped: full rewrite keeps colmap $colMap, phys_dropped $physDropped")
+            }
+            assert(sortedRows(p) == sortedRows(natural), s"$name/mapped: values")
+          }
         }
     } finally VersionedTable.CkptInlineMaxFiles = savedInline
   }
@@ -2164,7 +2219,7 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.upsert(Seq((5L, "e", 2.5, "new")).toDF("id", "s", "x", "e"),
       path, Seq("id"), evolveSchema = true)
     // v4: a deletion-vector delete carried on the rewritten file
-    VersionedTable.deleteVectorized(spark, path, col("id") === 4L)
+    VersionedTable.delete(spark, path, col("id") === 4L)
     // v5: RESTORE across that DV delete; v6: a duplicate in a new file
     VersionedTable.restore(spark, path, 3L)
     VersionedTable.append(
@@ -2237,10 +2292,8 @@ class VersionedTableSpec extends SparkSpec {
       "upsert" -> (p => VersionedTable.upsert(
         spark.range(0, 250).select(col("id"), lit(null).cast("string").as("v")),
         p, Seq("id"), deleteWhere = Some(col("v").isNull))),
-      "deleteVectorized" -> (p =>
-        VersionedTable.deleteVectorized(spark, p, col("id") < 250L)),
       "purgeDeletes" -> { p =>
-        VersionedTable.deleteVectorized(spark, p, col("id") < 250L, purgeFraction = 1.0)
+        VersionedTable.delete(spark, p, col("id") < 250L, purgeFraction = 1.0)
         VersionedTable.purgeDeletes(spark, p)
       })
     verbs.foreach { case (what, verb) =>
@@ -2307,7 +2360,7 @@ class VersionedTableSpec extends SparkSpec {
     def merge(k: Int)(p: String): Unit = VersionedTable.upsert(
       spark.range(0, k).select(col("id"), lit("U").as("v")), p, Seq("id"))
     def dvDelete(k: Int)(p: String): Unit =
-      VersionedTable.deleteVectorized(spark, p, col("id") < k)
+      VersionedTable.delete(spark, p, col("id") < k)
     // 50 of 100 is not above DefaultDvPurgeFraction (0.5): marked, file kept
     Seq(merge(50) _, dvDelete(50) _).foreach { verb =>
       val (kept, marks) = layout(verb)
@@ -2319,7 +2372,7 @@ class VersionedTableSpec extends SparkSpec {
     // existing marks count toward the fraction: 20 marked + 31 matched > 50
     val path = java.nio.file.Files.createTempDirectory("morc").toString + "/t"
     oneFile(path)
-    VersionedTable.deleteVectorized(spark, path, col("id") >= 80)
+    VersionedTable.delete(spark, path, col("id") >= 80)
     val f1 = VersionedTable.filesOf(spark, path, 2L).toSet
     VersionedTable.upsert(spark.range(0, 30).select(col("id"), lit("U").as("v")),
       path, Seq("id"))

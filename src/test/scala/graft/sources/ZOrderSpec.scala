@@ -17,7 +17,7 @@ class ZOrderSpec extends SparkSpec {
     }
     val rows = for (a <- 0 until 32; b <- 0 until 32) yield (a, b)
     val got = rows.toDF("a", "b")
-      .select(col("a"), col("b"), TableIO.zValue(col("a"), col("b"), 5).as("z"))
+      .select(col("a"), col("b"), TableIO.zValue(Seq(col("a"), col("b")), 5).as("z"))
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
     rows.foreach { case (a, b) =>
       assert(got((a, b)) == ref(a, b, 5), s"($a,$b)")
@@ -43,9 +43,9 @@ class ZOrderSpec extends SparkSpec {
     rows.foreach { case (a, b, c) =>
       assert(got((a, b, c)) == ref3(a, b, c, 3), s"($a,$b,$c)")
     }
-    // 2-arg zValue must stay bit-identical to the old implementation
+    // 2-D zValue must stay bit-identical to the 2-D interleave
     val two = Seq((5, 9)).toDF("a", "b")
-      .select(TableIO.zValue(col("a"), col("b"), 5)).head().getLong(0)
+      .select(TableIO.zValue(Seq(col("a"), col("b")), 5)).head().getLong(0)
     assert(two == ((0 until 5).map(i =>
       (((5 >> i) & 1L) << (2 * i + 1)) | (((9 >> i) & 1L) << (2 * i))).sum))
     // end-to-end: a 3-D z-ordered versioned table prunes on EVERY dimension
@@ -82,13 +82,13 @@ class ZOrderSpec extends SparkSpec {
     assert(maxBRange(zSorted) == 15, maxBRange(zSorted).toString)
     assert(maxBRange(lexSorted) == 63)
 
-    // end-to-end: writeZOrdered places rows by the z-value's top bits
+    // end-to-end: zPlaced places rows by the z-value's top bits
     // (tile-ALIGNED file boundaries — deterministic, unlike sampled range
     // splits, which can straddle a power-of-two z line and emit a file whose
     // stats span b's full width). 8 aligned buckets over a 64x64 grid ⇒
     // every file covers one z-span of 512: b-range ≤ 31, a-range ≤ 15.
     val path = java.nio.file.Files.createTempDirectory("zord").toString + "/t"
-    TableIO.writeZOrdered(grid.toDF("a", "b"), path, "a", "b", bits = 6)
+    TableIO.write(TableIO.zPlaced(grid.toDF("a", "b"), Seq("a", "b"), 6), path)
     val perFile = spark.read.parquet(path)
       .select(input_file_name().as("f"), col("a"), col("b"))
       .groupBy("f").agg(

@@ -1063,7 +1063,7 @@ class BoundaryCountSpec extends SparkSpec {
       sum($"v").as("s"))
     assert(mixed.collect().head.getLong(0) == 8092L)
     // DV marks: the marked file joins the boundary scan, totals stay exact
-    VersionedTable.deleteVectorized(spark, path, $"v" === 5000L,
+    VersionedTable.delete(spark, path, $"v" === 5000L,
       purgeFraction = 1.0)
     val afterDv = t.filter($"v" >= 1024L && $"v" < 7168L)
       .agg(count(lit(1)).as("n"))

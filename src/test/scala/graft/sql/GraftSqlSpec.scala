@@ -328,7 +328,7 @@ class GraftSqlSpec extends SparkSpec {
   test("MIN/MAX rewrite declines on deletion-vector marks (a marked row could be the extremum)") {
     val p = tmp()
     VersionedTable.write(spark.range(0, 100).toDF("id"), p, statsCols = Seq("id"))
-    VersionedTable.deleteVectorized(spark, p, $"id" >= 95)
+    VersionedTable.delete(spark, p, $"id" >= 95)
     // must come from a real scan: the stats still say max=99
     assert(spark.read.format("graft-table").load(p).agg(max($"id"))
       .head().getLong(0) == 94L)
@@ -337,7 +337,7 @@ class GraftSqlSpec extends SparkSpec {
   test("COUNT(*) rewrite subtracts deletion-vector marks and respects filters") {
     val p = tmp()
     VersionedTable.write(spark.range(0, 100).toDF("id"), p, statsCols = Seq("id"))
-    VersionedTable.deleteVectorized(spark, p, col("id") < 10)
+    VersionedTable.delete(spark, p, col("id") < 10)
     assert(spark.read.format("graft-table").load(p).count() == 90L)
     // a filtered count must NOT shortcut to the manifest total
     assert(spark.read.format("graft-table").load(p)
@@ -375,6 +375,12 @@ class GraftSqlSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(spark, p).contains(2L))
     val d2After = VersionedTable.filesOf(spark, p, 2L).filter(_.contains("dt=d2"))
     assert(d2After.toSet == d2Before.toSet, s"d2 rewritten: $d2Before -> $d2After")
+    // the statement and the verb commit the same shape under the one
+    // mark-or-rewrite rule: as many files, the same marks
+    val (m, m2) = (VersionedTable.versionMetaOf(spark, p, 2L),
+      VersionedTable.versionMetaOf(spark, p2, 2L))
+    assert(m.files.size == m2.files.size &&
+      m.dvRows.values.toSeq.sorted == m2.dvRows.values.toSeq.sorted, s"$m vs $m2")
   }
 
   test("UPDATE ... SET ≡ VersionedTable.update; assignments see the old row") {
@@ -524,7 +530,7 @@ class GraftSqlSpec extends SparkSpec {
     VersionedTable.write(
       Seq((1L, "a", "2026-01-01"), (2L, "b", "2026-01-01"), (3L, "c", "2026-01-02"))
         .toDF("id", "s", "dt"), p, Nil, Seq("dt"))
-    VersionedTable.deleteVectorized(spark, p, $"id" === 1L) // mark, no rewrite
+    VersionedTable.delete(spark, p, $"id" === 1L) // mark, no rewrite
     val got = spark.sql(s"SHOW PARTITIONS ${sqlName(p)}")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
     assert(got == Seq(("dt=2026-01-01", 1, 1L), ("dt=2026-01-02", 1, 1L)), got)
@@ -836,7 +842,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(VersionedTable.read(spark, p, Some(1L)).count() == 4)
     // deletion vectors on adopted files: the scan-side file key must match
     // the manifest key for token-less paths, or the marks never apply
-    VersionedTable.deleteVectorized(spark, p, $"id" === 2L, purgeFraction = 1.0)
+    VersionedTable.delete(spark, p, $"id" === 2L, purgeFraction = 1.0)
     assert(spark.read.format("graft-table").load(p)
       .select($"id").collect().map(_.getLong(0)).toSet == Set(3L, 4L))
     // refusals: double-convert, and a root-level parquet file
@@ -867,7 +873,7 @@ class GraftSqlSpec extends SparkSpec {
       .select($"id", $"dt", $"h").collect().map(_.toString).toSet ==
       Set("[1,2026-01-01,0]", "[12,2026-01-01,1]", "[3,2026-01-02,0]"))
     // depth-2 DV: scan-side key must equal the full dir-relative manifest key
-    VersionedTable.deleteVectorized(spark, p, $"id" === 3L, purgeFraction = 1.0)
+    VersionedTable.delete(spark, p, $"id" === 3L, purgeFraction = 1.0)
     assert(spark.read.format("graft-table").load(p)
       .select($"id").collect().map(_.getLong(0)).toSet == Set(1L, 12L))
   }
@@ -877,7 +883,7 @@ class GraftSqlSpec extends SparkSpec {
     VersionedTable.write(
       (1L to 100L).map(i => (i, s"r$i")).toDF("id", "s").repartition(4), p)
     // pure merge-on-read marks (opted out of auto-purge)
-    VersionedTable.deleteVectorized(spark, p, $"id" % 10 === 0, purgeFraction = 1.0)
+    VersionedTable.delete(spark, p, $"id" % 10 === 0, purgeFraction = 1.0)
     def dvDeletedAt(v: Long): Long = VersionedTable.history(spark, p)
       .filter($"version" === v).collect().head.getAs[Long]("num_dv_deleted")
     val before = VersionedTable.read(spark, p)

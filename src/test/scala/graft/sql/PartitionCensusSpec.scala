@@ -39,7 +39,7 @@ class PartitionCensusSpec extends SparkSpec {
     assert(sorted(q) == expected)
     // a DV-marked delete (merge-on-read: files keep their rows, the marks
     // subtract) changes the counts the census must report exactly
-    VersionedTable.deleteVectorized(spark, t, $"v" % 4 === 0)
+    VersionedTable.delete(spark, t, $"v" % 4 === 0)
     val q2 = VersionedTable.read(spark, t)
       .groupBy($"day").agg(count(lit(1)).as("n"))
     assert(scanFree(q2), q2.queryExecution.optimizedPlan.toString)
@@ -228,7 +228,7 @@ class PartitionCensusSpec extends SparkSpec {
     assert(!scanFree(rd.groupBy($"day").agg(max($"id").as("m"))))
     // a DV mark could have deleted the extremum: data MIN/MAX declines,
     // while the pure COUNT census still answers (marks subtract exactly)
-    VersionedTable.deleteVectorized(spark, t, $"v" === 180L)
+    VersionedTable.delete(spark, t, $"v" === 180L)
     assert(!scanFree(rd.groupBy($"day").agg(max($"v").as("m"))))
     val qc = rd.groupBy($"day").agg(count(lit(1)).as("n"))
     assert(scanFree(qc), qc.queryExecution.optimizedPlan.toString)
@@ -264,7 +264,7 @@ class PartitionCensusSpec extends SparkSpec {
     val (_, s1, nn1, _) = sums.find(_._1 == "d1").get
     assert(qg.collect().head.toSeq == Seq(s1, nn1))
     // DV marks make every per-file sum unknowable — decline, stay right
-    VersionedTable.deleteVectorized(spark, t, $"v" === 4L,
+    VersionedTable.delete(spark, t, $"v" === 4L,
       purgeFraction = 1.0)
     assert(!scanFree(q))
     assert(sorted(q) ==

@@ -695,7 +695,7 @@ class TopKPruningSpec extends SparkSpec {
     // DV marks make per-file counts unprovable: after a point DELETE the
     // marked file stops counting; with every OTHER file still provable
     // the top-k threshold (computed over the survivors) stays sound
-    VersionedTable.deleteVectorized(spark, path, col("k") === 4095L,
+    VersionedTable.delete(spark, path, col("k") === 4095L,
       purgeFraction = 1.0)
     val afterDv = t.orderBy(col("k").desc).limit(5)
     val got = rows(afterDv)

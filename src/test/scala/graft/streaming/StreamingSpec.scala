@@ -310,7 +310,7 @@ class StreamingSpec extends SparkSpec {
       // a deletion-vector commit adds no files → empty batch, no failure
       // (purgeFraction=1.0: this must stay a pure mark commit even though
       // the marked row is a large fraction of its tiny file)
-      VersionedTable.deleteVectorized(spark, table, col("id") === 1, purgeFraction = 1.0)
+      VersionedTable.delete(spark, table, col("id") === 1, purgeFraction = 1.0)
       q.processAllAvailable()
       assert(spark.table("vt_src").count() == 3)
     } finally q.stop()
@@ -354,7 +354,7 @@ class StreamingSpec extends SparkSpec {
     // an append, then a DV delete of one of the file's rows, in ONE batch
     // from version 1: neither commit both adds files and marks carried rows
     VersionedTable.append(Seq((11, "v11")).toDF("id", "v"), table)
-    VersionedTable.deleteVectorized(spark, table, col("id") === 10)
+    VersionedTable.delete(spark, table, col("id") === 10)
     assert(drain("vt_srcm1", "startingVersion" -> "2") == Set(11 -> "v11"))
     // a MERGE matching 1 of 10 rows stays under the rewrite fraction: it
     // marks the row and adds the applied one — no file is removed, yet the
@@ -664,7 +664,7 @@ class StreamingSpec extends SparkSpec {
       // row-level delete+insert pair instead
       VersionedTable.upsert(Seq((2L, "B")).toDF("id", "v"), table, Seq("id")) // v3
       // merge-on-read DV delete — zero files rewritten, still a CDC delete
-      VersionedTable.deleteVectorized(spark, table, col("id") === 1L, 1.0)    // v4
+      VersionedTable.delete(spark, table, col("id") === 1L, 1.0)    // v4
       q.processAllAvailable()
     } finally q.stop()
     while (spark.streams.active.nonEmpty) Thread.sleep(50)
