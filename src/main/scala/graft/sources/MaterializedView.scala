@@ -1133,9 +1133,9 @@ object MaterializedView {
       if (!hWm.exists(_ >= v1) || !hPinFresh) {
         val prevH = VersionedTable.mvMaintenance.get()
         VersionedTable.mvMaintenance.set(true)
-        try VersionedTable.commitSnapshotRaw(
-          helperFrame(snap, groupBy, exprOf, t), hp,
-          statsCols = groupBy, partitionBy = Nil,
+        try VersionedTable.insert(
+          helperFrame(snap, groupBy, exprOf, t), hp, overwrite = true,
+          statsCols = groupBy,
           txn = if (hWm.exists(_ >= v1)) None else Some(App -> v1),
           propsAdd = Map(
             SourceKey -> mvPath, HelperOfKey -> t.mkString("|")) ++ pinAdd)
@@ -1158,7 +1158,7 @@ object MaterializedView {
     // the re-pinned dim versions land IN the snapshot commit — a separate
     // props commit would leave a crash window where the content (built
     // against the new dims) and the pins (still the old ones) disagree
-    try VersionedTable.commitSnapshotRaw(agg, mvPath,
+    try VersionedTable.insert(agg, mvPath, overwrite = true,
       statsCols = groupBy, partitionBy = partitionBy,
       txn = if (wm.exists(_ >= v1)) None else Some(App -> v1),
       propsAdd = pinAdd)

@@ -13,8 +13,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - `clusterBy` approximates the suggested `ZORDER BY` via
   *    sortWithinPartitions: parquet min/max column stats become selective,
   *    so point lookups skip row groups (02_silver_events.sql:61)
-  *  - `compactTo` approximates Delta's OPTIMIZE/autoCompact small-file
-  *    management (01_bronze.sql:18-26)
   *  - full-table overwrites are ATOMIC for the writer (transaction-log-lite
   *    for Delta's ACID overwrite, 01_bronze.sql:18-26): the job writes into
   *    a hidden stage directory next to the table, a commit manifest is
@@ -40,13 +38,11 @@ object TableIO {
       path: String,
       mode: SaveMode = SaveMode.Overwrite,
       partitionBy: Seq[String] = Nil,
-      clusterBy: Seq[String] = Nil,
-      compactTo: Option[Int] = None): Unit = {
+      clusterBy: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.functions.col
-    val compacted = compactTo.map(df.repartition).getOrElse(df)
     val clustered =
-      if (clusterBy.nonEmpty) compacted.sortWithinPartitions(clusterBy.map(col): _*)
-      else compacted
+      if (clusterBy.nonEmpty) df.sortWithinPartitions(clusterBy.map(col): _*)
+      else df
     def writeTo(target: String): Unit = {
       val writer = clustered.write.mode(mode)
       val partitioned =

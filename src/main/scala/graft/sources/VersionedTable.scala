@@ -197,15 +197,21 @@ object VersionedTable {
   /** Atomic REPLACE of `dest` with `tmp` (readers see old or new content,
     * never partial): nio ATOMIC_MOVE on the local filesystem, FileContext
     * rename(OVERWRITE) elsewhere. Shared by the head pointer and vacuum's
-    * re-anchor. */
+    * re-anchor. The nio move leaves Hadoop's checksum sidecar of `tmp`
+    * behind, so it is deleted here. */
   private def atomicReplace(f: FileSystem, root: Path, tmp: Path, dest: Path): Unit =
-    if ("file" == Option(root.toUri.getScheme).getOrElse("file"))
+    if ("file" == Option(root.toUri.getScheme).getOrElse("file")) {
       java.nio.file.Files.move(
         java.nio.file.Paths.get(tmp.toUri.getPath),
         java.nio.file.Paths.get(dest.toUri.getPath),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    else {
+      f match {
+        case cf: org.apache.hadoop.fs.ChecksumFileSystem =>
+          cf.getRawFileSystem.delete(cf.getChecksumFile(tmp), false)
+        case _ =>
+      }
+    } else {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, f.getConf)
       fc.rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
@@ -313,6 +319,12 @@ object VersionedTable {
       val rows = dvRows.filter(kv => keep(kv._1))
       (if (rows.isEmpty) Seq.empty else dv, rows)
     }
+    /** The column-mapping rule of a commit that replaces `replaced`: one
+      * that carries files keeps `colmap` and `phys_dropped` (carried files
+      * still need them); one that carries none writes logical names and
+      * sheds both. */
+    def mappingOver(replaced: Set[String]): (Map[String, String], Set[String]) =
+      if (files.forall(replaced)) (Map.empty, Set.empty) else (colMap, physDropped)
   }
 
   /** Write a FULL (self-contained) manifest every this-many versions; the
@@ -1218,16 +1230,15 @@ object VersionedTable {
     (live, st.filter(kv => liveSet(kv._1)), rw.filter(kv => liveSet(kv._1)))
   }
 
-  /** The stats columns a maintenance commit should keep collecting when the
-    * caller didn't name any: whatever the parent manifest tracked, so a
-    * table's data-skipping never silently degrades across MERGE/DELETE/
-    * OPTIMIZE commits. On a checkpoint-anchored commit the answer comes
-    * from the delta-added stats or a ONE-ROW probe of the checkpoint's
-    * stats column — never by forcing the full deferred map. */
-  private def inheritedStatsCols(spark: SparkSession, root: Path, c: Commit,
-      explicit: Seq[String]): Seq[String] =
-    if (explicit.nonEmpty) explicit
-    else if (c.statsAdds.nonEmpty) c.statsAdds.values.head.keys.toSeq.sorted
+  /** The stats columns a commit should keep collecting when the caller
+    * didn't name any: whatever the parent manifest tracked, so a table's
+    * data-skipping never silently degrades across overwrite/append/MERGE/
+    * DELETE/OPTIMIZE commits. On a checkpoint-anchored commit the answer
+    * comes from the delta-added stats or a ONE-ROW probe of the
+    * checkpoint's stats column — never by forcing the full deferred map. */
+  private def inheritedStatsCols(spark: SparkSession, root: Path,
+      c: Commit): Seq[String] =
+    if (c.statsAdds.nonEmpty) c.statsAdds.values.head.keys.toSeq.sorted
     else c.ckptInfo match {
       case Some((rel, _)) =>
         spark.read.parquet(new Path(root, rel).toString)
@@ -1238,63 +1249,97 @@ object VersionedTable {
       case None => c.stats.values.headOption.map(_.keys.toSeq.sorted).getOrElse(Nil)
     }
 
+  /** A table with no head: a parent with no files (the genesis commit
+    * replaces nothing and carries nothing). */
+  private val NoFiles = Commit(Nil, new StructType(), LazyStats.of(Map.empty),
+    Map.empty, Map.empty, Nil, Map.empty)
+
+  /** Rows one commit adds, staged under `dir`: the live files, their stats
+    * and their row counts. */
+  private final case class Added(dir: Path, files: Seq[String],
+      stats: DataSkipping.FileStats, rows: Map[String, Long])
+
   /** THE file-replacement commit every rewriting verb lands (Delta's DML
-    * action shape: remove some files, add some, carry the rest). Over head
-    * `b`/`c`, the staged `rows` (None: a commit that only marks) replace
-    * the `replaced` files at version b + 1:
-    *
-    *  - rows stage under the write contract ([[withContract]]; a violation
-    *    refuses as [[translateViolation]] says), with stats on `statsCols`
-    *    or, when empty, the parent's ([[inheritedStatsCols]]) and a row
-    *    count per file; zero-row staged files drop out ([[dropEmpty]]);
-    *  - every other file is carried with its stats, row count and marks;
-    *    `marks` (new marked rows per carried file, and the (file key, row
-    *    index) rows recording them, staged as one sidecar) add to them,
-    *    and no replaced file keeps a mark;
-    *  - ONE column-mapping rule: a commit that carries files keeps `colmap`
-    *    and `phys_dropped` (carried files still need them); one that
-    *    carries none writes logical names and sheds both.
-    *
-    * `schema`, `txn` and `props` override the parent's. */
-  private def replaceFiles(spark: SparkSession, path: String, b: Long,
-      c: Commit, replaced: Set[String], rows: Option[DataFrame],
+    * action shape: remove some files, add some, carry the rest): over
+    * `head` (None: a table with no commit yet), the staged `rows` (None: a
+    * commit that only marks) replace the `replaced` files at the next
+    * version, through the two halves every commit shares, [[stageRows]]
+    * and [[carryAndEncode]]; `marks` (new marked rows per carried file,
+    * and the (file key, row index) rows recording them) stage here as one
+    * sidecar. `schema`, `txn` and `props` override the parent's. */
+  private def replaceFiles(spark: SparkSession, path: String,
+      head: Option[(Long, Commit)], replaced: Set[String], rows: Option[DataFrame],
       marks: Option[(Map[String, Long], DataFrame)] = None,
       statsCols: Seq[String] = Nil, schema: Option[StructType] = None,
       txn: Option[Map[String, Long]] = None,
       props: Option[Map[String, String]] = None): Staged = {
     val root = new Path(path)
+    val parent = head.map(_._2)
+    val c = parent.getOrElse(NoFiles)
+    val s = schema.getOrElse(c.schema)
+    val sidecar = marks.map { case (_, df) => stage(df, root, fs(spark, root)) }
+    val added = rows.map(df => stageRows(spark, path, parent, df, c.props,
+      c.mappingOver(replaced)._1, partitionColsOf(c.schema), statsCols, s))
+    val v = head.fold(0L)(_._1) + 1L
+    val (body, ckptDir) = carryAndEncode(spark, root, v, parent, replaced, added,
+      marks.map(_._1 -> sidecar.get._2), s, txn.getOrElse(c.txn), props)
+    // a lost race makes the rewrite stale — the verb recomputes
+    Staged(v, body, ckptDir, sidecar.map(_._1).toSeq ++ added.map(_.dir),
+      added.toSeq.flatMap(_.files))
+  }
+
+  /** The staging half of a commit: `df` under the write contract of `props`
+    * ([[withContract]]; a violation refuses as [[translateViolation]]
+    * says), then `shape`d and staged under `colMap` and `partitionCols`;
+    * stats on `statsCols` or, when empty, the parent's
+    * ([[inheritedStatsCols]]) limited to `schema`'s data columns; a row
+    * count per file; zero-row files dropped ([[dropEmpty]]). */
+  private def stageRows(spark: SparkSession, path: String, parent: Option[Commit],
+      df: DataFrame, props: Map[String, String], colMap: Map[String, String],
+      partitionCols: Seq[String], statsCols: Seq[String], schema: StructType,
+      shape: DataFrame => DataFrame = identity): Added = {
+    val root = new Path(path)
     val f = fs(spark, root)
+    val (dir, rel0) =
+      try stage(shape(withContract(df, props, path)), root, f, colMap,
+        partitionCols, props)
+      catch { case e: Throwable => translateViolation(e, path) }
+    val cols =
+      if (statsCols.nonEmpty) statsCols
+      else parent.toSeq.flatMap(inheritedStatsCols(spark, root, _))
+        .filter(n => schema.fieldNames.contains(n) && !partitionCols.contains(n))
+    val (st0, rw0) = metaFor(spark, root, rel0, cols, colMap)
+    val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
+    Added(dir, rel, st, rw)
+  }
+
+  /** The carry-and-encode half of a commit: version `v` lists the parent's
+    * files minus `replaced`, each carried with its stats, row count and
+    * marks, plus the `added` files; `marks` (new marked rows per carried
+    * file, and the sidecar recording them) add to the carried marks, and no
+    * replaced file keeps one; ONE column-mapping rule
+    * ([[Commit.mappingOver]]). */
+  private def carryAndEncode(spark: SparkSession, root: Path, v: Long,
+      parent: Option[Commit], replaced: Set[String], added: Option[Added],
+      marks: Option[(Map[String, Long], Seq[String])], schema: StructType,
+      txn: Map[String, Long], props: Option[Map[String, String]])
+      : (String, Option[Path]) = {
+    val c = parent.getOrElse(NoFiles)
     val carried = c.files.filterNot(replaced)
     val carrySet = carried.toSet
-    val colMap = if (carried.isEmpty) Map.empty[String, String] else c.colMap
-    val sidecar = marks.map { case (_, df) => stage(df, root, f) }
-    val newMarks = marks.fold(Map.empty[String, Long])(_._1)
-    val (dirs, rel, st, rw) = rows match {
-      case None => (Nil, Nil, Map.empty: DataSkipping.FileStats, Map.empty[String, Long])
-      case Some(df) =>
-        val (dir, rel0) =
-          try stage(withContract(df, c.props, path), root, f, colMap,
-            partitionColsOf(c.schema), c.props)
-          catch { case e: Throwable => translateViolation(e, path) }
-        val (st0, rw0) = metaFor(spark, root, rel0,
-          inheritedStatsCols(spark, root, c, statsCols), colMap)
-        val (rel, st, rw) = dropEmpty(f, root, dir, rel0, st0, rw0)
-        (Seq(dir), rel, st, rw)
-    }
+    val (colMap, physDropped) = c.mappingOver(replaced)
     val (dvK, dvR) = c.dvFor(carrySet)
-    val v = b + 1L
-    val (body, ckptDir) = encodeCommit(spark, root, v, carried ++ rel,
-      schema.getOrElse(c.schema).json,
+    val newMarks = marks.fold(Map.empty[String, Long])(_._1)
+    val st = added.fold(Map.empty: DataSkipping.FileStats)(_.stats)
+    encodeCommit(spark, root, v, carried ++ added.toSeq.flatMap(_.files),
+      schema.json,
       // by name: a delta-encoded commit serializes only the added stats
       c.stats.filter(kv => carrySet(kv._1)) ++ st,
-      c.rows.filter(kv => carrySet(kv._1)) ++ rw, txn.getOrElse(c.txn),
-      dvK ++ sidecar.toSeq.flatMap(_._2),
+      c.rows.filter(kv => carrySet(kv._1)) ++ added.fold(Map.empty[String, Long])(_.rows),
+      txn, dvK ++ marks.toSeq.flatMap(_._2),
       dvR ++ newMarks.map { case (fk, n) => fk -> (dvR.getOrElse(fk, 0L) + n) },
-      parent = Some(c), colMap = colMap,
-      physDropped = if (carried.isEmpty) Set.empty else c.physDropped,
+      parent = parent, colMap = colMap, physDropped = physDropped,
       carriedIdentical = true, statsAddOnly = Some(st), props = props)
-    // a lost race makes the rewrite stale — the verb recomputes
-    Staged(v, body, ckptDir, sidecar.map(_._1).toSeq ++ dirs, rel)
   }
 
   /** The commit-store seam (Delta's `LogStore` idiom): everything above the
@@ -1446,11 +1491,14 @@ object VersionedTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Append a new version containing exactly `df` (full-snapshot semantics,
-    * like the reference pipeline's overwrite-per-run tables). Returns the
-    * committed version number. Concurrency-safe: on a lost race the data is
-    * NOT rewritten — the writer just claims the next free version slot for
-    * the already-staged files.
+  /** Commit a SNAPSHOT: the new version contains exactly `df` and replaces
+    * every file of the previous one (overwrite semantics, like the
+    * reference pipeline's overwrite-per-run tables); older versions stay
+    * time-travelable. Returns the committed version number.
+    * Concurrency-safe: on a lost race the data is NOT rewritten — the
+    * writer just claims the next free version slot for the already-staged
+    * files. With no `statsCols` the previous version's stats columns are
+    * collected, as for [[append]].
     *
     * @param statsCols record per-file min/max stats for these columns in
     *                  the commit manifest (parquet footer reads only — see
@@ -1465,7 +1513,7 @@ object VersionedTable {
     *                  appends inherit the layout. */
   def write(df: DataFrame, path: String, statsCols: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil): Long =
-    writeInternal(df, path, statsCols, txn = None, partitionCols = partitionBy)
+    insert(df, path, overwrite = true, statsCols, partitionBy)
 
   /** CREATE a bucketed table (CLUSTERED BY (cols) INTO n BUCKETS): the
     * snapshot lands hash-bucketed and every later verb preserves the
@@ -1488,13 +1536,12 @@ object VersionedTable {
         "creation (files are physically bucket-named); re-create to re-bucket")
     // ifExists guards the race too: a concurrent creator is observed
     // INSIDE the commit loop, not just by the friendly pre-check above
-    writeInternal(df, path,
-      if (statsCols.isEmpty) bucketBy else statsCols, txn = None,
-      ifExists = Some(true),
-      newProps = Some(Map(BucketByKey -> bucketBy.mkString(","),
+    insert(df, path, overwrite = true,
+      if (statsCols.isEmpty) bucketBy else statsCols, ifExists = Some(true),
+      propsAdd = Map(BucketByKey -> bucketBy.mkString(","),
         NumBucketsKey -> numBuckets.toString) ++
         (if (sortBy.isEmpty) Map.empty
-         else Map(BucketSortByKey -> sortBy.mkString(",")))))
+         else Map(BucketSortByKey -> sortBy.mkString(","))))
   }
 
   /** Exactly-once streaming SNAPSHOT commit — [[commitBatch]]'s twin for
@@ -1506,26 +1553,8 @@ object VersionedTable {
   def commitSnapshot(df: DataFrame, path: String, appId: String,
       batchId: Long, statsCols: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil): Long =
-    writeInternal(df, path, statsCols, txn = Some(appId -> batchId),
-      partitionCols = partitionBy)
-
-  /** [[commitSnapshot]] that additionally lands a property delta IN THE
-    * SAME commit — for state that must stay atomic with the content it
-    * describes (a join view's re-pinned dim version: a separate props
-    * commit would leave a crash window where content and pin disagree).
-    * `txn = None` commits unconditionally (the existing watermark carries)
-    * — the join-view FULL refresh needs this when the DIM moved but the
-    * fact didn't: the fact-version batchId alone would replay-no-op. */
-  private[sources] def commitSnapshotRaw(df: DataFrame, path: String,
-      statsCols: Seq[String], partitionBy: Seq[String],
-      txn: Option[(String, Long)], propsAdd: Map[String, String]): Long =
-    writeInternal(df, path, statsCols, txn = txn,
-      partitionCols = partitionBy,
-      newProps =
-        if (propsAdd.isEmpty) None
-        else Some(latestVersion(df.sparkSession, path)
-          .map(_ => propertiesOf(df.sparkSession, path))
-          .getOrElse(Map.empty) ++ propsAdd))
+    insert(df, path, overwrite = true, statsCols, partitionBy,
+      txn = Some(appId -> batchId))
 
   /** Snapshot write that commits ONLY IF the table has no committed
     * version, deciding INSIDE the commit loop — not check-then-act: a
@@ -1535,8 +1564,8 @@ object VersionedTable {
   private[graft] def writeIfAbsent(df: DataFrame, path: String,
       statsCols: Seq[String], errorIfExists: Boolean,
       partitionCols: Seq[String] = Nil): Long =
-    writeInternal(df, path, statsCols, txn = None,
-      ifExists = Some(errorIfExists), partitionCols = partitionCols)
+    insert(df, path, overwrite = true, statsCols, partitionCols,
+      ifExists = Some(errorIfExists))
 
   /** The PARTITION DIMENSION of a table rides the recorded schema as field
     * METADATA (key = ordinal among the partition columns), so it flows
@@ -1573,106 +1602,149 @@ object VersionedTable {
   private[graft] def createEmpty(df: DataFrame, path: String,
       statsCols: Seq[String], partitionCols: Seq[String],
       props: Map[String, String] = Map.empty): Long =
-    writeInternal(df, path, statsCols, txn = None, ifExists = Some(true),
-      partitionCols = partitionCols, newProps = Some(props))
+    insert(df, path, overwrite = true, statsCols, partitionCols,
+      ifExists = Some(true), propsAdd = props)
 
-  /** @param ifExists None = normal snapshot write; Some(true) = throw if a
+  /** THE insert commit behind every verb that adds rows ([[write]],
+    * [[writeBucketed]], [[commitSnapshot]], [[writeIfAbsent]],
+    * [[createEmpty]], [[append]], [[commitBatch]], [[copyInto]]): an
+    * `overwrite` replaces every file of the parent, an append replaces
+    * none — both through the two halves of [[replaceFiles]]. Per attempt
+    * it runs the materialized-view fence, the txn and COPY INTO replay
+    * checks, `ifExists`, and identity allocation (memoized on the props it
+    * read; skipped on CREATE, whose declared frame carries the column);
+    * the rows stage ONCE and their files are kept across lost races — the
+    * content is base-independent — and restage only when the column
+    * mapping, the partition columns or the props changed (a racing CHECK
+    * constraint must validate this batch too). Only two things are
+    * mode-specific: an overwrite may re-declare the schema and the
+    * partition layout; an append must match the schema (nullability
+    * merges) and the layout. Every insert then runs [[afterInsert]].
+    *
+    * @param txn      (appId, batchId) exactly-once marker, as in
+    *                 [[commitBatch]]; None commits unconditionally (the
+    *                 stored watermarks carry)
+    * @param ifExists None = commit over any head; Some(true) = throw if a
     *                 version exists (observed at commit time, inside the
-    *                 CAS loop); Some(false) = no-op returning it. */
-  private def writeInternal(df: DataFrame, path: String, statsCols: Seq[String],
-      txn: Option[(String, Long)],
+    *                 CAS loop); Some(false) = no-op returning it.
+    * @param propsAdd properties landed IN THE SAME commit, over the pinned
+    *                 head's (none: a table with no head) — for state that
+    *                 must stay atomic with the content it describes (a
+    *                 join view's re-pinned dim version: a separate props
+    *                 commit would leave a crash window where content and
+    *                 pin disagree). */
+  private[sources] def insert(df: DataFrame, path: String, overwrite: Boolean,
+      statsCols: Seq[String] = Nil, partitionBy: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None, txnMulti: Map[String, Long] = Map.empty,
       ifExists: Option[Boolean] = None,
-      partitionCols: Seq[String] = Nil,
-      newProps: Option[Map[String, String]] = None): Long = {
+      propsAdd: Map[String, String] = Map.empty): Long = {
     val spark = df.sparkSession
     val root = new Path(path)
     val f = fs(spark, root)
+    val what = if (overwrite) "write" else "append"
     // same reserved-name fence as setProperties, for the CREATE-with-props
     // path: a data column named like the materialized id would collide
     // with the id-surfacing read
-    if (newProps.exists(rowTrackingOn))
+    if (rowTrackingOn(propsAdd))
       require(!df.columns.contains(RowIdCol),
         s"$path: cannot enable $RowTrackingKey — the schema already has " +
           s"a column named $RowIdCol (reserved for row tracking)")
-    var staged: Option[(Path, Seq[String], DataSkipping.FileStats,
-      Map[String, Long], StructType, Map[String, String])] = None
-    var idAdvance: Long => Map[String, String] = _ => Map.empty
-    var idSrc: Option[DataFrame] = None
-    try commitLoop(spark, path, "write") { head =>
-      val base = head.map(_._1)
+    // (column mapping, partition columns, props) the rows staged under
+    var staged: Option[((Map[String, String], Seq[String], Map[String, String]), Added)] = None
+    def unstage(): Unit = { staged.foreach(s => f.delete(s._2.dir, true)); staged = None }
+    // (props the allocation read, filled frame, hwm-advance, persisted src)
+    var idCache: Option[(Map[String, String], DataFrame,
+      Long => Map[String, String], Option[DataFrame])] = None
+    val committed = try commitLoop(spark, path, what) { head =>
       val parent = head.map(_._2)
-      parent.foreach(p => fenceMvWrite(p.props, path, "write"))
-      // the committed version's props: an explicit set (CREATE TABLE) or
-      // the parent's, carried — the same resolution encodeCommit applies
-      val effProps = newProps.getOrElse(parent.map(_.props).getOrElse(Map.empty))
-      if (staged.exists(_._6 != effProps)) {
-        // a racing properties commit changed the write contract (e.g. a
-        // new CHECK constraint must validate THIS snapshot too) — restage
-        staged.foreach(s => f.delete(s._1, true))
-        staged = None
-      }
+      val b = head.fold(0L)(_._1)
+      parent.foreach(p => fenceMvWrite(p.props, path, what))
       val replayed = txn.exists { case (app, bid) =>
         parent.exists(_.txn.get(app).exists(_ >= bid))
       }
-      if (base.nonEmpty && (ifExists.nonEmpty || replayed)) {
+      val present = parent.fold(0)(p => txnMulti.keySet.count(p.txn.contains))
+      if (head.nonEmpty && (ifExists.nonEmpty || replayed || present > 0)) {
         // a racing creator won (SaveMode.ErrorIfExists / Ignore), or a
-        // replayed batch already committed — clean up and no-op
-        staged.foreach(s => f.delete(s._1, true))
+        // replayed batch already committed — clean up and no-op; the
+        // post-commit hooks below see nothing staged
+        unstage()
         if (ifExists.contains(true)) throw new IllegalStateException(
           s"$path: table already exists (SaveMode.ErrorIfExists); use " +
             "mode(\"append\") or mode(\"overwrite\")")
-        Left(base.get)
+        if (present > 0 && present == txnMulti.size) // full replay
+          throw new CopyReplayedException(b)
+        if (present > 0) // overlapping concurrent load: would double-load
+          throw new ConcurrentCopyException(
+            s"$path: $present of ${txnMulti.size} source files were loaded " +
+              "concurrently; re-diff against the new manifest")
+        Left(b)
       } else {
-        if (staged.isEmpty) {
-          // a snapshot onto an existing partitioned table keeps its layout
-          // unless the caller re-declares one (an overwrite may re-partition
-          // — old versions keep their own layout via their own manifests)
-          val effPart =
-            if (partitionCols.nonEmpty) partitionCols
-            else parent.map(p => partitionColsOf(p.schema)).getOrElse(Nil)
-          // identity allocation (skipped on the CREATE TABLE path, whose
-          // declared empty frame legitimately carries the column), then
-          // generation (a generated PARTITION column must exist before the
-          // layout reorder below), then shaping, then CHECKs
-          val (idDf, idAdv, idS) =
-            if (ifExists.contains(true))
-              (df, (_: Long) => Map.empty[String, String], None)
-            else applyIdentity(df, effProps, path)
-          idSrc.foreach(_.unpersist())
-          idSrc = idS
-          idAdvance = idAdv
-          val genDf = applyGenerated(idDf, effProps, path)
-          val tagged =
-            if (effPart.isEmpty) genDf.schema
-            else withPartitionMeta(genDf.schema, effPart)
-          val ordered =
-            if (effPart.isEmpty) genDf
-            else genDf.select(tagged.fieldNames.map(col).toSeq: _*)
-          val shaped = withChecks(
-            optimizeWriteShape(ordered, effProps, effPart), effProps, path)
-          val (dir, rel) =
-            try stage(shaped, root, f, partitionCols = effPart,
-              props = effProps)
-            catch { case e: Throwable => translateViolation(e, path) }
-          val (st, rw) = metaFor(spark, root, rel, statsCols)
-          staged = Some((dir, rel, st, rw, tagged, effProps))
+        val props = parent.fold(Map.empty[String, String])(_.props) ++ propsAdd
+        // identity allocation (an eager zipWithIndex count job), then the
+        // generated fill (a generation may reference the identity column),
+        // BEFORE the schema contract, so a writer that (correctly) omits
+        // either still commits
+        val (idDf, idAdvance) =
+          if (ifExists.contains(true)) (df, (_: Long) => Map.empty[String, String])
+          else idCache match {
+            case Some((p, d, a, _)) if p == props => (d, a)
+            case prev =>
+              prev.foreach(_._4.foreach(_.unpersist()))
+              val (d, a, src) = applyIdentity(df, props, path)
+              idCache = Some((props, d, a, src))
+              (d, a)
+          }
+        val genSchema = applyGenerated(idDf, props, path).schema
+        // a table's partition layout is part of its contract: an overwrite
+        // keeps it unless it re-declares one (old versions keep their own
+        // layout via their own manifests); an append inherits it, and an
+        // explicit partitionBy must agree (carried files keep their dirs)
+        val parentPart = parent.fold(Seq.empty[String])(p => partitionColsOf(p.schema))
+        if (!overwrite && parent.nonEmpty && partitionBy.nonEmpty)
+          require(partitionBy == parentPart,
+            s"append partitionBy (${partitionBy.mkString(",")}) must match the " +
+              s"table's layout (${if (parentPart.isEmpty) "unpartitioned"
+              else parentPart.mkString(",")}); only overwrite may re-partition")
+        val part =
+          if (partitionBy.nonEmpty && (overwrite || parent.isEmpty)) partitionBy
+          else parentPart
+        val schema = parent.filter(_ => !overwrite).map(_.schema) match {
+          case Some(bs) =>
+            require(bs.fieldNames.toSet == genSchema.fieldNames.toSet &&
+              bs.fields.forall(bf =>
+                genSchema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType)),
+              s"append schema mismatch vs $path: table ${bs.simpleString}, " +
+                s"batch ${genSchema.simpleString}")
+            // merge nullability so an appended nullable column stays readable
+            StructType(bs.fields.map(bf => bf.copy(nullable = bf.nullable ||
+              genSchema.fields.find(_.name == bf.name).exists(_.nullable))))
+          case None =>
+            if (part.isEmpty) genSchema else withPartitionMeta(genSchema, part)
         }
-        val (_, rel, stats, rows, tagged, _) = staged.get
+        val replaced = parent.filter(_ => overwrite).fold(Set.empty[String])(_.files.toSet)
+        val key = (parent.getOrElse(NoFiles).mappingOver(replaced)._1, part, props)
+        if (staged.exists(_._1 != key)) unstage()
+        val added = staged.map(_._2).getOrElse {
+          val a = stageRows(spark, path, parent, idDf, props, key._1, part,
+            statsCols, schema, optimizeWriteShape(_, props, part))
+          staged = Some(key -> a)
+          a
+        }
+        // identity hwm advances ATOMICALLY with the rows this commit added
+        // (never resets on overwrite — Delta keeps allocating monotonic)
+        val idProps = idAdvance(added.rows.values.sum)
         // carry the streaming-txn watermarks: a snapshot write between two
         // micro-batches must not reopen the door to batch replay
-        val txnMap = parent.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
-        val v = base.getOrElse(0L) + 1L
-        // identity hwm advances with the snapshot's own rows (hwm never
-        // resets on overwrite — Delta keeps allocating monotonic)
-        val idProps = idAdvance(rows.values.sum)
-        val (body, ckptDir) = encodeCommit(spark, root, v, rel, tagged.json,
-          stats, rows, txnMap, parent = parent,
-          props = if (idProps.isEmpty) newProps else Some(effProps ++ idProps))
-        // staged files stay valid for the next slot (content is
-        // base-independent)
-        Right(Staged(v, body, ckptDir))
+        val (body, ckptDir) = carryAndEncode(spark, root, b + 1L, parent,
+          replaced, Some(added), None, schema,
+          parent.fold(Map.empty[String, Long])(_.txn) ++ txn.toMap ++ txnMulti,
+          if (idProps.isEmpty && propsAdd.isEmpty) None else Some(props ++ idProps))
+        // the staged files stay valid for the next slot
+        Right(Staged(b + 1L, body, ckptDir))
       }
-    } finally idSrc.foreach(_.unpersist())
+    } finally idCache.foreach(_._4.foreach(_.unpersist()))
+    staged.foreach { case ((_, _, props), a) => afterInsert(spark, path, props, a.files) }
+    committed
   }
 
   /** Commit a new version = parent's files + `df`'s files (append
@@ -1683,7 +1755,7 @@ object VersionedTable {
     * it); it is mostly useful as the genesis-append form. */
   def append(df: DataFrame, path: String, statsCols: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil): Long =
-    appendInternal(df, path, statsCols, txn = None, partitionCols = partitionBy)
+    insert(df, path, overwrite = false, statsCols, partitionBy)
 
   /** Exactly-once streaming commit (Delta's txnAppId/txnVersion idiom):
     * append `df` as a new version UNLESS this (appId, batchId) — or a later
@@ -1693,7 +1765,7 @@ object VersionedTable {
     * the sink idempotent: no duplicate version, no duplicate rows. */
   def commitBatch(df: DataFrame, path: String, appId: String, batchId: Long,
       statsCols: Seq[String] = Nil): Long =
-    appendInternal(df, path, statsCols, txn = Some(appId -> batchId))
+    insert(df, path, overwrite = false, statsCols, txn = Some(appId -> batchId))
 
   /** Thrown when a concurrent [[copyInto]] committed an OVERLAPPING subset
     * of this call's source files mid-flight: the staged batch would
@@ -1728,7 +1800,7 @@ object VersionedTable {
       s"$path: property '$key' is ${stored.getOrElse("absent")}, expected " +
         s"$expected — a concurrent commit moved it; recompute and retry")
 
-  /** Control-flow signal from [[appendInternal]] back to [[copyInto]]: every
+  /** Control-flow signal from [[insert]] back to [[copyInto]]: every
     * source file in the staged batch was already loaded (a full statement
     * replay) — the head is returned unchanged and NO files were loaded by
     * this call, so the caller must report 0, not the batch size. */
@@ -1896,7 +1968,7 @@ object VersionedTable {
       else {
         val df = spark.read.parquet(fresh.map(_._1.toString): _*)
         try {
-          val v = appendInternal(df, tablePath, Nil, txn = None,
+          val v = insert(df, tablePath, overwrite = false,
             txnMulti = fresh.map { case (_, k, m) => k -> m }.toMap)
           Some((v, fresh.size))
         } catch {
@@ -1911,134 +1983,6 @@ object VersionedTable {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(p.toString.getBytes("UTF-8"))
     "copy:" + d.map("%02x".format(_)).mkString
-  }
-
-  private def appendInternal(df: DataFrame, path: String, statsCols: Seq[String],
-      txn: Option[(String, Long)],
-      partitionCols: Seq[String] = Nil,
-      txnMulti: Map[String, Long] = Map.empty): Long = {
-    val spark = df.sparkSession
-    val root = new Path(path)
-    val f = fs(spark, root)
-    var staged: Option[(Path, Seq[String], DataSkipping.FileStats,
-      Map[String, Long], Map[String, String], Seq[String],
-      Map[String, String])] = None
-    // (props the allocation read, filled frame, hwm-advance, persisted src)
-    var idCache: Option[(Map[String, String], DataFrame,
-      Long => Map[String, String], Option[DataFrame])] = None
-    val committed = try commitLoop(spark, path, "append") { head =>
-      val base = head.map(_._1)
-      val c = head.map(_._2)
-      c.foreach(cc => fenceMvWrite(cc.props, path, "append"))
-      val replayed = txn.exists { case (app, bid) =>
-        c.exists(_.txn.get(app).exists(_ >= bid))
-      }
-      val present = c.map(cc => txnMulti.keySet.count(cc.txn.contains)).getOrElse(0)
-      if (replayed || present > 0) {
-        // replayed batch: already committed — clean up and no-op; the
-        // post-commit hooks below see nothing staged
-        staged.foreach(s => f.delete(s._1, true))
-        staged = None
-        if (present > 0 && present == txnMulti.size) // full replay
-          throw new CopyReplayedException(base.get)
-        if (present > 0) // overlapping concurrent load: would double-load
-          throw new ConcurrentCopyException(
-            s"$path: $present of ${txnMulti.size} source files were loaded " +
-              "concurrently; re-diff against the new manifest")
-        Left(base.get)
-      } else {
-        // identity allocation, then generated fill/enforce (a generation may
-        // reference the identity column), all BEFORE the schema-match
-        // contract, so a writer that (correctly) omits either still appends.
-        // The allocation (an eager zipWithIndex count job) is MEMOIZED on
-        // the props it read — a lost CAS race whose winner didn't change the
-        // write contract reuses it; a changed hwm/declaration recomputes.
-        val curProps = c.map(_.props).getOrElse(Map.empty)
-        val (idDf, idAdvance) = idCache match {
-          case Some((p, d, a, _)) if p == curProps => (d, a)
-          case prev =>
-            prev.foreach(_._4.foreach(_.unpersist()))
-            val (d, a, src) = applyIdentity(df, curProps, path)
-            idCache = Some((curProps, d, a, src))
-            (d, a)
-        }
-        val effDf = applyGenerated(idDf, curProps, path)
-        c.map(_.schema).foreach { bs =>
-          require(bs.fieldNames.toSet == effDf.schema.fieldNames.toSet &&
-            bs.fields.forall(bf =>
-              effDf.schema.fields.find(_.name == bf.name).forall(_.dataType == bf.dataType)),
-            s"append schema mismatch vs $path: table ${bs.simpleString}, " +
-              s"batch ${effDf.schema.simpleString}")
-        }
-        val curColMap = c.map(_.colMap).getOrElse(Map.empty)
-        // a table's partition layout is part of its contract: appends inherit
-        // it; an explicit partitionBy must agree (it cannot re-layout —
-        // carried files keep their dirs)
-        val parentPart = c.map(p => partitionColsOf(p.schema)).getOrElse(Nil)
-        val effPart =
-          if (c.isEmpty && partitionCols.nonEmpty) partitionCols else parentPart
-        if (c.nonEmpty && partitionCols.nonEmpty)
-          require(partitionCols == parentPart,
-            s"append partitionBy (${partitionCols.mkString(",")}) must match the " +
-              s"table's layout (${if (parentPart.isEmpty) "unpartitioned"
-              else parentPart.mkString(",")}); only overwrite may re-partition")
-        if (staged.exists(st => st._5 != curColMap || st._6 != effPart ||
-            st._7 != curProps)) {
-          // a racing DDL changed the physical mapping, a racing OVERWRITE
-          // re-partitioned the table (allowed), or a racing properties
-          // commit changed the write contract (a new CHECK constraint must
-          // validate THIS batch too): files staged under the old contract
-          // are stale — restage under the current one
-          staged.foreach(s => f.delete(s._1, true))
-          staged = None
-        }
-        if (staged.isEmpty) {
-          val shaped = withChecks(
-            optimizeWriteShape(effDf, curProps, effPart), curProps, path)
-          val (dir, rel) =
-            try stage(shaped, root, f, curColMap, effPart, curProps)
-            catch { case e: Throwable => translateViolation(e, path) }
-          val cols = c.map(inheritedStatsCols(spark, root, _, statsCols)).getOrElse(statsCols)
-          val (st, rw) = metaFor(spark, root, rel, cols, curColMap)
-          staged = Some((dir, rel, st, rw, curColMap, effPart, curProps))
-        }
-        val (_, rel, st, rw, _, _, _) = staged.get
-        // merge nullability so an appended nullable column stays readable
-        val schemaJson = c.map(_.schema).map { bs =>
-          StructType(bs.fields.map(bf => bf.copy(nullable = bf.nullable ||
-            effDf.schema.fields.find(_.name == bf.name).exists(_.nullable)))).json
-        }.getOrElse(
-          (if (effPart.isEmpty) effDf.schema
-           else withPartitionMeta(effDf.schema, effPart)).json)
-        val v = base.getOrElse(0L) + 1L
-        // stats is by-name and this append vouches for carry identity, so a
-        // delta-encoded append NEVER forces the parent's (possibly
-        // checkpoint-deferred, million-entry) stats map — it serializes only
-        // the new files' stats it already holds
-        // identity hwm advances ATOMICALLY with the rows this commit added
-        // (rw = the staged files' exact row counts)
-        val idProps = idAdvance(rw.values.sum)
-        val (body, ckptDir) = encodeCommit(spark, root, v,
-          c.map(_.files).getOrElse(Nil) ++ rel, schemaJson,
-          c.map(_.stats).getOrElse(Map.empty) ++ st,
-          c.map(_.rows).getOrElse(Map.empty) ++ rw,
-          c.map(_.txn).getOrElse(Map.empty) ++ txn.toMap ++ txnMulti,
-          c.map(_.dv).getOrElse(Seq.empty), c.map(_.dvRows).getOrElse(Map.empty),
-          parent = c, colMap = curColMap,
-          physDropped = c.map(_.physDropped).getOrElse(Set.empty),
-          carriedIdentical = true, statsAddOnly = Some(st),
-          props = if (idProps.isEmpty) None else Some(curProps ++ idProps))
-        // staged files stay valid for the next slot (content is
-        // base-independent); only the txn/schema checks re-run
-        Right(Staged(v, body, ckptDir))
-      }
-    } finally idCache.foreach(_._4.foreach(_.unpersist()))
-    // post-commit hygiene: bin-pack the touched partitions when the table
-    // opted in (chained commit; failure never un-commits the append)
-    staged.foreach(s => autoCompactAfter(spark, path, s._7, s._2))
-    staged.foreach(s => autoAnalyzeAfter(spark, path, s._7))
-    staged.foreach(s => autoRefreshViewsAfter(spark, path, s._7))
-    committed
   }
 
   /** Cheap appended-file-count hint for the streaming throttle's backlog
@@ -3787,13 +3731,10 @@ object VersionedTable {
           }
           val newTxn = baseC.map(_.txn).getOrElse(Map.empty) ++ txn.toMap
           val staged = baseC match {
-            case None =>
-              val (dir, rel) = stage(inserts, root, f)
-              val (st, rw) = metaFor(spark, root, rel, statsCols)
-              val (body, ckptDir) = encodeCommit(spark, root, 1L, rel,
-                inserts.schema.json, st, rw, newTxn, statsAddOnly = Some(st),
-                props = if (propsAdd.isEmpty) None else Some(propsAdd))
-              Staged(1L, body, ckptDir, Seq(dir), rel)
+            case None => // a table with no head: a parent with no files
+              replaceFiles(spark, path, None, Set.empty, Some(inserts), None,
+                statsCols, Some(inserts.schema), Some(newTxn),
+                if (propsAdd.isEmpty) None else Some(propsAdd))
             case Some(c) =>
               val updSchema = inserts.schema
               val bs = c.schema
@@ -3934,7 +3875,7 @@ object VersionedTable {
                 // carried-file rows are valid by the ADD CONSTRAINT invariant;
                 // the union re-checks them only because they ride the rewrite —
                 // one in-task pass, no extra scan
-                replaceFiles(spark, path, base.get, c, rewriteSet, Some(rewriteDf),
+                replaceFiles(spark, path, head, rewriteSet, Some(rewriteDf),
                   newMarks, statsCols,
                   // the materialized id column is physical-only — never schema
                   schema = Some(merged.getOrElse(rewriteDf.drop(RowIdCol).schema)),
@@ -3948,11 +3889,8 @@ object VersionedTable {
         }
       }
       // a MERGE-maintained table fragments exactly like an append-
-      // maintained one (every streaming micro-merge stages fresh files):
-      // same post-commit hygiene hooks as appendInternal
-      autoCompactAfter(spark, path, hookProps, hookRel)
-      autoAnalyzeAfter(spark, path, hookProps)
-      autoRefreshViewsAfter(spark, path, hookProps)
+      // maintained one (every streaming micro-merge stages fresh files)
+      afterInsert(spark, path, hookProps, hookRel)
       committed
     } finally deduped.unpersist()
   }
@@ -4050,7 +3988,7 @@ object VersionedTable {
               if (rewriteKeys.isEmpty) None
               else Some(rewriteSource(spark, root, c, rewriteKeys)
                 .filter(!coalesce(predicate, lit(false))))
-            Right(replaceFiles(spark, path, b, c, rewrite, survivors,
+            Right(replaceFiles(spark, path, head, rewrite, survivors,
               if (marks.isEmpty) None else Some(marks -> markRows)))
           }
         } finally marked.unpersist()
@@ -4117,7 +4055,7 @@ object VersionedTable {
         // consistent — the remedy is to SET the generated column too (or
         // drop the generation); silently serving a stale derived value is
         // the failure mode generation exists to kill
-        Right(replaceFiles(spark, path, b, c, candKeys.toSet, Some(updated)))
+        Right(replaceFiles(spark, path, head, candKeys.toSet, Some(updated)))
       }
     }
     autoRefreshViewsAfter(spark, path, hookProps)
@@ -4976,7 +4914,7 @@ object VersionedTable {
       val (b, c) = head.getOrElse(noVersions(path))
       val purgeKeys = c.files.filter(fk => c.dvRows.getOrElse(fk, 0L) > 0L)
       if (purgeKeys.isEmpty) Left(b)
-      else Right(replaceFiles(spark, path, b, c, purgeKeys.toSet,
+      else Right(replaceFiles(spark, path, head, purgeKeys.toSet,
         Some(rewriteSource(spark, root, c, purgeKeys)))) // marks applied
     }
   }
@@ -5003,7 +4941,7 @@ object VersionedTable {
     *    task (32 tasks × K dirs = 32K tiny files per streaming batch is
     *    how partitioned tables die; the shuffle is the price of bounded
     *    file counts, exactly Delta's optimizeWrite trade).
-    *  - `graft.autoCompact` = true: after an append commits, any touched
+    *  - `graft.autoCompact` = true: after an insert commits, any touched
     *    partition directory holding at least `graft.autoCompact.minFiles`
     *    (default 8) files is bin-packed to `graft.autoCompact.targetBytes`
     *    (default 128 MiB) as a chained commit — unattended small-file
@@ -5016,7 +4954,7 @@ object VersionedTable {
   private val AutoCompactTargetKey = "graft.autoCompact.targetBytes"
 
   /** `graft.ndv.autoAnalyze` = staleness fraction (e.g. "0.2"): after an
-    * append/merge commits (and after its chained auto-compact, whose
+    * insert or merge commits (and after its chained auto-compact, whose
     * rewrites also shed sketches), re-run `ANALYZE ... COMPUTE NDV` for
     * the declared roster whenever any column's [[ndvStaleness]] exceeds
     * the fraction — Delta's predictive-optimization stats story. The
@@ -5024,7 +4962,7 @@ object VersionedTable {
     * bounds the re-scan frequency: at 0.2 a table pays one stats scan per
     * +25% growth, so sketch upkeep amortizes to O(1) scans per doubling.
     * CoW DELETE/UPDATE rewrites raise staleness without firing the hook;
-    * the next append/merge catches up — same deferred-hygiene contract as
+    * the next insert/merge catches up — same deferred-hygiene contract as
     * auto-compact. */
   private[graft] val AutoAnalyzeKey = "graft.ndv.autoAnalyze"
 
@@ -5090,8 +5028,9 @@ object VersionedTable {
     }
 
   /** `graft.mv.autoRefresh` = true: every mutating commit on this table
-    * (append, merge, DELETE, UPDATE, DV delete) chains a REFRESH of its
-    * registered materialized views — the always-fresh-rewrite story: with
+    * (write/overwrite, append, streaming batch or snapshot, COPY INTO,
+    * merge, DELETE, UPDATE) chains a REFRESH of its registered
+    * materialized views — the always-fresh-rewrite story: with
     * the watermark tracking the head, [[graft.sql.GraftMvRewrite]] keeps
     * answering aggregates from the views instead of declining on
     * staleness. Each refresh costs one change-feed diff + one view-sized
@@ -5136,6 +5075,17 @@ object VersionedTable {
       }
     }
     autoRepinAfter(spark, path, props)
+  }
+
+  /** The post-commit rule of every commit that adds rows ([[insert]],
+    * [[upsert]]): chained auto-compact of the touched partitions
+    * (`added` = the files the commit added), then auto-analyze, then the
+    * view refresh and FK re-pin, each under `props`. */
+  private def afterInsert(spark: SparkSession, path: String,
+      props: Map[String, String], added: Seq[String]): Unit = {
+    autoCompactAfter(spark, path, props, added)
+    autoAnalyzeAfter(spark, path, props)
+    autoRefreshViewsAfter(spark, path, props)
   }
 
   /** `graft.fk.autoRepin` = true: after every mutating commit, re-declare
@@ -5263,7 +5213,7 @@ object VersionedTable {
         val packed =
           if (partCols.isEmpty) small.coalesce(nOut)
           else small.repartition(nOut, partCols.map(col): _*)
-        Right(replaceFiles(spark, path, b, c, smallSet, Some(packed)))
+        Right(replaceFiles(spark, path, head, smallSet, Some(packed)))
       }
     }
   }
@@ -5307,7 +5257,7 @@ object VersionedTable {
           if (partCols.isEmpty) TableIO.zPlaced(base, cols, bits)
           else TableIO.zPlacedWithin(base, partCols, cols, bits)
         // stats on exactly the clustering columns
-        Right(replaceFiles(spark, path, b, c, scope, Some(placed), statsCols = cols))
+        Right(replaceFiles(spark, path, head, scope, Some(placed), statsCols = cols))
       }
     }
   }
@@ -5534,7 +5484,9 @@ object VersionedTable {
     * manifest pointing at deleted data. A writer in flight LONGER than the
     * retention window is still exposed — same contract as Delta's
     * retention horizon; don't pass a window shorter than your slowest
-    * writer. Stale `.commit-*.tmp` files are swept under the same cutoff. */
+    * writer. Stale `.commit-*.tmp` files, and the checksum sidecars of
+    * head-pointer and re-anchor temp files, are swept under the same
+    * cutoff. */
   /** `VACUUM ... RETAIN n HOURS` (Delta's retention spelling, the
     * reference's own runbook line `sql/ddl/01_bronze.sql:26`): drop every
     * version whose commit stamp is older than the horizon — except the
@@ -5564,6 +5516,12 @@ object VersionedTable {
       drop: Seq[Long], keep: Seq[Long], dropCkpts: Seq[String],
       deadFiles: Seq[String], deadDirs: Seq[String],
       orphans: Seq[(Path, Boolean)])
+
+  /** A checksum sidecar Hadoop's local filesystem wrote beside a temp file
+    * named `<prefix>*.tmp` (`.<name>.crc`), which a nio move of the temp
+    * file, or a writer dying before it deleted it, left behind. */
+  private def tmpChecksum(name: String, prefix: String): Boolean =
+    name.startsWith("." + prefix) && name.endsWith(".tmp.crc")
 
   private def sweepPlan(spark: SparkSession, f: FileSystem, root: Path,
       path: String, keepLast: Int, orphanRetentionMs: Long): SweepPlan = {
@@ -5598,10 +5556,16 @@ object VersionedTable {
       .getOrElse(Long.MaxValue)
     val cutoff = math.min(oldestKeptTime,
       System.currentTimeMillis() - orphanRetentionMs)
-    val rootOrphans = f.listStatus(root).toSeq.flatMap { st =>
+    // listed through the raw filesystem: a checksummed one hides `.crc`
+    val lf = f match {
+      case cf: org.apache.hadoop.fs.ChecksumFileSystem => cf.getRawFileSystem
+      case _ => f
+    }
+    val rootOrphans = lf.listStatus(root).toSeq.flatMap { st =>
       val n = st.getPath.getName
       val staleStage = !st.isDirectory &&
-        n.startsWith(".commit-") && n.endsWith(".tmp")
+        (n.startsWith(".commit-") && n.endsWith(".tmp") ||
+          tmpChecksum(n, ".commit-") || tmpChecksum(n, ".anchor-"))
       if (st.getModificationTime < cutoff &&
         ((st.isDirectory && n.startsWith("d-") && !liveDirs.contains(n)) || staleStage))
         Some(st.getPath -> st.isDirectory)
@@ -5612,11 +5576,12 @@ object VersionedTable {
     val keptCkpts: Set[String] = keep.flatMap(v =>
       scala.util.Try(parseManifest(f, root, v)).toOption
         .flatMap(n => Option(n.get("ckpt")).map(_.asText()))).toSet
-    val logOrphans = f.listStatus(new Path(root, LogDir)).toSeq.flatMap { st =>
+    val logOrphans = lf.listStatus(new Path(root, LogDir)).toSeq.flatMap { st =>
       val n = st.getPath.getName
       val orphanCkpt = st.isDirectory && n.startsWith("ckpt-") &&
         !keptCkpts.contains(s"$LogDir/$n")
-      val staleHead = !st.isDirectory && n.startsWith(".head-") && n.endsWith(".tmp")
+      val staleHead = !st.isDirectory &&
+        (n.startsWith(".head-") && n.endsWith(".tmp") || tmpChecksum(n, ".head-"))
       if (st.getModificationTime < cutoff && (orphanCkpt || staleHead))
         Some(st.getPath -> st.isDirectory)
       else None

@@ -268,6 +268,26 @@ class MaterializedViewSpec extends SparkSpec {
     assert(!fresh(), "auto-refresh must stay opt-in")
   }
 
+  test("graft.mv.autoRefresh: an overwrite write of the source chains the refresh") {
+    val base = tmp(); val src = base + "/src"; val mv = base + "/mv"
+    VersionedTable.write(
+      (1L to 40L).map(i => (i, "g" + i % 2, 0L, i)).toDF("id", "g", "g2", "v"),
+      src, statsCols = Seq("id"))
+    MaterializedView.create(spark, src, mv, Seq("g", "g2"), Seq("v"))
+    VersionedTable.setProperties(spark, src,
+      Map(VersionedTable.MvAutoRefreshKey -> "true"))
+    // a snapshot whose groups leave, arrive and change
+    VersionedTable.write(
+      (1L to 30L).map(i => (i, "g" + (i % 3 + 1), 1L, 2 * i)).toDF("id", "g", "g2", "v"),
+      src)
+    assert(VersionedTable.lastTxn(spark, mv, MaterializedView.App) ==
+      VersionedTable.latestVersion(spark, src), "overwrite must chain the refresh")
+    val twin = base + "/twin"
+    MaterializedView.create(spark, src, twin, Seq("g", "g2"), Seq("v"))
+    assert(viewRows(mv) == viewRows(twin))
+    assert(viewRows(mv) == fullAgg(src))
+  }
+
   test("graft.mv.autoRefresh on a DIM: dim commits chain the join views pinning it") {
     val base = tmp(); val fact = base + "/fact"; val dim = base + "/dim"
     val mv = base + "/mv"

@@ -1960,6 +1960,13 @@ class VersionedTableSpec extends SparkSpec {
       ("append", table, p => VersionedTable.append(
         base.withColumn("id", col("id") + 100), p)),
       ("copyInto", table, p => VersionedTable.copyInto(spark, p, src)._1),
+      ("commitBatch", table, p => VersionedTable.commitBatch(
+        base.withColumn("id", col("id") + 100), p, "app", 1L)),
+      ("commitSnapshot", table, p => VersionedTable.commitSnapshot(
+        base.filter(col("id") < 20), p, "app", 1L, Seq("id"))),
+      ("append partitioned", p => VersionedTable.write(base, p, Seq("id"),
+        partitionBy = Seq("g")),
+        p => VersionedTable.append(base.withColumn("id", col("id") + 100), p)),
       ("restore", { p => table(p); VersionedTable.delete(spark, p, col("id") < 10) },
         p => VersionedTable.restore(spark, p, 1L)),
       ("analyzeNdv", table, p => VersionedTable.analyzeNdvInfo(spark, p, Seq("id"))._1),
@@ -1979,7 +1986,9 @@ class VersionedTableSpec extends SparkSpec {
         spark, p, "nonneg", "id >= 0")),
       ("setGeneratedColumn", table, p => VersionedTable.setGeneratedColumn(
         spark, p, "g", "id % 4")),
-      ("declareIdentityColumn", p => VersionedTable.write(base.filter(lit(false)), p),
+      // no live row, four files: every row marked deleted
+      ("declareIdentityColumn", { p => table(p)
+        VersionedTable.delete(spark, p, lit(true), purgeFraction = 1.0) },
         p => VersionedTable.declareIdentityColumn(spark, p, "id")),
       ("addColumns", table, p => VersionedTable.addColumns(spark, p,
         Seq(StructField("x", DoubleType)))),
@@ -2045,6 +2054,84 @@ class VersionedTableSpec extends SparkSpec {
       // a verb whose staged rewrite goes stale drops it on every lost claim
       if (what == "delete") assert(unreferenced(path).isEmpty, unreferenced(path))
     }
+  }
+
+  private def dataDirs(path: String): Set[String] =
+    new java.io.File(path).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("d-")).map(_.getName).toSet
+
+  test("lost race: a raced write and a raced append stage their rows once, like their calm twins") {
+    Seq[(String, String => Long)](
+      ("write", p => VersionedTable.write(spark.range(20, 30, 1, 2).toDF("id"), p)),
+      ("append", p => VersionedTable.append(spark.range(20, 30, 1, 2).toDF("id"), p))
+    ).foreach { case (name, verb) =>
+      val Seq(raced, calm) = Seq("raced", "calm").map(t =>
+        java.nio.file.Files.createTempDirectory(s"restage-$t").toString + "/t")
+      Seq(raced, calm).foreach(p => VersionedTable.write(spark.range(0, 20, 1, 2).toDF("id"), p))
+      val Seq(racedBefore, calmBefore) = Seq(raced, calm).map(dataDirs)
+      // the data dirs on disk when the first claim is refused
+      var atRefusal = Set.empty[String]
+      val store = new LosingCommitStore(raced) {
+        override def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
+            root: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
+            body: Array[Byte]): Boolean = {
+          if (claims.get == 0) atRefusal = dataDirs(raced)
+          super.putIfAbsent(f, root, dest, body)
+        }
+      }
+      withStore(store)(verb(raced))
+      verb(calm)
+      assert(store.claims.get == 2, s"$name: claims ${store.claims.get}")
+      val (racedNew, calmNew) = (dataDirs(raced) -- racedBefore, dataDirs(calm) -- calmBefore)
+      assert(racedNew.size == 1 && calmNew.size == 1, s"$name: $racedNew vs $calmNew")
+      assert(dataDirs(raced) == atRefusal, s"$name restaged after the lost race")
+      assert(sortedRows(raced) == sortedRows(calm), name)
+    }
+  }
+
+  test("a snapshot insert lands its properties over the head it claims: a racing property commit survives") {
+    val path = java.nio.file.Files.createTempDirectory("snapraw").toString + "/t"
+    VersionedTable.write(Seq((1L, "a")).toDF("id", "s"), path)
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // the first claim loses to a property commit on the same table
+    val store = new VersionedTable.CommitStore {
+      def putIfAbsent(f: org.apache.hadoop.fs.FileSystem,
+          root: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
+          body: Array[Byte]): Boolean =
+        if (dest.toUri.getPath.startsWith(path + "/") && raced.compareAndSet(false, true)) {
+          VersionedTable.setProperties(spark, path, Map("owner" -> "ops"))
+          false
+        } else VersionedTable.FsCommitStore.putIfAbsent(f, root, dest, body)
+    }
+    val v = withStore(store)(VersionedTable.insert(
+      Seq((2L, "b"), (3L, "c")).toDF("id", "s"), path, overwrite = true, Seq("id"),
+      txn = Some("app" -> 1L), propsAdd = Map("pin" -> "7")))
+    assert(v == 3L, s"snapshot at $v")
+    val props = VersionedTable.propertiesOf(spark, path)
+    assert(props.get("owner").contains("ops") && props.get("pin").contains("7"), props)
+    assert(sortedRows(path) == Seq("[2,b]", "[3,c]"))
+    assert(VersionedTable.lastTxn(spark, path, "app").contains(1L))
+  }
+
+  test("commits and vacuum leave no checksum sidecar of a temp file in the log or the table root") {
+    val path = java.nio.file.Files.createTempDirectory("crc").toString + "/t"
+    VersionedTable.write(spark.range(0, 10).toDF("id"), path)
+    (1 until 12).foreach(i =>
+      VersionedTable.append(spark.range(10 * i, 10 * i + 10).toDF("id"), path))
+    assert(VersionedTable.latestVersion(spark, path).contains(12L))
+    val (root, log) = (new java.io.File(path), new java.io.File(path, "_graft_log"))
+    // sidecars an earlier build left behind, older than the sweep's cutoff
+    Seq(new java.io.File(log, "..head-0a1b2c3d.tmp.crc"),
+      new java.io.File(root, "..anchor-0a1b2c3d.tmp.crc")).foreach { stale =>
+      java.nio.file.Files.write(stale.toPath, Array[Byte](1, 2, 3))
+      stale.setLastModified(System.currentTimeMillis() - 2L * 24 * 3600 * 1000)
+    }
+    VersionedTable.vacuum(spark, path, keepLast = 2)
+    def tmpCrcs(dir: java.io.File): Seq[String] =
+      dir.listFiles().map(_.getName).filter(_.endsWith(".tmp.crc")).toSeq
+    assert(tmpCrcs(log).isEmpty, tmpCrcs(log))
+    assert(tmpCrcs(root).isEmpty, tmpCrcs(root))
+    assert(VersionedTable.read(spark, path).count() == 120L)
   }
 
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
